@@ -165,7 +165,7 @@ object Maintenance {
       f"nodes=$nodes rows=$rows patch_row_share=$patchShare%.4f delta_mass_frac=$deltaMass%.4f")
     val merge = if (rows > nodes) {
       val (_, tM) = timed {
-        val g = spark.read.parquet(s"$path/graph")
+        val g = Tables.parquet(spark, s"$path/graph")
         Compact.rewriteInPlace(spark, s"$path/graph",
           g.groupBy(col("vec_id"), col("cid1"))
             .agg(expr("array_sort(array_distinct(flatten(collect_list(neighbors))))")
@@ -199,7 +199,7 @@ object Maintenance {
         ivfCycle(spark, args(1), args(2),
           args.lift(3).map(_.toDouble).getOrElse(0.05))
       case "pq" =>
-        pqCycle(spark, args(1), spark.read.parquet(args(2)),
+        pqCycle(spark, args(1), Tables.parquet(spark, args(2)),
           args.lift(3).map(_.toDouble).getOrElse(1.5))
       case "shingle" => shingleCycle(spark, args(1))
       case "span" => spanCycle(spark, args(1))

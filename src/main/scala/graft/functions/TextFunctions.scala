@@ -1839,16 +1839,4 @@ object TextFunctions {
       |ORDER BY doc_id""".stripMargin
 
   val lmScoreSql: String = lmScoreSqlFor(UnicodeTokenRe)
-
-  /** Nested-HOF reference implementation of [[fingerprints]]'s `fps`
-    * column — kept ONLY for the spec that pins WinnowMinima to the
-    * original semantics. Not used in any query plan. */
-  private[graft] def fingerprintsHofReference(docs: DataFrame, k: Int, w: Int): DataFrame = {
-    val body = "lower(text)"
-    val hashes =
-      s"transform(sequence(1, greatest(length($body) - ${k - 1}, 1)), i -> xxhash64(substring($body, i, $k)))"
-    val mins =
-      s"transform(sequence(1, greatest(size($hashes) - ${w - 1}, 1)), j -> array_min(slice($hashes, j, $w)))"
-    docs.select(col("doc_id"), expr(s"array_distinct($mins)").as("fps"))
-  }
 }

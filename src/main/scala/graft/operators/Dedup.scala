@@ -489,7 +489,7 @@ object Dedup {
       path: String, taus: Seq[Double]): DataFrame = {
     val tmin = taus.min
     if (new java.io.File(s"$path/masks").exists()) {
-      val g = spark.read.parquet(s"$path/masks")
+      val g = graft.Tables.parquet(spark, s"$path/masks")
         .groupBy("comp", "mask").agg(count(lit(1)).as("g")).cache()
       val sided = maskPairsOf(g, tmin)
         .join(g.select(col("comp"), col("mask").as("mask_a"), col("g").as("ga")),
@@ -622,7 +622,7 @@ object Dedup {
   def shingleAppendDelta(deltaDocs: DataFrame, n: Int, path: String): Unit = {
     val spark = deltaDocs.sparkSession
     val sh = withShingles(deltaDocs, n).cache()
-    val dfreq = spark.read.parquet(s"$path/df")
+    val dfreq = graft.Tables.parquet(spark, s"$path/df")
     sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
       .join(dfreq, Seq("sh"), "left")
       .na.fill(0L, Seq("df"))
@@ -631,7 +631,7 @@ object Dedup {
         .as("shingles"))
       .write.mode("append").parquet(s"$path/sh")
     if (new java.io.File(s"$path/masks").exists()) {
-      val dict = spark.read.parquet(s"$path/dict")
+      val dict = graft.Tables.parquet(spark, s"$path/dict")
       val enc = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
         .join(broadcast(dict), Seq("sh"), "left")
         .groupBy("doc_id")
@@ -670,8 +670,8 @@ object Dedup {
   private[graft] def ngramJaccardProbePairs(spark: org.apache.spark.sql.SparkSession,
       path: String, threshold: Double): DataFrame =
     if (new java.io.File(s"$path/masks").exists())
-      jaccardByMask(spark.read.parquet(s"$path/masks"), threshold)
-    else ngramJaccardPrefixSorted(spark.read.parquet(s"$path/sh"), threshold)
+      jaccardByMask(graft.Tables.parquet(spark, s"$path/masks"), threshold)
+    else ngramJaccardPrefixSorted(graft.Tables.parquet(spark, s"$path/sh"), threshold)
 
   /** dd3 probing the same index — the mask path is shared with dd2
     * (tiny vocabularies make exact popcounts strictly dominate LSH,
@@ -681,8 +681,8 @@ object Dedup {
       threshold: Double): DataFrame = {
     val pairs =
       if (new java.io.File(s"$path/masks").exists())
-        jaccardByMask(spark.read.parquet(s"$path/masks"), threshold)
-      else minhashLshPath(spark.read.parquet(s"$path/sh"), threshold)
+        jaccardByMask(graft.Tables.parquet(spark, s"$path/masks"), threshold)
+      else minhashLshPath(graft.Tables.parquet(spark, s"$path/sh"), threshold)
     sortedBy(pairs, col("doc_a"), col("doc_b"))
   }
 
@@ -703,8 +703,8 @@ object Dedup {
   private[graft] def containmentProbePairs(spark: org.apache.spark.sql.SparkSession,
       path: String, tau: Double): DataFrame =
     if (new java.io.File(s"$path/masks").exists())
-      containmentByMask(spark.read.parquet(s"$path/masks"), tau)
-    else containmentPrefixSorted(spark.read.parquet(s"$path/sh"), tau)
+      containmentByMask(graft.Tables.parquet(spark, s"$path/masks"), tau)
+    else containmentPrefixSorted(graft.Tables.parquet(spark, s"$path/sh"), tau)
 
   /** Materialized containment index: the full containment-pair set
     * (probed off a shingle index) plus the CC labeling over the
@@ -739,7 +739,7 @@ object Dedup {
     // per-round lineage then starts from a parquet scan, not the
     // whole candidate-probe plan
     dupGroupsWriteIndex(docs,
-      spark.read.parquet(s"$path/pairs")
+      graft.Tables.parquet(spark, s"$path/pairs")
         .select(col("doc_sub").as("doc_a"), col("doc_super").as("doc_b")),
       s"$path/labels")
   }
@@ -920,7 +920,7 @@ object Dedup {
     fs.delete(stage, true)
 
     // delta arrays under the index-side df order; unseen shingles df 0
-    val dfreq = spark.read.parquet(s"$shinglePath/df")
+    val dfreq = graft.Tables.parquet(spark, s"$shinglePath/df")
     val deltaSh = withShingles(deltaDocs, n)
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
       .join(dfreq, Seq("sh"), "left")
@@ -945,7 +945,7 @@ object Dedup {
     val maskPairs =
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$shinglePath/masks"))) None
       else {
-        val dict = spark.read.parquet(s"$shinglePath/dict")
+        val dict = graft.Tables.parquet(spark, s"$shinglePath/dict")
         val enc = withShingles(deltaDocs, n)
           .select(col("doc_id"), explode(col("shingles")).as("sh"))
           .join(broadcast(dict), Seq("sh"), "left")
@@ -961,7 +961,7 @@ object Dedup {
         if (demote) { enc.unpersist(); None }
         else {
           maskEnc = Some(enc)
-          val standMasks = spark.read.parquet(s"$shinglePath/masks")
+          val standMasks = graft.Tables.parquet(spark, s"$shinglePath/masks")
             .join(deltaIds, Seq("doc_id"), "left_anti")
             .withColumn("is_delta", lit(false))
           val deltaMasks = enc.select(col("doc_id"), col("comp"), col("mask"))
@@ -970,15 +970,15 @@ object Dedup {
             standMasks.unionByName(deltaMasks), tau))
         }
       }
-    val standSh = spark.read.parquet(s"$shinglePath/sh")
+    val standSh = graft.Tables.parquet(spark, s"$shinglePath/sh")
       .join(deltaIds, Seq("doc_id"), "left_anti")
     maskPairs.getOrElse(containIngestPairs(standSh, deltaSh, tau))
       .write.mode("overwrite").parquet(s"$stage/pairs")
     maskEnc.foreach(_.unpersist())
     // relabel via contraction: standing endpoints collapse to their
     // group labels, so the union-find graph is delta-sized
-    val np = spark.read.parquet(s"$stage/pairs")
-    val baseLabels = spark.read.parquet(s"$path/labels")
+    val np = graft.Tables.parquet(spark, s"$stage/pairs")
+    val baseLabels = graft.Tables.parquet(spark, s"$path/labels")
     val edges = np
       .join(baseLabels.select(col("doc_id").as("doc_sub"), col("group_id").as("g_a")),
         Seq("doc_sub"), "left")
@@ -1829,7 +1829,7 @@ object Dedup {
 
   /** Probe side of the materialized group index. */
   def dupGroupsReadIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
 
   // 6 bits × 8 tables: recall ≈ 99.8% at cosine 0.95 (true near-dups),
   // ~36% at cosine 0.35 — candidates stay sub-quadratic while real
@@ -1946,11 +1946,11 @@ object Dedup {
     // df reads the JUST-WRITTEN arrays (contain-index convention): the
     // aggregation's lineage starts from a parquet scan of 8-byte rows,
     // not a second run of the tokenize plan
-    spark.read.parquet(s"$path/spans")
+    graft.Tables.parquet(spark, s"$path/spans")
       .select(explode(col("spans")).as("span"))
       .groupBy(col("span")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$path/df")
-    spark.read.parquet(s"$path/df")
+    graft.Tables.parquet(spark, s"$path/df")
       .filter(col("df") >= 2).select(col("span"))
       .write.mode("overwrite").parquet(s"$path/dupset")
   }
@@ -1960,8 +1960,8 @@ object Dedup {
     * falls out of the spans/ ⋈ dupset/ semi-join, so appends never
     * rewrite history. */
   def dupSpansProbe(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val sh = spark.read.parquet(s"$path/spans")
-    val dup = spark.read.parquet(s"$path/dupset")
+    val sh = graft.Tables.parquet(spark, s"$path/spans")
+    val dup = graft.Tables.parquet(spark, s"$path/dupset")
     val perDoc = sh.select(col("doc_id"), explode(col("spans")).as("span"))
     val hits = perDoc.join(dup, Seq("span"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_dup_spans"))
@@ -2051,7 +2051,7 @@ object Dedup {
     val deltaCounts = delta.select(explode(col("spans")).as("span"))
       .groupBy(col("span")).agg(count(lit(1)).as("c")).cache()
     // cumulative pre-append totals for the DELTA's spans only
-    val prior = spark.read.parquet(s"$path/df")
+    val prior = graft.Tables.parquet(spark, s"$path/df")
       .join(deltaCounts.select(col("span")), Seq("span"), "left_semi")
       .groupBy(col("span")).agg(sum(col("df")).as("prior"))
     val stage = new org.apache.hadoop.fs.Path(root, s".stage-$batchId")

@@ -483,7 +483,7 @@ object Multimodal {
     * spec-pinned (MultimodalSpec). */
   def cdcNearDupProbe(spark: org.apache.spark.sql.SparkSession, path: String,
       tau: Double, dfCap: Int = 256): DataFrame =
-    cdcNearDupFrom(spark.read.parquet(s"$path/chunks"), tau, dfCap)
+    cdcNearDupFrom(graft.Tables.parquet(spark, s"$path/chunks"), tau, dfCap)
 
   private def cdcNearDupFrom(chIn: DataFrame, tau: Double, dfCap: Int): DataFrame = {
     // chunks are array_distinct per blob (cdcChunkHashes), so posting

@@ -224,13 +224,13 @@ object Similarity {
       c: DataFrame, q: DataFrame, corpus: DataFrame, ivfPath: String,
       nQueries: Int, nprobe: Int, dfCap: Int): DataFrame = {
     // dense probe: all vectors in each query's nprobe nearest cells
-    val centroids = spark.read.parquet(s"$ivfPath/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$ivfPath/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
     val probed = probeLists(corpus.filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("embedding")), centroids, nprobe)
     val probedCids = probed.select("cid").distinct().collect().map(_.getInt(0))
-    val dense = spark.read.parquet(s"$ivfPath/vectors")
+    val dense = graft.Tables.parquet(spark, s"$ivfPath/vectors")
       .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
       .join(broadcast(probed.select(col("cid"), col("query_id"))), Seq("cid"))
       .select(col("query_id"), col("vec_id"))
@@ -466,7 +466,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), bucketCol)
     val targetBuckets = rows.select("bucket").distinct().collect().map(_.getInt(0))
     if (targetBuckets.isEmpty) return 0L
-    val existing = spark.read.parquet(s"$path/buckets")
+    val existing = graft.Tables.parquet(spark, s"$path/buckets")
       .filter(col("bucket").isin(targetBuckets.toIndexedSeq: _*))
       .select(col("vec_id")).distinct()
     val fresh = rows.join(existing, Seq("vec_id"), "left_anti").localCheckpoint()
@@ -491,7 +491,7 @@ object Similarity {
       .select(col("query_id"), col("embedding").as("q_emb"), bucketCol)
     // bounded driver state: ≤ Tables·2^Bits distinct bucket ids
     val probedBuckets = qb.select("bucket").distinct().collect().map(_.getInt(0))
-    val idx = spark.read.parquet(s"$path/buckets")
+    val idx = graft.Tables.parquet(spark, s"$path/buckets")
       .filter(col("bucket").isin(probedBuckets.toIndexedSeq: _*))
     val scored = idx.join(broadcast(qb), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -774,7 +774,7 @@ object Similarity {
 
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Float]] =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
 
@@ -843,7 +843,7 @@ object Similarity {
     val assigned = withCid(delta, "embedding", centroids)
     val targetCids = assigned.select("cid").distinct().collect().map(_.getInt(0))
     if (targetCids.isEmpty) return 0L
-    val existing = spark.read.parquet(s"$path/vectors")
+    val existing = graft.Tables.parquet(spark, s"$path/vectors")
       .filter(col("cid").isin(targetCids.toIndexedSeq: _*))
       .select(col("vec_id"))
     val fresh = assigned.join(existing, Seq("vec_id"), "left_anti")
@@ -886,7 +886,7 @@ object Similarity {
   def ivfRecluster(spark: org.apache.spark.sql.SparkSession, oldPath: String,
       newPath: String, iters: Int = 2): Unit = {
     val nlist = readCentroids(spark, s"$oldPath/centroids").length
-    val corpus = spark.read.parquet(s"$oldPath/vectors")
+    val corpus = graft.Tables.parquet(spark, s"$oldPath/vectors")
       .select(col("vec_id"), col("embedding"))
     ivfWriteIndex(corpus, newPath, nlist, iters)
   }
@@ -918,7 +918,7 @@ object Similarity {
     val cents = readCentroids(spark, s"$path/centroids")
     val cdf = cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toSeq.toDF("cid", "centroid")
-    spark.read.parquet(s"$path/vectors")
+    graft.Tables.parquet(spark, s"$path/vectors")
       .select(col("cid"), posexplode(col("embedding")))
       .groupBy(col("cid"), col("pos"))
       .agg(count(lit(1)).as("n"),
@@ -953,13 +953,13 @@ object Similarity {
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
     VectorFunctions.register(spark)
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$path/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
     val np = if (nprobe > 0) nprobe else math.max(4, centroids.length / 4)
     val probed = probeLists(queries, centroids, np)
     val probedCids = probed.select("cid").distinct().collect().map(_.getInt(0))
-    val indexed = spark.read.parquet(s"$path/vectors")
+    val indexed = graft.Tables.parquet(spark, s"$path/vectors")
       .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
     val scored = indexed.join(broadcast(probed), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1132,7 +1132,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         expr("__cells[0].c").as("cid1"), expr("__cells[1].c").as("cid2"))
       .localCheckpoint()
-    val standing = spark.read.parquet(s"$path/emb")
+    val standing = graft.Tables.parquet(spark, s"$path/emb")
       .select(col("cid1").as("cell"), col("vec_id").as("nbr_id"),
         col("embedding").as("nbr_emb"))
     val deltaMembers = top2.select(col("cid1").as("cell"),
@@ -1161,7 +1161,7 @@ object Similarity {
     // edge rows only (8 B/id, no embedding bytes); emb/ (delta rows
     // just appended, so delta→delta edges resolve too) supplies each
     // target's cid1; collect_set + sort for a deterministic layout
-    val allNodes = spark.read.parquet(s"$path/emb")
+    val allNodes = graft.Tables.parquet(spark, s"$path/emb")
       .select(col("vec_id").as("nbr"), col("cid1").as("nbr_cid"))
     best.select(col("vec_id").as("delta_id"), explode(col("neighbors")).as("nbr"))
       .join(allNodes, "nbr")
@@ -1181,10 +1181,10 @@ object Similarity {
     // emb/, one row per node by construction — no corpus-wide dedup
     // in the beam loop (VERDICT r13 #2: the old per-round
     // dropDuplicates was 3 corpus-sized shuffles per query batch)
-    val graph = spark.read.parquet(s"$path/graph")
-    val embs = spark.read.parquet(s"$path/emb")
+    val graph = graft.Tables.parquet(spark, s"$path/graph")
+    val embs = graft.Tables.parquet(spark, s"$path/emb")
       .select(col("vec_id"), col("embedding"))
-    val hubs = spark.read.parquet(s"$path/hubs")
+    val hubs = graft.Tables.parquet(spark, s"$path/hubs")
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     def topBeam(scored: DataFrame): DataFrame = scored
       .groupBy(col("query_id"))
@@ -1236,8 +1236,8 @@ object Similarity {
     * spec pins 0.0 on a fresh build and exact fractions after an
     * append. */
   def hnswDrift(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val baseN = spark.read.parquet(s"$path/meta").head().getLong(0)
-    spark.read.parquet(s"$path/graph")
+    val baseN = graft.Tables.parquet(spark, s"$path/meta").head().getLong(0)
+    graft.Tables.parquet(spark, s"$path/graph")
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("vec_id")).as("n_nodes"))
       .select(col("n_nodes"), col("n_rows"), lit(baseN).as("base_n"),
@@ -1397,7 +1397,7 @@ object Similarity {
     VectorFunctions.register(spark)
     val books = readCodebook(spark, s"$path/codebook")
     val dim = books.length * books(0)(0).length
-    val base = spark.read.parquet(s"$path/residuals")
+    val base = graft.Tables.parquet(spark, s"$path/residuals")
       .select(col("s"), col("mean_r2").as("base_r2"))
     pqSubResiduals(rows, dim, books)
       .join(broadcast(base), "s")
@@ -1465,7 +1465,7 @@ object Similarity {
 
   private[graft] def readCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Array[Float]]] = {
-    val rows = spark.read.parquet(path)
+    val rows = graft.Tables.parquet(spark, path)
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
     val m = rows.keys.map(_._1).max + 1
     val ksub = rows.keys.map(_._2).max + 1
@@ -1507,7 +1507,7 @@ object Similarity {
     val coded = pqEncode(delta, dim, books.length, books).withColumn("vb", vbCol)
     val targetVbs = coded.select("vb").distinct().collect().map(_.getInt(0))
     if (targetVbs.isEmpty) return 0L
-    val existing = spark.read.parquet(s"$path/codes")
+    val existing = graft.Tables.parquet(spark, s"$path/codes")
       .filter(col("vb").isin(targetVbs.toIndexedSeq: _*))
       .select(col("vec_id"))
     val fresh = coded.join(existing, Seq("vec_id"), "left_anti")
@@ -1528,7 +1528,7 @@ object Similarity {
     val cents = readCodebook(spark, s"$path/codebook")
     val m = cents.length
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = spark.read.parquet(s"$path/codes")
+    val scored = graft.Tables.parquet(spark, s"$path/codes")
       .withColumn("recon", reconCol(cents, m))
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1715,7 +1715,7 @@ object Similarity {
       .select(col("vec_id"), col("codes"), col("cid"))
     val targetCids = assigned.select("cid").distinct().collect().map(_.getInt(0))
     if (targetCids.isEmpty) return 0L
-    val existing = spark.read.parquet(s"$path/codes")
+    val existing = graft.Tables.parquet(spark, s"$path/codes")
       .filter(col("cid").isin(targetCids.toIndexedSeq: _*))
       .select(col("vec_id"))
     val fresh = assigned.join(existing, Seq("vec_id"), "left_anti").localCheckpoint()
@@ -1734,18 +1734,18 @@ object Similarity {
   def ivfPqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
     VectorFunctions.register(spark)
-    val coarse = spark.read.parquet(s"$path/centroids")
+    val coarse = graft.Tables.parquet(spark, s"$path/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
     val np = if (nprobe > 0) nprobe else math.max(4, coarse.length / 4)
-    val rows = spark.read.parquet(s"$path/codebook")
+    val rows = graft.Tables.parquet(spark, s"$path/codebook")
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
     val m = rows.keys.map(_._1).max + 1
     val ksub = rows.keys.map(_._2).max + 1
     val books = Array.tabulate(m, ksub)((s, c) => rows((s, c)))
     val probed = probeLists(queries, coarse, np)
     val probedCids = probed.select("cid").distinct().collect().map(_.getInt(0))
-    val scored = spark.read.parquet(s"$path/codes")
+    val scored = graft.Tables.parquet(spark, s"$path/codes")
       .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
       .withColumn("recon", reconCol(books, m))
       .join(broadcast(probed), Seq("cid"))

@@ -2189,7 +2189,7 @@ object CoreQueries {
   }
 
   private def q73Edges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(q73GraphLayout(s, d))
+    Tables.parquet(s, q73GraphLayout(s, d))
 
   def q73PageRank(s: SparkSession, d: String): DataFrame =
     graft.operators.PageRank.ranks(q73Edges(s, d), 2)
@@ -2334,7 +2334,7 @@ object CoreQueries {
       // adjacency off the just-written orientation (parquet snapshot =
       // lineage cut); repartitioned so the per-query explode + merge
       // fan-out runs parallel even though the relation is tiny on disk
-      graft.operators.Triangles.adjacencyOf(s.read.parquet(s"$tmp/oriented"))
+      graft.operators.Triangles.adjacencyOf(Tables.parquet(s, s"$tmp/oriented"))
         .repartition(p).write.mode("overwrite").parquet(s"$tmp/adj")
       li.groupBy(col("l_partkey")).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$tmp/items")
@@ -2344,10 +2344,10 @@ object CoreQueries {
   }
 
   def copurchaseEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${copurchaseLayout(s, d)}/edges")
+    Tables.parquet(s, s"${copurchaseLayout(s, d)}/edges")
 
   def copurchaseOriented(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${copurchaseLayout(s, d)}/oriented")
+    Tables.parquet(s, s"${copurchaseLayout(s, d)}/oriented")
 
   def q74Triangles(s: SparkSession, d: String): DataFrame =
     // forward enumeration off the materialized sorted adjacency — the
@@ -2355,7 +2355,7 @@ object CoreQueries {
     // intersection (Triangles.perNodeCountsFromAdjacency's scaladoc
     // has the measured 49.2 M-wedge vs 1.88 M-triangle story)
     graft.operators.Triangles.perNodeCountsFromAdjacency(
-        s.read.parquet(s"${copurchaseLayout(s, d)}/adj"))
+        Tables.parquet(s, s"${copurchaseLayout(s, d)}/adj"))
       .select(col("node").as("p_partkey"), col("n_triangles"))
       .orderBy(col("p_partkey"))
 
@@ -2952,7 +2952,7 @@ object CoreQueries {
   }
 
   def q84IncrementalJoin(s: SparkSession, d: String): DataFrame = {
-    val standing = s.read.parquet(q84StandingViewPath(s, d)) // the view at rest
+    val standing = Tables.parquet(s, q84StandingViewPath(s, d)) // the view at rest
     val (oBase, oNew, cBase, cNew) = q84Splits(s, d)
     standing
       .union(q84Join(oNew, cBase))
@@ -3574,8 +3574,8 @@ object CoreQueries {
     * capped item set so supports stay internally consistent. */
   def q93BasketRules(s: SparkSession, d: String): DataFrame = {
     val root = copurchaseLayout(s, d)
-    val items = s.read.parquet(s"$root/items")
-    val totals = s.read.parquet(s"$root/totals")
+    val items = Tables.parquet(s, s"$root/items")
+    val totals = Tables.parquet(s, s"$root/totals")
     copurchaseEdges(s, d).withColumnRenamed("c", "n_ab")
       .filter(col("n_ab") >= 2)
       .join(items.select(col("l_partkey").as("u"), col("cnt").as("n_a")), "u")

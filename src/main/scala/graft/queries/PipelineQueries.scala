@@ -244,7 +244,7 @@ object PipelineQueries {
     * incrementalDedup is spec-pinned; the oracle is unchanged. */
   def dd9(s: SparkSession, d: String): DataFrame =
     Dedup.ingestBatchPairs(
-        s.read.parquet(s"${cachedShingleIndexNondelta(s, d)}/sh"),
+        Tables.parquet(s, s"${cachedShingleIndexNondelta(s, d)}/sh"),
         Tables.documents(s, d).filter(isDeltaDoc), JaccardThreshold)
       .orderBy(col("doc_new"), col("doc_old"))
 
@@ -276,7 +276,7 @@ object PipelineQueries {
     Dedup.incrementalDupGroups(docs, 1, JaccardThreshold, isDeltaDoc, indexLabels,
       // standing side pre-shingled off the nondelta index (round 13 —
       // dd9's shape; tokenization is delta-only per ingest)
-      Some(s.read.parquet(s"${cachedShingleIndexNondelta(s, d)}/sh")))
+      Some(Tables.parquet(s, s"${cachedShingleIndexNondelta(s, d)}/sh")))
   }
 
   /** dd11: asymmetric containment |A∩B|/|A| ≥ τ — catches documents
@@ -298,7 +298,7 @@ object PipelineQueries {
     // the count is sized from the scan's own stats (max(cores,
     // bytes/advisory)) so at 100 TB it grows with the relation instead
     // of pinning the local core count. Same rows, same total order.
-    val pr = s.read.parquet(s"${cachedContainIndex(s, d)}/pairs")
+    val pr = Tables.parquet(s, s"${cachedContainIndex(s, d)}/pairs")
     val adv = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
     val p = math.max(s.sparkContext.defaultParallelism,
@@ -330,7 +330,7 @@ object PipelineQueries {
   def dd13(s: SparkSession, d: String): DataFrame = {
     val idx = cachedContainIndex(s, d)
     Dedup.containmentVerdict(
-      s.read.parquet(s"$idx/pairs"),
+      Tables.parquet(s, s"$idx/pairs"),
       Dedup.dupGroupsReadIndex(s, s"$idx/labels"))
   }
 
@@ -600,7 +600,7 @@ object PipelineQueries {
 
   def dd4(s: SparkSession, d: String): DataFrame =
     Dedup.simhashPairsFrom(
-      s.read.parquet(s"${cachedSimhashIndex(s, d)}/sigs"), maxHamming = 8)
+      Tables.parquet(s, s"${cachedSimhashIndex(s, d)}/sigs"), maxHamming = 8)
 
   /** Build-if-missing duplicate-span index (round 13 — VERDICT r12
     * #2): dd8's span arrays and df ≥ 2 span set are corpus-static;
@@ -1331,7 +1331,7 @@ object PipelineQueries {
 
   def tx11(s: SparkSession, d: String): DataFrame =
     TextFunctions.contaminationProbe(Tables.documents(s, d),
-      s.read.parquet(s"${cachedContamIndex(s, d, "uni", TextFunctions.unicodeTokensExpr)}/train"))
+      Tables.parquet(s, s"${cachedContamIndex(s, d, "uni", TextFunctions.unicodeTokensExpr)}/train"))
   def tx12(s: SparkSession, d: String): DataFrame = TextFunctions.packDocs(Tables.documents(s, d), 512)
   def tx13(s: SparkSession, d: String): DataFrame = TextFunctions.tfidfTopTerms(Tables.documents(s, d), 5)
   def tx14(s: SparkSession, d: String): DataFrame = TextFunctions.rarityScore(Tables.documents(s, d))
@@ -1474,7 +1474,7 @@ object PipelineQueries {
     TextFunctions.qualityScore(Tables.documents(s, d), TextFunctions.tokensExpr)
   def tx33(s: SparkSession, d: String): DataFrame =
     TextFunctions.contaminationProbe(Tables.documents(s, d),
-      s.read.parquet(s"${cachedContamIndex(s, d, "ascii", TextFunctions.tokensExpr)}/train"),
+      Tables.parquet(s, s"${cachedContamIndex(s, d, "ascii", TextFunctions.tokensExpr)}/train"),
       3, TextFunctions.tokensExpr)
   def tx34(s: SparkSession, d: String): DataFrame =
     TextFunctions.lmScore(Tables.documents(s, d), TextFunctions.tokensExpr)
@@ -1502,7 +1502,7 @@ object PipelineQueries {
 
   def tx28(s: SparkSession, d: String): DataFrame =
     TextFunctions.boilerplateStrip(Tables.documents(s, d),
-      s.read.parquet(cachedBoilerIndex(s, d, minDf = 3)))
+      Tables.parquet(s, cachedBoilerIndex(s, d, minDf = 3)))
   def tx23(s: SparkSession, d: String): DataFrame = TextFunctions.lmScore(Tables.documents(s, d))
   def tx24(s: SparkSession, d: String): DataFrame = TextFunctions.docTopTerms(Tables.documents(s, d), 3)
 
@@ -1564,7 +1564,7 @@ object PipelineQueries {
 
   def mm5(s: SparkSession, d: String): DataFrame =
     Multimodal.phashNearDupFrom(
-      s.read.parquet(s"${cachedPhashIndex(s, d)}/sigs"), maxHamming = 8)
+      Tables.parquet(s, s"${cachedPhashIndex(s, d)}/sigs"), maxHamming = 8)
 
   /** mm6: content-defined chunk dedup stats over the blob corpus —
     * chunk boundaries are engine-specific rolling hashes (mm2 policy ⇒

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 
@@ -61,8 +61,9 @@ object StreamQueries {
 
   /** Events as a STREAMING DataFrame with the same ts normalization
     * contract as Tables.events (INT64 ns regardless of the parquet
-    * physical type) — the static read supplies the schema, as a file
-    * stream cannot infer one. */
+    * physical type, [[Tables.eventsTsNanos]]) — the static read's
+    * cached schema supplies the stream's, as a file stream cannot
+    * infer one. */
   private def eventsStream(s: SparkSession, d: String): DataFrame =
     eventsStreamFrom(s, d, None)
 
@@ -75,16 +76,9 @@ object StreamQueries {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the table is a single parquet FILE; FileStreamSource wants a
     // directory or glob (its basePath must be a dir), so glob the name
-    val rdr = s.readStream.schema(s.read.parquet(s"$d/events.parquet").schema)
-    val raw = maxFilesPerTrigger.fold(rdr)(n => rdr.option("maxFilesPerTrigger", n))
-      .parquet(s"$d/events.parque*")
-    raw.schema("ts").dataType match {
-      case LongType => raw
-      case TimestampType | TimestampNTZType =>
-        raw.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000L"))
-      case other =>
-        throw new IllegalStateException(s"events.ts has unsupported type $other")
-    }
+    val rdr = s.readStream.schema(Tables.parquet(s, s"$d/events.parquet").schema)
+    Tables.eventsTsNanos(maxFilesPerTrigger.fold(rdr)(n => rdr.option("maxFilesPerTrigger", n))
+      .parquet(s"$d/events.parque*"))
   }
 
   /** ns BIGINT → TIMESTAMP_NTZ for event-time windowing (exact µs). */
@@ -720,7 +714,7 @@ object StreamQueries {
       case Some(v) => s.conf.set(key, v)
       case None    => s.conf.unset(key)
     }
-    s.read.parquet(s"$dir/data")
+    Tables.parquet(s, s"$dir/data")
   }
 
   /** st11/st12 in the production sink shape (parquet sink + RocksDB
@@ -787,7 +781,7 @@ object StreamQueries {
           val incoming = batchToState(batch.toDF())
           val merged =
             if (!prev.exists) incoming
-            else mergeStates(s.read.parquet(prev.getPath), incoming)
+            else mergeStates(Tables.parquet(s, prev.getPath), incoming)
           merged.write.mode("overwrite").parquet(s"$dir/state_$id")
           ()
       }.option("checkpointLocation", s"$dir/chk")
@@ -801,7 +795,7 @@ object StreamQueries {
     // cause, not `empty.max`'s bare UnsupportedOperationException
     require(versions.nonEmpty,
       s"versionedStateRun($prefix): stream committed zero batches — empty or missing source")
-    (s.read.parquet(s"$dir/state_${versions.max}"), versions.length)
+    (Tables.parquet(s, s"$dir/state_${versions.max}"), versions.length)
   }
 
   /** st13's standing state re-expressed as ops, so prior state merges
@@ -930,7 +924,7 @@ object StreamQueries {
     * [[eventsStreamFrom]]). */
   private[graft] def documentsStreamFrom(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val rdr = s.readStream.schema(s.read.parquet(s"$d/documents.parquet").schema)
+    val rdr = s.readStream.schema(Tables.parquet(s, s"$d/documents.parquet").schema)
     maxFilesPerTrigger.fold(rdr)(n => rdr.option("maxFilesPerTrigger", n))
       .parquet(s"$d/documents.parque*")
   }
@@ -997,7 +991,7 @@ object StreamQueries {
     * per-stream tokenization. */
   private[graft] def st15From(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame =
-    st15Run(s, d, maxFilesPerTrigger, s.read.parquet(
+    st15Run(s, d, maxFilesPerTrigger, Tables.parquet(s,
       s"${PipelineQueries.cachedShingleIndexNondelta(s, d)}/sh"))
 
   /** The pre-round-9 twin: standing token sets re-derived from the
@@ -1216,7 +1210,7 @@ object StreamQueries {
 
   private[graft] def embeddingsStreamFrom(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val rdr = s.readStream.schema(s.read.parquet(s"$d/embeddings.parquet").schema)
+    val rdr = s.readStream.schema(Tables.parquet(s, s"$d/embeddings.parquet").schema)
     maxFilesPerTrigger.fold(rdr)(n => rdr.option("maxFilesPerTrigger", n))
       .parquet(s"$d/embeddings.parque*")
   }

@@ -49,7 +49,7 @@ object Compact {
       targetBytes: Long = DefaultTargetBytes,
       clusterBy: Seq[String] = Nil): Int = {
     val n = math.max(1L, (dataBytes(spark, inPath) + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inPath)
+    val df = graft.Tables.parquet(spark, inPath)
     val out =
       if (clusterBy.isEmpty) df.repartition(n)
       else df.repartitionByRange(n, clusterBy.map(col): _*)
@@ -211,7 +211,7 @@ object Compact {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(d.getParent, s".compact-$tag-${d.getName}")
     val old = new Path(d.getParent, s".old-$tag-${d.getName}")
-    spark.read.parquet(d.toString).repartition(n)
+    graft.Tables.parquet(spark, d.toString).repartition(n)
       .write.mode("overwrite").parquet(tmp.toString)
     if (!fs.rename(d, old) || !fs.rename(tmp, d))
       throw new IllegalStateException(s"compactIndex: swap failed for $d")

@@ -133,7 +133,7 @@ object ZOrderLayout {
   }
 
   def readMeta(spark: SparkSession, path: String): ZMeta = {
-    val r = spark.read.parquet(s"$path/meta")
+    val r = graft.Tables.parquet(spark, s"$path/meta")
       .select("colA", "colB", "minA", "mulA", "divA", "minB", "mulB", "divB", "cellBits").head()
     ZMeta(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
       r.getLong(5), r.getLong(6), r.getLong(7), r.getInt(8))
@@ -164,7 +164,7 @@ object ZOrderLayout {
       loA: Long, hiA: Long, loB: Long, hiB: Long): DataFrame = {
     val m = readMeta(spark, path)
     val cells = boxCells(m, loA, hiA, loB, hiB)
-    spark.read.parquet(s"$path/data")
+    graft.Tables.parquet(spark, s"$path/data")
       .filter(col("z_cell").isin(cells: _*))
       .filter(col(m.colA).between(loA, hiA) && col(m.colB).between(loB, hiB))
   }
@@ -248,7 +248,7 @@ object ZOrderLayout {
   }
 
   def readMetaN(spark: SparkSession, path: String): ZMetaN = {
-    val r = spark.read.parquet(s"$path/meta")
+    val r = graft.Tables.parquet(spark, s"$path/meta")
       .select("cols", "mins", "muls", "divs", "cellBits", "gridBits").head()
     ZMetaN(r.getSeq[String](0), r.getSeq[Long](1), r.getSeq[Long](2),
       r.getSeq[Long](3), r.getInt(4), r.getInt(5))
@@ -277,7 +277,7 @@ object ZOrderLayout {
     val cells = boxCellsN(m, lo, hi)
     val ranged = m.cols.indices.map(i =>
       col(m.cols(i)).between(lo(i), hi(i))).reduce(_ && _)
-    spark.read.parquet(s"$path/data")
+    graft.Tables.parquet(spark, s"$path/data")
       .filter(col("z_cell").isin(cells: _*))
       .filter(ranged)
   }

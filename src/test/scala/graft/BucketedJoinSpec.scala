@@ -10,7 +10,7 @@ import graft.sources.BucketedTables
 class BucketedJoinSpec extends SparkTestBase {
 
   test("co-bucketed tables join and aggregate with zero shuffle exchanges") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+    val tmp = tempDir("graft-bucket")
     val li = Tables.lineitem(spark, Sf0001).select(col("l_orderkey"), col("l_quantity"))
     val ord = Tables.orders(spark, Sf0001).select(col("o_orderkey"), col("o_orderpriority"))
     BucketedTables.writeBucketed(li, "li_b", s"$tmp/li", "l_orderkey", 8, Seq("l_orderkey"))
@@ -72,7 +72,7 @@ class BucketedJoinSpec extends SparkTestBase {
   }
 
   test("bucketed delta append: rows ≡ full rebuild, zero-exchange SMJ survives, warm re-register reads base ⊕ delta") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bkdelta").toString
+    val tmp = tempDir("graft-bkdelta")
     val li = Tables.lineitem(spark, Sf0001).select(col("l_orderkey"), col("l_quantity"))
     val ord = Tables.orders(spark, Sf0001).select(col("o_orderkey"), col("o_orderpriority"))
     val (base, delta) =
@@ -147,7 +147,7 @@ class BucketedJoinSpec extends SparkTestBase {
     // source (new size/mtime → new layout key), build again, vacuum —
     // only the current generation's FILES survive, and a fresh-JVM
     // re-register over them (metadata-only DDL) still serves rows
-    val scratch = java.nio.file.Files.createTempDirectory("graft-bkgen").toString
+    val scratch = tempDir("graft-bkgen")
     // scope every directory assertion to THIS run's scratch dir: the
     // sanitized dir tag rides the layout name, and earlier suite runs
     // leave graft_bk_t_* generations for OTHER scratch dirs behind —

@@ -16,7 +16,7 @@ class CompactSpec extends SparkTestBase {
       .head().getDecimal(0)
 
   test("compaction reduces file count, preserves rows and content") {
-    val base = Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact")
     val in = s"$base/in"
     val out = s"$base/out"
     Tables.documents(spark, Sf0001).repartition(50)
@@ -36,7 +36,7 @@ class CompactSpec extends SparkTestBase {
   test("indexCompact: LSH bucket dirs collapse to targeted files; probe ≡ pre-compaction; pruning intact") {
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, Sf0001)
-    val path = Files.createTempDirectory("graft-idxcompact").toString
+    val path = tempDir("graft-idxcompact")
     // base build + two delta appends — each append lands one more file
     // in every touched bucket dir (the commit-bound LSH shape
     // DeltaBench flagged)
@@ -77,7 +77,7 @@ class CompactSpec extends SparkTestBase {
   test("indexCompact: unpartitioned shingle sh/ compacts in place; probe ≡; trained df/ untouched") {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, Sf0001)
-    val path = Files.createTempDirectory("graft-shcompact").toString
+    val path = tempDir("graft-shcompact")
     Dedup.shingleWriteIndex(docs.filter(col("doc_id") % 4 =!= 0), 1, path)
     Dedup.shingleAppendDelta(docs.filter(col("doc_id") % 8 === 0), 1, path)
     Dedup.shingleAppendDelta(docs.filter(col("doc_id") % 8 === 4), 1, path)
@@ -100,7 +100,7 @@ class CompactSpec extends SparkTestBase {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions.xxhash64
     val emb = Tables.embeddings(spark, Sf0001)
-    val path = Files.createTempDirectory("graft-crashrec").toString
+    val path = tempDir("graft-crashrec")
     Similarity.lshWriteIndex(emb, path, 64)
     val buckets = new java.io.File(s"$path/buckets")
     // order-independent content fingerprint over ALL rows incl. the
@@ -142,7 +142,7 @@ class CompactSpec extends SparkTestBase {
   test("indexCompact crash recovery: unpartitioned dir restored from shared parent; sibling layouts' leftovers untouched") {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, Sf0001)
-    val path = Files.createTempDirectory("graft-crashrec-sh").toString
+    val path = tempDir("graft-crashrec-sh")
     Dedup.shingleWriteIndex(docs, 1, path)
     val root = new java.io.File(path)
     val sh = new java.io.File(root, "sh")
@@ -176,7 +176,7 @@ class CompactSpec extends SparkTestBase {
   }
 
   test("clustered compaction yields disjoint per-file doc_id ranges") {
-    val base = Files.createTempDirectory("graft-compact-cl").toString
+    val base = tempDir("graft-compact-cl")
     val in = s"$base/in"
     val out = s"$base/out"
     Tables.documents(spark, Sf0001).repartition(20)

@@ -289,7 +289,7 @@ class DedupSpec extends SparkTestBase {
     val t = Tables.documents(spark, Sf0001)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val idx = java.nio.file.Files.createTempDirectory("graft-spanidx").toString
+    val idx = tempDir("graft-spanidx")
     Dedup.dupSpansWriteIndex(t, 10, idx)
     val probed = rows(Dedup.dupSpansProbe(spark, idx))
     val inline = rows(Dedup.dupSpans(t, n = 10))
@@ -311,7 +311,7 @@ class DedupSpec extends SparkTestBase {
       (3L, s"different preface tokens alpha beta gamma delta $boiler"),
       (4L, "another fresh and unrelated piece of writing long enough for spans to exist okay"),
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-spanidx-d").toString
+    val idx = tempDir("graft-spanidx-d")
     Dedup.dupSpansWriteIndex(baseDocs, 10, idx)
     Dedup.dupSpansAppendDelta(deltaDocs, 10, idx)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -343,7 +343,7 @@ class DedupSpec extends SparkTestBase {
     val deltaDocs = Seq(
       (6L, "a wholly original delta document long enough to carry several spans of its own"),
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-spanidx-i").toString
+    val idx = tempDir("graft-spanidx-i")
     Dedup.dupSpansWriteIndex(baseDocs, 10, idx)
     Dedup.dupSpansAppendDelta(deltaDocs, 10, idx)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -388,7 +388,7 @@ class DedupSpec extends SparkTestBase {
        Set[(Long, Long)], Set[(Long, Long)]) = {
     val tau = 0.8
     val allDocs = baseDocs.unionByName(deltaDocs)
-    val work = java.nio.file.Files.createTempDirectory("graft-containd").toString
+    val work = tempDir("graft-containd")
     Dedup.shingleWriteIndex(allDocs, 1, s"$work/shFull")
     Dedup.containWriteIndex(spark, s"$work/shFull", allDocs, s"$work/full", tau)
     Dedup.shingleWriteIndex(baseDocs, 1, s"$work/shBase")
@@ -508,7 +508,7 @@ class DedupSpec extends SparkTestBase {
       (6L, "a wholly original delta document long enough to carry several spans of its own"),
       (7L, "another wholly original delta document also long enough for spans to form"),
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-spanidx-l").toString
+    val idx = tempDir("graft-spanidx-l")
     Dedup.dupSpansWriteIndex(baseDocs, 10, idx)
     // plant the LEGACY marker: wrapped-Long sum of the delta's hashes
     // (what the pre-r14 non-ANSI `sum(xxhash64(doc_id))` produced)
@@ -617,7 +617,7 @@ class DedupSpec extends SparkTestBase {
     // The driver corpus is tiny-vocab → the index materializes masks/;
     // both probes must reproduce the inline adaptive output exactly.
     val t = Tables.documents(spark, Sf0001)
-    val idx = java.nio.file.Files.createTempDirectory("graft-shidx").toString
+    val idx = tempDir("graft-shidx")
     Dedup.shingleWriteIndex(t, 1, idx)
     assert(new java.io.File(s"$idx/masks").exists(), "tiny vocab must take the mask representation")
     def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -640,7 +640,7 @@ class DedupSpec extends SparkTestBase {
     val rows = (0 until 40).map(i => (i.toLong, toks(i).mkString(" "))) ++
       (0 until 40).map(i => ((500 + i).toLong, (toks(i).drop(2) ++ Seq(s"x$i", s"y$i")).mkString(" ")))
     val docs = rows.toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-shidx-lv").toString
+    val idx = tempDir("graft-shidx-lv")
     Dedup.shingleWriteIndex(docs, 1, idx)
     assert(!new java.io.File(s"$idx/masks").exists(), "large vocab must store sorted arrays only")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -676,7 +676,7 @@ class DedupSpec extends SparkTestBase {
     val deltaDocs = (0 until 40).map(i =>
       ((500 + i).toLong, (toks(i).drop(2) ++ Seq(s"x$i", s"y$i")).mkString(" "))).toDF("doc_id", "text")
     val union = baseDocs.union(deltaDocs)
-    val idx = java.nio.file.Files.createTempDirectory("graft-shidx-delta").toString
+    val idx = tempDir("graft-shidx-delta")
     Dedup.shingleWriteIndex(baseDocs, 1, idx)
     assert(!new java.io.File(s"$idx/masks").exists())
     val before = dataFiles(s"$idx/sh")
@@ -699,7 +699,7 @@ class DedupSpec extends SparkTestBase {
 
   test("shingle delta append (mask path, known vocab): representation kept, probe ≡ inline union") {
     import spark.implicits._
-    val idx = java.nio.file.Files.createTempDirectory("graft-shidx-dm").toString
+    val idx = tempDir("graft-shidx-dm")
     Dedup.shingleWriteIndex(docs, 1, idx)
     assert(new java.io.File(s"$idx/masks").exists())
     assert(new java.io.File(s"$idx/dict").exists(), "dict must be persisted beside masks")
@@ -720,7 +720,7 @@ class DedupSpec extends SparkTestBase {
 
   test("shingle delta append (novel vocab): masks DEMOTED, array probe still ≡ inline union") {
     import spark.implicits._
-    val idx = java.nio.file.Files.createTempDirectory("graft-shidx-dn").toString
+    val idx = tempDir("graft-shidx-dn")
     Dedup.shingleWriteIndex(docs, 1, idx)
     assert(new java.io.File(s"$idx/masks").exists())
     // novel tokens cannot be represented in the persisted dictionary →
@@ -743,7 +743,7 @@ class DedupSpec extends SparkTestBase {
 
   test("materialized dup-groups index: probe ≡ inline dd7 on the driver corpus") {
     val t = Tables.documents(spark, Sf0001)
-    val idx = java.nio.file.Files.createTempDirectory("graft-ddidx").toString
+    val idx = tempDir("graft-ddidx")
     Dedup.dupGroupsWriteIndex(t, Dedup.ngramJaccardPairs(t, 1, 0.9), idx)
     val inline = graft.queries.PipelineQueries.dd7(spark, Sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -762,7 +762,7 @@ class DedupSpec extends SparkTestBase {
     val pairs = Dedup.containment(t, 1, 0.9)
     val inline = Dedup.containmentGroups(t, pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toSeq
-    val idx = java.nio.file.Files.createTempDirectory("graft-cgidx").toString
+    val idx = tempDir("graft-cgidx")
     Dedup.dupGroupsWriteIndex(t,
       pairs.toDF("doc_a", "doc_b", "containment"), idx)
     val probed = Dedup.containmentVerdict(pairs, Dedup.dupGroupsReadIndex(spark, idx))
@@ -837,7 +837,7 @@ class DedupSpec extends SparkTestBase {
       (5L, w.mkString(" ")),
     ).toDF("doc_id", "text")
     val pairs = Dedup.ngramJaccardPairs(chain, 1, 0.9)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt")
     val reliable = Dedup.dupGroups(chain, pairs, 50, Some(ckpt)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reliable === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 1L))

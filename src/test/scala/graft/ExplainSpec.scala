@@ -1103,7 +1103,7 @@ class ExplainSpec extends SparkTestBase {
   test("reranked PQ probe: pool and queries broadcast, flat store never shuffled") {
     val emb = Tables.embeddings(spark, Sf0001)
     val q = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rr-plan").toString
+    val dir = tempDir("graft-rr-plan")
     Similarity.pqWriteIndex(emb, dir, dim = 64)
     val df = Similarity.pqProbeIndexReranked(spark, dir, q, emb, 10)
     df.collect()

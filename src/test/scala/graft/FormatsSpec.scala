@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, sum => ssum, xxhash64}
 
 /** Columnar-format interop: the engine's operators are format-agnostic
@@ -15,7 +13,7 @@ class FormatsSpec extends SparkTestBase {
       .head().getDecimal(0)
 
   test("ORC round-trip preserves content and downstream query results") {
-    val base = Files.createTempDirectory("graft-orc").toString
+    val base = tempDir("graft-orc")
     val docs = Tables.documents(spark, Sf0001)
     docs.write.mode("overwrite").orc(s"$base/docs")
     val orc = spark.read.orc(s"$base/docs")
@@ -30,7 +28,7 @@ class FormatsSpec extends SparkTestBase {
 
   test("Avro round-trip is value-exact and null-safe") {
     import graft.sources.AvroIngest
-    val base = Files.createTempDirectory("graft-avro").toString
+    val base = tempDir("graft-avro")
     val sup = Tables.supplier(spark, Sf0001)
     AvroIngest.writeAvro(sup, s"$base/sup")
     val back = AvroIngest.avro(spark, s"$base/sup", AvroIngest.supplierSchema)
@@ -53,7 +51,7 @@ class FormatsSpec extends SparkTestBase {
   }
 
   test("ORC scans get predicate pushdown and column pruning too") {
-    val base = Files.createTempDirectory("graft-orc-pd").toString
+    val base = tempDir("graft-orc-pd")
     Tables.documents(spark, Sf0001).write.mode("overwrite").orc(s"$base/docs")
     val f = spark.read.orc(s"$base/docs")
       .filter(col("doc_id") > 100).select("doc_id", "lang")

@@ -10,7 +10,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("index write → probe equals inline ivfTopK and prunes partitions") {
     val emb = Tables.embeddings(spark, Sf0001)
     val q = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     Similarity.ivfWriteIndex(emb, dir, nlist = 16, iters = 2)
 
     val probe = Similarity.ivfProbeIndex(spark, dir, q, k = 10, nprobe = 2)
@@ -33,7 +33,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("PQ index write → probe equals inline pqTopK; scan reads only codes") {
     val emb = Tables.embeddings(spark, Sf0001)
     val q = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = tempDir("graft-pq")
     Similarity.pqWriteIndex(emb, dir, dim = 64)
 
     val probe = Similarity.pqProbeIndex(spark, dir, q, k = 10)
@@ -51,7 +51,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("LSH index write → probe equals inline lshTopK and prunes bucket dirs") {
     val emb = Tables.embeddings(spark, Sf0001)
     val q = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh").toString
+    val dir = tempDir("graft-lsh")
     Similarity.lshWriteIndex(emb, dir, dim = 64)
 
     val probe = Similarity.lshProbeIndex(spark, dir, q, dim = 64, k = 10)
@@ -100,14 +100,14 @@ class IvfIndexSpec extends SparkTestBase {
   test("IVF delta append ≡ one-shot union build under the same centroids; base files untouched") {
     val (emb, base, delta) = splitEmb()
     val q = emb.filter(col("vec_id") < 5)
-    val dirA = java.nio.file.Files.createTempDirectory("graft-ivf-delta").toString
+    val dirA = tempDir("graft-ivf-delta")
     Similarity.ivfWriteIndex(base, dirA, nlist = 16, iters = 2)
     val before = dataFiles(s"$dirA/vectors")
     Similarity.ivfAppendDelta(delta, dirA)
     assertBaseUntouched(before, dataFiles(s"$dirA/vectors"))
 
     val cents = Similarity.readCentroids(spark, s"$dirA/centroids")
-    val dirB = java.nio.file.Files.createTempDirectory("graft-ivf-union").toString
+    val dirB = tempDir("graft-ivf-union")
     Similarity.ivfWriteIndex(emb, dirB, nlist = 16, iters = 2,
       centroidsOpt = Some(cents))
     val a = Similarity.ivfProbeIndex(spark, dirA, q, k = 10, nprobe = 2).collect().toSeq
@@ -119,14 +119,14 @@ class IvfIndexSpec extends SparkTestBase {
   test("PQ delta append ≡ one-shot union encode under the same codebook; base files untouched") {
     val (emb, base, delta) = splitEmb()
     val q = emb.filter(col("vec_id") < 5)
-    val dirA = java.nio.file.Files.createTempDirectory("graft-pq-delta").toString
+    val dirA = tempDir("graft-pq-delta")
     Similarity.pqWriteIndex(base, dirA, dim = 64)
     val before = dataFiles(s"$dirA/codes")
     Similarity.pqAppendDelta(delta, dirA, dim = 64)
     assertBaseUntouched(before, dataFiles(s"$dirA/codes"))
 
     val books = Similarity.readCodebook(spark, s"$dirA/codebook")
-    val dirB = java.nio.file.Files.createTempDirectory("graft-pq-union").toString
+    val dirB = tempDir("graft-pq-union")
     Similarity.pqWriteIndex(emb, dirB, dim = 64, booksOpt = Some(books))
     val a = Similarity.pqProbeIndex(spark, dirA, q, k = 10).collect().toSeq
     val b = Similarity.pqProbeIndex(spark, dirB, q, k = 10).collect().toSeq
@@ -137,13 +137,13 @@ class IvfIndexSpec extends SparkTestBase {
   test("LSH delta append ≡ one-shot union build (hash functions carry no trained state)") {
     val (emb, base, delta) = splitEmb()
     val q = emb.filter(col("vec_id") < 5)
-    val dirA = java.nio.file.Files.createTempDirectory("graft-lsh-delta").toString
+    val dirA = tempDir("graft-lsh-delta")
     Similarity.lshWriteIndex(base, dirA, dim = 64)
     val before = dataFiles(s"$dirA/buckets")
     Similarity.lshAppendDelta(delta, dirA, dim = 64)
     assertBaseUntouched(before, dataFiles(s"$dirA/buckets"))
 
-    val dirB = java.nio.file.Files.createTempDirectory("graft-lsh-union").toString
+    val dirB = tempDir("graft-lsh-union")
     Similarity.lshWriteIndex(emb, dirB, dim = 64)
     val a = Similarity.lshProbeIndex(spark, dirA, q, dim = 64, k = 10).collect().toSeq
     val b = Similarity.lshProbeIndex(spark, dirB, q, dim = 64, k = 10).collect().toSeq
@@ -154,7 +154,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("IVF-PQ delta append ≡ one-shot union build under the same coarse+books; base untouched") {
     val (emb, base, delta) = splitEmb()
     val q = emb.filter(col("vec_id") < 5)
-    val dirA = java.nio.file.Files.createTempDirectory("graft-ivfpq-delta").toString
+    val dirA = tempDir("graft-ivfpq-delta")
     Similarity.ivfPqWriteIndex(base, dirA, dim = 64, nlist = 16)
     val before = dataFiles(s"$dirA/codes")
     Similarity.ivfPqAppendDelta(delta, dirA, dim = 64)
@@ -162,7 +162,7 @@ class IvfIndexSpec extends SparkTestBase {
 
     val coarse = Similarity.readCentroids(spark, s"$dirA/centroids")
     val books = Similarity.readCodebook(spark, s"$dirA/codebook")
-    val dirB = java.nio.file.Files.createTempDirectory("graft-ivfpq-union").toString
+    val dirB = tempDir("graft-ivfpq-union")
     Similarity.ivfPqWriteIndex(emb, dirB, dim = 64, nlist = 16,
       coarseOpt = Some(coarse), booksOpt = Some(books))
     val a = Similarity.ivfPqProbeIndex(spark, dirA, q, k = 10, nprobe = 4).collect().toSeq
@@ -183,8 +183,8 @@ class IvfIndexSpec extends SparkTestBase {
     // idempotent path must carry every delta column (label included),
     // not just the probe-visible ones (a probe-only check once let a
     // schema-thinning select through)
-    val ivfI = java.nio.file.Files.createTempDirectory("graft-ivf-idem").toString
-    val ivfP = java.nio.file.Files.createTempDirectory("graft-ivf-plain").toString
+    val ivfI = tempDir("graft-ivf-idem")
+    val ivfP = tempDir("graft-ivf-plain")
     Similarity.ivfWriteIndex(base, ivfI) // training is deterministic —
     Similarity.ivfWriteIndex(base, ivfP) // both builds share the state
     def ivfRows(p: String): Set[(Long, Seq[Float], Int, Int)] =
@@ -200,8 +200,8 @@ class IvfIndexSpec extends SparkTestBase {
       delta.filter(col("vec_id") % 16 === 0), ivfI) === 0L)
     assert(ivfRows(ivfI) === ivfRows(ivfP), "replay changed the index content")
 
-    val lshI = java.nio.file.Files.createTempDirectory("graft-lsh-idem").toString
-    val lshP = java.nio.file.Files.createTempDirectory("graft-lsh-plain").toString
+    val lshI = tempDir("graft-lsh-idem")
+    val lshP = tempDir("graft-lsh-plain")
     Similarity.lshWriteIndex(base, lshI, dim = 64)
     Similarity.lshWriteIndex(base, lshP, dim = 64)
     assert(Similarity.lshAppendDeltaIdempotent(delta, lshI, dim = 64) === nDelta)
@@ -216,8 +216,8 @@ class IvfIndexSpec extends SparkTestBase {
     assert(Similarity.lshProbeIndex(spark, lshI, q, dim = 64, k = 10)
       .collect().toSeq === lshProbe)
 
-    val pqI = java.nio.file.Files.createTempDirectory("graft-ivfpq-idem").toString
-    val pqP = java.nio.file.Files.createTempDirectory("graft-ivfpq-plain").toString
+    val pqI = tempDir("graft-ivfpq-idem")
+    val pqP = tempDir("graft-ivfpq-plain")
     Similarity.ivfPqWriteIndex(base, pqI, dim = 64, nlist = 16)
     // plain twin must share the SAME trained state for probe parity
     val coarse = Similarity.readCentroids(spark, s"$pqI/centroids")
@@ -244,11 +244,11 @@ class IvfIndexSpec extends SparkTestBase {
     val (emb, base, delta) = splitEmb()
     val q = emb.filter(col("vec_id") < 5)
     val nDelta = delta.count()
-    val idem = java.nio.file.Files.createTempDirectory("graft-pqflat-idem").toString
+    val idem = tempDir("graft-pqflat-idem")
     Similarity.pqWriteIndex(base, idem, dim = 64)
     val books = Similarity.readCodebook(spark, s"$idem/codebook")
     // one-shot union encode under the same books = the ground truth
-    val union = java.nio.file.Files.createTempDirectory("graft-pqflat-union").toString
+    val union = tempDir("graft-pqflat-union")
     Similarity.pqWriteIndex(emb, union, dim = 64, booksOpt = Some(books))
 
     val before = dataFiles(s"$idem/codes")
@@ -279,7 +279,7 @@ class IvfIndexSpec extends SparkTestBase {
       (col("vec_id") % 3) * W + col("vec_id")) // spreads over vb 0..2
     val delta = emb.filter(col("vec_id") < 40)
       .withColumn("vec_id", col("vec_id") + lit(3 * W))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqflat-prune").toString
+    val dir = tempDir("graft-pqflat-prune")
     graft.operators.Similarity.pqWriteIndex(base, dir, dim = 64)
     assert(new java.io.File(s"$dir/codes/vb=0").isDirectory &&
       new java.io.File(s"$dir/codes/vb=2").isDirectory, "fixture spread failed")
@@ -307,7 +307,7 @@ class IvfIndexSpec extends SparkTestBase {
     val (_, base, delta) = splitEmb()
     val b1 = delta.filter(col("vec_id") % 16 === 0)
     val b2 = delta.filter(col("vec_id") % 16 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-dupbatch").toString
+    val dir = tempDir("graft-ivf-dupbatch")
     Similarity.ivfWriteIndex(base, dir)
     // within-batch duplication: the same rows twice in one DataFrame
     assert(Similarity.ivfAppendDeltaIdempotent(b1.union(b1), dir) === b1.count())
@@ -322,7 +322,7 @@ class IvfIndexSpec extends SparkTestBase {
       delta.select("vec_id").collect().map(_.getLong(0))).toSet)
 
     // flat-PQ twin takes the same within-batch collapse
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-pqflat-dupbatch").toString
+    val pqDir = tempDir("graft-pqflat-dupbatch")
     Similarity.pqWriteIndex(base, pqDir, dim = 64)
     assert(Similarity.pqAppendDeltaIdempotent(b1.union(b1), pqDir, dim = 64) === b1.count())
     val pqIds = spark.read.parquet(s"$pqDir/codes").select("vec_id")
@@ -333,7 +333,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("IVF-PQ index write → probe equals inline ivfPqTopK; pruned code-only scan") {
     val emb = Tables.embeddings(spark, Sf0001)
     val q = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq")
     Similarity.ivfPqWriteIndex(emb, dir, dim = 64, nlist = 16)
 
     val probe = Similarity.ivfPqProbeIndex(spark, dir, q, k = 10, nprobe = 4)
@@ -362,12 +362,12 @@ class IvfIndexSpec extends SparkTestBase {
     // table, per-cid membership, probe output.
     val (emb, base, delta) = splitEmb()
     val q = emb.filter(col("vec_id") < 5)
-    val appended = java.nio.file.Files.createTempDirectory("graft-ivf-recl-a").toString
+    val appended = tempDir("graft-ivf-recl-a")
     Similarity.ivfWriteIndex(base, appended, nlist = 16, iters = 2)
     Similarity.ivfAppendDelta(delta, appended)
-    val reclustered = java.nio.file.Files.createTempDirectory("graft-ivf-recl-b").toString
+    val reclustered = tempDir("graft-ivf-recl-b")
     Similarity.ivfRecluster(spark, appended, reclustered, iters = 2)
-    val fresh = java.nio.file.Files.createTempDirectory("graft-ivf-recl-c").toString
+    val fresh = tempDir("graft-ivf-recl-c")
     Similarity.ivfWriteIndex(emb, fresh, nlist = 16, iters = 2)
     // trained state identical
     assert(Similarity.readCentroids(spark, s"$reclustered/centroids").map(_.toSeq).toSeq ===
@@ -395,13 +395,13 @@ class IvfIndexSpec extends SparkTestBase {
     // contract's words and break its meaning for every such index —
     // geometry must come from the stored centroids table.
     val (emb, base, delta) = splitEmb()
-    val appended = java.nio.file.Files.createTempDirectory("graft-ivf-recl8-a").toString
+    val appended = tempDir("graft-ivf-recl8-a")
     Similarity.ivfWriteIndex(base, appended, nlist = 8, iters = 2)
     Similarity.ivfAppendDelta(delta, appended)
-    val reclustered = java.nio.file.Files.createTempDirectory("graft-ivf-recl8-b").toString
+    val reclustered = tempDir("graft-ivf-recl8-b")
     Similarity.ivfRecluster(spark, appended, reclustered)
     assert(Similarity.readCentroids(spark, s"$reclustered/centroids").length === 8)
-    val fresh = java.nio.file.Files.createTempDirectory("graft-ivf-recl8-c").toString
+    val fresh = tempDir("graft-ivf-recl8-c")
     Similarity.ivfWriteIndex(emb, fresh, nlist = 8, iters = 2)
     assert(Similarity.readCentroids(spark, s"$reclustered/centroids").map(_.toSeq).toSeq ===
       Similarity.readCentroids(spark, s"$fresh/centroids").map(_.toSeq).toSeq)
@@ -420,7 +420,7 @@ class IvfIndexSpec extends SparkTestBase {
     val base = (0 until 32).map(i => (i.toLong, pts(i % 16).toSeq))
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift")
     Similarity.ivfWriteIndex(base, dir, nlist = 16, iters = 2)
     val d0 = Similarity.centroidDrift(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
@@ -450,7 +450,7 @@ class IvfIndexSpec extends SparkTestBase {
     // delta append shifts it. Appends only ADD members, so per-list
     // counts are monotone and the totals conserve exactly.
     val (emb, base, delta) = splitEmb()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stats").toString
+    val dir = tempDir("graft-ivf-stats")
     Similarity.ivfWriteIndex(base, dir, nlist = 16, iters = 2)
     val sBase = Similarity.clusterStats(
       spark.read.parquet(s"$dir/vectors"), 16, "cid").collect()
@@ -488,7 +488,7 @@ class IvfIndexSpec extends SparkTestBase {
     val corpus = (0L until 1200L).map(i => (i, vec(i)))
       .toDF("vec_id", "embedding")
     val q = corpus.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-2l").toString
+    val dir = tempDir("graft-ivf-2l")
     Similarity.ivfWriteIndex(corpus, dir, nlist = 128, iters = 2)
     // totality: the final 1:1 join assigns every vector exactly once
     val vecs = spark.read.parquet(s"$dir/vectors")
@@ -498,7 +498,7 @@ class IvfIndexSpec extends SparkTestBase {
     // determinism: a second build lands every row in the same cell
     // (coarse driver k-means, graft_topk comparators, DECIMAL Lloyd
     // sums — all order-independent)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ivf-2l-b").toString
+    val dir2 = tempDir("graft-ivf-2l-b")
     Similarity.ivfWriteIndex(corpus, dir2, nlist = 128, iters = 2)
     val a1 = vecs.select("vec_id", "cid").collect().map(r => (r.getLong(0), r.getInt(1))).sorted
     val a2 = spark.read.parquet(s"$dir2/vectors").select("vec_id", "cid")
@@ -532,14 +532,14 @@ class IvfIndexSpec extends SparkTestBase {
     val corpus = ((0L until 1200L).map(i => (i, vec(i))) :+
         (1200L, Seq.fill(12)(0.0f))) // the hostile row
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-zn").toString
+    val dir = tempDir("graft-ivf-zn")
     Similarity.ivfWriteIndex(corpus, dir, nlist = 128, iters = 2)
     val vecs = spark.read.parquet(s"$dir/vectors")
     assert(vecs.count() === 1201L, "zero-norm row must not drop from the build")
     val znCid = vecs.filter(col("vec_id") === 1200L).select("cid").head().getInt(0)
     assert(znCid === 127, s"all-null-tie convention is highest cid, got $znCid")
     // small regime, same convention: nlist = 16 ≤ ExprCellMax
-    val dirS = java.nio.file.Files.createTempDirectory("graft-ivf-zn-s").toString
+    val dirS = tempDir("graft-ivf-zn-s")
     Similarity.ivfWriteIndex(corpus, dirS, nlist = 16, iters = 2)
     val znS = spark.read.parquet(s"$dirS/vectors")
       .filter(col("vec_id") === 1200L).select("cid").head().getInt(0)
@@ -547,7 +547,7 @@ class IvfIndexSpec extends SparkTestBase {
     // hnsw takes __cells[1] (the secondary cell): the worst-case beam
     // sizing + left-join fallback must hand EVERY node a non-null cid1
     // and a well-defined graph row — including the zero-norm one
-    val hDir = java.nio.file.Files.createTempDirectory("graft-hnsw-zn").toString
+    val hDir = tempDir("graft-hnsw-zn")
     Similarity.hnswWriteIndex(corpus, hDir, nlist = 128, iters = 2)
     val embT = spark.read.parquet(s"$hDir/emb")
     assert(embT.count() === 1201L)

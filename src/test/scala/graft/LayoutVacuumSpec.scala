@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (VERDICT r7 #6: every source refresh strands a full index copy
   * under tmpdir; at 100 TB that is an index-sized leak per ingest).
   * Pure filesystem logic, no Spark session needed. */
-class LayoutVacuumSpec extends AnyFunSuite {
+class LayoutVacuumSpec extends AnyFunSuite with TempDirs {
 
   private val Hex = "0123456789abcdef0123456789abcdef" // a 32-hex dir digest
 
@@ -26,7 +26,7 @@ class LayoutVacuumSpec extends AnyFunSuite {
   }
 
   test("vacuum keeps only the newest generation per (family, dir, params) group") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum").toString
+    val root = tempDir("graft-vacuum")
     // two generations of the same layout: mtime 1000 → 2000
     val oldGen = age(mkLayout(root, s"graft_shidx_sf0.01_${Hex}_100_1000_n1v2"))
     val newGen = mkLayout(root, s"graft_shidx_sf0.01_${Hex}_120_2000_n1v2")
@@ -46,7 +46,7 @@ class LayoutVacuumSpec extends AnyFunSuite {
 
   test("superseded-but-recently-touched generations survive a sweep and are " +
       "reclaimed once idle (round 15 — reader-safety grace)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum-g").toString
+    val root = tempDir("graft-vacuum-g")
     // a refresh JUST published gen 2000; gen 1000's files were written
     // minutes ago and a concurrent session may still be scanning them —
     // zero-grace deletion is the mid-scan reader fault VERDICT r14
@@ -67,7 +67,7 @@ class LayoutVacuumSpec extends AnyFunSuite {
     // family whose shape the Keyed regex was never tested against —
     // and a stranded bucket copy is FACT-TABLE-sized, the costliest
     // possible leak (VERDICT r8 #6)
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum-bk").toString
+    val root = tempDir("graft-vacuum-bk")
     val oldGen = age(mkLayout(root, s"graft_bk_orders__root_testdata_sf0_01_${Hex}_3000_1000_bk8"))
     val newGen = mkLayout(root, s"graft_bk_orders__root_testdata_sf0_01_${Hex}_3100_2000_bk8")
     // same table+source at a DIFFERENT bucket count — its own layout
@@ -82,7 +82,7 @@ class LayoutVacuumSpec extends AnyFunSuite {
   }
 
   test("vacuum sweeps stale .build-* orphans but spares young (possibly in-flight) ones") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum-b").toString
+    val root = tempDir("graft-vacuum-b")
     val stale = mkLayout(root, s"graft_annidx_sf0.01_${Hex}_100_1000.build-deadbeef")
     assert(stale.setLastModified(System.currentTimeMillis - 2 * 3600L * 1000))
     val young = mkLayout(root, s"graft_annidx_sf0.01_${Hex}_100_1000.build-cafebabe")
@@ -92,7 +92,7 @@ class LayoutVacuumSpec extends AnyFunSuite {
   }
 
   test("vacuum is idempotent and safe on an empty / absent directory") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum-e").toString
+    val root = tempDir("graft-vacuum-e")
     assert(Tables.layoutVacuum(root).isEmpty)
     assert(Tables.layoutVacuum(root + "/does-not-exist").isEmpty)
   }

@@ -39,7 +39,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("quiet index: cycle compacts, gauges zero-ish drift, KEEPS; probe byte-identical through the cycle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-q").toString
+    val dir = tempDir("graft-maint-q")
     Similarity.ivfWriteIndex(fixedPointCorpus, s"$dir/gen1", nlist = 16, iters = 2)
     // a same-distribution append (exact copies of direction 2) moves
     // no mean — drift stays 0.0 — but fragments the cid dir
@@ -59,7 +59,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("drifted index: cycle fires the recluster arm; the new generation ≡ a fresh full build") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-d").toString
+    val dir = tempDir("graft-maint-d")
     Similarity.ivfWriteIndex(fixedPointCorpus, s"$dir/gen1", nlist = 16, iters = 2)
     Similarity.ivfAppendDelta(shiftedDelta, s"$dir/gen1")
     val log = Maintenance.ivfCycle(spark, s"$dir/gen1", s"$dir/gen2",
@@ -91,7 +91,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("pq cycle: quiet delta keeps; single-subspace shift fires the rebuild ALERT on precisely that subspace") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-pq").toString
+    val dir = tempDir("graft-maint-pq")
     // the 16 seeds ARE the 16 distinct directions, so the trained
     // books code the base corpus losslessly — residual floor exactly 0
     Similarity.pqWriteIndex(fixedPointCorpus, s"$dir/idx", dim = 16)
@@ -124,7 +124,7 @@ class MaintenanceSpec extends SparkTestBase {
   test("shingle cycle: compaction in place, probe identical, trained df/ untouched") {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, Sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-sh").toString
+    val dir = tempDir("graft-maint-sh")
     Dedup.shingleWriteIndex(docs.filter(col("doc_id") % 2 === 0), 1, dir)
     Dedup.shingleAppendDelta(docs.filter(col("doc_id") % 2 =!= 0), 1, dir)
     val dfMtime = new java.io.File(s"$dir/df").lastModified()
@@ -138,7 +138,7 @@ class MaintenanceSpec extends SparkTestBase {
   test("span cycle: compaction in place, probe identical through it (round 13)") {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, Sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-span").toString
+    val dir = tempDir("graft-maint-span")
     Dedup.dupSpansWriteIndex(docs.filter(col("doc_id") % 2 === 0), 10, dir)
     // two ingest batches fragment spans/, df/ and (possibly) dupset/
     Dedup.dupSpansAppendDelta(docs.filter(col("doc_id") % 4 === 1), 10, dir)
@@ -156,7 +156,7 @@ class MaintenanceSpec extends SparkTestBase {
   test("hnsw cycle: patch merge + compaction preserve every probe answer; " +
       "post-cycle graph has one row per node; drift gauges observe and alert (round 14)") {
     val emb = Tables.embeddings(spark, Sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-hnsw").toString
+    val dir = tempDir("graft-maint-hnsw")
     Similarity.hnswWriteIndex(emb.filter(col("vec_id") % 8 =!= 0), dir)
     // fresh build: both gauges exactly 0.0, quiet cycle takes neither arm
     val fresh = Similarity.hnswDrift(spark, dir).head()

@@ -302,7 +302,7 @@ class MultimodalSpec extends SparkTestBase {
     val (base, delta) =
       (docs.filter(org.apache.spark.sql.functions.col("doc_id") % 8 =!= 0),
         docs.filter(org.apache.spark.sql.functions.col("doc_id") % 8 === 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcidx").toString
+    val dir = tempDir("graft-cdcidx")
     Multimodal.cdcWriteIndex(base, dir)
     def files(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =

@@ -59,7 +59,7 @@ class RandomizedSpec extends SparkTestBase {
     for ((k, w) <- Seq((4, 3), (8, 4))) {
       val fast = TextFunctions.fingerprints(docs, k, w).collect()
         .map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2), x.getLong(3)))).toMap
-      val ref = TextFunctions.fingerprintsHofReference(docs, k, w)
+      val ref = WinnowReference.fingerprints(docs, k, w)
         .select(col("doc_id"), size(col("fps")).cast("long"),
           array_min(col("fps")), array_max(col("fps")))
         .collect()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -13,7 +11,7 @@ import graft.operators.Dedup
   */
 class ScaleGenSpec extends SparkTestBase {
 
-  private lazy val outRoot = Files.createTempDirectory("graft_scale_spec").toString
+  private lazy val outRoot = tempDir("graft_scale_spec")
   private lazy val x3 = ScaleGen.writeScaled(spark, Sf0001, outRoot, 3)
 
   test("x3 fact tables triple rows; keys stay unique; dims unchanged") {
@@ -93,7 +91,7 @@ class ScaleGenSpec extends SparkTestBase {
       assert(changed === n, s"replica $i must differ from the base per vector")
     }
     // determinism: a second generation is bit-identical
-    val xp2root = Files.createTempDirectory("graft_scale_spec2").toString
+    val xp2root = tempDir("graft_scale_spec2")
     val xp2 = ScaleGen.writeScaled(spark, Sf0001, xp2root, 3, eps)
     val again = Tables.embeddings(spark, xp2)
       .select(col("vec_id").as("p_vec_id"), col("embedding").as("a_embedding"))

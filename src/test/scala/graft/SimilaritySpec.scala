@@ -117,7 +117,7 @@ class SimilaritySpec extends SparkTestBase {
     val q = emb.filter(col("vec_id") < 5)
     val truth = Similarity.bruteForceTopK(emb, q, 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-rerank").toString
+    val dir = tempDir("graft-pq-rerank")
     Similarity.pqWriteIndex(emb, dir, dim = 64)
     val adc = Similarity.pqProbeIndex(spark, dir, q, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -143,13 +143,13 @@ class SimilaritySpec extends SparkTestBase {
     // the rerank scores with exact cosine, so the planted duplicate's
     // score is exactly 1.0 — not the ADC approximation the raw probe
     // reports (quantization can only blur it)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-pq-rr1").toString
+    val pqDir = tempDir("graft-pq-rr1")
     Similarity.pqWriteIndex(corpus, pqDir, dim)
     val outPq = Similarity.pqProbeIndexReranked(spark, pqDir, queries, corpus, 5)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
     assert(outPq.nonEmpty && outPq(0)._2 === 101L)
     assert(math.abs(outPq(0)._3 - 1.0) < 1e-9)
-    val ipqDir = java.nio.file.Files.createTempDirectory("graft-ivfpq-rr1").toString
+    val ipqDir = tempDir("graft-ivfpq-rr1")
     Similarity.ivfPqWriteIndex(corpus, ipqDir, dim, nlist = 4)
     val outIpq = Similarity.ivfPqProbeIndexReranked(spark, ipqDir, queries, corpus, 5)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
@@ -208,7 +208,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("ss17 HNSW-lite: planted exact duplicate at rank 1; recall floor vs ss1; deterministic (round 13)") {
     // planted fixture through the write→probe cycle
-    val idx = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
+    val idx = tempDir("graft-hnsw")
     Similarity.hnswWriteIndex(corpus, idx, nlist = 4)
     val out = Similarity.hnswProbeIndex(spark, idx, queries, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -218,7 +218,7 @@ class SimilaritySpec extends SparkTestBase {
     // real-corpus recall floor (same spirit as ss3's collapse guard)
     val emb = Tables.embeddings(spark, Sf0001)
     val q = emb.filter(col("vec_id") < 5)
-    val idx2 = java.nio.file.Files.createTempDirectory("graft-hnsw2").toString
+    val idx2 = tempDir("graft-hnsw2")
     Similarity.hnswWriteIndex(emb, idx2)
     val truth = Similarity.bruteForceTopK(emb, q, 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -237,7 +237,7 @@ class SimilaritySpec extends SparkTestBase {
     // lists are frozen, so rank-1 retrieval is possible only if the
     // reverse-edge patch rows made the new node reachable from the
     // standing graph
-    val idx = java.nio.file.Files.createTempDirectory("graft-hnsw-d").toString
+    val idx = tempDir("graft-hnsw-d")
     Similarity.hnswWriteIndex(corpus.filter(col("vec_id") =!= 101L), idx, nlist = 4)
     Similarity.hnswAppendDelta(corpus.filter(col("vec_id") === 101L), idx)
     val out = Similarity.hnswProbeIndex(spark, idx, queries, 5)
@@ -247,7 +247,7 @@ class SimilaritySpec extends SparkTestBase {
     // the family's nightly split on the real table: base 7/8 ⊕ delta
     // 1/8, recall scored against the FULL corpus's exact answer
     val emb = Tables.embeddings(spark, Sf0001)
-    val idx2 = java.nio.file.Files.createTempDirectory("graft-hnsw-d2").toString
+    val idx2 = tempDir("graft-hnsw-d2")
     Similarity.hnswWriteIndex(emb.filter(col("vec_id") % 8 =!= 0), idx2)
     Similarity.hnswAppendDelta(emb.filter(col("vec_id") % 8 === 0), idx2)
     val q = emb.filter(col("vec_id") < 5)
@@ -272,7 +272,7 @@ class SimilaritySpec extends SparkTestBase {
     // silently filling degree slots with repeated ids. The planted
     // duplicate arrives in the SECOND batch, so its retrieval walks
     // through a graph built on post-first-append state.
-    val idx = java.nio.file.Files.createTempDirectory("graft-hnsw-d3").toString
+    val idx = tempDir("graft-hnsw-d3")
     Similarity.hnswWriteIndex(
       corpus.filter(col("vec_id") =!= 101L && col("vec_id") < 140L), idx, nlist = 4)
     Similarity.hnswAppendDelta(corpus.filter(col("vec_id") >= 140L), idx)
@@ -301,7 +301,7 @@ class SimilaritySpec extends SparkTestBase {
     val big = ((0L until 1200L).map(i => (i, v(i))) :+ (5000L, v(7L)))
       .toDF("vec_id", "embedding")
     val q = Seq((7L, v(7L))).toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-hnsw-2l").toString
+    val idx = tempDir("graft-hnsw-2l")
     Similarity.hnswWriteIndex(big, idx, nlist = 128)
     val embRows = spark.read.parquet(s"$idx/emb")
     assert(embRows.count() === 1201L)
@@ -311,7 +311,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(out(0)._3 === 5000L && math.abs(out(0)._4 - 1.0) < 1e-9,
       "the planted exact duplicate must surface at rank 1 under the two-level build")
     // determinism: a second build assigns every node the same cid1
-    val idx2 = java.nio.file.Files.createTempDirectory("graft-hnsw-2l-b").toString
+    val idx2 = tempDir("graft-hnsw-2l-b")
     Similarity.hnswWriteIndex(big, idx2, nlist = 128)
     val c1 = embRows.select("vec_id", "cid1").collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted
@@ -408,7 +408,7 @@ class SimilaritySpec extends SparkTestBase {
     // candidate miss, never a scoring drift
     val docs = Tables.documents(spark, Sf0001)
     val emb = Tables.embeddings(spark, Sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-hyb").toString
+    val dir = tempDir("graft-hyb")
     Similarity.ivfWriteIndex(emb, dir, nlist = 16, iters = 2)
     val k = 10
     val exact = Similarity.hybridTopK(docs, emb, nQueries = 5, k = k)
@@ -668,7 +668,7 @@ class SimilaritySpec extends SparkTestBase {
     val q = emb.filter(col("vec_id") < 5)
     val exact = Similarity.filteredTopK(emb, q, 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-filt").toString
+    val dir = tempDir("graft-ivf-filt")
     Similarity.ivfWriteIndex(emb, dir, nlist = 16)
     val got = Similarity.ivfProbeIndexFiltered(spark, dir, q, emb, 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet

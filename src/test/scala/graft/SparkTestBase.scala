@@ -1,17 +1,33 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
   * ScalaTest runs suites sequentially in the forked JVM, and Spark
   * session startup dominates test time otherwise). */
-trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkTestBase extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkTestBase.session
 
   val Sf0001 = "/root/testdata/sf0.001"
+}
+
+/** Temp directories a suite creates, deleted with their contents when
+  * the suite ends. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 }
 
 object SparkTestBase {

@@ -272,7 +272,7 @@ class StreamQueriesSpec extends SparkTestBase {
       (6L, B + H + 1800000000L, 5L, "purchase", 2.5), // its match, 30 min later
       (7L, B + H, 6L, "purchase", 1.0),        // exactly on purchase bound (base − 2H) → suppressed
       (8L, B + H - 1000L, 7L, "purchase", 1.0)) // 1 ms inside → emitted unmatched
-    val dir = java.nio.file.Files.createTempDirectory("graft-stboundary").toString
+    val dir = tempDir("graft-stboundary")
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -372,7 +372,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // versioned merges and still land on the plain-rank answer, which
     // is the associativity/idempotence claim of the versioned-state
     // design (state_N deterministically recomputed from state_(N−1)).
-    val dir = java.nio.file.Files.createTempDirectory("graft-st13-src").toString
+    val dir = tempDir("graft-st13-src")
     spark.read.parquet(s"$Sf0001/events.parquet").repartition(4)
       .write.parquet(s"$dir/events.parquet")
     val (standing, versions) = StreamQueries.mergeUpsertRunWithCount(spark,
@@ -409,7 +409,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // Batch-split invariance: verdicts are per-doc facts against the
     // STANDING corpus only, so slicing the delta into micro-batches
     // must change nothing.
-    val dir = java.nio.file.Files.createTempDirectory("graft-st15-src").toString
+    val dir = tempDir("graft-st15-src")
     spark.read.parquet(s"$Sf0001/documents.parquet").repartition(4)
       .write.parquet(s"$dir/documents.parquet")
     val multi = StreamQueries.st15From(spark, dir, Some(1)).collect().toSeq
@@ -446,7 +446,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // batch-split invariance: ivf assignment is a pure per-row function
     // of the frozen centroids, so HOW the stream slices the delta must
     // leave the ingested index's probe bit-identical
-    val dir = java.nio.file.Files.createTempDirectory("graft-st17-src").toString
+    val dir = tempDir("graft-st17-src")
     spark.read.parquet(s"$Sf0001/embeddings.parquet").repartition(4)
       .write.parquet(s"$dir/embeddings.parquet")
     val multi = rows(StreamQueries.st17From(spark, dir, Some(1)))
@@ -456,7 +456,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // same trained state (ivfAppendDelta's union-build contract)
     val emb = Tables.embeddings(spark, Sf0001)
     val base = PipelineQueries.cachedAnnIndex(spark, Sf0001, "ivf_base")
-    val oneShot = java.nio.file.Files.createTempDirectory("graft-st17-one").toString
+    val oneShot = tempDir("graft-st17-one")
     Tables.copyDir(new java.io.File(base), new java.io.File(s"$oneShot/idx"))
     Similarity.ivfAppendDelta(emb.filter(col("vec_id") % 8 === 0), s"$oneShot/idx")
     val q = emb.filter(col("vec_id") < PipelineQueries.NQueries)
@@ -465,7 +465,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // exactly-once: replaying the SAME batch (and a subset of it)
     // against the idempotent append adds nothing — st13's idempotence
     // argument on an append-only layout
-    val replay = java.nio.file.Files.createTempDirectory("graft-st17-rep").toString
+    val replay = tempDir("graft-st17-rep")
     Tables.copyDir(new java.io.File(base), new java.io.File(s"$replay/idx"))
     val delta = emb.filter(col("vec_id") % 8 === 0)
     val n1 = Similarity.ivfAppendDeltaIdempotent(delta, s"$replay/idx")
@@ -508,7 +508,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // 2); doc 60 adds one token to base 4's nine (jaccard exactly
     // 9/10 = τ — the boundary the floor-prefix argument must keep);
     // doc 59 is unique.
-    val dir = java.nio.file.Files.createTempDirectory("graft-st15-fix").toString
+    val dir = tempDir("graft-st15-fix")
     val fox = "the quick brown fox jumps over a lazy dog"
     val nine = "alpha beta gamma delta epsilon zeta eta theta iota"
     Seq(
@@ -529,7 +529,7 @@ class StreamQueriesSpec extends SparkTestBase {
   }
 
   test("st18 cdc apply: multi-batch (4-file, 1/trigger) ≡ single run ≡ batch twin; tombstones suppress") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-st18-src").toString
+    val dir = tempDir("graft-st18-src")
     spark.read.parquet(s"$Sf0001/events.parquet").repartition(4)
       .write.parquet(s"$dir/events.parquet")
     val (standing, versions) = StreamQueries.cdcApplyRun(spark,
@@ -586,7 +586,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // Batch-split invariance: verdicts are per-doc facts under FROZEN
     // weights (trained on the standing split only), so slicing the
     // delta stream into micro-batches must change nothing.
-    val dir = java.nio.file.Files.createTempDirectory("graft-st19-src").toString
+    val dir = tempDir("graft-st19-src")
     spark.read.parquet(s"$Sf0001/documents.parquet").repartition(4)
       .write.parquet(s"$dir/documents.parquet")
     val multi = StreamQueries.st19From(spark, dir, Some(1)).collect().toSeq

@@ -37,7 +37,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("file-source stream: windowed counts equal the batch answer") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     val data = (1 to 200).map(i =>
       Event(i.toLong, ts(i * 7L), i % 10L, if (i % 3 == 0) "view" else "click", i.toDouble))
     val df = data.toDF()
@@ -318,7 +318,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("checkpointed file sink resumes exactly-once across a restart") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val base = tempDir("graft-ckpt")
     val src = s"$base/src"; val sink = s"$base/sink"; val ckpt = s"$base/ckpt"
     val mk = (r: Range) => r.map(i => Event(i.toLong, ts(i.toLong), i % 5L, "click", i.toDouble))
     mk(1 to 100).toDF().write.mode("append").parquet(src)

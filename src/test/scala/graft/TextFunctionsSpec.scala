@@ -202,7 +202,7 @@ class TextFunctionsSpec extends SparkTestBase {
       val fast = corpus.select(col("doc_id"),
           call_function("graft_winnow", lower(col("text")), lit(k), lit(w)).as("fps"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val ref = TextFunctions.fingerprintsHofReference(corpus, k, w)
+      val ref = WinnowReference.fingerprints(corpus, k, w)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(fast === ref, s"(k=$k, w=$w)")
     }

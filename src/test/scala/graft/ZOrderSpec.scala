@@ -27,7 +27,7 @@ class ZOrderSpec extends SparkTestBase {
   }
 
   test("box query over the layout equals a direct filter on the original") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder_spec").toString
+    val dir = tempDir("zorder_spec")
     val li = Tables.lineitem(spark, Sf0001)
     ZOrderLayout.writeZOrdered(li, "l_partkey", "l_suppkey", dir, cellBits = 3)
     val got = ZOrderLayout.boxQuery(spark, dir, 20L, 80L, 2L, 6L)
@@ -50,7 +50,7 @@ class ZOrderSpec extends SparkTestBase {
   }
 
   test("a small box reads a small fraction of the layout's files (partition pruning)") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder_prune").toString
+    val dir = tempDir("zorder_prune")
     ZOrderLayout.writeZOrdered(Tables.lineitem(spark, Sf0001),
       "l_partkey", "l_suppkey", dir, cellBits = 3)
     val all = scanOf(spark.read.parquet(s"$dir/data"))
@@ -85,7 +85,7 @@ class ZOrderSpec extends SparkTestBase {
   }
 
   test("3-D box query equals a direct filter; a small box prunes most files (round 13)") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder3_spec").toString
+    val dir = tempDir("zorder3_spec")
     val li = Tables.lineitem(spark, Sf0001)
     ZOrderLayout.writeZOrderedN(li,
       Seq("l_partkey", "l_suppkey", "l_quantity"), dir, cellBits = 3)
@@ -122,12 +122,12 @@ class ZOrderSpec extends SparkTestBase {
       ZOrderLayout.normalize(50L, 0L, 65535L, 100L))
     // end-to-end at both arities: a box with bounds far outside the
     // written domain must return every row (cells = superset contract)
-    val dir2 = java.nio.file.Files.createTempDirectory("zorder_clamp2").toString
+    val dir2 = tempDir("zorder_clamp2")
     val li = Tables.lineitem(spark, Sf0001)
     ZOrderLayout.writeZOrdered(li, "l_partkey", "l_suppkey", dir2, cellBits = 3)
     assert(ZOrderLayout.boxQuery(spark, dir2,
       Long.MinValue, Long.MaxValue, Long.MinValue, Long.MaxValue).count() === li.count())
-    val dirN = java.nio.file.Files.createTempDirectory("zorder_clampN").toString
+    val dirN = tempDir("zorder_clampN")
     ZOrderLayout.writeZOrderedN(li,
       Seq("l_partkey", "l_suppkey", "l_quantity"), dirN, cellBits = 3)
     assert(ZOrderLayout.boxQueryN(spark, dirN,
