@@ -1,5 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** The tool main, one subcommand per job:
+  *  - no argument, or `board`: the benchmark board — every registry
+  *    query timed on `SPARK_GRAFT_SF_DIR` (default sf0.1); one compact
+  *    JSON line on stdout, the per-query map in `BENCH_LAST.json`.
+  *  - `one <sfDir> <query>...`: the named queries timed like the board.
+  *  - `rows <sfDir> [<query>...]`: every query's row count, or the
+  *    named queries' rows.
+  *  - `plan <sfDir> <outDir> <query>...`: each named query's formatted
+  *    physical plan after execution (the final adaptive plan) written
+  *    to `<outDir>/<query>.txt`. */
 object Bench {
   /** Full-result sink (round 15 — VERDICT r14 #1). `count()` let
     * Catalyst prune any work whose result doesn't affect the row
@@ -16,22 +28,66 @@ object Bench {
   private[graft] def sink(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Timed runs per query; the minimum is reported. The container's
+    * host contention swings single samples 3–20×, which made one-pass
+    * round-over-round artifacts nearly meaningless for regression
+    * detection (round 6: two same-code passes read 147 s and 626 s);
+    * min-of-N recovers the plan's intrinsic cost at N× wall-clock.
+    * Reps run back-to-back per query (not pass-by-pass) so each
+    * query's samples share one cache state. */
+  private val Reps = 2
+
+  private val Usage =
+    "usage: graft.Bench [board | one <sfDir> <query>... | rows <sfDir> [<query>...] | " +
+      "plan <sfDir> <outDir> <query>...]"
+
   def main(args: Array[String]): Unit = {
+    def named(qs: List[String]): List[String] = {
+      val unknown = qs.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      qs
+    }
+    val cmd: SparkSession => Unit = args.toList match {
+      case Nil | List("board") => board
+      case "one" :: sf :: qs if qs.nonEmpty => val ns = named(qs); one(_, sf, ns)
+      case "rows" :: sf :: qs => val ns = named(qs); rows(_, sf, ns)
+      case "plan" :: sf :: out :: qs if qs.nonEmpty => val ns = named(qs); plan(_, sf, out, ns)
+      case _ => System.err.println(Usage); sys.exit(2)
+    }
+    val spark = Sessions.local()
+    try cmd(spark) finally spark.stop()
+  }
+
+  /** Min-wall of [[Reps]] sink runs of `name`, each on cleared caches:
+    * (wall s, executor cpu s of that same run, every run succeeded). */
+  private def timed(spark: SparkSession, cpuNow: () => Long, sfDir: String,
+      name: String): (Double, Double, Boolean) = {
+    val samples = (1 to Reps).map { _ =>
+      Sessions.clearCaches(spark)
+      val c0 = cpuNow()
+      val t0 = System.nanoTime()
+      // A failed query must be loud: recording its ~70 ms of
+      // throw-latency as a real time once hid a 15-query breakage for
+      // two rounds. Keep the time but carry the failure alongside.
+      val ok = try { sink(SparkEntry.queries(name)(spark, sfDir)); true }
+               catch { case e: Throwable =>
+                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+                 false
+               }
+      ((System.nanoTime() - t0) / 1e9, (cpuNow() - c0) / 1e9, ok)
+    }
+    // the CPU figure reported is the min-wall rep's — the (wall, cpu)
+    // pair is one observation; pairing min wall with another rep's
+    // cpu would report a run that never happened
+    val best = samples.minBy(_._1)
+    (best._1, best._2, samples.forall(_._3))
+  }
+
+  private def board(spark: SparkSession): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.perf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the contended container intermittently blows the 300 s default
-      // during broadcast exchanges — not a plan problem, raise it
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Executor CPU-time accounting (BenchCpu, shared with BenchOne):
-    // BENCH_LAST carries wall AND cpu, and regression reads gate on
-    // cpu when wall is ambiguous (VERDICT r11 #1's host-window noise).
+    // Executor CPU-time accounting: BENCH_LAST carries wall AND cpu,
+    // and regression reads gate on cpu when wall is ambiguous
+    // (VERDICT r11 #1's host-window noise).
     val cpuNow = BenchCpu.install(spark)
     // Warm-up (untimed): JIT + codegen caches + file-system cache, so
     // the first timed query doesn't absorb JVM start-up cost.
@@ -50,43 +106,9 @@ object Bench {
       System.err.println(s"[bench] layout prebuild FAILED: ${e.getMessage}")
     }
     val layoutSec = (System.nanoTime() - tL) / 1e9
-    // SPARK_GRAFT_BENCH_REPS=N → per-query min-of-N (DEFAULT 2). The
-    // container's host contention swings single samples 3–20×, which
-    // made one-pass round-over-round artifacts nearly meaningless for
-    // regression detection (round 6: two same-code passes read 147 s
-    // and 626 s); min-of-N recovers the plan's intrinsic cost at N×
-    // wall-clock, and the default applies to the driver's artifact,
-    // which sets no env. Reps run back-to-back per query (not
-    // pass-by-pass) so each query's samples share one cache state.
-    // malformed values fail LOUDLY with the env var named instead of
-    // crashing later with a bare NumberFormatException (ADVICE r7)
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map { v =>
-      v.trim.toIntOption.getOrElse(
-        sys.error(s"SPARK_GRAFT_BENCH_REPS must be an integer, got '$v'"))
-    }.getOrElse(2).max(1)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val samples = (1 to reps).map { _ =>
-        spark.catalog.clearCache() // operator-internal caches must not tax later queries
-        // localCheckpoint RDDs (iterative ops) bypass the catalog cache;
-        // free them too or repeated runs degrade under memory pressure
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        val c0 = cpuNow()
-        val t0 = System.nanoTime()
-        // A failed query must be loud: recording its ~70 ms of
-        // throw-latency as a real time once hid a 15-query breakage for
-        // two rounds. Keep the time but carry the failure alongside.
-        val ok = try { sink(fn(spark, sfDir)); true }
-                 catch { case e: Throwable =>
-                   System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-                   false
-                 }
-        ((System.nanoTime() - t0) / 1e9, (cpuNow() - c0) / 1e9, ok)
-      }
-      // the CPU figure reported is the min-wall rep's — the (wall, cpu)
-      // pair is one observation; pairing min wall with another rep's
-      // cpu would report a run that never happened
-      val best = samples.minBy(_._1)
-      (name, best._1, best._2, samples.forall(_._3))
+    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val (wall, cpu, ok) = timed(spark, cpuNow, sfDir, name)
+      (name, wall, cpu, ok)
     }
     val failed = results.collect { case (n, _, _, false) => n }
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
@@ -101,9 +123,9 @@ object Bench {
     // the full per-query map lives exclusively in BENCH_LAST.json.
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpu_total_sec":$cpuTotal,"layout_build_sec":$layoutSec,"reps":$reps,"queries":$qs,"cpu_sec":$cpuQs,"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpu_total_sec":$cpuTotal,"layout_build_sec":$layoutSec,"reps":$Reps,"queries":$qs,"cpu_sec":$cpuQs,"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}"""
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpu_total_sec":$cpuTotal,"layout_build_sec":$layoutSec,"reps":$reps,"n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpu_total_sec":$cpuTotal,"layout_build_sec":$layoutSec,"reps":$Reps,"n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}"""
     // Stop first: Spark shutdown logs (stderr) can't then interleave
     // after the JSON line the driver parses.
     spark.stop()
@@ -113,5 +135,51 @@ object Bench {
     catch { case _: Throwable => () }
     println(compact)
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  private def one(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val cpuNow = BenchCpu.install(spark)
+    val failed = names.filterNot { name =>
+      // untimed row count for the log line; it also warms the query's
+      // code paths before the timed runs
+      val n = try SparkEntry.queries(name)(spark, sfDir).count()
+              catch { case _: Throwable => -1L }
+      val (wall, cpu, ok) = timed(spark, cpuNow, sfDir, name)
+      println(f"[one] $name rows=$n $wall%.2fs cpu=$cpu%.2fs${if (ok) "" else " FAILED"}")
+      ok
+    }
+    if (failed.nonEmpty) { spark.stop(); sys.exit(1) }
+  }
+
+  private def rows(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
+    if (names.nonEmpty) names.foreach { n =>
+      println(s"[rows] $n:")
+      SparkEntry.queries(n)(spark, sfDir).show(500, truncate = false)
+    }
+    else SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        val n = fn(spark, sfDir).count()
+        println(f"[rows] $name%-22s rows=$n%-8d ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      } catch {
+        case e: Throwable =>
+          println(s"[rows] $name FAILED: ${e.getMessage.linesIterator.take(3).mkString(" | ")}")
+      }
+    }
+
+  private def plan(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    new java.io.File(outDir).mkdirs()
+    names.foreach { name =>
+      val text =
+        try {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          val n = df.collect().length
+          s"rows=$n\n" + df.queryExecution.explainString(FormattedMode)
+        } catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
+      val path = java.nio.file.Paths.get(outDir, s"$name.txt")
+      java.nio.file.Files.write(path, text.getBytes("UTF-8"))
+      println(s"[plan] $name -> $path")
+    }
   }
 }

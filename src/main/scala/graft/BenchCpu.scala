@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * VERDICT r11 #1): wall seconds on this box fold in host scheduling
   * noise that swung the streaming family 2× between rounds with zero
   * code change; the sum of task executorCpuTime is the work the PLAN
-  * actually did, immune to the host window. One definition — Bench
-  * (the driver artifact) and BenchOne (the iteration tool) must report
-  * the same cpu column or regression reads comparing the two are
+  * actually did, immune to the host window. One definition — the
+  * board and a single-query run (`graft.Bench one`) must report the
+  * same cpu column or regression reads comparing the two are
   * meaningless. */
 object BenchCpu {
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measure delta-append index maintenance against its full-rebuild
@@ -39,13 +38,7 @@ object DeltaBench {
     // wall time
     val section = args.drop(2).headOption.getOrElse("all")
     def on(s: String): Boolean = section == "all" || section == s
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.perf(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import graft.operators.{Dedup, Similarity}
 
     val work = java.nio.file.Files.createTempDirectory("graft-deltabench").toString
@@ -53,12 +46,12 @@ object DeltaBench {
     def fresh(): String = { n += 1; s"$work/d$n" }
     def minTime(f: String => Unit): Double =
       (1 to reps).map { _ =>
-        spark.catalog.clearCache()
+        Sessions.clearCaches(spark)
         val t0 = System.nanoTime(); f(fresh()); (System.nanoTime() - t0) / 1e9
       }.min
     def minTimeOnCopy(proto: String)(f: String => Unit): Double =
       (1 to reps).map { _ =>
-        spark.catalog.clearCache()
+        Sessions.clearCaches(spark)
         val c = fresh()
         copyDir(new java.io.File(proto), new java.io.File(c))
         val t0 = System.nanoTime(); f(c); (System.nanoTime() - t0) / 1e9
@@ -175,7 +168,7 @@ object DeltaBench {
           val c = fresh()
           copyDir(new java.io.File(proto), new java.io.File(c))
           fam.idem(c)
-          spark.catalog.clearCache()
+          Sessions.clearCaches(spark)
           val t0 = System.nanoTime()
           require(fam.idem(c) == 0L, s"${fam.name} replay appended rows")
           (System.nanoTime() - t0) / 1e9
@@ -223,7 +216,7 @@ object DeltaBench {
         (0 until 4).foreach(i => cf.appendSlice(i, p))
         val filesPre = fileCount(s"$p/${cf.dataSub}")
         def probeMin(): Double = (1 to reps).map { _ =>
-          spark.catalog.clearCache()
+          Sessions.clearCaches(spark)
           val t0 = System.nanoTime(); cf.probe(p); (System.nanoTime() - t0) / 1e9
         }.min
         val tPre = probeMin()

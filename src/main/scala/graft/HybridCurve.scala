@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, concat, lit, when}
 
 import graft.operators.Similarity
@@ -45,13 +44,7 @@ object HybridCurve {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val nQueries = 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val emb = Tables.embeddings(spark, dir)
     // scratch IVF index for the probe path — deleted on exit (the
     // pre-round-12 tool stranded one index per invocation; ADVICE r11)

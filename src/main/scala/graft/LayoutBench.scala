@@ -57,20 +57,13 @@ object LayoutBench {
     val points = args.drop(2).map { a =>
       val Array(label, dir) = a.split("=", 2); (label, dir)
     }.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.perf(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val picked = builders.filter { case (n, _) => famSel.forall(_.contains(n)) }
     val rows = for ((name, build) <- picked; (label, dir) <- points) yield {
       val path = build(spark, dir) // warm: deps + memoized counts + known path
       val times = (1 to repeat).map { _ =>
         Tables.deleteLayoutDir(path)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Sessions.clearCaches(spark)
         val t0 = System.nanoTime()
         build(spark, dir)
         (System.nanoTime() - t0) / 1e9

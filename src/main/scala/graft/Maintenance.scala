@@ -190,10 +190,7 @@ object Maintenance {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Maintenance ivf <path> <reclusterTo> [threshold] " +
       "| pq <path> <appendedParquet> [ratioThreshold] | shingle <path>")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val log = args(0) match {
       case "ivf" =>
         ivfCycle(spark, args(1), args(2),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Mean ss8 recall per ANN variant across scale points — the
@@ -25,13 +24,7 @@ object RecallCurve {
       val Array(l, d) = a.split("=", 2); (l, d)
     }
     require(points.nonEmpty, "usage: RecallCurve <label=dir> [...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.perf(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val cells = points.flatMap { case (label, dir) =>
       val t0 = System.nanoTime()
       val rows = graft.queries.PipelineQueries.ss8(spark, dir)

@@ -27,13 +27,7 @@ object ScaleBench {
     val points = args.drop(2).map { a =>
       val Array(label, dir) = a.split("=", 2); (label, dir)
     }.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.perf(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Non-registry components measurable at scale (SURVEY §2 rows with
     // no oracle-able registry binding — a convergence loop's round
     // count is data-dependent, so it lives here, not in Verify/Bench).
@@ -59,8 +53,7 @@ object ScaleBench {
       // noop materializes every output column without write-side cost.
       val outRows = fn(spark, dir).count()
       val times = (1 to repeat).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Sessions.clearCaches(spark)
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

@@ -189,12 +189,7 @@ object ScaleGen {
     val baseDir  = args2.headOption.getOrElse("/root/testdata/sf0.1")
     val outRoot  = args2.drop(1).headOption.getOrElse("/tmp/graft_scale")
     val replicas = { val r = args2.drop(2).map(_.toInt); if (r.isEmpty) Array(3, 10, 30) else r }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.perf(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     replicas.foreach { r =>
       val dir = writeScaled(spark, baseDir, outRoot, r, perturbEps)
       println(s"[scalegen] wrote $dir (base=$baseDir, replicas=$r, perturbEps=$perturbEps)")

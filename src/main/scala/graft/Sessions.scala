@@ -2,30 +2,46 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session-level performance configuration for the bench/tool
-  * mains (round 15, optimization round — guide §2.2 "fewer, larger
-  * reduce partitions" / §9 baseline config).
+/** The one place session settings live: every main, the test suites
+  * and the benchmark harness build their session from [[confs]].
   *
-  * Why: this sandbox charges a large fixed CPU cost per shuffle map
-  * task (measured ~0.1–0.16 s executor CPU per task: sorting 1 M
-  * checkpointed rows cost 10.7 s CPU from 64 input partitions vs
-  * 1.7 s from 8, identical bytes), so partition COUNT — not bytes —
-  * dominated half the board. The fix is the production-correct one,
-  * not a local[32] constant: let AQE coalesce post-shuffle partitions
-  * by SIZE.
+  * Engine requirements:
+  *  - `spark.sql.extensions=graft.GraftExtensions`: the native
+  *    functions and the band-join optimizer rule are installed at
+  *    session build, the deployment path for pure-SQL clients.
+  *  - session time zone UTC: timestamp outputs and the NTZ→TZ cast in
+  *    [[Tables.eventsTsNanos]] must match DuckDB's oracle answers.
+  *  - `broadcastTimeout` 1200 s: a contended host intermittently blows
+  *    the 300 s default during broadcast exchanges — not a plan problem.
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: an events table whose
+  *    `ts` is parquet TIMESTAMP(NANOS) fails schema inference without
+  *    it (Spark has no nanosecond timestamp type); with it the column
+  *    reads as INT64 ns, which [[Tables.eventsTsNanos]] passes through.
+  *    The loaders rely on this conf rather than setting it themselves.
   *
-  *  - `parallelismFirst=false`: honor `advisoryPartitionSizeInBytes`
-  *    instead of keeping ≥ default-parallelism partitions of ≥ 1 MB.
-  *    The Spark tuning guide itself recommends false in production.
-  *  - advisory size 64 MB (env `SPARK_GRAFT_ADVISORY_MB` overrides):
-  *    scale-ADAPTIVE — at sf0.1 every tiny exchange collapses to one
-  *    partition; at 100 TB the same setting yields thousands of
-  *    partitions. Nothing is tuned to the local core count.
+  * Performance settings (round 15: a large fixed CPU cost per shuffle
+  * map task made partition COUNT, not bytes, dominate half the board —
+  * sorting 1 M checkpointed rows cost 10.7 s CPU from 64 input
+  * partitions vs 1.7 s from 8, identical bytes):
+  *  - `bypassMergeThreshold=1`: the bypass shuffle writer opens one
+  *    file PER REDUCE PARTITION per map task and concatenates them
+  *    with NIO transferTo (mmap/unmap per chunk) — ~7 s CPU for a
+  *    32→32-partition shuffle of 1 M (long,long) rows. The sort-based
+  *    writer (one file + index per map task) measured 0.44 s → 0.15 s
+  *    wall and 7.0 s → 1.0 s CPU on the same data, and is what every
+  *    R>200 production shuffle uses anyway.
+  *  - `parallelismFirst=false`: AQE coalesces post-shuffle partitions
+  *    by SIZE (`advisoryPartitionSizeInBytes`) instead of keeping
+  *    ≥ default-parallelism partitions of ≥ 1 MB. The Spark tuning
+  *    guide recommends false in production.
+  *  - advisory partition size 64 MB: scale-adaptive — at sf0.1 every
+  *    tiny exchange collapses to one partition; at 100 TB the same
+  *    setting yields thousands. Nothing is tuned to the core count.
   *  - `canChangeCachedPlanOutputPartitioning=true`: extends the same
-  *    AQE coalescing to InMemoryRelation materialization — operator-
-  *    internal caches (dedup mask groups, ANN probe state) otherwise
-  *    materialize at spark.sql.shuffle.partitions tiny partitions and
-  *    every downstream exchange pays the per-map-task floor for them.
+  *    coalescing to InMemoryRelation materialization — operator-internal
+  *    caches (dedup mask groups, ANN probe state) otherwise materialize
+  *    at spark.sql.shuffle.partitions tiny partitions and every
+  *    downstream exchange pays the per-map-task floor for them.
   *
   * Operators whose per-partition COMPUTE (not bytes) is the cost pin
   * their parallelism explicitly with repartition(N, keys...) — AQE
@@ -33,25 +49,46 @@ import org.apache.spark.sql.SparkSession
   * coalescing cannot serialize them (Dedup.blockedMaskPairs).
   */
 object Sessions {
-  def perf(b: SparkSession.Builder): SparkSession.Builder = {
-    val advisoryMb = sys.env.get("SPARK_GRAFT_ADVISORY_MB")
-      .flatMap(_.trim.toIntOption).getOrElse(64)
-    // The dominant fix (jstack-sampled root cause): the BYPASS shuffle
-    // writer opens one file PER REDUCE PARTITION per map task and then
-    // concatenates them with NIO transferTo (mmap/unmap per chunk) —
-    // this sandbox charges ~7 s CPU to a 32→32-partition shuffle of
-    // 1 M (long,long) rows that way. Below the threshold Spark uses
-    // the sort-based writer (ONE file + index per map task): measured
-    // 0.44 s → 0.15 s wall and 7.0 s → 1.0 s CPU per shuffle on the
-    // same data. The sort writer is also what every R>200 production
-    // shuffle uses anyway — forcing it everywhere is the scale shape,
-    // not a local tweak.
-    val out = b
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    if (sys.env.get("SPARK_GRAFT_COALESCE").contains("off")) out
-    else out
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${advisoryMb}m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+  val confs: Seq[(String, String)] = Seq(
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.broadcastTimeout" -> "1200",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+
+  /** `b` with every entry of [[confs]] applied. */
+  def perf(b: SparkSession.Builder): SparkSession.Builder =
+    confs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** The session every main and spec runs under: `local[cpus]` with one
+    * shuffle partition per core plus [[confs]], where `cpus` is
+    * `SPARK_GRAFT_CPUS`, else the host's core count. */
+  def local(): SparkSession = {
+    val cpus = hostCpus
+    val spark = perf(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    case None => Runtime.getRuntime.availableProcessors
+  }
+
+  /** Releases operator-internal caches between queries: the catalog
+    * cache and the localCheckpoint RDDs of iterative operators, which
+    * bypass it. Left in place they tax later queries and degrade
+    * repeated runs under memory pressure. */
+  def clearCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 }

@@ -113,10 +113,7 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
   /** events with `ts` as INT64 nanoseconds (see [[eventsTsNanos]]). */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    eventsTsNanos(table(s, d, "events"))
-  }
+  def events(s: SparkSession, d: String): DataFrame = eventsTsNanos(table(s, d, "events"))
 
   /** events.ts: downstream code uses one fixed convention — INT64
     * nanoseconds since epoch — because exact integer arithmetic (session

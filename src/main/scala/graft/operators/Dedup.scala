@@ -1453,8 +1453,8 @@ object Dedup {
   private def incrementalByMask(masksIn: DataFrame, threshold: Double): DataFrame = {
     // m/dm/im stay cached for the LIFE of the returned (lazy) query —
     // the result plan references them, so they cannot be unpersisted
-    // here. The intended release point is the harness-level
-    // `catalog.clearCache()` every bench rep / Verify entry performs
+    // here. The intended release point is the `Sessions.clearCaches`
+    // every bench rep / Verify entry performs
     // (the same convention as jaccardByMask's masks/groups and the
     // cached index relations; ADVICE r15 low).
     val m = masksIn.cache()
@@ -1775,7 +1775,7 @@ object Dedup {
     val spark = docs.sparkSession
     val skey = "spark.sql.shuffle.partitions"
     val sprior = spark.conf.get(skey)
-    spark.conf.set(skey, sys.env.getOrElse("SPARK_GRAFT_CC_SHUFFLE", "8"))
+    spark.conf.set(skey, "8")
     try while (changed > 0) {
       if (it >= maxIters)
         throw new IllegalStateException(s"dupGroups did not converge in $maxIters rounds")

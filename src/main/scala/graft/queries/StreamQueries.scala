@@ -49,13 +49,14 @@ object StreamQueries {
     * a per-operator state-shard count). The batch PRESENTATION side of
     * each entry (the post-commit orderBy/groupBy) still runs at the
     * session's partition count — the override ends when the stream
-    * stops. Env SPARK_GRAFT_STREAM_SHUFFLE overrides for scale runs;
-    * at 100 TB rates you'd raise it to saturate the cluster, which is
-    * exactly why it must not be hard-frozen into the entries. */
+    * stops. At 100 TB rates this constant would be raised to saturate
+    * the cluster; it lives here, not in the entries. */
+  private val StreamShufflePartitions = 8
+
   private def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prior = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    s.conf.set(key, StreamShufflePartitions.toString)
     try body finally s.conf.set(key, prior)
   }
 
@@ -73,7 +74,6 @@ object StreamQueries {
     * only exercised across batch boundaries). */
   private[graft] def eventsStreamFrom(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the table is a single parquet FILE; FileStreamSource wants a
     // directory or glob (its basePath must be a dir), so glob the name
     val rdr = s.readStream.schema(Tables.parquet(s, s"$d/events.parquet").schema)

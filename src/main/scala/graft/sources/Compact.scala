@@ -229,10 +229,7 @@ object Compact {
 object IndexCompact {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: IndexCompact <dataDir> [targetBytes]")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val target = args.lift(1).map(_.toLong).getOrElse(Compact.DefaultTargetBytes)
     val done = Compact.compactIndex(spark, args(0), target)
     done.foreach { case (d, before, after) =>

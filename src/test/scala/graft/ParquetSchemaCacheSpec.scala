@@ -45,12 +45,6 @@ class ParquetSchemaCacheSpec extends SparkTestBase {
 
   private def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def messages(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 

@@ -12,6 +12,14 @@ trait SparkTestBase extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestBase.session
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with session conf `key` set to `value`, restoring the
+    * prior setting afterwards. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** Temp directories a suite creates, deleted with their contents when
@@ -31,19 +39,9 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the deployment path under test: functions injected at session
-      // build, no programmatic register() needed (ExtensionsSpec)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The configuration every main and the benchmark run under
+    * (`Sessions.confs`), so the specs test what gets benched. Like every
+    * main, it runs at `SPARK_GRAFT_CPUS` or the host's core count (and
+    * as many shuffle partitions); the suite has been verified at 4. */
+  lazy val session: SparkSession = Sessions.local()
 }
