@@ -20,15 +20,6 @@ import org.apache.spark.sql.functions._
   * only widens. */
 object DeltaBench {
 
-  private def copyDir(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).toSeq.flatten.foreach(f =>
-        copyDir(f, new java.io.File(dst, f.getName)))
-    } else
-      java.nio.file.Files.copy(src.toPath, dst.toPath)
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
@@ -41,7 +32,7 @@ object DeltaBench {
     val spark = Sessions.local()
     import graft.operators.{Dedup, Similarity}
 
-    val work = java.nio.file.Files.createTempDirectory("graft-deltabench").toString
+    val work = LayoutStore.scratchDir(spark, "graft-deltabench")
     var n = 0
     def fresh(): String = { n += 1; s"$work/d$n" }
     def minTime(f: String => Unit): Double =
@@ -53,7 +44,7 @@ object DeltaBench {
       (1 to reps).map { _ =>
         Sessions.clearCaches(spark)
         val c = fresh()
-        copyDir(new java.io.File(proto), new java.io.File(c))
+        LayoutStore.copy(spark, proto, c)
         val t0 = System.nanoTime(); f(c); (System.nanoTime() - t0) / 1e9
       }.min
 
@@ -166,7 +157,7 @@ object DeltaBench {
         // untimed per rep) and must append zero rows
         val tReplay = (1 to reps).map { _ =>
           val c = fresh()
-          copyDir(new java.io.File(proto), new java.io.File(c))
+          LayoutStore.copy(spark, proto, c)
           fam.idem(c)
           Sessions.clearCaches(spark)
           val t0 = System.nanoTime()

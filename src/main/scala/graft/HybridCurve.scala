@@ -48,7 +48,7 @@ object HybridCurve {
     val emb = Tables.embeddings(spark, dir)
     // scratch IVF index for the probe path — deleted on exit (the
     // pre-round-12 tool stranded one index per invocation; ADVICE r11)
-    val ivf = java.nio.file.Files.createTempDirectory("graft-hybcurve").toString
+    val ivf = LayoutStore.scratchDir(spark, "graft-hybcurve")
     try {
       Similarity.ivfWriteIndex(emb, ivf)
       def sweep(docs: org.apache.spark.sql.DataFrame, title: String): Unit = {
@@ -71,13 +71,7 @@ object HybridCurve {
       val docs = Tables.documents(spark, dir)
       sweep(docs, s"natural corpus ($dir)")
       sweep(heavyTailDocs(docs), "heavy-tailed token-df corpus (dfCap binds)")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(ivf))
-    }
+    } finally LayoutStore.delete(spark, ivf)
     spark.stop()
   }
 }

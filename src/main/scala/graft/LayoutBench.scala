@@ -62,7 +62,7 @@ object LayoutBench {
     val rows = for ((name, build) <- picked; (label, dir) <- points) yield {
       val path = build(spark, dir) // warm: deps + memoized counts + known path
       val times = (1 to repeat).map { _ =>
-        Tables.deleteLayoutDir(path)
+        LayoutStore.delete(spark, path)
         Sessions.clearCaches(spark)
         val t0 = System.nanoTime()
         build(spark, dir)

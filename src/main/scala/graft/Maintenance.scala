@@ -19,7 +19,7 @@ import graft.sources.Compact
   *     → ACT       ivfRecluster into a FRESH generation directory when
   *                 the threshold trips (bit-identical to a full
   *                 rebuild — the append history leaves no trace)
-  *     → RECLAIM   Tables.layoutVacuum sweeps the superseded
+  *     → RECLAIM   LayoutStore.vacuum sweeps the superseded
   *                 generation (and any other stranded layout).
   *
   * Every step is individually spec-gated elsewhere; this module's own
@@ -113,7 +113,7 @@ object Maintenance {
     val (n, tC) = timed {
       val sh = Compact.compactIndex(spark, s"$path/sh")
       val masks =
-        if (new java.io.File(s"$path/masks").exists())
+        if (LayoutStore.exists(spark, s"$path/masks"))
           Compact.compactIndex(spark, s"$path/masks")
         else Seq.empty
       sh.size + masks.size
@@ -204,7 +204,7 @@ object Maintenance {
       case other => throw new IllegalArgumentException(s"unknown index kind $other")
     }
     log.foreach { case (step, msg) => println(s"[maintenance] $step: $msg") }
-    val swept = Tables.layoutVacuum()
+    val swept = LayoutStore.vacuum(conf = spark.sparkContext.hadoopConfiguration)
     println(s"[maintenance] vacuum: ${swept.size} superseded layout dir(s) removed")
   }
 }

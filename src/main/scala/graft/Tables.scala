@@ -87,9 +87,7 @@ object Tables {
     if (path.exists("*?[{\\".contains(_))) return None
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
+    val status = LayoutStore.status(fs, p).getOrElse(return None)
     val files: Array[FileStatus] =
       if (!status.isDirectory) Array(status)
       else {
@@ -158,203 +156,5 @@ object Tables {
   def computeFloor(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
-  /** Cache key for write-once derived layouts/indexes (z-order, avro,
-    * CSV/JSON round-trips, dup-groups, ANN): dir + source parquet
-    * size/mtime, so driver-side data REGENERATION invalidates the
-    * materialization instead of serving stale rows — the events.ts
-    * type drift proved testdata changes between rounds are real.
-    * The RAW size/mtime values are embedded in the key (not a 32-bit
-    * hash of them): a hash collision across regenerations would
-    * silently serve a stale layout, and raw values cannot collide
-    * unless the bytes-on-disk fingerprint itself is identical.
-    * `params` appends a build-parameter/format-version token so
-    * changing an index's construction defaults (nlist/m/ksub/dim, …)
-    * keys a fresh build instead of serving one trained under the old
-    * parameters. */
-  def layoutKey(dir: String, tableName: String, params: String = ""): String = {
-    val f = new java.io.File(s"$dir/$tableName.parquet")
-    val dirTag = dir.replaceAll("[^A-Za-z0-9.-]", "_").stripPrefix("_")
-    // the readable tag is LOSSY (distinct dirs can sanitize alike, e.g.
-    // `a/b_c` vs `a_b/c`), so the FULL 128-bit digest of the raw path
-    // rides along — consistent with this key's own rule that truncated
-    // hashes are unacceptable where a collision silently serves a
-    // stale layout
-    val dirHash = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    val p = if (params.isEmpty) "" else s"_$params"
-    s"${dirTag}_${dirHash}_${f.length}_${f.lastModified}$p"
-  }
-
-  /** Atomic publication for write-once derived layouts: `build` writes
-    * the complete index into a session-unique temp directory, which is
-    * then RENAMED into `path` in one filesystem move. Readers therefore
-    * never observe a partially-written index, and two concurrent
-    * sessions building the same layout race to a single winner — the
-    * loser's temp dir is discarded — instead of interleaving overwrite
-    * writes into one shared directory (the check-then-overwrite race
-    * ADVICE r6 flagged). On exit `path` exists (published by us or by
-    * a concurrent winner) or the build's exception propagates — with
-    * the temp directory deleted either way, so a crashed build leaves
-    * no orphan `.build-*` siblings accumulating in tmpdir (ADVICE r7).
-    * The move is same-volume (temp sibling of the target), so
-    * ATOMIC_MOVE is a rename. */
-  def publishLayout(path: String)(build: String => Unit): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val target = Paths.get(path)
-    if (Files.exists(target)) return
-    val tmp = path + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-    try build(tmp)
-    catch { case e: Throwable =>
-      deleteRecursively(new java.io.File(tmp))
-      throw e
-    }
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    try Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException =>
-      // lost the race — a complete index is already at `path`; drop ours
-      deleteRecursively(new java.io.File(tmp))
-      if (!Files.exists(target))
-        throw new IllegalStateException(s"layout publish failed for $path")
-    }
-  }
-
-  /** The whole build-if-missing write-once convention in one call
-    * (round 14 — VERDICT r13 #7: every family re-implemented the same
-    * four lines around [[layoutKey]]/[[layoutReady]]/[[publishLayout]],
-    * correctly but repetitively). `build` writes the COMPLETE layout
-    * into the temp dir it is handed; this helper keys the path on the
-    * source table's size/mtime + `params`, publishes atomically,
-    * stamps the `_done` completeness witness, and returns the live
-    * path. `variant` selects a sub-layout under one shared key (the
-    * ANN family's per-variant dirs, the dup-group index's
-    * full/nondelta split). Layouts live in tmpdir as write-once
-    * generations; [[layoutVacuum]] reclaims superseded ones. */
-  def cachedLayout(prefix: String, d: String, table: String, params: String,
-      variant: String = "")(build: String => Unit): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/${prefix}_${layoutKey(d, table, params)}"
-    val path = if (variant.isEmpty) base else s"$base/$variant"
-    if (!layoutReady(path, "_done"))
-      publishLayout(path) { tmp =>
-        build(tmp)
-        new java.io.File(s"$tmp/_done").createNewFile(); ()
-      }
-    path
-  }
-
-  /** Completeness check for a published layout. `marker` is the
-    * build's completeness witness (_SUCCESS for a single Spark write,
-    * _done for multi-part builds). A directory WITHOUT its marker is a
-    * partial remnant of a crashed pre-atomic-convention build — it is
-    * removed so [[publishLayout]] can rebuild, never silently served.
-    * The removal is LOUD (stderr): the destructive arm of this check
-    * firing on every call is the signature of a builder/checker marker
-    * MISMATCH (e.g. a caller passing the default _SUCCESS for a layout
-    * published with _done), which would otherwise loop delete/rebuild
-    * silently on a perfectly good index (ADVICE r7). */
-  def layoutReady(path: String, marker: String = "_SUCCESS"): Boolean = {
-    if (new java.io.File(s"$path/$marker").exists()) true
-    else {
-      if (new java.io.File(path).exists())
-        System.err.println(s"[graft] layoutReady: removing marker-less layout dir " +
-          s"$path (no $marker — crashed build remnant, or a builder/checker " +
-          "marker-name mismatch if this repeats per call)")
-      deleteRecursively(new java.io.File(path)); false
-    }
-  }
-
-  /** Remove one sub-layout directory (e.g. a demoted fast-path
-    * representation inside a published index — see
-    * Dedup.shingleAppendDelta). Public and name-explicit so call
-    * sites read as the destructive act they are. */
-  def deleteLayoutDir(path: String): Unit =
-    deleteRecursively(new java.io.File(path))
-
-  /** Garbage-collect SUPERSEDED write-once layouts (round 8 — VERDICT
-    * r7 #6). Every layout directory name embeds its source-file
-    * generation ([[layoutKey]]: `graft_<family>_<dirTag>_<dirMd5>_
-    * <size>_<mtime>[_<params>]`), so a testdata/source refresh
-    * changes the key and STRANDS the previous generation's full index
-    * copy — at 100 TB that is an index-sized storage leak per ingest.
-    * This sweep groups layout dirs by everything EXCEPT the (size,
-    * mtime) generation token — family, source-dir tag+digest, params
-    * — and deletes all but the newest generation per group, newest =
-    * max (mtime, size): mtime is monotone across regenerations, so
-    * the survivor is the current source's key. Distinct params
-    * (different thresholds/dims) are distinct groups and coexist.
-    * Also sweeps `.build-*` orphans from crashed pre-r8 builds, but
-    * only ones idle > 1 h — a younger temp dir may be a CONCURRENT
-    * session's in-flight build. The SAME 1 h idle grace guards
-    * superseded generations (round 15 — VERDICT r14 #4): a concurrent
-    * session may have PLANNED a query against the old generation just
-    * before the refresh published the new one; zero-grace deletion
-    * then fails that reader MID-SCAN. The idle-age guard is the poor
-    * man's snapshot retention: a superseded generation survives until
-    * ≥ 1 h after its last modification, so any query planned while it
-    * was still current gets a full hour to finish its scan — the same
-    * bound table formats express as snapshot-retention windows.
-    * Residual: a layout whose params
-    * embeds a SECOND source's fingerprint (q84's ivmview appends
-    * customer's) strands on that second source's refresh until its
-    * primary source refreshes too — acceptable, the dirs are grouped
-    * conservatively (never delete a maybe-live key). Returns deleted
-    * paths. */
-  def layoutVacuum(tmpDir: String = System.getProperty("java.io.tmpdir")): Seq[String] = {
-    val Keyed = "^(graft_[a-z0-9]+_.+_[0-9a-f]{32})_([0-9]+)_([0-9]+)(_.*)?$".r
-    val dirs = Option(new java.io.File(tmpDir).listFiles()).toSeq.flatten
-      .filter(_.isDirectory)
-    val graceCutoff = System.currentTimeMillis - 3600L * 1000
-    val staleBuilds = dirs.filter(f =>
-      f.getName.matches("^graft_.*\\.build-[0-9a-f]{8}$") &&
-        f.lastModified < graceCutoff)
-    val keyed = dirs.flatMap { f =>
-      f.getName match {
-        case Keyed(stem, size, mtime, params) =>
-          Some((f, stem + Option(params).getOrElse(""), (mtime.toLong, size.toLong)))
-        case _ => None
-      }
-    }
-    val superseded = keyed.groupBy(_._2).values.toSeq.flatMap { gens =>
-      val keep = gens.maxBy(_._3)
-      // reader-safety grace: only reclaim generations idle > 1 h
-      gens.filterNot(_._1 == keep._1).map(_._1)
-        .filter(_.lastModified < graceCutoff)
-    }
-    (staleBuilds ++ superseded).map { f =>
-      System.err.println(s"[graft] layoutVacuum: deleting superseded layout ${f.getPath}")
-      deleteRecursively(f); f.getPath
-    }
-  }
-
-  /** Recursive file copy — for callers that MUTATE a published
-    * write-once layout (delta appends in a spec or a streaming ingest
-    * run): the shared layout stays pristine, the run owns its copy. */
-  private[graft] def copyDir(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).toSeq.flatten.foreach(f =>
-        copyDir(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath); ()
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
-  }
-}
-
-/** `runMain graft.LayoutVacuum [tmpDir]` — sweep superseded write-once
-  * layout generations (see [[Tables.layoutVacuum]]). Run after a
-  * source refresh/regeneration; prints one line per deleted dir. */
-object LayoutVacuum {
-  def main(args: Array[String]): Unit = {
-    val deleted = args.headOption
-      .map(Tables.layoutVacuum).getOrElse(Tables.layoutVacuum())
-    println(s"[vacuum] ${deleted.size} superseded layout dir(s) removed")
   }
 }

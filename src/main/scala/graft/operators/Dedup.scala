@@ -488,7 +488,7 @@ object Dedup {
   def thresholdCurveStats(spark: org.apache.spark.sql.SparkSession,
       path: String, taus: Seq[Double]): DataFrame = {
     val tmin = taus.min
-    if (new java.io.File(s"$path/masks").exists()) {
+    if (graft.LayoutStore.exists(spark, s"$path/masks")) {
       val g = graft.Tables.parquet(spark, s"$path/masks")
         .groupBy("comp", "mask").agg(count(lit(1)).as("g")).cache()
       val sided = maskPairsOf(g, tmin)
@@ -630,7 +630,7 @@ object Dedup {
       .agg(expr("transform(array_sort(collect_list(struct(df, sh))), x -> x.sh)")
         .as("shingles"))
       .write.mode("append").parquet(s"$path/sh")
-    if (new java.io.File(s"$path/masks").exists()) {
+    if (graft.LayoutStore.exists(spark, s"$path/masks")) {
       val dict = graft.Tables.parquet(spark, s"$path/dict")
       val enc = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
         .join(broadcast(dict), Seq("sh"), "left")
@@ -644,8 +644,8 @@ object Dedup {
         .filter(col("n_known") < col("n_sh") || col("n_comps") > 1)
         .limit(1).count() > 0
       if (demote) {
-        graft.Tables.deleteLayoutDir(s"$path/masks")
-        graft.Tables.deleteLayoutDir(s"$path/dict")
+        graft.LayoutStore.delete(spark, s"$path/masks")
+        graft.LayoutStore.delete(spark, s"$path/dict")
       } else
         enc.select(col("doc_id"), col("comp"), col("mask"))
           .write.mode("append").parquet(s"$path/masks")
@@ -669,7 +669,7 @@ object Dedup {
     * ngramJaccardPairs' rationale on the index path). */
   private[graft] def ngramJaccardProbePairs(spark: org.apache.spark.sql.SparkSession,
       path: String, threshold: Double): DataFrame =
-    if (new java.io.File(s"$path/masks").exists())
+    if (graft.LayoutStore.exists(spark, s"$path/masks"))
       jaccardByMask(graft.Tables.parquet(spark, s"$path/masks"), threshold)
     else ngramJaccardPrefixSorted(graft.Tables.parquet(spark, s"$path/sh"), threshold)
 
@@ -680,7 +680,7 @@ object Dedup {
   def minhashLshProbe(spark: org.apache.spark.sql.SparkSession, path: String,
       threshold: Double): DataFrame = {
     val pairs =
-      if (new java.io.File(s"$path/masks").exists())
+      if (graft.LayoutStore.exists(spark, s"$path/masks"))
         jaccardByMask(graft.Tables.parquet(spark, s"$path/masks"), threshold)
       else minhashLshPath(graft.Tables.parquet(spark, s"$path/sh"), threshold)
     sortedBy(pairs, col("doc_a"), col("doc_b"))
@@ -702,7 +702,7 @@ object Dedup {
     * dd11 re-does on every read anyway). */
   private[graft] def containmentProbePairs(spark: org.apache.spark.sql.SparkSession,
       path: String, tau: Double): DataFrame =
-    if (new java.io.File(s"$path/masks").exists())
+    if (graft.LayoutStore.exists(spark, s"$path/masks"))
       containmentByMask(graft.Tables.parquet(spark, s"$path/masks"), tau)
     else containmentPrefixSorted(graft.Tables.parquet(spark, s"$path/sh"), tau)
 
@@ -891,34 +891,45 @@ object Dedup {
     val spark = deltaDocs.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (batchId, legacyIds) = batchIdOpt match {
-      case Some(id) => (id, Seq.empty[String])
-      case None     => contentBatchId(deltaDocs)
-    }
-    val marker = new org.apache.hadoop.fs.Path(root, s"_batch_$batchId")
-    if (fs.exists(marker) || legacyIds.exists(id =>
-        fs.exists(new org.apache.hadoop.fs.Path(root, s"_batch_$id")))) return
-    // recovery preamble: adopt a labels generation orphaned by a crash
-    // inside a previous publish window (old labels deleted, next not
-    // yet renamed); stray next dirs beside live labels are stale
     val labelsDir = new org.apache.hadoop.fs.Path(root, "labels")
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith("labels.next-"))
-      .foreach { s =>
-        if (!fs.exists(labelsDir)) {
-          if (!fs.rename(s.getPath, labelsDir))
-            throw new IllegalStateException(
-              s"containAppendDelta: orphan adoption rename failed for ${s.getPath}")
-        } else fs.delete(s.getPath, true)
-      }
-    // sweep a crashed partial application of THIS batch
-    val pairsDir = new org.apache.hadoop.fs.Path(root, "pairs")
-    if (fs.exists(pairsDir))
-      fs.listStatus(pairsDir).filter(_.getPath.getName.startsWith(s"b$batchId-"))
-        .foreach(s => fs.delete(s.getPath, false))
-    val stage = new org.apache.hadoop.fs.Path(root, s".stage-$batchId")
-    fs.delete(stage, true)
+    val (batchId, legacyIds) = batchIds(deltaDocs, batchIdOpt)
+    graft.LayoutStore.commitBatch(spark, path, batchId, legacyIds, Seq("pairs"))(
+      stage = { stage =>
+        // recovery preamble: adopt a labels generation orphaned by a
+        // crash inside a previous publish window (old labels deleted,
+        // next not yet renamed); stray next dirs beside live labels
+        // are stale
+        fs.listStatus(root)
+          .filter(_.getPath.getName.startsWith("labels.next-"))
+          .foreach { s =>
+            if (!fs.exists(labelsDir)) {
+              if (!fs.rename(s.getPath, labelsDir))
+                throw new IllegalStateException(
+                  s"containAppendDelta: orphan adoption rename failed for ${s.getPath}")
+            } else fs.delete(s.getPath, true)
+          }
+        containStage(deltaDocs, n, shinglePath, path, tau, stage)
+      },
+      // labels by next→swap after the pair files (the preamble covers
+      // the gap), before the marker
+      beforeMarker = { stage =>
+        val next = new org.apache.hadoop.fs.Path(root, s"labels.next-$batchId")
+        if (!fs.rename(new org.apache.hadoop.fs.Path(stage, "labels"), next))
+          throw new IllegalStateException(
+            s"containAppendDelta: labels stage rename failed")
+        fs.delete(labelsDir, true)
+        if (!fs.rename(next, labelsDir))
+          throw new IllegalStateException(
+            s"containAppendDelta: labels swap rename failed")
+      })
+  }
 
+  /** [[containAppendDelta]]'s batch computation: writes the batch's
+    * new pairs to `<stage>/pairs` and the full relabeling to
+    * `<stage>/labels`. */
+  private def containStage(deltaDocs: DataFrame, n: Int, shinglePath: String,
+      path: String, tau: Double, stage: String): Unit = {
+    val spark = deltaDocs.sparkSession
     // delta arrays under the index-side df order; unseen shingles df 0
     val dfreq = graft.Tables.parquet(spark, s"$shinglePath/df")
     val deltaSh = withShingles(deltaDocs, n)
@@ -943,7 +954,7 @@ object Dedup {
     // does not mutate a layout it doesn't own)
     var maskEnc: Option[DataFrame] = None // cached encoding, freed after the pairs write
     val maskPairs =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$shinglePath/masks"))) None
+      if (!graft.LayoutStore.exists(spark, s"$shinglePath/masks")) None
       else {
         val dict = graft.Tables.parquet(spark, s"$shinglePath/dict")
         val enc = withShingles(deltaDocs, n)
@@ -1003,28 +1014,7 @@ object Dedup {
     deltaOut.unionByName(standOut)
       .repartition(col("group_id")).sortWithinPartitions(col("group_id"))
       .write.mode("overwrite").parquet(s"$stage/labels")
-    deltaSh.unpersist()
-    // publish: pairs by batch-prefixed per-file renames, labels by
-    // next→swap (preamble covers the gap), marker LAST
-    fs.listStatus(new org.apache.hadoop.fs.Path(stage, "pairs"))
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .foreach { f =>
-        if (!fs.rename(f.getPath, new org.apache.hadoop.fs.Path(pairsDir,
-            s"b$batchId-${f.getPath.getName}")))
-          throw new IllegalStateException(
-            s"containAppendDelta: publish rename failed for ${f.getPath}")
-      }
-    val next = new org.apache.hadoop.fs.Path(root, s"labels.next-$batchId")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(stage, "labels"), next))
-      throw new IllegalStateException(
-        s"containAppendDelta: labels stage rename failed")
-    fs.delete(labelsDir, true)
-    if (!fs.rename(next, labelsDir))
-      throw new IllegalStateException(
-        s"containAppendDelta: labels swap rename failed")
-    fs.create(marker).close()
-    fs.delete(stage, true); ()
+    deltaSh.unpersist(); ()
   }
 
   /** containmentPrefix over df-sorted index arrays: contained-side
@@ -1974,30 +1964,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Append a delta batch to a span index WITHOUT rebuilding the base
-    * (shingleAppendDelta's convention): per-ingest shuffle volume is
-    * O(|delta| spans) — the standing df/ side is scanned (columnar
-    * 8-byte rows, pruned to the delta's key set by the semi-join's
-    * build side), never re-aggregated corpus-wide. A delta span whose
-    * cumulative count crosses 2 joins dupset/ exactly once; every
-    * probe after that sees the promotion for standing docs too.
-    *
-    * IDEMPOTENT under crash-and-rerun (round 14 — ADVICE r13): the
-    * three outputs are NOT three independent appends (a crash between
-    * them followed by a re-run double-counted the batch's df
-    * increments, which could promote a true-df=1 span into dupset —
-    * permanent divergence from the append ≡ rebuild contract).
-    * Instead, the batch is (1) keyed on an order-independent content
-    * hash of its doc ids (or the caller's `batchId` — the st-family's
-    * at-least-once ingest passes its own), (2) skipped outright when
-    * its `_batch_<id>` marker exists, (3) swept of any partial prior
-    * application (`b<id>-*` files in the live dirs) BEFORE the df/
-    * prior-count read, (4) staged under a hidden dir, then published
-    * by per-file renames into the live dirs under the batch prefix,
-    * marker last. Every crash point re-runs to the same final state.
-    * Single writer per index generation (the family contract); the
-    * maintenance cycle must not run concurrently with an in-flight
-    * append. */
   /** Order-independent content-derived batch id for the idempotent
     * append family. bit_xor, not sum: order-independent AND closed on
     * 64 bits — summing full-range xxhash64 values overflows Long under
@@ -2024,26 +1990,51 @@ object Dedup {
     (f"${r.getLong(0)}%016x", Seq(legacy))
   }
 
+  /** The caller's batch id (no legacy ids), else [[contentBatchId]]. */
+  private def batchIds(docs: DataFrame, batchIdOpt: Option[String]): (String, Seq[String]) =
+    batchIdOpt.fold(contentBatchId(docs))(id => (id, Seq.empty))
+
+
+  /** Append a delta batch to a span index WITHOUT rebuilding the base
+    * (shingleAppendDelta's convention): per-ingest shuffle volume is
+    * O(|delta| spans) — the standing df/ side is scanned (columnar
+    * 8-byte rows, pruned to the delta's key set by the semi-join's
+    * build side), never re-aggregated corpus-wide. A delta span whose
+    * cumulative count crosses 2 joins dupset/ exactly once; every
+    * probe after that sees the promotion for standing docs too.
+    *
+    * IDEMPOTENT under crash-and-rerun (round 14 — ADVICE r13): the
+    * three outputs are NOT three independent appends (a crash between
+    * them followed by a re-run double-counted the batch's df
+    * increments, which could promote a true-df=1 span into dupset —
+    * permanent divergence from the append ≡ rebuild contract).
+    * Instead, the batch is (1) keyed on an order-independent content
+    * hash of its doc ids (or the caller's `batchId` — the st-family's
+    * at-least-once ingest passes its own), (2) skipped outright when
+    * its `_batch_<id>` marker exists, (3) swept of any partial prior
+    * application (`b<id>-*` files in the live dirs) BEFORE the df/
+    * prior-count read, (4) staged under a hidden dir, then published
+    * by per-file renames into the live dirs under the batch prefix,
+    * marker last ([[graft.LayoutStore.commitBatch]], the commit
+    * containAppendDelta shares). Every crash point re-runs to the same
+    * final state.
+    * Single writer per index generation (the family contract); the
+    * maintenance cycle must not run concurrently with an in-flight
+    * append. */
   def dupSpansAppendDelta(deltaDocs: DataFrame, n: Int, path: String,
       batchIdOpt: Option[String] = None): Unit = {
+    val (batchId, legacyIds) = batchIds(deltaDocs, batchIdOpt)
+    graft.LayoutStore.commitBatch(deltaDocs.sparkSession, path, batchId, legacyIds,
+      Seq("spans", "df", "dupset"))(stage = dupSpansStage(deltaDocs, n, path, _))
+  }
+
+  /** [[dupSpansAppendDelta]]'s batch computation into `<stage>/{spans,
+    * df,dupset}`. The commit has already swept a crashed partial
+    * application of this batch, so the df/ prior-count read never sees
+    * its own half-landed increments. */
+  private def dupSpansStage(deltaDocs: DataFrame, n: Int, path: String,
+      stage: String): Unit = {
     val spark = deltaDocs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (batchId, legacyIds) = batchIdOpt match {
-      case Some(id) => (id, Seq.empty[String])
-      case None     => contentBatchId(deltaDocs)
-    }
-    val marker = new org.apache.hadoop.fs.Path(root, s"_batch_$batchId")
-    if (fs.exists(marker) || legacyIds.exists(id =>
-        fs.exists(new org.apache.hadoop.fs.Path(root, s"_batch_$id")))) return
-    // sweep a crashed partial application of THIS batch so the df/
-    // prior-count read below never sees its own half-landed increments
-    Seq("spans", "df", "dupset").foreach { d =>
-      val dir = new org.apache.hadoop.fs.Path(root, d)
-      if (fs.exists(dir))
-        fs.listStatus(dir).filter(_.getPath.getName.startsWith(s"b$batchId-"))
-          .foreach(s => fs.delete(s.getPath, false))
-    }
     val delta = withShinglesAll(deltaDocs, n)
       .select(col("doc_id"), expr("transform(shingles, s -> xxhash64(s))").as("spans"))
       .filter(size(col("spans")) > 0)
@@ -2054,7 +2045,6 @@ object Dedup {
     val prior = graft.Tables.parquet(spark, s"$path/df")
       .join(deltaCounts.select(col("span")), Seq("span"), "left_semi")
       .groupBy(col("span")).agg(sum(col("df")).as("prior"))
-    val stage = new org.apache.hadoop.fs.Path(root, s".stage-$batchId")
     deltaCounts.join(prior, Seq("span"), "left")
       .select(col("span"), col("c"), coalesce(col("prior"), lit(0L)).as("prior"))
       .filter(col("prior") < 2 && col("c") + col("prior") >= 2)
@@ -2063,24 +2053,7 @@ object Dedup {
     deltaCounts.select(col("span"), col("c").as("df"))
       .write.mode("overwrite").parquet(s"$stage/df")
     delta.write.mode("overwrite").parquet(s"$stage/spans")
-    deltaCounts.unpersist(); delta.unpersist()
-    // publish: batch-prefixed per-file renames, marker LAST
-    Seq("spans", "df", "dupset").foreach { d =>
-      val from = new org.apache.hadoop.fs.Path(stage, d)
-      val to = new org.apache.hadoop.fs.Path(root, d)
-      fs.mkdirs(to)
-      fs.listStatus(from)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-        .foreach { f =>
-          if (!fs.rename(f.getPath, new org.apache.hadoop.fs.Path(to,
-              s"b$batchId-${f.getPath.getName}")))
-            throw new IllegalStateException(
-              s"dupSpansAppendDelta: publish rename failed for ${f.getPath}")
-        }
-    }
-    fs.create(marker).close()
-    fs.delete(stage, true); ()
+    deltaCounts.unpersist(); delta.unpersist(); ()
   }
 
   private def planeWeight(table: Int, plane: Int, dim: Int): Float = {

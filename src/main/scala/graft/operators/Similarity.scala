@@ -862,8 +862,8 @@ object Similarity {
     * retrains over EVERYTHING the index currently holds — base ⊕ all
     * appended deltas, read off the vectors/ partition dirs — and a
     * fresh full build publishes at `newPath` as a NEW layout
-    * generation (callers wrap it in Tables.publishLayout; the
-    * superseded generation is layoutVacuum's to reclaim). Cost is a
+    * generation (callers wrap it in LayoutStore.ensure; the
+    * superseded generation is LayoutStore.vacuum's to reclaim). Cost is a
     * full re-train + one re-partitioned rewrite of the index — the
     * amortized event the nightly appends defer, paid only when the
     * recall/imbalance gauges say so.

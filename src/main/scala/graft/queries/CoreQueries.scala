@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{LayoutStore, Tables}
 
 /** §2.A relational / analytic core.
   *
@@ -1821,8 +1821,8 @@ object CoreQueries {
     * and the curve sort makes row-group stats tight inside surviving
     * cells; the exact range predicates keep the result identical to a
     * plain filter, so the oracle is the box SQL over the original
-    * table. Layout build is once per SF dir (write-once _SUCCESS
-    * guard), the 100 TB pattern where one layout pass amortizes over
+    * table. Layout build is once per SF dir (a write-once layout),
+    * the 100 TB pattern where one layout pass amortizes over
     * every box query after it. Box spans ~1/16 of each dimension at
     * any SF (fractional bounds off the table's own min/max).
     */
@@ -1830,10 +1830,8 @@ object CoreQueries {
     * round 14 so LayoutBench can delete-and-retime the build). */
   private[graft] def zorderLayoutPath(s: SparkSession, d: String): String = {
     import graft.sources.ZOrderLayout
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_${Tables.layoutKey(d, "lineitem")}/lineitem"
-    if (!Tables.layoutReady(path, "data/_SUCCESS")) Tables.publishLayout(path)(tmp =>
+    LayoutStore.cached(s, "graft_zorder", d, "lineitem", "", "lineitem")(tmp =>
       ZOrderLayout.writeZOrdered(Tables.lineitem(s, d), "l_partkey", "l_suppkey", tmp))
-    path
   }
 
   def q65ZorderBox(s: SparkSession, d: String): DataFrame = {
@@ -1872,12 +1870,9 @@ object CoreQueries {
   /** q100's 3-D z-order layout, build-if-missing, path returned. */
   private[graft] def zorder3LayoutPath(s: SparkSession, d: String): String = {
     import graft.sources.ZOrderLayout
-    val path = s"${System.getProperty("java.io.tmpdir")}" +
-      s"/graft_zorder_${Tables.layoutKey(d, "lineitem", "n3v1")}/lineitem3"
-    if (!Tables.layoutReady(path, "data/_SUCCESS")) Tables.publishLayout(path)(tmp =>
+    LayoutStore.cached(s, "graft_zorder", d, "lineitem", "n3v1", "lineitem3")(tmp =>
       ZOrderLayout.writeZOrderedN(Tables.lineitem(s, d),
         Seq("l_partkey", "l_suppkey", "l_quantity"), tmp))
-    path
   }
 
   def q100Zorder3Box(s: SparkSession, d: String): DataFrame = {
@@ -2181,9 +2176,8 @@ object CoreQueries {
     * repartition(32) at write: 8.0 s executor CPU per q73 run vs
     * 1.3 s from the size-coalesced layout. */
   private[graft] def q73GraphLayout(s: SparkSession, d: String): String = {
-    val o = new java.io.File(s"$d/orders.parquet")
-    Tables.cachedLayout("graft_prgraph", d, "lineitem",
-        s"v1o${o.length}-${o.lastModified}") { tmp =>
+    val (oLen, oMtime) = LayoutStore.sourceStat(s, s"$d/orders.parquet")
+    LayoutStore.cached(s, "graft_prgraph", d, "lineitem", s"v1o$oLen-$oMtime") { tmp =>
       q73EdgesInline(s, d).write.mode("overwrite").parquet(tmp)
     }
   }
@@ -2315,7 +2309,7 @@ object CoreQueries {
     // triangle enumeration's input, corpus-static like the orientation
     // itself), − bloomstats/ (the wedge Bloom died with the wedge
     // join; Triangles.perNodeCountsFromAdjacency)
-    Tables.cachedLayout("graft_copurchase", d, "lineitem",
+    LayoutStore.cached(s, "graft_copurchase", d, "lineitem",
         s"cap${MaxOrderItems}o4") { tmp =>
       val li = cappedDistinctItems(Tables.lineitem(s, d), MaxOrderItems)
         .localCheckpoint() // edges + items + totals must not re-run the cap window
@@ -2915,7 +2909,7 @@ object CoreQueries {
     * LINEAGE but still re-derived V from the base tables on every
     * invocation; the cost claim was demonstrated inside one job, not
     * realized across runs). The view is built once per corpus version
-    * under Tables.layoutKey (keyed on BOTH source parquets — a refresh
+    * under LayoutStore.layoutKey (keyed on BOTH source parquets — a refresh
     * of either invalidates it) and the maintenance query reads it at
     * rest: per-refresh cost is one view scan + three delta-sized
     * joins, with no base-orders⋈base-customer join anywhere in the
@@ -2943,9 +2937,8 @@ object CoreQueries {
     * size/mtime of BOTH inputs: layoutKey fingerprints orders, the
     * params token appends customer's raw fingerprint. */
   private[graft] def q84StandingViewPath(s: SparkSession, d: String): String = {
-    val c = new java.io.File(s"$d/customer.parquet")
-    Tables.cachedLayout("graft_ivmview", d, "orders",
-        s"v1c${c.length}-${c.lastModified}") { tmp =>
+    val (cLen, cMtime) = LayoutStore.sourceStat(s, s"$d/customer.parquet")
+    LayoutStore.cached(s, "graft_ivmview", d, "orders", s"v1c$cLen-$cMtime") { tmp =>
       val (oBase, _, cBase, _) = q84Splits(s, d)
       q84Join(oBase, cBase).write.parquet(tmp)
     }

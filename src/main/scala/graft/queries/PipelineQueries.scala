@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{LayoutStore, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 
@@ -38,7 +38,7 @@ object PipelineQueries {
     * both representations (DedupSpec). */
   private[graft] def cachedShingleIndex(s: SparkSession, d: String): String =
     // n1v2: +df/ +dict/ (delta-append state, round 8)
-    Tables.cachedLayout("graft_shidx", d, "documents", "n1v2")(
+    LayoutStore.cached(s, "graft_shidx", d, "documents", "n1v2")(
       Dedup.shingleWriteIndex(Tables.documents(s, d), 1, _))
 
   /** Shingle index over the STANDING (non-delta) split only — st15's
@@ -50,7 +50,7 @@ object PipelineQueries {
     * under its own params token; `shingleAppendDelta` is what keeps it
     * fresh between ingest windows in production. */
   private[graft] def cachedShingleIndexNondelta(s: SparkSession, d: String): String =
-    Tables.cachedLayout("graft_shidx", d, "documents", "n1v2nd")(
+    LayoutStore.cached(s, "graft_shidx", d, "documents", "n1v2nd")(
       Dedup.shingleWriteIndex(Tables.documents(s, d).filter(!isDeltaDoc), 1, _))
 
   def dd2(s: SparkSession, d: String): DataFrame =
@@ -132,7 +132,7 @@ object PipelineQueries {
     * so LayoutBench can delete-and-retime the build — VERDICT r13 #6). */
   private[graft] def groupsIndexPath(s: SparkSession, d: String, variant: String,
       docs: => DataFrame): String =
-    Tables.cachedLayout("graft_dupidx", d, "documents",
+    LayoutStore.cached(s, "graft_dupidx", d, "documents",
         s"j$JaccardThreshold", variant) { tmp =>
       val dset = docs
       Dedup.dupGroupsWriteIndex(dset,
@@ -347,7 +347,7 @@ object PipelineQueries {
   private[graft] def cachedContainIndex(s: SparkSession, d: String): String =
     // contain3 (round 16): pairs/ is range-partitioned + sorted by the
     // (doc_sub, doc_super) presentation key — see containWriteIndex
-    Tables.cachedLayout("graft_dupidx", d, "documents",
+    LayoutStore.cached(s, "graft_dupidx", d, "documents",
         s"j$JaccardThreshold", "contain3") { tmp =>
       Dedup.containWriteIndex(s, cachedShingleIndex(s, d),
         Tables.documents(s, d), tmp, JaccardThreshold)
@@ -593,7 +593,7 @@ object PipelineQueries {
     * tokenize+hash+majority-vote pass was the last one recomputed
     * inline per query). */
   private[graft] def cachedSimhashIndex(s: SparkSession, d: String): String =
-    Tables.cachedLayout("graft_simidx", d, "documents", "v1") { tmp =>
+    LayoutStore.cached(s, "graft_simidx", d, "documents", "v1") { tmp =>
       Dedup.simhash(Tables.documents(s, d))
         .write.mode("overwrite").parquet(s"$tmp/sigs")
     }
@@ -607,7 +607,7 @@ object PipelineQueries {
     * the registry probe is one explode + semi-join + per-doc count
     * off the at-rest 8-byte rows. Params token carries n. */
   private[graft] def cachedSpanIndex(s: SparkSession, d: String): String =
-    Tables.cachedLayout("graft_spanidx", d, "documents", "n10v1")(
+    LayoutStore.cached(s, "graft_spanidx", d, "documents", "n10v1")(
       Dedup.dupSpansWriteIndex(Tables.documents(s, d), 10, _))
 
   def dd8(s: SparkSession, d: String): DataFrame =
@@ -703,7 +703,7 @@ object PipelineQueries {
     * were pinned on. */
   private[graft] def annNlist(s: SparkSession, d: String): Int = {
     val n = embCountCache.getOrElseUpdate(
-      Tables.layoutKey(d, "embeddings", "cnt"), Tables.embeddings(s, d).count())
+      LayoutStore.layoutKey(s, d, "embeddings", "cnt"), Tables.embeddings(s, d).count())
     math.max(16L, (n + 511) / 512).toInt
   }
 
@@ -719,7 +719,7 @@ object PipelineQueries {
     // flat pq code table by the vec_id range key for the idempotent
     // append; v3→v4: round 14 made nlist corpus-adaptive and split
     // the hnsw layout into emb/ + edge-only graph/ + meta/)
-    Tables.cachedLayout("graft_annidx", d, "embeddings",
+    LayoutStore.cached(s, "graft_annidx", d, "embeddings",
         s"v4d$EmbDim", variant) { tmp =>
       val emb = Tables.embeddings(s, d)
       val nlist = annNlist(s, d)
@@ -1255,7 +1255,7 @@ object PipelineQueries {
   def dd17(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val n = embCountCache.getOrElseUpdate(
-      Tables.layoutKey(d, "embeddings", "cnt"), emb.count())
+      LayoutStore.layoutKey(s, d, "embeddings", "cnt"), emb.count())
     val k = math.max(KmeansK.toLong,
       (n + SemDedupCellSize - 1) / SemDedupCellSize).toInt
     Similarity.semanticDedup(emb, k, KmeansIters, CosineDupThreshold)
@@ -1324,7 +1324,7 @@ object PipelineQueries {
     * inline spec-pinned for both regimes (TextFunctionsSpec). */
   private[graft] def cachedContamIndex(s: SparkSession, d: String,
       tag: String, tokens: String): String =
-    Tables.cachedLayout("graft_ctidx", d, "documents", "n3v1", tag) { tmp =>
+    LayoutStore.cached(s, "graft_ctidx", d, "documents", "n3v1", tag) { tmp =>
       TextFunctions.contaminationTrainSet(Tables.documents(s, d), 3, tokens)
         .write.mode("overwrite").parquet(s"$tmp/train")
     }
@@ -1353,7 +1353,7 @@ object PipelineQueries {
     * Params token carries minDf: a different threshold is a different
     * set, never a silently-served stale one. */
   private[graft] def cachedBoilerIndex(s: SparkSession, d: String, minDf: Int): String =
-    Tables.cachedLayout("graft_blidx", d, "documents", s"df${minDf}v1")(
+    LayoutStore.cached(s, "graft_blidx", d, "documents", s"df${minDf}v1")(
       TextFunctions.boilerplateSet(Tables.documents(s, d), minDf)
         .write.mode("overwrite").parquet(_))
 
@@ -1556,7 +1556,7 @@ object PipelineQueries {
     * key on documents alone invalidates correctly; per-blob hashing
     * is the decode-adjacent cost nobody re-pays per dedup query. */
   private[graft] def cachedPhashIndex(s: SparkSession, d: String): String =
-    Tables.cachedLayout("graft_phidx", d, "documents", "re1") { tmp =>
+    LayoutStore.cached(s, "graft_phidx", d, "documents", "re1") { tmp =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       Multimodal.phash(docs.unionByName(Multimodal.reencodeStub(docs)))
         .write.mode("overwrite").parquet(s"$tmp/sigs")
@@ -1587,7 +1587,7 @@ object PipelineQueries {
   /** Build-if-missing CDC chunk index over the documents-as-blobs
     * table, [[cachedShingleIndex]]'s convention for §2.E. */
   private[graft] def cachedCdcIndex(s: SparkSession, d: String): String =
-    Tables.cachedLayout("graft_cdcidx", d, "documents", "v1")(
+    LayoutStore.cached(s, "graft_cdcidx", d, "documents", "v1")(
       Multimodal.cdcWriteIndex(Tables.documents(s, d), _))
 
   def mm6(s: SparkSession, d: String): DataFrame =

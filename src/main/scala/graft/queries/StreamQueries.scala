@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{LayoutStore, Tables}
 
 /** §2.F registry rows: Structured Streaming pipelines executed END TO
   * END against the driver's events table — `readStream` file source →
@@ -694,12 +694,12 @@ object StreamQueries {
     * the RocksDB state-store provider — the 100 TB deployment shape
     * (durable sink + off-heap state), vs the memory sink the registry
     * entries use for the hash gate. Each call gets a fresh sink +
-    * checkpoint directory; the committed table is the parquet read-
-    * back (the sink's _spark_metadata commit log scopes the read to
-    * COMMITTED files, so a crashed write is never half-read). The
-    * provider override is session-scoped and restored on exit. */
+    * checkpoint [[LayoutStore.scratchDir]]; the committed table is the
+    * parquet read-back (the sink's _spark_metadata commit log scopes
+    * the read to COMMITTED files, so a crashed write is never half-read).
+    * The provider override is session-scoped and restored on exit. */
   private[graft] def runToParquetSink(s: SparkSession, df: DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
+    val dir = LayoutStore.scratchDir(s, "graft_stream_sink")
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prior = s.conf.getOption(key)
     s.conf.set(key,
@@ -773,15 +773,15 @@ object StreamQueries {
   private[graft] def versionedStateRun(s: SparkSession, ops: DataFrame, prefix: String,
       batchToState: DataFrame => DataFrame,
       mergeStates: (DataFrame, DataFrame) => DataFrame): (DataFrame, Int) = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = LayoutStore.scratchDir(s, prefix)
     withStreamShuffle(s) {
       val q = ops.writeStream.foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val prev = new java.io.File(s"$dir/state_${id - 1}")
+          val prev = s"$dir/state_${id - 1}"
           val incoming = batchToState(batch.toDF())
           val merged =
-            if (!prev.exists) incoming
-            else mergeStates(Tables.parquet(s, prev.getPath), incoming)
+            if (!LayoutStore.exists(s, prev)) incoming
+            else mergeStates(Tables.parquet(s, prev), incoming)
           merged.write.mode("overwrite").parquet(s"$dir/state_$id")
           ()
       }.option("checkpointLocation", s"$dir/chk")
@@ -789,7 +789,7 @@ object StreamQueries {
       q.awaitTermination()
       q.stop()
     }
-    val versions = new java.io.File(dir).listFiles().map(_.getName)
+    val versions = LayoutStore.list(s, dir).map(_.getName)
       .filter(_.startsWith("state_")).map(_.stripPrefix("state_").toLong)
     // an empty/missing source commits zero versions; fail with the
     // cause, not `empty.max`'s bare UnsupportedOperationException
@@ -1011,7 +1011,7 @@ object StreamQueries {
   private def st15Run(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int], baseSh: DataFrame): DataFrame = {
     import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_st15").toString
+    val dir = LayoutStore.scratchDir(s, "graft_st15")
     withStreamShuffle(s) {
     val q = documentsStreamFrom(s, d, maxFilesPerTrigger)
       .filter(PipelineQueries.isDeltaDoc)
@@ -1040,14 +1040,14 @@ object StreamQueries {
     q.awaitTermination()
     q.stop()
     }
-    val parts = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("batch_")).map(_.getPath).sorted
+    val parts = LayoutStore.list(s, dir)
+      .filter(_.getName.startsWith("batch_")).map(_.toString).sorted
     // a corpus whose delta split is EMPTY commits no batch partition:
     // parquet() on a zero-path list throws, so return the verdict
     // schema with no rows instead (ADVICE r8) — the gate semantics
     // ("every delta doc gets a row") are vacuously satisfied
     if (parts.isEmpty) {
-      deleteRecursively(new java.io.File(dir))
+      LayoutStore.delete(s, dir)
       return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, jaccard DOUBLE, n_matches BIGINT"))
@@ -1057,13 +1057,8 @@ object StreamQueries {
     // outlive the query (ADVICE r8: the dir was never cleaned up)
     val out = s.read.parquet(parts.toIndexedSeq: _*).orderBy(col("doc_id"))
       .localCheckpoint()
-    deleteRecursively(new java.io.File(dir))
+    LayoutStore.delete(s, dir)
     out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
   }
 
   /** dd9's naive cross-split all-pairs CTE folded to the per-doc
@@ -1183,14 +1178,14 @@ object StreamQueries {
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.operators.Similarity
     val base = PipelineQueries.cachedAnnIndex(s, d, "ivf_base")
-    val run = java.nio.file.Files.createTempDirectory("graft_st17").toString
+    val run = LayoutStore.scratchDir(s, "graft_st17")
     // the per-run index copy + checkpoint are SCRATCH: materialize the
     // probe result off them, then delete unconditionally — a bench/spec
     // loop otherwise strands one index-sized dir per invocation, named
-    // outside layoutVacuum's keyed regex so nothing ever reclaims it
+    // outside LayoutStore.vacuum's keyed regex so nothing ever reclaims it
     // (round 12 — VERDICT r11 wrong-item #1 / ADVICE r11)
     try {
-      Tables.copyDir(new java.io.File(base), new java.io.File(s"$run/idx"))
+      LayoutStore.copy(s, base, s"$run/idx")
       withStreamShuffle(s) {
         val q = embeddingsStreamFrom(s, d, maxFilesPerTrigger)
           .filter(col("vec_id") % 8 === 0)
@@ -1205,7 +1200,7 @@ object StreamQueries {
       Similarity.ivfProbeIndex(s, s"$run/idx",
         Tables.embeddings(s, d).filter(col("vec_id") < PipelineQueries.NQueries),
         PipelineQueries.TopK).localCheckpoint()
-    } finally deleteRecursively(new java.io.File(run))
+    } finally LayoutStore.delete(s, run)
   }
 
   private[graft] def embeddingsStreamFrom(s: SparkSession, d: String,

@@ -11,7 +11,7 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{LayoutStore, Tables}
 
 /** Avro ingestion path.
   *
@@ -114,8 +114,7 @@ object AvroIngest {
     * round-trip bit-exactly through Avro's binary encoding, so the
     * DuckDB oracle over the parquet original must hash-match. */
   def supplierAvro(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_avro_${graft.Tables.layoutKey(dir, "supplier")}/supplier"
-    if (!graft.Tables.layoutReady(out)) graft.Tables.publishLayout(out)(tmp =>
+    val out = LayoutStore.cached(spark, "graft_avro", dir, "supplier", "", "supplier")(tmp =>
       writeAvro(Tables.supplier(spark, dir), tmp))
     avro(spark, out, supplierSchema)
   }

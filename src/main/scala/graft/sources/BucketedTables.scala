@@ -73,7 +73,7 @@ object BucketedTables {
   /** Build-if-missing BUCKETED copy of a source table under the
     * write-once layout convention, returned as a catalog-backed
     * DataFrame whose scan reports the bucketing. The bucket FILES are
-    * written once per corpus version (Tables.layoutKey) and survive
+    * written once per corpus version (LayoutStore.layoutKey) and survive
     * across JVMs; the catalog METADATA is per-session (parquet itself
     * has no bucket notion, and the default in-memory catalog dies with
     * the JVM), so a warm start re-registers the existing files with
@@ -84,28 +84,27 @@ object BucketedTables {
   def bucketedTable(spark: org.apache.spark.sql.SparkSession, dir: String,
       tableName: String, bucketCol: String, df: => DataFrame,
       nBuckets: Int = 8): DataFrame = {
-    val key = graft.Tables.layoutKey(dir, tableName, s"bk$nBuckets")
+    // the sanitized key is the table name too (BucketedJoinSpec pins it)
+    val key = graft.LayoutStore.layoutKey(spark, dir, tableName, s"bk$nBuckets")
       .replaceAll("[^A-Za-z0-9_]", "_")
     val name = s"graft_bk_${tableName}_$key"
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_bk_${tableName}_$key"
     if (!spark.catalog.tableExists(name)) {
-      if (!graft.Tables.layoutReady(path)) {
-        // Bucket FILES go through publishLayout like every other
-        // write-once layout (ADVICE r8): saveAsTable straight into the
-        // final path let two concurrent sessions interleave
-        // overwrite-deletes and task files, and a reader could observe
-        // a mixed/partial directory. The build writes under a
-        // session-unique temp table + temp dir, drops the scaffold
-        // table (EXTERNAL — the files stay), and the atomic rename
-        // publishes a complete directory or nothing. Bucket ids ride
-        // the part-file NAMES, so the files survive both the table
-        // drop and the rename intact.
-        graft.Tables.publishLayout(path) { tmp =>
-          val scaffold = name + "_bld_" +
-            java.util.UUID.randomUUID().toString.take(8)
-          writeBucketed(df, scaffold, tmp, bucketCol, nBuckets, Seq(bucketCol))
-          spark.sql(s"DROP TABLE IF EXISTS $scaffold")
-        }
+      // Bucket FILES go through the layout store like every other
+      // write-once layout (ADVICE r8): saveAsTable straight into the
+      // final path let two concurrent sessions interleave
+      // overwrite-deletes and task files, and a reader could observe
+      // a mixed/partial directory. The build writes under a
+      // session-unique temp table + temp dir, drops the scaffold
+      // table (EXTERNAL — the files stay), and the atomic rename
+      // publishes a complete directory or nothing. Bucket ids ride
+      // the part-file NAMES, so the files survive both the table
+      // drop and the rename intact.
+      graft.LayoutStore.ensure(spark, path) { tmp =>
+        val scaffold = name + "_bld_" +
+          java.util.UUID.randomUUID().toString.take(8)
+        writeBucketed(df, scaffold, tmp, bucketCol, nBuckets, Seq(bucketCol))
+        spark.sql(s"DROP TABLE IF EXISTS $scaffold")
       }
       // registration is always the metadata-only DDL over the
       // published LOCATION — same statement cold and warm

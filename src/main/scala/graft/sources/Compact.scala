@@ -90,7 +90,7 @@ object Compact {
     * the partition's ONLY data copy, so the sweep renames it back
     * whenever the live dir is missing and only deletes leftovers
     * whose live target exists); the pass is a per-layout singleton
-    * like layoutVacuum, not a concurrent job.
+    * like LayoutStore.vacuum, not a concurrent job.
     *
     * Returns (directory, files before, files after) for each rewritten
     * directory. Content is bit-preserved: the rewrite is one
@@ -146,12 +146,20 @@ object Compact {
     val d = new Path(dataDir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     sweepLeftovers(fs, d.getParent, only = Some(d.getName))
+    swap(fs, d, df)
+  }
+
+  /** The hidden-sibling swap: `df` is written to `.compact-<tag>-<name>`,
+    * then two renames (dir → `.old-<tag>-<name>`, tmp → dir) put it in
+    * place and the old copy is deleted. [[sweepLeftovers]] heals a
+    * crash at any point. */
+  private def swap(fs: FileSystem, d: Path, df: DataFrame): Unit = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(d.getParent, s".compact-$tag-${d.getName}")
     val old = new Path(d.getParent, s".old-$tag-${d.getName}")
     df.write.mode("overwrite").parquet(tmp.toString)
     if (!fs.rename(d, old) || !fs.rename(tmp, d))
-      throw new IllegalStateException(s"rewriteInPlace: swap failed for $d")
+      throw new IllegalStateException(s"compaction swap failed for $d")
     fs.delete(old, true); ()
   }
 
@@ -208,14 +216,7 @@ object Compact {
     val bytes = files.map(_.getLen).sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     if (files.length <= n) return None
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(d.getParent, s".compact-$tag-${d.getName}")
-    val old = new Path(d.getParent, s".old-$tag-${d.getName}")
-    graft.Tables.parquet(spark, d.toString).repartition(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(d, old) || !fs.rename(tmp, d))
-      throw new IllegalStateException(s"compactIndex: swap failed for $d")
-    fs.delete(old, true)
+    swap(fs, d, graft.Tables.parquet(spark, d.toString).repartition(n))
     Some((d.toString, files.length, n))
   }
 }

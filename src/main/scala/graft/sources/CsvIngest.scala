@@ -3,13 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{LayoutStore, Tables}
 
 /** CSV ingestion path.
   *
   * The driver's testdata is parquet, so the CSV query materializes the
   * `customer` table as CSV once per SF directory (tiny dimension
-  * table; write-once, published atomically via Tables.publishLayout) and then
+  * table; a write-once layout, LayoutStore.cached) and then
   * exercises the real CSV read path: explicit schema, header,
   * FAILFAST. At 100 TB the loader is what matters — schema is always
   * explicit (inference would be a full extra scan of the data),
@@ -33,19 +33,14 @@ object CsvIngest {
       .schema(schema)
       .csv(path)
 
-  // keyed on the SOURCE parquet's size/mtime (Tables.layoutKey), not
-  // the dir name: a driver-side regeneration of customer.parquet must
-  // invalidate the CSV round-trip copy, not keep serving stale rows
-  private def csvDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_csv_${Tables.layoutKey(dir, "customer")}/customer"
-
   /** The customer table via the CSV path (parquet → CSV → read back).
     * Doubles survive the round-trip exactly: Spark writes shortest
     * round-trip decimal strings and parses them back to the same
     * bits. */
   def customerCsv(spark: SparkSession, dir: String): DataFrame = {
-    val out = csvDir(dir)
-    if (!Tables.layoutReady(out)) Tables.publishLayout(out)(tmp =>
+    // keyed on the SOURCE parquet's size/mtime, not the dir name: a
+    // regeneration of customer.parquet must invalidate the CSV copy
+    val out = LayoutStore.cached(spark, "graft_csv", dir, "customer", "", "customer")(tmp =>
       Tables.customer(spark, dir).write.mode("overwrite").option("header", "true").csv(tmp))
     csv(spark, out, customerSchema)
   }
@@ -65,9 +60,7 @@ object CsvIngest {
   /** The documents table via the JSON-lines path (parquet → JSONL →
     * read back): free-text fields exercise JSON string escaping. */
   def documentsJson(spark: SparkSession, dir: String): DataFrame = {
-    // same size/mtime keying as csvDir — stale-serve prevention
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_json_${Tables.layoutKey(dir, "documents")}/documents"
-    if (!Tables.layoutReady(out)) Tables.publishLayout(out)(tmp =>
+    val out = LayoutStore.cached(spark, "graft_json", dir, "documents", "", "documents")(tmp =>
       Tables.documents(spark, dir).write.mode("overwrite").json(tmp))
     jsonLines(spark, out, documentsSchema)
   }

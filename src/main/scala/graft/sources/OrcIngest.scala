@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{LayoutStore, Tables}
 
 /** ORC ingestion path — the fourth file format beside CSV
   * (CsvIngest), JSON-lines (CsvIngest.documentsJson) and Avro
@@ -21,8 +21,8 @@ import graft.Tables
   *
   * The driver's testdata is parquet, so the query materializes the
   * orders table as ORC once per SF directory (write-once under
-  * Tables.layoutKey so a driver-side regeneration invalidates the
-  * copy; published atomically via Tables.publishLayout) and then
+  * LayoutStore.cached, keyed on the source so a driver-side
+  * regeneration invalidates the copy) and then
   * exercises the real ORC read path. At 100 TB only the loader
   * matters: the scan parallelizes per stripe like any FileFormat
   * source, and aggregate pushdown (min/max/count from stripe
@@ -31,13 +31,9 @@ import graft.Tables
   */
 object OrcIngest {
 
-  private def orcDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_orc_${Tables.layoutKey(dir, "orders")}/orders"
-
   /** The orders table via the ORC path (parquet → ORC → read back). */
   def ordersOrc(spark: SparkSession, dir: String): DataFrame = {
-    val out = orcDir(dir)
-    if (!Tables.layoutReady(out)) Tables.publishLayout(out)(tmp =>
+    val out = LayoutStore.cached(spark, "graft_orc", dir, "orders", "", "orders")(tmp =>
       Tables.orders(spark, dir).write.mode("overwrite").orc(tmp))
     spark.read.orc(out)
   }

@@ -175,7 +175,7 @@ class BucketedJoinSpec extends SparkTestBase {
     // superseded generations modified within the last hour
     gen1.foreach(d => new java.io.File(d)
       .setLastModified(System.currentTimeMillis - 2 * 3600L * 1000))
-    val deleted = Tables.layoutVacuum().toSet
+    val deleted = LayoutStore.vacuum().toSet
     assert(gen1.forall(deleted.contains),
       s"superseded bucket generation not reclaimed: $gen1 vs deleted $deleted")
     assert(gen1.forall(d => !new java.io.File(d).exists()))

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tables.layoutVacuum — the storage-GC for write-once layouts
+/** LayoutStore.vacuum — the storage-GC for write-once layouts
   * (VERDICT r7 #6: every source refresh strands a full index copy
   * under tmpdir; at 100 TB that is an index-sized leak per ingest).
   * Pure filesystem logic, no Spark session needed. */
@@ -38,7 +38,7 @@ class LayoutVacuumSpec extends AnyFunSuite with TempDirs {
     // unrelated dir — must never be touched
     val bystander = mkLayout(root, "not_a_graft_layout")
 
-    val deleted = Tables.layoutVacuum(root).toSet
+    val deleted = LayoutStore.vacuum(root).toSet
     assert(deleted === Set(oldGen.getPath, oldNoP.getPath))
     assert(!oldGen.exists() && !oldNoP.exists())
     assert(newGen.exists() && otherParams.exists() && newNoP.exists() && bystander.exists())
@@ -53,11 +53,11 @@ class LayoutVacuumSpec extends AnyFunSuite with TempDirs {
     // names (the snapshot-retention problem table formats solve)
     val oldGen = mkLayout(root, s"graft_shidx_sf0.01_${Hex}_100_1000_n1v2")
     val newGen = mkLayout(root, s"graft_shidx_sf0.01_${Hex}_120_2000_n1v2")
-    assert(Tables.layoutVacuum(root).isEmpty, "young superseded gen must survive")
+    assert(LayoutStore.vacuum(root).isEmpty, "young superseded gen must survive")
     assert(oldGen.exists() && newGen.exists())
     // one hour later (simulated), the same sweep reclaims it
     age(oldGen)
-    assert(Tables.layoutVacuum(root) === Seq(oldGen.getPath))
+    assert(LayoutStore.vacuum(root) === Seq(oldGen.getPath))
     assert(!oldGen.exists() && newGen.exists())
   }
 
@@ -75,7 +75,7 @@ class LayoutVacuumSpec extends AnyFunSuite with TempDirs {
     val otherBk = mkLayout(root, s"graft_bk_orders__root_testdata_sf0_01_${Hex}_3100_2000_bk16")
     // a different table over the same source dir — separate group
     val otherTable = mkLayout(root, s"graft_bk_lineitem__root_testdata_sf0_01_${Hex}_900_500_bk8")
-    val deleted = Tables.layoutVacuum(root).toSet
+    val deleted = LayoutStore.vacuum(root).toSet
     assert(deleted === Set(oldGen.getPath))
     assert(!oldGen.exists())
     assert(newGen.exists() && otherBk.exists() && otherTable.exists())
@@ -86,14 +86,14 @@ class LayoutVacuumSpec extends AnyFunSuite with TempDirs {
     val stale = mkLayout(root, s"graft_annidx_sf0.01_${Hex}_100_1000.build-deadbeef")
     assert(stale.setLastModified(System.currentTimeMillis - 2 * 3600L * 1000))
     val young = mkLayout(root, s"graft_annidx_sf0.01_${Hex}_100_1000.build-cafebabe")
-    val deleted = Tables.layoutVacuum(root)
+    val deleted = LayoutStore.vacuum(root)
     assert(deleted === Seq(stale.getPath))
     assert(!stale.exists() && young.exists())
   }
 
   test("vacuum is idempotent and safe on an empty / absent directory") {
     val root = tempDir("graft-vacuum-e")
-    assert(Tables.layoutVacuum(root).isEmpty)
-    assert(Tables.layoutVacuum(root + "/does-not-exist").isEmpty)
+    assert(LayoutStore.vacuum(root).isEmpty)
+    assert(LayoutStore.vacuum(root + "/does-not-exist").isEmpty)
   }
 }

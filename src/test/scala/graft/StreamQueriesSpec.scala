@@ -457,7 +457,7 @@ class StreamQueriesSpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, Sf0001)
     val base = PipelineQueries.cachedAnnIndex(spark, Sf0001, "ivf_base")
     val oneShot = tempDir("graft-st17-one")
-    Tables.copyDir(new java.io.File(base), new java.io.File(s"$oneShot/idx"))
+    LayoutStore.copy(spark, base, s"$oneShot/idx")
     Similarity.ivfAppendDelta(emb.filter(col("vec_id") % 8 === 0), s"$oneShot/idx")
     val q = emb.filter(col("vec_id") < PipelineQueries.NQueries)
     assert(rows(Similarity.ivfProbeIndex(spark, s"$oneShot/idx", q,
@@ -466,7 +466,7 @@ class StreamQueriesSpec extends SparkTestBase {
     // against the idempotent append adds nothing — st13's idempotence
     // argument on an append-only layout
     val replay = tempDir("graft-st17-rep")
-    Tables.copyDir(new java.io.File(base), new java.io.File(s"$replay/idx"))
+    LayoutStore.copy(spark, base, s"$replay/idx")
     val delta = emb.filter(col("vec_id") % 8 === 0)
     val n1 = Similarity.ivfAppendDeltaIdempotent(delta, s"$replay/idx")
     assert(n1 === delta.count())
