@@ -190,12 +190,9 @@ object DeltaBench {
         (i, p) => Similarity.lshAppendDelta(
           emb.filter(col("vec_id") % 32 === i * 8), p, dim), "buckets",
         p => Similarity.lshProbeIndex(spark, p, q5, dim, 10).count()))
-    def fileCount(d: String): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
-        else if (f.getName.endsWith(".parquet") || f.getName.startsWith("part-")) 1
-        else 0
-      walk(new java.io.File(d))
+    def fileCount(d: String): Int = LayoutStore.files(spark, d).count { f =>
+      val name = f.getPath.getName
+      name.endsWith(".parquet") || name.startsWith("part-")
     }
     if (on("compaction")) {
       println()

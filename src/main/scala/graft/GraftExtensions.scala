@@ -6,14 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions._
 
-/** Library installer: `spark.sql.extensions=graft.GraftExtensions`
-  * registers every native graft expression/aggregate in the session's
-  * catalog at session build time — SQL text and `expr(...)` can then
-  * use them with no Scala import and no per-session register() call
-  * (the deployment story for a shared cluster: ship the jar, set one
-  * conf, every session — including pure-SQL clients — gets the
-  * functions). `VectorFunctions.register` remains the programmatic
-  * path for sessions built without the conf; both are idempotent.
+/** The one function registry: `spark.sql.extensions=graft.GraftExtensions`
+  * (set in `Sessions.confs`, so every session the project builds has
+  * it) binds every native graft expression/aggregate to its `graft_*`
+  * name in the session's catalog at session build time. SQL text,
+  * `expr(...)` and `call_function(...)` then resolve them with no Scala
+  * import and no per-session call, in cloned and new sessions too (the
+  * deployment story for a shared cluster: ship the jar, set one conf,
+  * every session — including pure-SQL clients — gets the functions).
+  * A session built without the conf fails loudly at analysis with
+  * `UNRESOLVED_ROUTINE`; a new native function is added here only.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -43,6 +45,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("graft_bloom",
       e => BloomBuild(e(0), e(1), e(2)).toAggregateExpression()))
     ext.injectFunction(fn("graft_might_contain", e => BloomMightContain(e(0), e(1))))
+    ext.injectFunction(fn("graft_sorted_intersect", e => SortedIntersectLong(e(0), e(1))))
+    ext.injectFunction(fn("graft_charhist39", e => CharHist39(e(0))))
     ext.injectFunction(fn("graft_kll", e => KllBuild(e(0)).toAggregateExpression()))
     ext.injectFunction(fn("graft_kll_merge", e => KllMerge(e(0)).toAggregateExpression()))
     ext.injectFunction(fn("graft_kll_quantile", e => KllQuantile(e(0), e(1))))

@@ -45,6 +45,18 @@ object LayoutStore {
     if (fs.exists(p)) fs.listStatus(p).map(_.getPath).toSeq else Seq.empty
   }
 
+  /** Every file under `path`, at any depth. A `listStatus` walk:
+    * `listFiles` builds `LocatedFileStatus`, which loads permissions
+    * through java.io and so fails on a local file system mounted under
+    * another scheme. */
+  def files(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    def walk(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap(s =>
+      if (s.isDirectory) walk(s.getPath) else Seq(s))
+    walk(p)
+  }
+
   /** Size and mtime of a layout source through its file system; (0, 0)
     * when missing. */
   private[graft] def sourceStat(spark: SparkSession, path: String): (Long, Long) = {

@@ -242,7 +242,6 @@ object TextFunctions {
     * formulation re-evaluated the hash array inside every window
     * lambda, quadratic for long documents). */
   def fingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     // computeFloor (round 16): the winnow pass is O(len) hashing per
     // document fused into an unsplittable single-task scan — serial
     // (measured 3.1 s wall ≈ 2.8 s CPU at sf0.1; floored 0.6 s wall /
@@ -287,7 +286,6 @@ object TextFunctions {
     * Pure map-side, whole-stage codegen (graft_nfc is a static
     * invoke). */
   def normalizeText(docs: DataFrame): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     val norm = trim(regexp_replace(
       call_function("graft_nfc", lower(col("text"))),
       "[\\s\\x00-\\x1f\\x7f]+", " "))
@@ -399,7 +397,6 @@ object TextFunctions {
     * discusses the collision math); the text key keeps the oracle
     * comparison byte-exact here. */
   def cleanCorpus(docs: DataFrame, minTokens: Int = 10, minStopRatio: Double = 0.05): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     val norm = trim(regexp_replace(
       call_function("graft_nfc", lower(col("text"))),
       "[\\s\\x00-\\x1f\\x7f]+", " "))
@@ -1170,7 +1167,6 @@ object TextFunctions {
     * (spec-gated; estimates are merge-order-dependent, so no oracle
     * hash). Returned top `k` ≤ capacity survivors, est desc. */
   def heavyHitters(docs: DataFrame, capacity: Int = 256, k: Int = 20): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     docs.select(explode(expr(tokensExpr)).as("token"))
       .agg(call_function("graft_heavyhitters", col("token"), lit(capacity)).as("hh"))
       .select(posexplode(col("hh")))
@@ -1194,7 +1190,6 @@ object TextFunctions {
   def curate(docs: DataFrame, minTokens: Int = 10, minStopRatio: Double = 0.05,
       budgetTokens: Int = 512): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorFunctions.register(docs.sparkSession)
     val norm = trim(regexp_replace(
       call_function("graft_nfc", lower(col("text"))),
       "[\\s\\x00-\\x1f\\x7f]+", " "))

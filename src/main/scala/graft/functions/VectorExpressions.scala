@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -188,65 +187,4 @@ case class SortedIntersectLong(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object VectorFunctions {
-  @volatile private var registered = Set.empty[Int]
-
-  /** Register graft_dot / graft_cosine in the session's function
-    * registry (idempotent per session) so plans can use
-    * expr("graft_cosine(a, b)") — avoids any private Column ctor API. */
-  def register(spark: SparkSession): Unit = {
-    val key = System.identityHashCode(spark)
-    if (!registered.contains(key)) synchronized {
-      if (!registered.contains(key)) {
-        val reg = spark.sessionState.functionRegistry
-        reg.createOrReplaceTempFunction("graft_dot", exprs => DotFloat(exprs(0), exprs(1)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_cosine", exprs => CosineFloat(exprs(0), exprs(1)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_topk",
-          exprs => TopKScoreId(exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_simhash64",
-          exprs => SimHash64(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_nfc",
-          exprs => NormalizeNfc(exprs(0)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_winnow",
-          exprs => WinnowMinima(exprs(0),
-            exprs(1).eval().asInstanceOf[Number].intValue(),
-            exprs(2).eval().asInstanceOf[Number].intValue()), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_heavyhitters",
-          exprs => MisraGries(exprs(0), exprs(1)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_bitmap",
-          exprs => BitmapBuild(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_bitmap_or",
-          exprs => BitmapOr(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_bitmap_card",
-          exprs => BitmapCardinality(exprs(0)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_bloom",
-          exprs => BloomBuild(exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_might_contain",
-          exprs => BloomMightContain(exprs(0), exprs(1)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_sorted_intersect",
-          exprs => SortedIntersectLong(exprs(0), exprs(1)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_charhist39",
-          exprs => CharHist39(exprs(0)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_kll",
-          exprs => KllBuild(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_kll_merge",
-          exprs => KllMerge(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_kll_quantile",
-          exprs => KllQuantile(exprs(0), exprs(1)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_theta",
-          exprs => ThetaBuild(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_theta_union",
-          exprs => ThetaUnionAgg(exprs(0)).toAggregateExpression(), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_theta_estimate",
-          exprs => ThetaEstimate(exprs(0)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_theta_intersect",
-          exprs => ThetaIntersect(exprs(0), exprs(1)), "scala_udf")
-        reg.createOrReplaceTempFunction("graft_theta_anotb",
-          exprs => ThetaANotB(exprs(0), exprs(1)), "scala_udf")
-        registered += key
-      }
-    }
-  }
 }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
-
 /** §2.B deduplication operators over a documents-shaped table
   * (doc_id: long, text: string).
   *
@@ -1302,26 +1300,6 @@ object Dedup {
     * [[dupGroupsReadIndex]] output, so per-ingest cost is delta-sized
     * candidate work + the contracted propagation + one label-rewrite
     * join over the index — history is never re-paired. */
-  /** Bench diagnosis lever (round 11 — VERDICT r10 #8): with env
-    * SPARK_GRAFT_PHASE_DIAG set, each named stage materializes
-    * (localCheckpoint) and prints its wall seconds, so BENCH_NOTES'
-    * dd10 phase table reads off the REAL operator — never a
-    * re-implemented timing twin that could drift from this dispatch.
-    * Output is unchanged (the barriers only pin evaluation order);
-    * without the flag, no barrier is added. */
-  private def phaseStage(name: String)(df: => DataFrame): DataFrame =
-    if (!sys.env.contains("SPARK_GRAFT_PHASE_DIAG")) df
-    else {
-      // by-name: an eagerly-evaluating stage (dupGroupLabels runs its
-      // propagation loop during the CALL) must land inside the timer,
-      // not leak into the caller's remainder
-      val t0 = System.nanoTime()
-      val out = df.localCheckpoint()
-      System.err.println(
-        f"[phase-diag] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      out
-    }
-
   /** Edge-count ceiling for the single-task DSU path: ~4M (doc_a,
     * doc_b) rows ≈ a few hundred MB of hash-map state — comfortably
     * one executor task. Above it the distributed propagation loop
@@ -1384,25 +1362,17 @@ object Dedup {
     // bounded driver actions (vocabulary probes, banding cost-probe
     // collects) back-to-back — build them concurrently (round 16;
     // dd10's wall was 4.6 s construction vs 0.7 s execution). Plans
-    // and rows are identical to the sequential build. Under
-    // SPARK_GRAFT_PHASE_DIAG the phases serialize as before so the
-    // per-phase walls stay attributable.
+    // and rows are identical to the sequential build.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    def crossOf() = phaseStage("dd10.cross_pairs") {
-      baseShOpt match {
-        case Some(baseSh) => ingestBatchPairs(baseSh, delta, threshold)
-        case None => incrementalPairs(docs, n, threshold, isDelta)
-      } }
-    def intraOf() = phaseStage("dd10.intra_pairs") {
-      ngramJaccardPairs(delta, n, threshold) }
-    val (cross, intra) =
-      if (sys.env.contains("SPARK_GRAFT_PHASE_DIAG")) (crossOf(), intraOf())
-      else {
-        val cf = Future(crossOf()); val inf = Future(intraOf())
-        (Await.result(cf, Duration.Inf), Await.result(inf, Duration.Inf))
-      }
+    val crossF = Future(baseShOpt match {
+      case Some(baseSh) => ingestBatchPairs(baseSh, delta, threshold)
+      case None => incrementalPairs(docs, n, threshold, isDelta)
+    })
+    val intraF = Future(ngramJaccardPairs(delta, n, threshold))
+    val cross = Await.result(crossF, Duration.Inf)
+    val intra = Await.result(intraF, Duration.Inf)
     val lab = indexLabels.select(col("doc_id").as("doc_old"), col("group_id"))
     val edges = cross.join(lab, "doc_old")
       .select(col("doc_new").as("doc_a"), col("group_id").as("doc_b"))
@@ -1424,10 +1394,10 @@ object Dedup {
     // rows. The size guard keeps the documented boundary: a delta
     // batch whose edge set outgrows one task's memory falls back to
     // the distributed loop (same labels — DedupSpec pins DSU ≡ loop).
-    val contracted = phaseStage("dd10.contraction") {
+    val contracted =
       if (edges.limit(DsuMaxEdges + 1).count() <= DsuMaxEdges)
         dsuLabels(nodes, edges)
-      else dupGroupLabels(nodes, edges, 50, None) }
+      else dupGroupLabels(nodes, edges, 50, None)
     val deltaOut = delta.select(col("doc_id")).join(contracted, "doc_id")
     val indexOut = indexLabels.select(col("doc_id"), col("group_id").as("g_old"))
       .join(contracted.select(col("doc_id").as("g_old"), col("group_id")), "g_old")
@@ -1628,7 +1598,6 @@ object Dedup {
     * (catches every pair with ≤3 differing bits exactly, and most up
     * to the requested distance when errors cluster). */
   def simhash(docs: DataFrame): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     val toks = docs.select(col("doc_id"),
       explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("tok"))
     // ONE aggregate (graft.functions.SimHash64, a long[65] buffer)
@@ -1746,7 +1715,7 @@ object Dedup {
     var it = 0
     // Round structure note (round 12 — VERDICT r11 #3 tried and
     // REJECTED on evidence): folding two edge-hops into each round
-    // does cut rounds (dd6 5 → 4, dd10 3 → 2, CC diag) but measured
+    // does cut rounds (dd6 5 → 4, dd10 3 → 2) but measured
     // 2.5× SLOWER (dd6 12.0 → 29.7 s min-of-3 at sf0.1): the second
     // hop and the pointer jump both re-reference the first hop's
     // un-materialized join+agg tree, so hop1 re-evaluates up to 4× per
@@ -1789,12 +1758,6 @@ object Dedup {
       changed = next.filter(col("comp") =!= col("old")).count()
       labels = next.select(col("doc_id"), col("comp"))
       it += 1
-      // bench diagnosis lever (round 12): per-round change counts tell
-      // whether a slow dd6/dd10 is many rounds (algorithmic) or few
-      // expensive rounds (scheduling floor) — the two need different
-      // fixes and were conflated in the r10 phase-probe analysis
-      if (sys.env.contains("SPARK_GRAFT_CC_DIAG"))
-        System.err.println(s"[cc-diag] round=$it changed=$changed")
     } finally spark.conf.set(skey, sprior)
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
@@ -2068,8 +2031,6 @@ object Dedup {
     * independent 16-bit random-hyperplane signatures (equality-joined
     * buckets), verified with the exact codegen cosine. */
   def embeddingDup(emb: DataFrame, dim: Int, threshold: Double): DataFrame = {
-    val spark = emb.sparkSession
-    VectorFunctions.register(spark)
     // Plane = ONE array literal (not array(d lits)): keeps plan size
     // and generated code constant in `dim` — see Similarity.planeLit.
     def planeLit(t: Int, p: Int): Column =
@@ -2159,7 +2120,6 @@ object Dedup {
     // EXECUTOR storage — the same order of data movement as the
     // banded join's own shuffle, paid once instead of per consumer;
     // nothing lands on the driver.
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val fq = FreqProbeChars.indices
     // computeFloor was tried here (round 16) and REVERTED after
     // measurement: parallelizing the checkpoint to 32 partitions cut

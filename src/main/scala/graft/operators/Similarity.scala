@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.VectorFunctions
-
 /** §2.C similarity search over an embeddings-shaped table
   * (vec_id: long, embedding: array<float>).
   *
@@ -30,7 +28,6 @@ object Similarity {
     * partitions×q×k rows ever shuffle — the corpus itself is scanned
     * once, never moved. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val scored = corpus
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -55,7 +52,6 @@ object Similarity {
     * agree; oracle-gated). The ANN sibling is
     * [[ivfProbeIndexFiltered]]. */
   def filteredTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), col("label").as("q_label"))
     val scored = corpus
@@ -100,7 +96,6 @@ object Similarity {
     * Output size is data-dependent (that's the semantics); the
     * presentation sort is the only exchange. */
   def rangeSearch(corpus: DataFrame, queries: DataFrame, minCosine: Double): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -135,7 +130,6 @@ object Similarity {
     * candidate union with this same fusion expression. */
   def hybridTopK(docs: DataFrame, corpus: DataFrame, nQueries: Int, k: Int,
       alpha: Double = 0.5): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val c = hybridCorpus(docs, corpus)
     val q = hybridQueries(c, nQueries)
     val scored = fusedCols(
@@ -203,7 +197,6 @@ object Similarity {
   def hybridProbe(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       corpus: DataFrame, ivfPath: String, nQueries: Int, k: Int,
       alpha: Double = 0.5, nprobe: Int = 4, dfCap: Int = 64): DataFrame = {
-    VectorFunctions.register(spark)
     val c = hybridCorpus(docs, corpus)
     val q = hybridQueries(c, nQueries)
     val cand = hybridCandidates(spark, c, q, corpus, ivfPath, nQueries, nprobe, dfCap)
@@ -291,7 +284,6 @@ object Similarity {
     * distributed, no driver loop, k is a compile-time constant. */
   def mmrDiversify(corpus: DataFrame, nQueries: Int, m: Int, k: Int,
       relW: Double = 0.7, simW: Double = 0.3): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val base = corpus.select(col("vec_id"), col("embedding"))
     val q = base.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -391,7 +383,6 @@ object Similarity {
   }
 
   def lshTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val cb = bandRows(corpus, dim, "vec_id", "vec_id")
     val qb = bandRows(queries, dim, "vec_id", "query_id")
     val cand = cb.join(broadcast(qb), Seq("t", "sig"))
@@ -422,7 +413,6 @@ object Similarity {
     * Embeddings ride along in the bucket rows so the exact re-rank
     * needs no join back to the source table. */
   def lshWriteIndex(corpus: DataFrame, path: String, dim: Int): Unit = {
-    VectorFunctions.register(corpus.sparkSession)
     bandRows(corpus, dim, "vec_id", "vec_id", Seq("embedding"))
       .select(col("vec_id"), col("embedding"), bucketCol)
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/buckets")
@@ -440,7 +430,6 @@ object Similarity {
     * × Tables; probe(base ⊕ delta) is BIT-IDENTICAL to a one-shot
     * build over the union (IvfIndexSpec pins it). */
   def lshAppendDelta(delta: DataFrame, path: String, dim: Int): Unit = {
-    VectorFunctions.register(delta.sparkSession)
     bandRows(delta, dim, "vec_id", "vec_id", Seq("embedding"))
       .select(col("vec_id"), col("embedding"), bucketCol)
       .write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
@@ -459,7 +448,6 @@ object Similarity {
     * (per-vector, BEFORE banding — one surviving row feeds all
     * Tables band rows). */
   def lshAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long = {
-    VectorFunctions.register(delta0.sparkSession)
     val spark = delta0.sparkSession
     val delta = delta0.dropDuplicates("vec_id")
     val rows = bandRows(delta, dim, "vec_id", "vec_id", Seq("embedding"))
@@ -486,7 +474,6 @@ object Similarity {
     * spec-asserted (IvfIndexSpec). */
   def lshProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, dim: Int, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val qb = bandRows(queries, dim, "vec_id", "query_id", Seq("embedding"))
       .select(col("query_id"), col("embedding").as("q_emb"), bucketCol)
     // bounded driver state: ≤ Tables·2^Bits distinct bucket ids
@@ -633,7 +620,6 @@ object Similarity {
       df.withColumn(out, slice(reverse(array_sort(sc)), 1, take))
     } else {
       val spark = df.sparkSession
-      VectorFunctions.register(spark)
       import spark.implicits._
       val (gcents, g4f) = coarseGroups(cents)
       // guard (a): only member-bearing groups enter the beam
@@ -707,7 +693,6 @@ object Similarity {
     * order-independent decimal sums the centroids are a pure function
     * of the vector SET, whatever partitioning delivered it. */
   private[graft] def trainCentroids(corpus: DataFrame, nlist: Int, iters: Int): Array[Array[Float]] = {
-    VectorFunctions.register(corpus.sparkSession)
     var centroids: Array[Array[Float]] = corpus.orderBy(col("vec_id")).limit(nlist)
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray)
@@ -741,7 +726,6 @@ object Similarity {
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val centroids = trainCentroids(corpus, nlist, iters)
     val indexed = withCid(corpus, "embedding", centroids)
     val probed = probeLists(queries, centroids, nprobe)
@@ -793,7 +777,6 @@ object Similarity {
     * of what's probed — ss8's `ivf_delta` recall row is the gauge that
     * says when to re-cluster (re-run the full build). */
   def ivfAppendDelta(delta: DataFrame, path: String): Unit = {
-    VectorFunctions.register(delta.sparkSession)
     val centroids = readCentroids(delta.sparkSession, s"$path/centroids")
     withCid(delta, "embedding", centroids)
       .write.mode("append").partitionBy("cid").parquet(s"$path/vectors")
@@ -833,7 +816,6 @@ object Similarity {
     * CHANGED payload under an existing vec_id remains upsert
     * territory, i.e. the rebuild/recluster path's job. */
   def ivfAppendDeltaIdempotent(delta0: DataFrame, path: String): Long = {
-    VectorFunctions.register(delta0.sparkSession)
     val spark = delta0.sparkSession
     val delta = delta0.dropDuplicates("vec_id")
     val centroids = readCentroids(spark, s"$path/centroids")
@@ -952,7 +934,6 @@ object Similarity {
     * probe a constant ~nprobe×512 vectors at any corpus size). */
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
-    VectorFunctions.register(spark)
     val centroids = graft.Tables.parquet(spark, s"$path/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
@@ -992,7 +973,6 @@ object Similarity {
     * instead of retraining every variant in-query. */
   def annRecallOf(corpus: DataFrame, queries: DataFrame, k: Int,
       variants: Seq[(String, DataFrame)]): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val exact = bruteForceTopK(corpus, queries, k)
       .select(col("query_id"), col("vec_id")).cache()
     variants.map { case (name, ann) =>
@@ -1053,7 +1033,6 @@ object Similarity {
       nlist: Int = 16, iters: Int = 2): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    VectorFunctions.register(spark)
     val cents = trainCentroids(corpus, nlist, iters)
     // (vec_id, embedding, cid1, s1, cid2): primary + secondary cell
     val top2 = withTopCells(corpus.select(col("vec_id"), col("embedding")),
@@ -1125,7 +1104,6 @@ object Similarity {
     * Hubs stay frozen (entry points, not answers). */
   def hnswAppendDelta(delta: DataFrame, path: String): Unit = {
     val spark = delta.sparkSession
-    VectorFunctions.register(spark)
     val cents = readCentroids(spark, s"$path/centroids")
     val top2 = withTopCells(delta.select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", 2, cents, "__cells")
@@ -1174,7 +1152,6 @@ object Similarity {
   def hnswProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int,
       beam: Int = HnswBeam, rounds: Int = HnswRounds): DataFrame = {
-    VectorFunctions.register(spark)
     // multiple graph/ rows per vec_id are legal after appends (delta
     // rows + reverse-edge patches, until hnswCycle merges them): the
     // neighbor join UNIONS the lists per node; embeddings come off
@@ -1298,7 +1275,6 @@ object Similarity {
 
   private[graft] def trainPq(corpus: DataFrame, dim: Int, m: Int,
       ksub: Int, iters: Int): Array[Array[Array[Float]]] = {
-    VectorFunctions.register(corpus.sparkSession)
     val subDim = dim / m
     // deterministic seed: the lowest-vec_id rows, sliced per subspace.
     // A corpus smaller than ksub degrades to fewer centroids instead of
@@ -1394,7 +1370,6 @@ object Similarity {
     * does). */
   def pqResidualDrift(spark: org.apache.spark.sql.SparkSession, path: String,
       rows: DataFrame): DataFrame = {
-    VectorFunctions.register(spark)
     val books = readCodebook(spark, s"$path/codebook")
     val dim = books.length * books(0)(0).length
     val base = graft.Tables.parquet(spark, s"$path/residuals")
@@ -1410,7 +1385,6 @@ object Similarity {
 
   def pqTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
       m: Int = 8, ksub: Int = 16, iters: Int = 2): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val cents = trainPq(corpus, dim, m, ksub, iters)
     val codes = pqEncode(corpus, dim, m, cents)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -1482,7 +1456,6 @@ object Similarity {
     * shows up as reconstruction error in ss8's recall, not as
     * incorrect probing. */
   def pqAppendDelta(delta: DataFrame, path: String, dim: Int): Unit = {
-    VectorFunctions.register(delta.sparkSession)
     val books = readCodebook(delta.sparkSession, s"$path/codebook")
     pqEncode(delta, dim, books.length, books).withColumn("vb", vbCol)
       .write.mode("append").partitionBy("vb").parquet(s"$path/codes")
@@ -1500,7 +1473,6 @@ object Similarity {
     * single writer per index generation; within-batch duplicate
     * vec_ids collapsed at entry; returns rows actually appended. */
   def pqAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long = {
-    VectorFunctions.register(delta0.sparkSession)
     val spark = delta0.sparkSession
     val delta = delta0.dropDuplicates("vec_id")
     val books = readCodebook(spark, s"$path/codebook")
@@ -1524,7 +1496,6 @@ object Similarity {
     * exact query vector. The scan reads ONLY the code table. */
   def pqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val cents = readCodebook(spark, s"$path/codebook")
     val m = cents.length
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -1560,7 +1531,6 @@ object Similarity {
     * is deterministic. */
   def rerankExact(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val pool = cands.select(col("query_id"), col("vec_id"))
     val scored = corpus.select(col("vec_id"), col("embedding"))
@@ -1627,7 +1597,6 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
       iters: Int = 2): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val coarse = trainCentroids(corpus, nlist, iters)
     val books = trainPq(corpus, dim, m, ksub, iters)
     val indexed = withCid(pqEncode(corpus, dim, m, books)
@@ -1685,7 +1654,6 @@ object Similarity {
     * equivalence arguments: probe(base ⊕ delta) ≡ probe of a one-shot
     * union index under the same coarse/books (IvfIndexSpec). */
   def ivfPqAppendDelta(delta: DataFrame, path: String, dim: Int): Unit = {
-    VectorFunctions.register(delta.sparkSession)
     val spark = delta.sparkSession
     val coarse = readCentroids(spark, s"$path/centroids")
     val books = readCodebook(spark, s"$path/codebook")
@@ -1704,7 +1672,6 @@ object Similarity {
     * as [[ivfAppendDeltaIdempotent]]: single writer per index
     * generation; within-batch duplicate vec_ids collapsed at entry. */
   def ivfPqAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long = {
-    VectorFunctions.register(delta0.sparkSession)
     val spark = delta0.sparkSession
     val delta = delta0.dropDuplicates("vec_id")
     val coarse = readCentroids(spark, s"$path/centroids")
@@ -1733,7 +1700,6 @@ object Similarity {
     * flat scan. */
   def ivfPqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
-    VectorFunctions.register(spark)
     val coarse = graft.Tables.parquet(spark, s"$path/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
@@ -1949,7 +1915,6 @@ object Similarity {
   def semanticDedup(emb: DataFrame, k: Int, iters: Int, tau: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    VectorFunctions.register(spark)
     val asg = kmeansAssign(emb, k, iters).localCheckpoint(true)
     val withEmb = asg.select(col("vec_id"), col("cluster"))
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")

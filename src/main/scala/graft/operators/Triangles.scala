@@ -90,7 +90,6 @@ object Triangles {
     * to verify after); per-node counts fold each triangle's three
     * corners exactly once. */
   def perNodeCountsFromAdjacency(adj: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(adj.sparkSession)
     val tri = adj.select(col("lo").as("a"), col("nbrs").as("na"),
         explode(col("nbrs")).as("hi"))
       .join(adj.select(col("lo").as("hi"), col("nbrs").as("nb")), "hi")

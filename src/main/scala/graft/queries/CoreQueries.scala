@@ -1133,7 +1133,6 @@ object CoreQueries {
     * and shipping a few hundred rows. Tie order (price DESC, orderkey
     * ASC) matches the oracle's window exactly. */
   def q47GroupTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.orders(s, d)
       .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
@@ -1722,7 +1721,6 @@ object CoreQueries {
     * materialized table. Oracle: GROUPING SETS of COUNT(DISTINCT) —
     * exact equality, not approximation. */
   def q62BitmapDistinct(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // Chunked container layout (roaring's scheme, made explicit): ids
     // split into (id div 2^16) container key × (id mod 2^16) bitmap
     // position, so ANY 64-bit id domain works without a dictionary —
@@ -1785,7 +1783,6 @@ object CoreQueries {
     * (ExplainSpec-asserted).
     */
   def q64BloomPrune(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val urgent = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
@@ -1962,7 +1959,6 @@ object CoreQueries {
     * KLL compaction is randomized, so estimates are stable only
     * within the ~1.65% rank-error bound → spec-gated (q29 policy). */
   def q67KllRollup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val month = Tables.orders(s, d)
       .select(col("o_orderpriority"),
         date_trunc("month", col("o_orderdate")).cast("date").as("month"),
@@ -1993,7 +1989,6 @@ object CoreQueries {
     * RSE ≈ 1.6% at the default 4096 nominal entries; estimates are
     * seed-specific → spec-gated (q29 policy). */
   def q68ThetaOverlap(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val sk = Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(expr("graft_theta(user_id)").as("sk"))
@@ -2024,7 +2019,6 @@ object CoreQueries {
     * merge. Oracle: DuckDB windowed COUNT(DISTINCT) via a spine
     * range join — exact equality. */
   def q69RollingDistinct(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val day = Tables.events(s, d)
       .select(date_trunc("day", timestamp_micros(expr("ts div 1000"))).cast("date").as("day"),
         expr("user_id div 65536").as("chunk"),

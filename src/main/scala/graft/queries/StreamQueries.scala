@@ -94,27 +94,11 @@ object StreamQueries {
     * memory per invocation. */
   private def runToTable(s: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
-    val q = withStreamShuffle(s) {
-      val q0 = df.writeStream.format("memory").queryName(name)
+    withStreamShuffle(s) {
+      val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination()
-      q0.stop()
-      q0
-    }
-    // bench diagnosis lever (round 9 — VERDICT r8 #4): per-run
-    // micro-batch count + row flow, to separate "the engine planned
-    // more batches" from host contention when a streaming entry's
-    // wall-clock moves between rounds
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DIAG")) {
-      System.err.println(s"[stream-diag] $name batches=${q.recentProgress.length}" +
-        s" rows=${q.recentProgress.map(_.numInputRows).mkString(",")}")
-      // full per-batch progress (durationMs breakdown: triggerExecution
-      // vs queryPlanning vs addBatch vs walCommit/commitOffsets, plus
-      // per-operator state-store commit times) — the round-15 floor
-      // decomposition lever (VERDICT r14 #5): where do st1's ~2 s and
-      // st10's ~4 s actually go
-      q.recentProgress.foreach(p =>
-        System.err.println(s"[stream-prog] $name ${p.json}"))
+      q.awaitTermination()
+      q.stop()
     }
     val out = s.table(name).localCheckpoint()
     s.catalog.dropTempView(name)
@@ -183,7 +167,6 @@ object StreamQueries {
     * Day grain (not hour) keeps complete-mode state at groups×chunks
     * KB-scale. */
   def st3(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val agg = eventsStream(s, d)
       .select(date_trunc("day", tsCol).cast("timestamp_ntz").as("day"),
         col("event_type"),

@@ -30,18 +30,11 @@ object Compact {
 
   /** Total on-disk bytes of the data files under `path` (one FS
     * listing; hidden/metadata files excluded). */
-  def dataBytes(spark: SparkSession, path: String): Long = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
+  def dataBytes(spark: SparkSession, path: String): Long =
+    graft.LayoutStore.files(spark, path).filter { f =>
       val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) total += f.getLen
-    }
-    total
-  }
+      !name.startsWith("_") && !name.startsWith(".")
+    }.map(_.getLen).sum
 
   /** Rewrite the parquet directory `inPath` to `outPath` with
     * ~`targetBytes` per output file. Returns the output file count. */

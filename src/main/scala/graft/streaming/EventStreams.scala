@@ -64,7 +64,6 @@ object EventStreams {
     * n/(cap+1) is present) holds per window because MG merges
     * associatively across micro-batches. */
   def windowedHotTokens(texts: DataFrame, capacity: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(texts.sparkSession)
     texts
       .withWatermark("ts", "2 hours")
       .select(col("ts"), explode(
@@ -89,7 +88,6 @@ object EventStreams {
     * query over the sink (q62's container layout — chained streaming
     * aggregations are not the supported shape). */
   def windowedDistinctUsers(events: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(events.sparkSession)
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))

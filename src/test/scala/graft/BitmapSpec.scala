@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BitmapOps, VectorFunctions}
+import graft.functions.BitmapOps
 import graft.queries.CoreQueries
 
 /** Bitmap-distinct aggregate family (q62): the re-aggregation
@@ -14,7 +14,6 @@ class BitmapSpec extends SparkTestBase {
 
   test("bitmap cardinality equals countDistinct on every grouping") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq(
       (1L, "a"), (2L, "a"), (1L, "a"), (64L, "a"), (65L, "a"),
       (1L, "b"), (128L, "b"), (1000L, "b"), (128L, "b"))
@@ -27,7 +26,6 @@ class BitmapSpec extends SparkTestBase {
 
   test("rollup via graft_bitmap_or equals a direct distinct scan") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val events = Tables.events(spark, Sf0001)
     val viaBitmaps = events
       .select(col("event_type"), (col("ts") % 7).as("slice"), col("user_id"))
@@ -57,7 +55,6 @@ class BitmapSpec extends SparkTestBase {
 
   test("chunked containers make any id domain exact (q62's layout)") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // ids far beyond MaxBits, straddling several 2^26 containers —
     // the replica corpora shift keys by 1e9, which is what forced the
     // container layout in the first place
@@ -72,7 +69,6 @@ class BitmapSpec extends SparkTestBase {
 
   test("out-of-domain ids fail fast with the dictionary-encode hint") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(BitmapOps.MaxBits + 1).toDF("id")
         .agg(expr("graft_bitmap(id)")).collect()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BloomOps, VectorFunctions}
+import graft.functions.BloomOps
 import graft.queries.CoreQueries
 
 /** Bloom-filter family (q64): the two guarantees the runtime-filter
@@ -15,7 +15,6 @@ class BloomSpec extends SparkTestBase {
 
   private def bloomOf(keys: Seq[Long], bits: Int = 1 << 17, k: Int = 5): Array[Byte] = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     keys.toDF("id")
       .agg(expr(s"graft_bloom(id, $bits, $k)"))
       .head().getAs[Array[Byte]](0)
@@ -42,7 +41,6 @@ class BloomSpec extends SparkTestBase {
 
   test("merge is the bitwise OR of partial filters: repartitioned ≡ single-partition") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val keys = (0L until 5000L).map(i => i * 31L)
     val onePass = keys.toDF("id").coalesce(1)
       .agg(expr("graft_bloom(id, 65536, 4)")).head().getAs[Array[Byte]](0)
@@ -53,7 +51,6 @@ class BloomSpec extends SparkTestBase {
 
   test("misuse fails at analysis time: non-literal or non-positive sizing") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq(1L).toDF("id")
     intercept[Exception] { df.agg(expr("graft_bloom(id, id, 5)")).collect() }
     intercept[Exception] { df.agg(expr("graft_bloom(id, 0, 5)")).collect() }
@@ -62,7 +59,6 @@ class BloomSpec extends SparkTestBase {
 
   test("q64: bloom pre-filter passes all true matches and prunes most others") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val urgent = Tables.orders(spark, Sf0001)
       .filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderkey"))
     val bloom = urgent.agg(

@@ -1,24 +1,50 @@
 package graft
 
 /** GraftExtensions: the session was built with
-  * `spark.sql.extensions=graft.GraftExtensions` (SparkTestBase), so
-  * every native function must resolve from plain SQL text with no
-  * VectorFunctions.register call. */
+  * `spark.sql.extensions=graft.GraftExtensions` (SparkTestBase, through
+  * `Sessions.confs`), the one place a `graft_*` name is bound, so every
+  * native function must resolve from plain SQL text — in a fresh
+  * `newSession()` too, which carries the injected functions and no
+  * temp function of the shared session. */
 class ExtensionsSpec extends SparkTestBase {
 
   test("injected functions resolve from plain SQL without register()") {
-    val row = spark.sql(
+    for (session <- Seq(spark, spark.newSession())) {
+      val row = session.sql(
+        """SELECT
+          | graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+          |           array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS dot,
+          | graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+          |              array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS cos,
+          | graft_nfc('café') AS nfc,
+          | size(graft_winnow('abcdefghijklmnop', 4, 2)) AS n_fps""".stripMargin).head()
+      assert(row.getDouble(0) === 11.0)
+      assert(row.getDouble(1) === 1.0)
+      assert(row.getString(2) === "café")
+      assert(row.getInt(3) > 0)
+    }
+  }
+
+  test("a new session resolves graft_sorted_intersect / graft_charhist39 and runs q74 / dd12") {
+    val fresh = spark.newSession()
+    val row = fresh.sql(
       """SELECT
-        | graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-        |           array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS dot,
-        | graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
-        |              array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS cos,
-        | graft_nfc('café') AS nfc,
-        | size(graft_winnow('abcdefghijklmnop', 4, 2)) AS n_fps""".stripMargin).head()
-    assert(row.getDouble(0) === 11.0)
-    assert(row.getDouble(1) === 1.0)
-    assert(row.getString(2) === "café")
-    assert(row.getInt(3) > 0)
+        | graft_sorted_intersect(array(1L, 3L, 5L, 7L), array(3L, 4L, 5L, 8L)) AS common,
+        | graft_charhist39('ab, a.1') AS hist""".stripMargin).head()
+    assert(row.getSeq[Long](0) === Seq(3L, 5L))
+    val hist = row.getSeq[Int](1)
+    assert(hist.size === 39)
+    // slots: 'a'-'z' 0-25, '0'-'9' 26-35, ' ' 36, '.' 37, ',' 38
+    val want = Array.fill(39)(0)
+    want(0) = 2; want(1) = 1; want(27) = 1; want(36) = 1; want(37) = 1; want(38) = 1
+    assert(hist === want.toSeq)
+    def rows(s: org.apache.spark.sql.SparkSession, q: String): Seq[String] =
+      SparkEntry.queries(q)(s, Sf0001).collect().map(_.toString).toSeq.sorted
+    for (q <- Seq("q74_triangles", "dd12_edit_distance")) {
+      val got = rows(fresh, q)
+      assert(got.nonEmpty, s"$q returned no rows")
+      assert(got === rows(spark, q), s"$q differs between a new session and the shared one")
+    }
   }
 
   test("injected aggregate graft_simhash64 resolves from SQL") {

@@ -33,13 +33,10 @@ class LayoutStoreSpec extends SparkTestBase {
 
   private def rows(n: Int): DataFrame = spark.range(n).toDF("id")
 
-  /** Every file under `dir`, relative to it, sorted. (`listStatus`
-    * walk: `listFiles` would load permissions through java.io.) */
+  /** Every file under `dir`, relative to it, sorted. */
   private def files(dir: String): Seq[String] = {
     val root = fs.makeQualified(new Path(dir)).toString
-    def walk(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap(s =>
-      if (s.isDirectory) walk(s.getPath) else Seq(s.getPath.toString))
-    walk(new Path(dir)).map(_.stripPrefix(root)).sorted
+    LayoutStore.files(spark, dir).map(_.getPath.toString.stripPrefix(root)).sorted
   }
 
   test("(a) ensure runs its build once across two calls") {

@@ -190,7 +190,6 @@ class TextFunctionsSpec extends SparkTestBase {
   test("tx4 WinnowMinima is bit-identical to the nested-HOF reference") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{call_function, col, lit, lower}
-    graft.functions.VectorFunctions.register(spark)
     // edge shapes: empty, shorter than k, between k and k+w, long, repeats
     val fixture = Seq(
       (1L, ""), (2L, "abc"), (3L, "abcdefgh"), (4L, "abcdefghij"),
@@ -792,7 +791,6 @@ class TextFunctionsSpec extends SparkTestBase {
   test("graft_charhist39 ≡ the 39 translate length-diffs it replaced (round 16, dd12's prefilter)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val alphabet = "abcdefghijklmnopqrstuvwxyz0123456789 .,"
     val fixtures = Seq(
       "",                                       // empty
