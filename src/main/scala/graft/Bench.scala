@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `rows <sfDir> [<query>...]`: every query's row count, or the
   *    named queries' rows.
   *  - `plan <sfDir> <outDir> <query>...`: each named query's formatted
-  *    physical plan after execution (the final adaptive plan) written
-  *    to `<outDir>/<query>.txt`. */
+  *    physical plan after execution (the final adaptive plan),
+  *    normalized by [[normalizePlan]], written to `<outDir>/<query>.txt`. */
 object Bench {
   /** Full-result sink (round 15 — VERDICT r14 #1). `count()` let
     * Catalyst prune any work whose result doesn't affect the row
@@ -167,7 +167,16 @@ object Bench {
       }
     }
 
-  private def plan(spark: SparkSession, sfDir: String, outDir: String,
+  /** A formatted plan without what differs between two builds of the
+    * same plan (expression ids, plan ids, RDD ids, `at <File>.scala:<line>`
+    * call sites), so dumps from two commits can be diffed. */
+  private[graft] def normalizePlan(text: String): String =
+    text.replaceAll("#\\d+", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+      .replaceAll(" at [\\w$.]+\\.scala:\\d+", "")
+
+  private[graft] def plan(spark: SparkSession, sfDir: String, outDir: String,
       names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
@@ -175,7 +184,7 @@ object Bench {
         try {
           val df = SparkEntry.queries(name)(spark, sfDir)
           val n = df.collect().length
-          s"rows=$n\n" + df.queryExecution.explainString(FormattedMode)
+          s"rows=$n\n" + normalizePlan(df.queryExecution.explainString(FormattedMode))
         } catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       val path = java.nio.file.Paths.get(outDir, s"$name.txt")
       java.nio.file.Files.write(path, text.getBytes("UTF-8"))

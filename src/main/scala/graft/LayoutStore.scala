@@ -57,6 +57,15 @@ object LayoutStore {
     walk(p)
   }
 
+  /** Bytes of the files `pattern` matches, a matched directory's at any
+    * depth: one `globStatus`, plus a walk per matched directory. */
+  def globBytes(spark: SparkSession, pattern: String): Long = {
+    val p = new Path(pattern)
+    Option(fsOf(spark, p).globStatus(p)).toSeq.flatten.map(s =>
+      if (s.isDirectory) files(spark, s.getPath.toString).map(_.getLen).sum
+      else s.getLen).sum
+  }
+
   /** Size and mtime of a layout source through its file system; (0, 0)
     * when missing. */
   private[graft] def sourceStat(spark: SparkSession, path: String): (Long, Long) = {
@@ -216,7 +225,9 @@ object LayoutStore {
     * idle > 1 h, since a younger one may be an in-flight build or still
     * scanned by a query planned before the refresh. A layout whose
     * params embed a SECOND source's stamp (prgraph, ivmview) strands on
-    * that source's refresh until its primary refreshes too. `conf`
+    * that source's refresh until its primary refreshes too. Scratch
+    * dirs left by code older than [[scratchDir]] (`graft_stream_sink`,
+    * `graft_st13`, `graft_st18` + digits) go after the same grace. `conf`
     * resolves `rootDir` (default: no session). Returns the deleted
     * paths, spelled under `rootDir`. */
   def vacuum(rootDir: String = root, conf: Configuration = new Configuration()): Seq[String] = {
@@ -228,6 +239,11 @@ object LayoutStore {
     val graceCutoff = System.currentTimeMillis - 3600L * 1000
     val staleBuilds = dirs.filter(s =>
       s.getPath.getName.matches("^graft_.*\\.build-[0-9a-f]{8}$") &&
+        s.getModificationTime < graceCutoff)
+    // per-run scratch dirs named by code older than [[scratchDir]]
+    // (java.io temp-dir names: prefix + digits)
+    val legacyScratch = dirs.filter(s =>
+      s.getPath.getName.matches("^graft_(stream_sink|st13|st18)[0-9]+$") &&
         s.getModificationTime < graceCutoff)
     val keyed = dirs.flatMap { s =>
       s.getPath.getName match {
@@ -241,7 +257,7 @@ object LayoutStore {
       gens.filterNot(_._1 == keep._1).map(_._1)
         .filter(_.getModificationTime < graceCutoff)
     }
-    (staleBuilds ++ superseded).map { s =>
+    (staleBuilds ++ legacyScratch ++ superseded).map { s =>
       val path = new Path(r, s.getPath.getName).toString
       System.err.println(s"[graft] layout vacuum: deleting superseded layout $path")
       fs.delete(s.getPath, true)

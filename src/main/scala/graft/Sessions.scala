@@ -77,6 +77,17 @@ object Sessions {
     spark
   }
 
+  /** Partitions for `bytes` of input: one per
+    * `advisoryPartitionSizeInBytes` (64m in [[confs]]), clamped to
+    * [1, defaultParallelism]. One partition at sf0.01, every core at
+    * 100 TB, with no knob of its own. */
+  def widthFor(spark: SparkSession, bytes: Long): Int = {
+    val adv = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")).max(1L)
+    math.min(spark.sparkContext.defaultParallelism.toLong, (bytes + adv - 1) / adv)
+      .max(1L).toInt
+  }
+
   private def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
     case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
       sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))

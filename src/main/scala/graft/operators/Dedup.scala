@@ -1724,24 +1724,25 @@ object Dedup {
     // erases the round savings. One hop per round, one barrier, one
     // fan-out of checkpointed rows is the measured optimum.
     //
-    // The loop's shuffles are RIGHT-SIZED instead (round 12): labels
-    // span only the non-singleton docs (thousands of rows at sf0.1),
-    // so each round's 4–5 stages at the session's fact-scale partition
-    // count is per-task scheduling floor, not work — the streaming
-    // entries' state-partition lesson applied to iteration. The pairs
-    // plan above materialized at full width BEFORE this override; the
-    // corpus-scale singleton re-attach below runs AFTER it restores.
-    val spark = docs.sparkSession
-    val skey = "spark.sql.shuffle.partitions"
-    val sprior = spark.conf.get(skey)
-    spark.conf.set(skey, "8")
-    try while (changed > 0) {
+    // The loop's shuffles are RIGHT-SIZED instead: labels span only the
+    // non-singleton docs (thousands of rows at sf0.1), so each round's
+    // stages at the session's fact-scale partition count would be
+    // per-task scheduling floor, not work. Every shuffle in a round is
+    // an explicit repartition(n, key) on both sides of each join (so no
+    // planner-inserted shuffle falls back to the session's width), with
+    // n sized from the label count (two longs a label). The pairs plan
+    // above and the corpus-scale singleton re-attach below run at the
+    // session's width.
+    val n = graft.Sessions.widthFor(docs.sparkSession, labels.count() * 16L)
+    while (changed > 0) {
       if (it >= maxIters)
         throw new IllegalStateException(s"dupGroups did not converge in $maxIters rounds")
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("comp")), "dst")
+      val byDoc = labels.repartition(n, col("doc_id"))
+      val nbrMin = edges.repartition(n, col("dst"))
+        .join(byDoc.select(col("doc_id").as("dst"), col("comp")), "dst")
+        .repartition(n, col("src"))
         .groupBy(col("src").as("doc_id")).agg(min(col("comp")).as("nbr_comp"))
-      val relaxed = labels.join(nbrMin, Seq("doc_id"), "left")
+      val relaxed = byDoc.join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("comp").as("old"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
       // pointer jumping (path halving): comp ← comp(comp). Labels are
@@ -1752,13 +1753,14 @@ object Dedup {
       // `old` rides along into the checkpoint so the convergence count
       // is a local scan of checkpointed rows, not another shuffle join
       val next = snap(relaxed.withColumnRenamed("comp", "c1")
+        .repartition(n, col("c1"))
         .join(parentComp, col("c1") === col("p_id"), "left")
         .select(col("doc_id"), col("old"),
           least(col("c1"), coalesce(col("p_comp"), col("c1"))).as("comp")))
       changed = next.filter(col("comp") =!= col("old")).count()
       labels = next.select(col("doc_id"), col("comp"))
       it += 1
-    } finally spark.conf.set(skey, sprior)
+    }
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("group_id"))

@@ -2,7 +2,8 @@ package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** The one `org.apache.spark`-package bridge this repo allows itself:
+/** One of the repo's two `org.apache.spark`-package bridges (the other
+  * is `org.apache.spark.sql.graftbridge.StreamSessions`):
   * task-metric listener events post ASYNCHRONOUSLY on the listener
   * bus, so a per-query CPU-time accounting (graft.Bench's
   * host-window-immune metric — round 12, VERDICT r11 #1) must drain

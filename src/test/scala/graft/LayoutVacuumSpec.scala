@@ -91,6 +91,18 @@ class LayoutVacuumSpec extends AnyFunSuite with TempDirs {
     assert(!stale.exists() && young.exists())
   }
 
+  test("vacuum reclaims idle scratch dirs named by code older than scratchDir, spares young ones") {
+    val root = tempDir("graft-vacuum-s")
+    val prefixes = Seq("graft_stream_sink", "graft_st13", "graft_st18")
+    val old = prefixes.map(p => age(mkLayout(root, s"${p}1234567890123456789")))
+    val young = prefixes.map(p => mkLayout(root, s"${p}9876543210987654321"))
+    // a current-style scratch dir (prefix-<uuid>) is not this rule's
+    val current = age(mkLayout(root, "graft_st13-0f8fad5b-d9cb-469f-a165-70867728950e"))
+    assert(LayoutStore.vacuum(root).toSet === old.map(_.getPath).toSet)
+    assert(old.forall(!_.exists()))
+    assert(young.forall(_.exists()) && current.exists())
+  }
+
   test("vacuum is idempotent and safe on an empty / absent directory") {
     val root = tempDir("graft-vacuum-e")
     assert(LayoutStore.vacuum(root).isEmpty)

@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types.DecimalType
 
 import graft.queries.StreamQueries
@@ -15,6 +19,30 @@ class StreamQueriesSpec extends SparkTestBase {
 
   private def dsum(c: org.apache.spark.sql.Column) =
     sum(c.cast("double").cast(DecimalType(18, 6))).cast("double")
+
+  /** `body`'s result and the progress of every micro-batch the streams
+    * it ran reported to the shared session's listeners. */
+  private def progressOf[T](body: => T): (T, Seq[StreamingQueryProgress]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
+    val l = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = { seen.add(e.progress); () }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    try {
+      val out = body
+      ListenerDrain.waitUntilEmpty(spark.sparkContext)
+      (out, seen.asScala.toSeq)
+    } finally spark.streams.removeListener(l)
+  }
+
+  /** Whether every state operator of every batch in `ps` committed
+    * through the RocksDB store (its `rocksdbCommit*` metrics). */
+  private def ranOnRocksDb(ps: Seq[StreamingQueryProgress]): Boolean =
+    ps.flatMap(_.stateOperators).forall(
+      _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdbCommit")))
 
   test("st1 streaming windowed counts ≡ the same aggregation run as one batch") {
     val streamed = StreamQueries.st1(spark, Sf0001).collect().toSeq
@@ -109,7 +137,9 @@ class StreamQueriesSpec extends SparkTestBase {
   }
 
   test("st7 streaming dedup-within-watermark ≡ batch exact DISTINCT") {
-    val streamed = StreamQueries.st7(spark, Sf0001).collect().toSeq
+    val (streamed, progress) = progressOf(StreamQueries.st7(spark, Sf0001).collect().toSeq)
+    // one data batch and no trailing no-data batch: dedup only evicts
+    assert(progress.map(_.batchId) === Seq(0L))
     val batch = Tables.events(spark, Sf0001)
       .select(col("user_id"), col("event_type"),
         date_trunc("hour", timestamp_micros(expr("ts div 1000")))
@@ -120,6 +150,42 @@ class StreamQueriesSpec extends SparkTestBase {
     assert(streamed === batch)
     // the dedup actually dropped rows (events per key-hour > 1 somewhere)
     assert(streamed.size < Tables.events(spark, Sf0001).count())
+  }
+
+  test("a running stream leaves the shared session's settings alone for concurrent planners") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // a batch aggregate's planned shuffle widths and the setting, as a
+    // planner on another thread sees them (PipelineQueries.buildVariants)
+    def plannedOnAnotherThread(): (Seq[Int], String) = Await.result(Future {
+      val plan = Tables.events(spark, Sf0001).groupBy(col("event_type")).count()
+        .queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+      (plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions },
+        spark.conf.get(key))
+    }, Duration.Inf)
+    // planned from the stream's own start event: the stream's execution
+    // thread waits for its listeners, so the stream is running then
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[Int], String)]
+    val l = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = { seen.add(plannedOnAnotherThread()); () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    try assert(StreamQueries.st1(spark, Sf0001).collect().nonEmpty)
+    finally spark.streams.removeListener(l)
+    assert(seen.asScala.toSeq === Seq((Seq(before.toInt), before)),
+      s"planners saw ${seen.asScala} while the stream ran; session width $before")
+    assert(spark.conf.get(key) === before)
   }
 
   test("st8 custom-state totals ≡ batch groupBy (exact integer arithmetic)") {
@@ -318,15 +384,22 @@ class StreamQueriesSpec extends SparkTestBase {
       StreamQueries.st12(spark, Sf0001).collect().toSeq,
       StreamQueries.st14(spark, Sf0001).collect().toSeq,
       StreamQueries.st16(spark, Sf0001).collect().toSeq)
-    val base = runAll()
+    val (base, baseProgress) = progressOf(runAll())
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val rocks = runAll()
+      val (rocks, rocksProgress) = progressOf(runAll())
       base.zip(rocks).zipWithIndex.foreach { case ((b, r), i) =>
         assert(r === b, s"query ${names(i)} diverges under RocksDB")
       }
       assert(base.forall(_.nonEmpty))
+      // each stream ran on the provider the caller set, not only gave
+      // equal rows: every one reported state, all of it RocksDB's
+      for (ps <- Seq(baseProgress, rocksProgress))
+        assert(ps.filter(_.stateOperators.nonEmpty).map(_.runId).distinct.size === names.size)
+      assert(ranOnRocksDb(rocksProgress), "a stream ignored the session's state-store provider")
+      assert(!baseProgress.flatMap(_.stateOperators).exists(
+        _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdbCommit"))))
     } finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
@@ -344,9 +417,13 @@ class StreamQueriesSpec extends SparkTestBase {
     // st12_file_sink extras run this exact path for the x1→x30 curve.
     val mem11 = StreamQueries.st11(spark, Sf0001).collect().toSeq
     val mem12 = StreamQueries.st12(spark, Sf0001).collect().toSeq
-    assert(StreamQueries.st11FileSink(spark, Sf0001).collect().toSeq === mem11)
-    assert(StreamQueries.st12FileSink(spark, Sf0001).collect().toSeq === mem12)
+    val (file11, p11) = progressOf(StreamQueries.st11FileSink(spark, Sf0001).collect().toSeq)
+    val (file12, p12) = progressOf(StreamQueries.st12FileSink(spark, Sf0001).collect().toSeq)
+    assert(file11 === mem11)
+    assert(file12 === mem12)
     assert(mem11.nonEmpty && mem12.nonEmpty)
+    assert(p11.exists(_.stateOperators.nonEmpty) && p12.exists(_.stateOperators.nonEmpty))
+    assert(ranOnRocksDb(p11 ++ p12), "a file-sink stream did not run on RocksDB")
   }
 
   test("st14 = q82's z-scores restricted to watermark-closed days") {
