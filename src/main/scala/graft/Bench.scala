@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -6,7 +7,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - no argument, or `board`: the benchmark board — every registry
   *    query timed on `SPARK_GRAFT_SF_DIR` (default sf0.1); one compact
   *    JSON line on stdout, the per-query map in `BENCH_LAST.json`.
-  *  - `one <sfDir> <query>...`: the named queries timed like the board.
+  *  - `one <sfDir> <query>...`: the named queries timed like the board,
+  *    with the classes each rep compiled (0 once the code cache holds
+  *    the query's generated code).
   *  - `rows <sfDir> [<query>...]`: every query's row count, or the
   *    named queries' rows.
   *  - `plan <sfDir> <outDir> <query>...`: each named query's formatted
@@ -58,13 +61,21 @@ object Bench {
     try cmd(spark) finally spark.stop()
   }
 
-  /** Min-wall of [[Reps]] sink runs of `name`, each on cleared caches:
-    * (wall s, executor cpu s of that same run, every run succeeded). */
+  /** One sink run: wall s, executor cpu s, success, and the classes
+    * whole-stage and expression codegen compiled during it. */
+  private final case class Sample(wall: Double, cpu: Double, ok: Boolean, compiled: Long)
+
+  /** Generated classes compiled in this JVM so far; a code-cache hit
+    * compiles nothing. */
+  private def compiledNow(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** [[Reps]] sink runs of `name`, each on cleared caches. */
   private def timed(spark: SparkSession, cpuNow: () => Long, sfDir: String,
-      name: String): (Double, Double, Boolean) = {
-    val samples = (1 to Reps).map { _ =>
+      name: String): Seq[Sample] =
+    (1 to Reps).map { _ =>
       Sessions.clearCaches(spark)
       val c0 = cpuNow()
+      val k0 = compiledNow()
       val t0 = System.nanoTime()
       // A failed query must be loud: recording its ~70 ms of
       // throw-latency as a real time once hid a 15-query breakage for
@@ -74,13 +85,16 @@ object Bench {
                  System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
                  false
                }
-      ((System.nanoTime() - t0) / 1e9, (cpuNow() - c0) / 1e9, ok)
+      Sample((System.nanoTime() - t0) / 1e9, (cpuNow() - c0) / 1e9, ok, compiledNow() - k0)
     }
-    // the CPU figure reported is the min-wall rep's — the (wall, cpu)
-    // pair is one observation; pairing min wall with another rep's
-    // cpu would report a run that never happened
-    val best = samples.minBy(_._1)
-    (best._1, best._2, samples.forall(_._3))
+
+  /** The min-wall sample's wall and cpu, and whether every run
+    * succeeded. The CPU figure is the min-wall rep's — the (wall, cpu)
+    * pair is one observation; pairing min wall with another rep's cpu
+    * would report a run that never happened. */
+  private def best(samples: Seq[Sample]): (Double, Double, Boolean) = {
+    val b = samples.minBy(_.wall)
+    (b.wall, b.cpu, samples.forall(_.ok))
   }
 
   private def board(spark: SparkSession): Unit = {
@@ -107,13 +121,15 @@ object Bench {
     }
     val layoutSec = (System.nanoTime() - tL) / 1e9
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val (wall, cpu, ok) = timed(spark, cpuNow, sfDir, name)
-      (name, wall, cpu, ok)
+      val samples = timed(spark, cpuNow, sfDir, name)
+      val (wall, cpu, ok) = best(samples)
+      (name, wall, cpu, ok, samples.map(_.compiled).sum)
     }
-    val failed = results.collect { case (n, _, _, false) => n }
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
+    System.err.println(s"[bench] compiled=${results.map(_._5).sum} classes in the timed runs")
+    val failed = results.collect { case (n, _, _, false, _) => n }
+    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val cpuQs = results.map { case (k, _, c, _) => s"\"" + k + "\":" + c }
+    val cpuQs = results.map { case (k, _, c, _, _) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val cpuTotal = results.map(_._3).sum
@@ -144,7 +160,11 @@ object Bench {
       // code paths before the timed runs
       val n = try SparkEntry.queries(name)(spark, sfDir).count()
               catch { case _: Throwable => -1L }
-      val (wall, cpu, ok) = timed(spark, cpuNow, sfDir, name)
+      val samples = timed(spark, cpuNow, sfDir, name)
+      samples.zipWithIndex.foreach { case (r, i) =>
+        println(f"[one] $name rep=${i + 1} ${r.wall}%.2fs cpu=${r.cpu}%.2fs compiled=${r.compiled}")
+      }
+      val (wall, cpu, ok) = best(samples)
       println(f"[one] $name rows=$n $wall%.2fs cpu=$cpu%.2fs${if (ok) "" else " FAILED"}")
       ok
     }

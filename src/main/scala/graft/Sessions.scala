@@ -47,6 +47,23 @@ import org.apache.spark.sql.SparkSession
   * their parallelism explicitly with repartition(N, keys...) — AQE
   * never overrides a user-specified partition count — so size-based
   * coalescing cannot serialize them (Dedup.blockedMaskPairs).
+  *
+  * Generated code is compiled once per JVM, not once per query:
+  *  - `spark.sql.codegen.cache.maxEntries=4096`: a `graft.Bench` board
+  *    at sf0.01 (all 201 queries, every layout built cold) compiles 3283
+  *    distinct classes, about 2900 when the layouts exist. Spark's
+  *    default LRU holds 100, so a repeated query mix evicted and
+  *    recompiled (Janino) most of its classes on every pass; 4096 holds
+  *    the registry with about 25 % to spare. The price is Metaspace: the
+  *    cached classes stay loaded, about 8 KB each (234 MB after that
+  *    board with the layouts present, 212 MB with the default).
+  *  - `spark.sql.artifact.isolation.enabled=false`: the code cache is
+  *    keyed on the executor classloader as well as the source, and with
+  *    isolation on every new session (a stream's own session, Spark's
+  *    per-query clone of it) gets a loader of its own, so a stream re-run
+  *    recompiled every class. graft adds no session artifacts, so every
+  *    session shares the executor's default loader, and the executor no
+  *    longer keeps one isolated session state per stream run.
   */
 object Sessions {
   val confs: Seq[(String, String)] = Seq(
@@ -58,7 +75,11 @@ object Sessions {
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
     "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // the registry's generated classes all fit: no recompile on a re-run
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // every session shares one executor classloader, so one code cache
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** `b` with every entry of [[confs]] applied. */
   def perf(b: SparkSession.Builder): SparkSession.Builder =

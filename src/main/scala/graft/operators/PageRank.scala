@@ -31,22 +31,25 @@ object PageRank {
   private val Unit_e12 = 1000000000000L // total rank in picorank units
   private val Base_e12 = 150000000000L  // (1 − d) · 1e12 for d = 0.85
 
-  /** One synchronous round over `withDeg` = (node, outdeg, r). When
-    * `keepOld`, the pre-round rank rides along as `old` (dd6's trick:
-    * the convergence metric becomes a local scan of the round's own
-    * output, not another shuffle join). */
-  private[graft] def round(withDeg: DataFrame, edges: DataFrame, n: Long,
-      keepOld: Boolean = false): DataFrame = {
+  /** One synchronous round: every node of `ranked` = (node, outdeg, r)
+    * sends `r div outdeg` along `edges`, the messages are summed per
+    * destination and joined onto `nodes` = (node, outdeg, …), whose
+    * columns the output keeps beside the new `r`. `n` is the node count.
+    * [[ranks]] passes the degree table as `nodes`, so the previous rank
+    * frame is referenced once per round; the convergence loop passes
+    * its snapshot with the pre-round rank as `old` (dd6's trick: the
+    * convergence metric becomes a local scan of the round's own output,
+    * not another shuffle join). */
+  private[graft] def round(nodes: DataFrame, ranked: DataFrame, edges: DataFrame,
+      n: Column): DataFrame = {
     val contrib = edges
-      .join(withDeg.select(col("node").as("src"), col("outdeg"), col("r")), "src")
+      .join(ranked.select(col("node").as("src"), col("outdeg"), col("r")), "src")
       .groupBy(col("dst").as("node"))
       .agg(sum(expr("r div outdeg")).as("s"))
-    val base = if (keepOld) withDeg.select(col("node"), col("outdeg"), col("r").as("old"))
-               else withDeg.select(col("node"), col("outdeg"))
-    val out = base.join(contrib, Seq("node"), "left")
-    val newR = (lit(Base_e12 / n) + expr(s"(85 * coalesce(s, 0L)) div 100")).as("r")
-    if (keepOld) out.select(col("node"), col("outdeg"), col("old"), newR)
-    else out.select(col("node"), col("outdeg"), newR)
+    val newR = (call_function("div", lit(Base_e12), n) +
+      expr("(85 * coalesce(s, 0L)) div 100")).as("r")
+    nodes.join(contrib, Seq("node"), "left")
+      .select(nodes.columns.map(col).toSeq :+ newR: _*)
   }
 
   /** Ranks after `iters` rounds from a uniform start, over the
@@ -54,42 +57,19 @@ object PageRank {
     * sink nodes ranked should pre-symmetrize or add self-degree rows).
     * Returns (node, pr_e12: BIGINT picoranks, pagerank: DOUBLE).
     *
-    * UNROLLED plan — each round references the previous rank frame
-    * TWICE (message join + base), so the logical plan DOUBLES per
-    * round. Fine at the oracle-able 2–3 rounds; past ~10 rounds use
+    * One plan, built without a job: N is a scalar subquery over the
+    * degree table, and each round joins its messages onto the degree
+    * table rather than onto the previous rank frame, so the plan grows
+    * by one join and one aggregate per round, not by doubling. Fine
+    * at the oracle-able 2–3 rounds; for many rounds use
     * [[ranksConverged]], whose per-round lineage truncation keeps the
-    * plan constant-size (a 40-round unrolled plan is 2^40 nodes and
-    * hangs the optimizer). */
+    * plan constant-size. */
   def ranks(edges: DataFrame, iters: Int): DataFrame = {
-    // Snapshot the edge derivation once (round 15 optimization —
-    // guide §1.2/§5 localCheckpoint to cut lineage): each round
-    // references the edges AND the previous rank frame twice, so the
-    // unrolled plan re-executed the caller's whole edge-derivation
-    // subtree (q73: lineitem⋈orders → distinct → union, the dominant
-    // cost) once per reference — measured 23.7 s executor CPU for two
-    // rounds at sf0.1, 8.0 s after the snapshots. Values are
-    // unchanged: checkpointing only pins where recomputation stops.
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    // N is ONE bounded driver scalar (q64's runtime-literal pattern) —
-    // baked into the plan as a literal so each round stays one join +
-    // one aggregate, no scalar-subquery re-evaluation per row
-    val n = deg.count()
-    var r = deg.select(col("node"), col("outdeg"), lit(Unit_e12 / n).as("r"))
-    // Free each superseded round once the new one is materialized
-    // (ADVICE r15): without the unpersist, every round's snapshot
-    // stays pinned MEMORY_AND_DISK for the whole job. Bfs.hops's
-    // checkpointTracked pattern — the handle comes from the new
-    // frame's OWN LogicalRDD leaf, never a registry diff.
-    var rRdds: Seq[org.apache.spark.rdd.RDD[_]] = Seq.empty
-    for (_ <- 0 until iters) {
-      val out = round(r, e, n).localCheckpoint()
-      val outRdds = out.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      rRdds.foreach(_.unpersist(false))
-      r = out; rRdds = outRdds
-    }
+    val n = deg.agg(count(lit(1))).scalar()
+    val r0 = deg.select(col("node"), col("outdeg"), call_function("div", lit(Unit_e12), n).as("r"))
+    val r = (0 until iters).foldLeft(r0)((r, _) => round(deg, r, e, n))
     r.select(col("node"), col("r").as("pr_e12"),
       (col("r").cast("double") / 1e12).as("pagerank"))
   }
@@ -143,8 +123,8 @@ object PageRank {
     val tol = math.max(tolE12, (tolRel * (Unit_e12 / n)).toLong)
     var r = snap(deg.select(col("node"), col("outdeg"), lit(Unit_e12 / n).as("r")))
     // local-checkpoint mode only: free each superseded round once the
-    // next is materialized (ADVICE r15 — ranks()'s pattern). Reliable
-    // checkpoint() writes to the checkpoint dir, nothing to unpersist.
+    // next is materialized (ADVICE r15). Reliable checkpoint() writes
+    // to the checkpoint dir, nothing to unpersist.
     def snapRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
       if (checkpointDir.isDefined) Seq.empty
       else df.queryExecution.analyzed.collect {
@@ -157,7 +137,8 @@ object PageRank {
       if (it >= maxIters)
         throw new IllegalStateException(
           s"PageRank did not reach |Δr|∞ ≤ $tol in $maxIters rounds (last Δ=$delta)")
-      val next = snap(round(r, e, n, keepOld = true))
+      val withOld = r.select(col("node"), col("outdeg"), col("r").as("old"))
+      val next = snap(round(withOld, r, e, lit(n)))
       delta = next.agg(max(abs(col("r") - col("old")))).head().getLong(0)
       rRdds.foreach(_.unpersist(false))
       rRdds = snapRdds(next)

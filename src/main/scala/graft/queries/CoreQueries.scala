@@ -2165,7 +2165,7 @@ object CoreQueries {
     * Keyed on BOTH source tables (q84's two-table convention).
     * NO parallelism floor on the write (unlike copurchase/contain,
     * whose consumers fan out compute at scan width): every consumer
-    * here immediately localCheckpoints and shuffles, so extra input
+    * here immediately shuffles on the edge's source, so extra input
     * splits only buy per-map-task exchange overhead — measured
     * repartition(32) at write: 8.0 s executor CPU per q73 run vs
     * 1.3 s from the size-coalesced layout. */

@@ -82,7 +82,10 @@ object StreamQueries {
     * `s` itself is never written, so a planner on another thread keeps
     * its settings. The caller's streaming listeners get the stream's
     * events (a session's listeners see only the queries it started).
-    * foreachBatch bodies that read or write through `s` keep doing so. */
+    * foreachBatch bodies that read or write through `s` keep doing so.
+    * The streaming-listener buses the run leaves on the SparkContext are
+    * removed once it ends: the own session's (by the relay) and the
+    * listener-less one of Spark's per-query session clone. */
   private[graft] def runStream(s: SparkSession, df: DataFrame,
       settings: Seq[(String, String)] = Nil)(
       start: DataStreamWriter[Row] => StreamingQuery): SparkSession = {
@@ -94,12 +97,13 @@ object StreamQueries {
       ("spark.sql.shuffle.partitions" -> width.toString) +:
         (if (emitsOnEviction(plan)) settings
          else ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") +: settings))
+    val buses = StreamSessions.buses(s)
     val relay = new Relay(s)
     own.streams.addListener(relay)
     val q = try start(StreamSessions.rebind(own, df).writeStream)
       catch { case e: Throwable => StreamSessions.detachBus(s, relay); throw e }
-    q.awaitTermination()
-    q.stop()
+    try q.awaitTermination()
+    finally { q.stop(); StreamSessions.dropIdleBuses(s, buses) }
     own
   }
 
@@ -133,15 +137,19 @@ object StreamQueries {
     * return the committed rows as a DataFrame of `s`. The sink's rows
     * are collected from its `LocalTableScan` (no job) and its view is
     * dropped: the memory sink retains every committed row for as long
-    * as the view is registered. */
+    * as the view is registered. The rows come back in
+    * [[Sessions.widthFor]] of their bytes partitions (one at sf0.01),
+    * so an entry's presentation sort needs no range exchange. */
   private def runToTable(s: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
     val own = runStream(s, df)(_.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start())
     val sunk = own.table(name)
     val rows = sunk.collect()
+    val bytes = sunk.queryExecution.optimizedPlan.stats.sizeInBytes.min(Long.MaxValue).toLong
     own.catalog.dropTempView(name)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), sunk.schema)
+      .coalesce(Sessions.widthFor(s, bytes))
   }
 
   private def dsum(c: Column): Column =

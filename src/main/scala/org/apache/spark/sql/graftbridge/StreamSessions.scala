@@ -23,13 +23,24 @@ object StreamSessions {
   def rebind(s: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 
+  /** The streaming-listener buses on the SparkContext's listener bus.
+    * Every session whose `streams` is touched adds one there, and
+    * nothing else removes it. */
+  def buses(s: SparkSession): Seq[StreamingQueryListenerBus] =
+    s.sparkContext.listenerBus.findListenersByClass[StreamingQueryListenerBus]().toSeq
+
   /** Takes the streaming-listener bus that `listener` is registered on
-    * off the SparkContext's listener bus. Every session that starts a
-    * stream adds such a bus there, and nothing else removes it. */
-  def detachBus(s: SparkSession, listener: StreamingQueryListener): Unit = {
-    val bus = s.sparkContext.listenerBus
-    bus.findListenersByClass[StreamingQueryListenerBus]()
-      .filter(_.listeners.contains(listener))
-      .foreach(bus.removeListener)
-  }
+    * off the SparkContext's listener bus. */
+  def detachBus(s: SparkSession, listener: StreamingQueryListener): Unit =
+    buses(s).filter(_.listeners.contains(listener))
+      .foreach(s.sparkContext.listenerBus.removeListener)
+
+  /** Takes every streaming-listener bus that is not in `before` and has
+    * no listener off the SparkContext's listener bus: the one a stateful
+    * stream leaves through Spark's per-query clone of its session, whose
+    * `streams` is touched for the state-store coordinator. No event
+    * reaches anyone through such a bus. */
+  def dropIdleBuses(s: SparkSession, before: Seq[StreamingQueryListenerBus]): Unit =
+    buses(s).filter(b => b.listeners.isEmpty && !before.exists(_ eq b))
+      .foreach(s.sparkContext.listenerBus.removeListener)
 }

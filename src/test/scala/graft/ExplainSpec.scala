@@ -475,21 +475,19 @@ class ExplainSpec extends SparkTestBase {
   }
 
   test("q73 pagerank: per-round message aggregation partial-combines; equi-joins only") {
-    // Round 15: ranks() truncates lineage per round (localCheckpoint —
-    // the unrolled plan re-executed the edge derivation once per
-    // reference), so the registry plan shows only the final projection
-    // over the last snapshot. Pin the ROUND plan directly — it is the
-    // shape that repeats at scale.
+    // Pin the ROUND plan directly — it is the shape that repeats at
+    // scale, once per round of the registry plan.
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val withDeg = Seq((1L, 1L, 100L), (2L, 1L, 100L), (3L, 1L, 100L))
       .toDF("node", "outdeg", "r")
-    val p = plan(graft.operators.PageRank.round(withDeg, e, 3L))
+    val p = plan(graft.operators.PageRank.round(
+      withDeg.select(col("node"), col("outdeg")), withDeg, e, org.apache.spark.sql.functions.lit(3L)))
     assert(p.contains("partial"), s"contribution sums must map-side combine:\n${p.take(3000)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"rank propagation degenerated to a product join:\n${p.take(3000)}")
-    // and the registry query still ends in the presentation sort over
-    // the snapshot (values bit-identical — PageRankSpec pins ranks ≡
+    // and the registry query still ends in the presentation sort
+    // (values bit-identical — PageRankSpec pins ranks ≡
     // the convergence loop at the same round count)
     val pq = plan(CoreQueries.q73PageRank(spark, Sf0001))
     assert(pq.contains("Sort"), pq.take(1000))
