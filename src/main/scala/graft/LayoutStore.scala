@@ -265,13 +265,3 @@ object LayoutStore {
     }
   }
 }
-
-/** `runMain graft.LayoutVacuum [root]` — [[LayoutStore.vacuum]] under
-  * `root`, any Hadoop path (default `java.io.tmpdir`). Run after a
-  * source refresh. */
-object LayoutVacuum {
-  def main(args: Array[String]): Unit = {
-    val deleted = args.headOption.fold(LayoutStore.vacuum())(LayoutStore.vacuum(_))
-    println(s"[vacuum] ${deleted.size} superseded layout dir(s) removed")
-  }
-}

@@ -40,6 +40,14 @@ import graft.sources.Compact
   */
 object Maintenance {
 
+  /** Phase timer: every audit-log line carries its stage's wall
+    * seconds, so `graft.Bench delta`'s cycle-pricing table reads the split
+    * straight off the one real dispatch (never a re-implemented
+    * timing twin that could drift from the cycle it prices). */
+  private def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** One cycle over a materialized IVF index at `path`. When max
     * per-list drift exceeds `driftThreshold` (embedding-space units —
     * tune against ss14's recall curve for the corpus), the index is
@@ -47,14 +55,6 @@ object Maintenance {
     * `path` for subsequent probes (generation swap — the caller owns
     * the pointer, e.g. a layoutKey-versioned directory name).
     * Returns the audit log. */
-  /** Phase timer: every audit-log line carries its stage's wall
-    * seconds, so DeltaBench's cycle-pricing table reads the split
-    * straight off the one real dispatch (never a re-implemented
-    * timing twin that could drift from the cycle it prices). */
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def ivfCycle(spark: SparkSession, path: String, reclusterTo: String,
       driftThreshold: Double): Seq[(String, String)] = {
     val (compacted, tC) = timed(Compact.compactIndex(spark, s"$path/vectors"))
@@ -180,31 +180,5 @@ object Maintenance {
     val (n, tC) = timed(Seq("graph", "emb")
       .map(d => Compact.compactIndex(spark, s"$path/$d").size).sum)
     observe ++ merge ++ alert ++ Seq("compact" -> f"$n dir(s) rewritten ($tC%.2f s)")
-  }
-
-  /** `runMain graft.Maintenance ivf <path> <reclusterTo> [threshold]`,
-    * `... pq <path> <appendedParquet> [ratioThreshold]` (the appended
-    * batch's raw rows, as the ingest job staged them), or
-    * `... shingle <path>` — the scheduler entry point; prints the
-    * audit log, then vacuums superseded layout generations. */
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: Maintenance ivf <path> <reclusterTo> [threshold] " +
-      "| pq <path> <appendedParquet> [ratioThreshold] | shingle <path>")
-    val spark = Sessions.local()
-    val log = args(0) match {
-      case "ivf" =>
-        ivfCycle(spark, args(1), args(2),
-          args.lift(3).map(_.toDouble).getOrElse(0.05))
-      case "pq" =>
-        pqCycle(spark, args(1), Tables.parquet(spark, args(2)),
-          args.lift(3).map(_.toDouble).getOrElse(1.5))
-      case "shingle" => shingleCycle(spark, args(1))
-      case "span" => spanCycle(spark, args(1))
-      case "hnsw" => hnswCycle(spark, args(1))
-      case other => throw new IllegalArgumentException(s"unknown index kind $other")
-    }
-    log.foreach { case (step, msg) => println(s"[maintenance] $step: $msg") }
-    val swept = LayoutStore.vacuum(conf = spark.sparkContext.hadoopConfiguration)
-    println(s"[maintenance] vacuum: ${swept.size} superseded layout dir(s) removed")
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * linearity claims can be checked empirically (driver testdata stops
   * at sf0.1 and is read-only; these land under /tmp).
   *
-  * `runMain graft.ScaleGen <baseDir> <outRoot> [--perturb[=eps]] <r>
+  * `graft.Bench scalegen [--perturb[=eps]] <baseDir> <outRoot> <r>
   * [<r> ...]` writes `<outRoot>/x<r>/<table>.parquet` (`x<r>p` when
   * perturbed) = the base directory replicated r times with disjoint
   * key spaces:
@@ -177,23 +177,5 @@ object ScaleGen {
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }
     dir
-  }
-
-  def main(args: Array[String]): Unit = {
-    val (flags, positional) = args.partition(_.startsWith("--"))
-    val perturbEps = flags.collectFirst {
-      case f if f.startsWith("--perturb") =>
-        f.split("=", 2) match { case Array(_, e) => e.toDouble; case _ => 0.05 }
-    }.getOrElse(0.0)
-    val args2 = positional
-    val baseDir  = args2.headOption.getOrElse("/root/testdata/sf0.1")
-    val outRoot  = args2.drop(1).headOption.getOrElse("/tmp/graft_scale")
-    val replicas = { val r = args2.drop(2).map(_.toInt); if (r.isEmpty) Array(3, 10, 30) else r }
-    val spark = Sessions.local()
-    replicas.foreach { r =>
-      val dir = writeScaled(spark, baseDir, outRoot, r, perturbEps)
-      println(s"[scalegen] wrote $dir (base=$baseDir, replicas=$r, perturbEps=$perturbEps)")
-    }
-    spark.stop()
   }
 }

@@ -471,7 +471,7 @@ object TextFunctions {
   /** The train-side DISTINCT shingle set — [[contamination]]'s
     * corpus-static half (the split rule is deterministic), extracted
     * so the registry gate can materialize it write-once (round 14:
-    * ScaleBench's noop-sink sweep put the inline gate at ~10 s wall
+    * The `graft.Bench scale` noop-sink sweep put the inline gate at ~10 s wall
     * at sf0.1, ~95% of it the TRAIN side's extraction + distinct —
     * re-paid per query for a set that changes only on corpus
     * refresh; the count()-pruned registry metric had hidden it). */

@@ -1697,6 +1697,15 @@ object Dedup {
     checkpointDir.foreach(sc.setCheckpointDir)
     def snap(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
+    // local-checkpoint mode only: the snapshot's persisted RDDs, freed
+    // once nothing reads them (as PageRank.ranksConvergedWithRounds
+    // does). Reliable checkpoint() writes to the checkpoint dir,
+    // nothing to unpersist.
+    def snapRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+      if (checkpointDir.isDefined) Seq.empty
+      else df.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }
     // checkpoint the pair plan ONCE: the symmetric union would
     // otherwise evaluate the (expensive) candidate-join plan twice,
     // and every round would re-plan its whole lineage
@@ -1711,6 +1720,7 @@ object Dedup {
     // every non-singleton node; singletons re-attach after the loop.
     var labels = snap(edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("comp")))
+    var labelRdds = snapRdds(labels)
     var changed = 1L
     var it = 0
     // Round structure note (round 12 — VERDICT r11 #3 tried and
@@ -1758,9 +1768,13 @@ object Dedup {
         .select(col("doc_id"), col("old"),
           least(col("c1"), coalesce(col("p_comp"), col("c1"))).as("comp")))
       changed = next.filter(col("comp") =!= col("old")).count()
+      labelRdds.foreach(_.unpersist(false))
+      labelRdds = snapRdds(next)
       labels = next.select(col("doc_id"), col("comp"))
       it += 1
     }
+    snapRdds(p).foreach(_.unpersist(false))
+    edges.unpersist()
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("group_id"))

@@ -519,7 +519,7 @@ object Similarity {
     * to interpreted eval), and per-row work is O(nlist), which under
     * the adaptive nlist = n/512 rule turns every build's assignment
     * pass into O(n²/512) — dd17's measured superlinear trap wearing
-    * a new coat (LayoutBench curves it). */
+    * a new coat (`graft.Bench layouts` curves it). */
   private[graft] val ExprCellMax = 64
 
   /** Coarse grouping OVER the fine centroids: ncoarse = ⌈√nlist⌉

@@ -1824,7 +1824,7 @@ object CoreQueries {
     * any SF (fractional bounds off the table's own min/max).
     */
   /** q65's z-order layout, build-if-missing, path returned (split out
-    * round 14 so LayoutBench can delete-and-retime the build). */
+    * round 14 so `graft.Bench layouts` can delete-and-retime the build). */
   private[graft] def zorderLayoutPath(s: SparkSession, d: String): String = {
     import graft.sources.ZOrderLayout
     LayoutStore.cached(s, "graft_zorder", d, "lineitem", "", "lineitem")(tmp =>
@@ -2160,7 +2160,7 @@ object CoreQueries {
     * symmetrize) is corpus-static — the copurchase amortization
     * argument — so the join + distinct are paid once per corpus
     * version and every rank run (q73's 2 unrolled rounds, the
-    * convergence loop, ScaleBench's pr curves) starts from a parquet
+    * convergence loop, `graft.Bench scale`'s pr curves) starts from a parquet
     * scan (q73 measured 3.0 → 2.1 s wall / 3.3 → 1.3 s CPU at sf0.1).
     * Keyed on BOTH source tables (q84's two-table convention).
     * NO parallelism floor on the write (unlike copurchase/contain,
@@ -2189,7 +2189,7 @@ object CoreQueries {
   /** Iterate-to-convergence PageRank over q73's graph — the SURVEY §2
     * non-registry component behind q73's fixed-round oracle row (round
     * count is data-dependent, so no SQL oracle; PageRankSpec gates it,
-    * ScaleBench curves it as `pr_loop`). Tolerance is RELATIVE (no
+    * `graft.Bench scale` curves it as `pr_loop`). Tolerance is RELATIVE (no
     * node moves > 0.1% of the uniform share per round), so the round
     * count stays ~flat across SF dirs — the scale-free stopping rule. */
   def pagerankLoop(s: SparkSession, d: String): DataFrame =

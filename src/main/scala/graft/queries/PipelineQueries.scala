@@ -129,7 +129,7 @@ object PipelineQueries {
     Dedup.dupGroupsReadIndex(s, groupsIndexPath(s, d, variant, docs))
 
   /** The dup-groups index's build-if-missing PATH (split out round 14
-    * so LayoutBench can delete-and-retime the build — VERDICT r13 #6). */
+    * so `graft.Bench layouts` can delete-and-retime the build — VERDICT r13 #6). */
   private[graft] def groupsIndexPath(s: SparkSession, d: String, variant: String,
       docs: => DataFrame): String =
     LayoutStore.cached(s, "graft_dupidx", d, "documents",
@@ -231,7 +231,7 @@ object PipelineQueries {
   /** The nightly-ingest split rule — a deterministic ~1/16 of doc_ids
     * (md5 first hex digit '0') plays the incoming delta batch, the
     * rest the standing corpus (q32's reproducibility trick). ONE
-    * definition shared by dd9, dd10 and prebuildLayouts: the cache key
+    * definition shared by dd9, dd10 and the dupidx_nondelta layout: the cache key
     * of the 'nondelta' dup-groups index does not encode this predicate,
     * so a drift between the sites would silently dedup against the
     * wrong standing corpus. */
@@ -762,53 +762,46 @@ object PipelineQueries {
     }
   }
 
-  /** Force-build every write-once derived layout/index for `d`, so a
-    * benchmark can report amortized infrastructure cost separately
-    * from probe cost: a cold single-pass bench otherwise folds ~14 s
-    * of index building into whichever query happens to run first and
-    * misreads it as that query's cost. Idempotent — every build is
-    * keyed on source parquet size/mtime and skipped when present.
-    * Covers: dup-groups CC index (dd7 full + dd10 non-delta), the
-    * three ANN indexes (ss3/ss5/ss7/ss8), the CSV/JSON/Avro
-    * round-trip copies (q23/q26/q53), and q65's z-order layout. */
-  def prebuildLayouts(s: SparkSession, d: String): Unit = {
-    // Per-family wall timing to stderr (round 15, optimization: the
-    // layout phase was an opaque 349 s line — now each family's
-    // build-or-probe cost is attributable).
-    def t(name: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime()
-      f
-      System.err.println(f"[layout] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    val docs = Tables.documents(s, d)
-    t("dupidx_full")(cachedGroupsIndex(s, d, "full", docs).count())
-    t("dupidx_nondelta")(
-      cachedGroupsIndex(s, d, "nondelta", docs.filter(!isDeltaDoc)).count())
-    t("shidx")(cachedShingleIndex(s, d))
-    t("shidx_nd")(cachedShingleIndexNondelta(s, d))
-    t("contain")(cachedContainIndex(s, d))
-    t("spanidx")(cachedSpanIndex(s, d))
-    t("cdcidx")(cachedCdcIndex(s, d))
-    t("blidx")(cachedBoilerIndex(s, d, 3))
-    t("simidx")(cachedSimhashIndex(s, d))
-    t("phidx")(cachedPhashIndex(s, d))
-    t("ctidx_ascii")(cachedContamIndex(s, d, "ascii", TextFunctions.tokensExpr))
-    t("ctidx_uni")(cachedContamIndex(s, d, "uni", TextFunctions.unicodeTokensExpr))
-    Seq("ivf", "pq", "ivfpq", "lsh", "ivf_delta", "ivf_recluster", "pq_delta",
-      "ivf_base", "hnsw").foreach(v => t(s"ann_$v")(cachedAnnIndex(s, d, v)))
-    t("csv")(graft.sources.CsvIngest.customerCsv(s, d).count())
-    t("json")(graft.sources.CsvIngest.documentsJson(s, d).count())
-    t("avro")(graft.sources.AvroIngest.supplierAvro(s, d).count())
-    t("zorder")(graft.queries.CoreQueries.q65ZorderBox(s, d).count())
-    t("zorder3")(graft.queries.CoreQueries.q100Zorder3Box(s, d).count())
-    t("copurchase")(graft.queries.CoreQueries.copurchaseEdges(s, d).count())
-    t("prgraph")(graft.queries.CoreQueries.q73GraphLayout(s, d))
-    t("ivmview")(graft.queries.CoreQueries.q84StandingViewPath(s, d))
-    t("orc")(graft.sources.OrcIngest.ordersOrc(s, d).count())
-    // q95's bucketed copies: files are write-once; warm JVMs pay only
-    // the metadata-only re-register inside bucketedTable
-    t("bucketed")(graft.queries.SqlQueries.q95BucketedJoin(s, d).count())
-    ()
+  /** Every write-once derived layout family, in build order (contain
+    * reads the shingle index, so shidx precedes it), each with the
+    * build-if-missing call that publishes it, returning the published
+    * path. Names follow perfbench's `layout.build_s.<family>`. The
+    * board builds them all before timing queries, so one-off build
+    * cost is reported apart from probe cost; `graft.Bench layouts`
+    * deletes and retimes the ones it is given. Each build is keyed on
+    * its source's size and mtime, so a present layout is skipped. */
+  val layouts: Seq[(String, (SparkSession, String) => String)] = {
+    import graft.queries.{CoreQueries => CQ}
+    import graft.sources.{AvroIngest, CsvIngest, OrcIngest}
+    def ann(v: String): (String, (SparkSession, String) => String) =
+      s"ann_$v" -> ((s, d) => cachedAnnIndex(s, d, v))
+    Seq[(String, (SparkSession, String) => String)](
+      "dupidx_full" -> ((s, d) => groupsIndexPath(s, d, "full", Tables.documents(s, d))),
+      "dupidx_nondelta" -> ((s, d) =>
+        groupsIndexPath(s, d, "nondelta", Tables.documents(s, d).filter(!isDeltaDoc))),
+      "shidx" -> cachedShingleIndex _,
+      "shidx_nd" -> cachedShingleIndexNondelta _,
+      "contain" -> cachedContainIndex _,
+      "spanidx" -> cachedSpanIndex _,
+      "cdcidx" -> cachedCdcIndex _,
+      "blidx" -> ((s, d) => cachedBoilerIndex(s, d, 3)),
+      "simidx" -> cachedSimhashIndex _,
+      "phidx" -> cachedPhashIndex _,
+      "ctidx_ascii" -> ((s, d) => cachedContamIndex(s, d, "ascii", TextFunctions.tokensExpr)),
+      "ctidx_uni" -> ((s, d) => cachedContamIndex(s, d, "uni", TextFunctions.unicodeTokensExpr))) ++
+      Seq("ivf", "pq", "ivfpq", "lsh", "ivf_delta", "ivf_recluster", "pq_delta",
+        "ivf_base", "hnsw").map(ann) ++
+      Seq[(String, (SparkSession, String) => String)](
+        "csv" -> CsvIngest.customerCsvPath _,
+        "json" -> CsvIngest.documentsJsonPath _,
+        "avro" -> AvroIngest.supplierAvroPath _,
+        "zorder" -> CQ.zorderLayoutPath _,
+        "zorder3" -> CQ.zorder3LayoutPath _,
+        "copurchase" -> CQ.copurchaseLayout _,
+        "prgraph" -> CQ.q73GraphLayout _,
+        "ivmview" -> CQ.q84StandingViewPath _,
+        "orc" -> OrcIngest.ordersOrcPath _,
+        "bucketed" -> SqlQueries.q95BucketedLayoutPath _)
   }
 
   def ss3(s: SparkSession, d: String): DataFrame = {

@@ -290,17 +290,28 @@ object SqlQueries {
     * integral-valued quantity sum. */
   def q95BucketedJoin(s: SparkSession, d: String): DataFrame = {
     import graft.sources.BucketedTables
-    val li = BucketedTables.bucketedTable(s, d, "lineitem", "l_orderkey",
-      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"),
-        col("l_extendedprice")))
-    val ord = BucketedTables.bucketedTable(s, d, "orders", "o_orderkey",
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority")))
+    val li = BucketedTables.bucketedTable(s, d, "lineitem", "l_orderkey", q95Lineitem(s, d))
+    val ord = BucketedTables.bucketedTable(s, d, "orders", "o_orderkey", q95Orders(s, d))
     li.hint("merge").join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"),
         sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double").as("sum_qty"),
         sum(expr("cast(round(l_extendedprice * 100) as long)")).as("revenue_cents"))
       .orderBy(col("o_orderpriority"))
+  }
+
+  private def q95Lineitem(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
+
+  private def q95Orders(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
+
+  /** q95's two bucketed copies, build-if-missing; the lineitem copy's
+    * path returned. */
+  private[graft] def q95BucketedLayoutPath(s: SparkSession, d: String): String = {
+    import graft.sources.BucketedTables
+    BucketedTables.bucketedPath(s, d, "orders", "o_orderkey", q95Orders(s, d))
+    BucketedTables.bucketedPath(s, d, "lineitem", "l_orderkey", q95Lineitem(s, d))
   }
 
   val q95Sql: String =

@@ -740,7 +740,7 @@ object StreamQueries {
 
   /** st11/st12 in the production sink shape (parquet sink + RocksDB
     * state) — spec-pinned ≡ the memory-sink registry outputs, and the
-    * entry ScaleBench runs for the x1→x30 curve so the scale evidence
+    * entry `graft.Bench scale` runs for the x1→x30 curve so the scale evidence
     * measures the real sink, not the driver-resident memory sink
     * (VERDICT r7's st12 watch-item). */
   def st11FileSink(s: SparkSession, d: String): DataFrame =

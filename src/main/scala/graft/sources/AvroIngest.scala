@@ -113,9 +113,11 @@ object AvroIngest {
     * back), materialized once per SF directory. Longs/doubles/strings
     * round-trip bit-exactly through Avro's binary encoding, so the
     * DuckDB oracle over the parquet original must hash-match. */
-  def supplierAvro(spark: SparkSession, dir: String): DataFrame = {
-    val out = LayoutStore.cached(spark, "graft_avro", dir, "supplier", "", "supplier")(tmp =>
+  def supplierAvro(spark: SparkSession, dir: String): DataFrame =
+    avro(spark, supplierAvroPath(spark, dir), supplierSchema)
+
+  /** The supplier table's Avro copy, build-if-missing, path returned. */
+  private[graft] def supplierAvroPath(spark: SparkSession, dir: String): String =
+    LayoutStore.cached(spark, "graft_avro", dir, "supplier", "", "supplier")(tmp =>
       writeAvro(Tables.supplier(spark, dir), tmp))
-    avro(spark, out, supplierSchema)
-  }
 }

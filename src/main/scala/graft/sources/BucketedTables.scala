@@ -84,28 +84,9 @@ object BucketedTables {
   def bucketedTable(spark: org.apache.spark.sql.SparkSession, dir: String,
       tableName: String, bucketCol: String, df: => DataFrame,
       nBuckets: Int = 8): DataFrame = {
-    // the sanitized key is the table name too (BucketedJoinSpec pins it)
-    val key = graft.LayoutStore.layoutKey(spark, dir, tableName, s"bk$nBuckets")
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val name = s"graft_bk_${tableName}_$key"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_bk_${tableName}_$key"
+    val name = layoutName(spark, dir, tableName, nBuckets)
     if (!spark.catalog.tableExists(name)) {
-      // Bucket FILES go through the layout store like every other
-      // write-once layout (ADVICE r8): saveAsTable straight into the
-      // final path let two concurrent sessions interleave
-      // overwrite-deletes and task files, and a reader could observe
-      // a mixed/partial directory. The build writes under a
-      // session-unique temp table + temp dir, drops the scaffold
-      // table (EXTERNAL — the files stay), and the atomic rename
-      // publishes a complete directory or nothing. Bucket ids ride
-      // the part-file NAMES, so the files survive both the table
-      // drop and the rename intact.
-      graft.LayoutStore.ensure(spark, path) { tmp =>
-        val scaffold = name + "_bld_" +
-          java.util.UUID.randomUUID().toString.take(8)
-        writeBucketed(df, scaffold, tmp, bucketCol, nBuckets, Seq(bucketCol))
-        spark.sql(s"DROP TABLE IF EXISTS $scaffold")
-      }
+      val path = bucketedPath(spark, dir, tableName, bucketCol, df, nBuckets)
       // registration is always the metadata-only DDL over the
       // published LOCATION — same statement cold and warm
       spark.sql(s"CREATE TABLE $name (${df.schema.toDDL}) USING parquet " +
@@ -113,5 +94,34 @@ object BucketedTables {
         s"LOCATION '$path'")
     }
     spark.table(name)
+  }
+
+  /** [[bucketedTable]]'s bucket files, build-if-missing, without the
+    * catalog registration; the published path returned. The files go
+    * through the layout store like every other write-once layout
+    * (ADVICE r8): saveAsTable straight into the final path let two
+    * concurrent sessions interleave overwrite-deletes and task files,
+    * and a reader could observe a mixed/partial directory. The build
+    * writes under a session-unique temp table + temp dir, drops the
+    * scaffold table (EXTERNAL — the files stay), and the atomic rename
+    * publishes a complete directory or nothing. Bucket ids ride the
+    * part-file NAMES, so the files survive both the table drop and the
+    * rename intact. */
+  private[graft] def bucketedPath(spark: org.apache.spark.sql.SparkSession, dir: String,
+      tableName: String, bucketCol: String, df: => DataFrame, nBuckets: Int = 8): String = {
+    val name = layoutName(spark, dir, tableName, nBuckets)
+    graft.LayoutStore.ensure(spark, s"${System.getProperty("java.io.tmpdir")}/$name") { tmp =>
+      val scaffold = name + "_bld_" + java.util.UUID.randomUUID().toString.take(8)
+      writeBucketed(df, scaffold, tmp, bucketCol, nBuckets, Seq(bucketCol))
+      spark.sql(s"DROP TABLE IF EXISTS $scaffold")
+    }
+  }
+
+  // the sanitized key is the table name too (BucketedJoinSpec pins it)
+  private def layoutName(spark: org.apache.spark.sql.SparkSession, dir: String,
+      tableName: String, nBuckets: Int): String = {
+    val key = graft.LayoutStore.layoutKey(spark, dir, tableName, s"bk$nBuckets")
+      .replaceAll("[^A-Za-z0-9_]", "_")
+    s"graft_bk_${tableName}_$key"
   }
 }

@@ -59,7 +59,7 @@ object Compact {
     * at) and without breaking partition pruning — each `col=val`
     * partition directory is rewritten IN PLACE under its own name, so
     * a probe's planning-time PartitionFilters prune exactly as before.
-    * DeltaBench's own evidence motivates the pass: LSH append is
+    * `graft.Bench delta`'s own evidence motivates the pass: LSH append is
     * commit-bound (per-append cost is dominated by writing one file
     * into each of up to 2^bits×tables bucket dirs), so at a nightly
     * delta cadence the bucket dirs degrade to thousands of KB-scale
@@ -211,24 +211,5 @@ object Compact {
     if (files.length <= n) return None
     swap(fs, d, graft.Tables.parquet(spark, d.toString).repartition(n))
     Some((d.toString, files.length, n))
-  }
-}
-
-/** `runMain graft.sources.IndexCompact <dataDir> [targetBytes]` — the
-  * maintenance entry point for delta-appended index layouts: point it
-  * at an index's DATA directory (…/buckets, …/vectors, …/codes, …/sh,
-  * …/masks) after a run of appends. Prints one line per rewritten
-  * partition directory. Trained-state siblings are untouched because
-  * they are never named. */
-object IndexCompact {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: IndexCompact <dataDir> [targetBytes]")
-    val spark = graft.Sessions.local()
-    val target = args.lift(1).map(_.toLong).getOrElse(Compact.DefaultTargetBytes)
-    val done = Compact.compactIndex(spark, args(0), target)
-    done.foreach { case (d, before, after) =>
-      println(s"[compact] $d: $before -> $after files")
-    }
-    println(s"[compact] ${done.size} dir(s) rewritten")
   }
 }

@@ -37,13 +37,15 @@ object CsvIngest {
     * Doubles survive the round-trip exactly: Spark writes shortest
     * round-trip decimal strings and parses them back to the same
     * bits. */
-  def customerCsv(spark: SparkSession, dir: String): DataFrame = {
-    // keyed on the SOURCE parquet's size/mtime, not the dir name: a
-    // regeneration of customer.parquet must invalidate the CSV copy
-    val out = LayoutStore.cached(spark, "graft_csv", dir, "customer", "", "customer")(tmp =>
+  def customerCsv(spark: SparkSession, dir: String): DataFrame =
+    csv(spark, customerCsvPath(spark, dir), customerSchema)
+
+  /** The customer table's CSV copy, build-if-missing, path returned.
+    * Keyed on the SOURCE parquet's size/mtime, not the dir name: a
+    * regeneration of customer.parquet must invalidate the CSV copy. */
+  private[graft] def customerCsvPath(spark: SparkSession, dir: String): String =
+    LayoutStore.cached(spark, "graft_csv", dir, "customer", "", "customer")(tmp =>
       Tables.customer(spark, dir).write.mode("overwrite").option("header", "true").csv(tmp))
-    csv(spark, out, customerSchema)
-  }
 
   val documentsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -59,9 +61,11 @@ object CsvIngest {
 
   /** The documents table via the JSON-lines path (parquet → JSONL →
     * read back): free-text fields exercise JSON string escaping. */
-  def documentsJson(spark: SparkSession, dir: String): DataFrame = {
-    val out = LayoutStore.cached(spark, "graft_json", dir, "documents", "", "documents")(tmp =>
+  def documentsJson(spark: SparkSession, dir: String): DataFrame =
+    jsonLines(spark, documentsJsonPath(spark, dir), documentsSchema)
+
+  /** The documents table's JSON-lines copy, build-if-missing, path returned. */
+  private[graft] def documentsJsonPath(spark: SparkSession, dir: String): String =
+    LayoutStore.cached(spark, "graft_json", dir, "documents", "", "documents")(tmp =>
       Tables.documents(spark, dir).write.mode("overwrite").json(tmp))
-    jsonLines(spark, out, documentsSchema)
-  }
 }

@@ -32,9 +32,11 @@ import graft.{LayoutStore, Tables}
 object OrcIngest {
 
   /** The orders table via the ORC path (parquet → ORC → read back). */
-  def ordersOrc(spark: SparkSession, dir: String): DataFrame = {
-    val out = LayoutStore.cached(spark, "graft_orc", dir, "orders", "", "orders")(tmp =>
+  def ordersOrc(spark: SparkSession, dir: String): DataFrame =
+    spark.read.orc(ordersOrcPath(spark, dir))
+
+  /** The orders table's ORC copy, build-if-missing, path returned. */
+  private[graft] def ordersOrcPath(spark: SparkSession, dir: String): String =
+    LayoutStore.cached(spark, "graft_orc", dir, "orders", "", "orders")(tmp =>
       Tables.orders(spark, dir).write.mode("overwrite").orc(tmp))
-    spark.read.orc(out)
-  }
 }

@@ -21,6 +21,21 @@ class DedupSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
   }
 
+  // Chain corpus: 1~2 (19/21 ≈ .905) and 2~3 (19/21) but 1≁3 (18/22 ≈
+  // .818); 4 unrelated; 5 an exact dup of 1. One transitive group {1,2,3,5}.
+  private lazy val chain: DataFrame = {
+    import spark.implicits._
+    val w = (1 to 20).map(i => s"w$i")
+    Seq(
+      (1L, w.mkString(" ")),
+      (2L, (w.take(19) :+ "x0").mkString(" ")),
+      (3L, (w.take(18) ++ Seq("x0", "y0")).mkString(" ")),
+      (4L, "totally unrelated content z1 z2 z3 z4 z5 z6"),
+      (5L, w.mkString(" ")),
+    ).toDF("doc_id", "text")
+  }
+  private val chainGroups = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 1L)
+
   test("dd12 edit-distance pairs: planted distances, cross-bucket pair found, brute-force agreement") {
     import spark.implicits._
     // k=3 → bucket width 4. doc 12's length straddles a bucket
@@ -88,24 +103,26 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("dd6 dup groups: transitive closure over near-dup pairs") {
-    import spark.implicits._
-    // chain: 1~2 (19/21 ≈ .905) and 2~3 (19/21) but 1≁3 (18/22 ≈ .818)
-    // → transitivity must still put {1,2,3} in ONE group
-    val w = (1 to 20).map(i => s"w$i")
-    val d1 = w.mkString(" ")
-    val d2 = (w.take(19) :+ "x0").mkString(" ")
-    val d3 = (w.take(18) ++ Seq("x0", "y0")).mkString(" ")
-    val chain = Seq(
-      (1L, d1), (2L, d2), (3L, d3),
-      (4L, "totally unrelated content z1 z2 z3 z4 z5 z6"),
-      (5L, d1), // exact dup of 1
-    ).toDF("doc_id", "text")
+    // transitivity must still put {1,2,3} in ONE group
     val pairs = Dedup.ngramJaccard(chain, 1, 0.9)
     val keys = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!keys.contains((1L, 3L))) // the chain is genuinely non-transitive at pair level
     val groups = Dedup.dupGroups(chain, pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 1L))
+    assert(groups === chainGroups)
+  }
+
+  test("dupGroups keeps only its live label snapshot persisted") {
+    // superseded round snapshots, the pairs snapshot and the edge cache
+    // are freed by the time the labeling is returned
+    val pairs = Dedup.ngramJaccard(chain, 1, 0.9)
+    pairs.collect()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val groups = Dedup.dupGroups(chain, pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(groups === chainGroups)
+    assert(sc.getPersistentRDDs.size <= before + 1)
   }
 
   test("dd5 embedding near-dup finds planted identical + near vectors") {
@@ -827,20 +844,11 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("dupGroups reliable-checkpoint path produces the same labeling") {
-    import spark.implicits._
-    val w = (1 to 20).map(i => s"w$i")
-    val chain = Seq(
-      (1L, w.mkString(" ")),
-      (2L, (w.take(19) :+ "x0").mkString(" ")),
-      (3L, (w.take(18) ++ Seq("x0", "y0")).mkString(" ")),
-      (4L, "totally unrelated content z1 z2 z3 z4 z5 z6"),
-      (5L, w.mkString(" ")),
-    ).toDF("doc_id", "text")
     val pairs = Dedup.ngramJaccardPairs(chain, 1, 0.9)
     val ckpt = tempDir("graft-ckpt")
     val reliable = Dedup.dupGroups(chain, pairs, 50, Some(ckpt)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 1L))
+    assert(reliable === chainGroups)
     // the reliable path actually wrote checkpoint data to the configured dir
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()

@@ -415,7 +415,7 @@ class SimilaritySpec extends SparkTestBase {
       .select(col("query_id"), col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // OPERATING POINT (round 11 — VERDICT r10 #9): nprobe=8, dfCap=64,
-    // from graft.HybridCurve's sweep — recall@10 0.90 at sf0.001 and
+    // from `graft.Bench hybrid`'s sweep — recall@10 0.90 at sf0.001 and
     // 0.86 at sf0.01 (dfCap saturates on the synthetic vocabulary:
     // every token the lexical probe wants has df ≤ 16, so nprobe is
     // the live knob at these SFs; the cap matters at web-scale vocab).
@@ -447,10 +447,10 @@ class SimilaritySpec extends SparkTestBase {
     // dfCap BINDING (round 12 — VERDICT r11 #6): the natural synthetic
     // vocabulary saturates at df ≤ 16, so the cap had never been
     // observed pruning. On a heavy-tailed corpus (boilerplate tokens
-    // planted at df ~N/2, ~N/8, ~N/25 — graft.HybridCurve's fixture)
+    // planted at df ~N/2, ~N/8, ~N/25 — `graft.Bench hybrid`'s fixture)
     // the candidate count must MOVE with the cap: the df~N/2 token's
     // posting list passes cap=256 and is cut at cap=16.
-    val heavy = graft.HybridCurve.heavyTailDocs(docs)
+    val heavy = graft.Bench.heavyTailDocs(docs)
     val cand16 = Similarity.hybridCandidatesOf(spark, heavy, emb, dir,
       nQueries = 5, nprobe = 8, dfCap = 16).count()
     val cand256 = Similarity.hybridCandidatesOf(spark, heavy, emb, dir,
