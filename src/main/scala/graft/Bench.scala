@@ -482,7 +482,7 @@ object Bench {
             val proto = built(base)
             val tFull = onFresh(s"$name full")(full)
             val tApp = onFresh(s"$name append", Some(proto))(append)
-            Seq(name, cell(tFull), cell(tApp), f"${tFull.wall / tApp.wall}%.1f×")
+            Seq(name, cell(tFull), cell(tApp), f"${tFull.wall / tApp.wall}%.1fx")
           })
       }
 

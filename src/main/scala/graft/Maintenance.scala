@@ -175,7 +175,7 @@ object Maintenance {
     } else Seq("merge" -> "skipped (one row per node)")
     val alert =
       if (deltaMass > rebuildThreshold)
-        Seq("decide" -> f"REBUILD ALERT: delta_mass_frac=$deltaMass%.4f > $rebuildThreshold%.2f — frozen standing lists never re-rank appended mass")
+        Seq("decide" -> f"REBUILD ALERT: delta_mass_frac=$deltaMass%.4f > $rebuildThreshold%.2f - frozen standing lists never re-rank appended mass")
       else Seq("decide" -> f"healthy (delta_mass_frac=$deltaMass%.4f <= $rebuildThreshold%.2f)")
     val (n, tC) = timed(Seq("graph", "emb")
       .map(d => Compact.compactIndex(spark, s"$path/$d").size).sum)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Snapshots.SnapshotOps
+
 /** §2.D text-analysis operators over a documents-shaped table.
   *
   * Everything is built from codegen'd built-ins (regexp, length,
@@ -915,7 +917,7 @@ object TextFunctions {
     * pattern). See [[weakClassifier]] for the determinism recipe. */
   def weakClassifierTrain(trainDocs: DataFrame, targetSources: Seq[String],
       iters: Int = 3): Array[BigInt] = {
-    val feat = classifierFeatures(trainDocs, targetSources).localCheckpoint()
+    val feat = classifierFeatures(trainDocs, targetSources).snapshot()
     var w = Array.fill(ClassifierFeats.length)(BigInt(0))
     for (_ <- 1 to iters) {
       val m = classifierMargin(w)
@@ -927,7 +929,7 @@ object TextFunctions {
         .collect()(0)
       w = w.zipWithIndex.map { case (wi, i) => wi + BigInt(grad.getLong(i)) }
     }
-    feat.unpersist()
+    graft.Snapshots.free(feat)
     w
   }
 
@@ -1590,7 +1592,7 @@ object TextFunctions {
           "ELSE array() END").as("gs"))
       .select(col("doc_id"), explode_outer(col("gs")).as("g"))
       .filter(col("g").isNotNull)
-      .localCheckpoint()
+      .snapshot()
     val first = grams.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
     val agg = grams.join(first, "g")
       .groupBy(col("doc_id"))
@@ -1689,7 +1691,7 @@ object TextFunctions {
       // re-tokenizes). localCheckpoint, not cache (round 11 — ADVICE
       // r9): blocks free with the RDD's GC instead of accumulating in
       // the session cache manager
-      .localCheckpoint()
+      .snapshot()
     val perLang = base.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"), sum(col("n_stop")).as("n_stop"),

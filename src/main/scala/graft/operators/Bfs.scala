@@ -15,12 +15,14 @@ import org.apache.spark.sql.functions._
   * one equi-join (frontier ⋈ edges on src) + one distinct + one
   * left-anti join against the visited set — all shuffles on the node
   * key, so AQE handles hub skew as in q73/q74. Each round's frontier
-  * and the visited union are localCheckpointed: lineage stays
-  * one-round deep (an unrolled k-round plan doubles per round), and
-  * per-round cost is O(|frontier| · avg-degree + |visited|), never
-  * O(|E| · rounds). Superseded snapshots are unpersisted once the
-  * round's union is materialized, so live executor storage is two
-  * snapshots, independent of round count.
+  * and the visited union are snapshotted ([[graft.Snapshots]]):
+  * lineage stays one-round deep (an unrolled k-round plan doubles per
+  * round), and per-round cost is O(|frontier| · avg-degree +
+  * |visited|), never O(|E| · rounds). Superseded snapshots are freed
+  * once the round's union is materialized, so live storage is two
+  * snapshots, independent of round count, and the result holds one.
+  * Snapshots are reliable when the SparkContext has a checkpoint dir
+  * (`spark.checkpoint.dir`).
   *
   * Scale shape: at 100 TB you don't run unbounded BFS — components
   * (dd6) answers global reachability; what a pipeline asks per query
@@ -40,49 +42,31 @@ object Bfs {
     * earliest round that reaches it and is anti-joined away after. */
   def hops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    // Eager localCheckpoint, returning the snapshot's persisted RDD
-    // handle so superseded rounds can be freed: without explicit
-    // unpersist, executor storage and block-manager entries grow with
-    // round count — harmless at radius 4 but waste at deep radii.
-    // The handle is pulled from the checkpointed DataFrame's own plan
-    // (localCheckpoint rewrites it to a LogicalRDD over exactly the
-    // persisted RDD), NOT from a diff of the SparkContext-global
-    // persistent-RDD registry: a registry diff would capture any RDD a
-    // CONCURRENT job happened to persist and force-unpersist it — and
-    // a local checkpoint is unrecoverable once unpersisted, so that
-    // would fail the other job, not just waste its cache (ADVICE r7).
-    def checkpointTracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out = df.localCheckpoint(true)
-      val rdds = out.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      (out, rdds)
-    }
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    var (visited, vRdds) = checkpointTracked(
+    val e = graft.Snapshots.take(edges.select(col("src"), col("dst")))
+    var visited = graft.Snapshots.take(
       seeds.select(col("node")).distinct().withColumn("hops", lit(0)))
+    // round 0's frontier is visited's own snapshot
     var frontier = visited
-    // round-0 frontier shares visited's snapshot — no separate handle
-    var fRdds: Seq[org.apache.spark.rdd.RDD[_]] = Seq.empty
     var d = 0
     while (d < maxHops && !frontier.isEmpty) {
       d += 1
-      val (next, nRdds) = checkpointTracked(
+      val next = graft.Snapshots.take(
         frontier.select(col("node").as("src"))
           .join(e, "src")
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")), Seq("node"), "left_anti")
           .withColumn("hops", lit(d)))
-      // re-checkpoint the union each round (one O(|visited|) pass —
-      // the same order as the anti-join above), so the result is TWO
-      // live snapshots (visited + frontier), not one per round; only
-      // then are the previous round's snapshots safe to free (a local
-      // checkpoint is unrecoverable once unpersisted)
-      val (newVisited, nvRdds) = checkpointTracked(visited.union(next))
-      (vRdds ++ fRdds).foreach(_.unpersist(false))
-      visited = newVisited; vRdds = nvRdds
-      frontier = next; fRdds = nRdds
+      // re-snapshot the union each round (one O(|visited|) pass — the
+      // same order as the anti-join above), so two snapshots are live
+      // (visited + frontier), not one per round; only then are the
+      // previous round's snapshots safe to free
+      val newVisited = graft.Snapshots.take(visited.union(next))
+      Seq(visited, frontier).distinct.foreach(graft.Snapshots.free)
+      visited = newVisited
+      frontier = next
     }
+    if (frontier ne visited) graft.Snapshots.free(frontier)
+    graft.Snapshots.free(e)
     visited
   }
 }

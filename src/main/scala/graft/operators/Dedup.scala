@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Snapshots.SnapshotOps
+
 /** §2.B deduplication operators over a documents-shaped table
   * (doc_id: long, text: string).
   *
@@ -92,7 +94,7 @@ object Dedup {
     * At production scale both sides come off the persisted shingle
     * index ([[shingleWriteIndex]]'s df/ partition, dd2's probe).
     *
-    * The pairs are localCheckpointed HERE and the union cache released
+    * The pairs are snapshotted HERE and the union cache released
     * before returning (ADVICE r8): this runs once per micro-batch for
     * the life of the stream, and the cached union embeds the FULL
     * standing-corpus shingles — leaving one MEMORY_AND_DISK entry
@@ -105,7 +107,7 @@ object Dedup {
     val union = baseSh.withColumn("is_delta", lit(false))
       .unionByName(withShingles(batch, 1).withColumn("is_delta", lit(true)))
       .cache()
-    val pairs = incrementalAdaptive(union, threshold).localCheckpoint()
+    val pairs = incrementalAdaptive(union, threshold).snapshot()
     union.unpersist()
     pairs
   }
@@ -995,12 +997,12 @@ object Dedup {
         Seq("doc_super"), "left")
       .select(coalesce(col("g_a"), col("doc_sub")).as("doc_a"),
         coalesce(col("g_b"), col("doc_super")).as("doc_b"))
-      .localCheckpoint()
+      .snapshot()
     val nodes = deltaIds
       .union(baseLabels.select(col("group_id").as("doc_id"))).distinct()
-    val contracted =
-      if (edges.limit(DsuMaxEdges + 1).count() <= DsuMaxEdges) dsuLabels(nodes, edges)
-      else dupGroupLabels(nodes, edges, 50, None)
+    val (contracted, labelSnap) =
+      if (edges.limit(DsuMaxEdges + 1).count() <= DsuMaxEdges) (dsuLabels(nodes, edges), None)
+      else { val (l, snap) = propagateLabels(nodes, edges); (l, Some(snap)) }
     val deltaOut = deltaIds.join(contracted, "doc_id")
     // exclude delta ids from the standing side: after a crash between
     // the labels swap and the marker, the re-read base ALREADY holds
@@ -1012,6 +1014,8 @@ object Dedup {
     deltaOut.unionByName(standOut)
       .repartition(col("group_id")).sortWithinPartitions(col("group_id"))
       .write.mode("overwrite").parquet(s"$stage/labels")
+    labelSnap.foreach(graft.Snapshots.free)
+    graft.Snapshots.free(edges)
     deltaSh.unpersist(); ()
   }
 
@@ -1103,9 +1107,9 @@ object Dedup {
     // snap the candidate plan once: it feeds the degree union (two
     // scans) AND the propagation loop (dupGroupLabels would re-run
     // the whole prefix join per round through lineage otherwise)
-    val p = pairs.select(col("doc_sub"), col("doc_super")).localCheckpoint(true)
+    val p = pairs.select(col("doc_sub"), col("doc_super")).snapshot()
     containmentVerdictFrom(p, dupGroupLabels(docs,
-      p.select(col("doc_sub").as("doc_a"), col("doc_super").as("doc_b")), 50, None))
+      p.select(col("doc_sub").as("doc_a"), col("doc_super").as("doc_b"))))
   }
 
   /** [[containmentGroups]] with the CC labeling supplied from a
@@ -1381,7 +1385,7 @@ object Dedup {
       // loop's own snapshot) AND the size probe below — without it the
       // candidate joins would re-run per consumer (the dd8 fan-out
       // lesson)
-      .localCheckpoint()
+      .snapshot()
     val nodes = delta.select(col("doc_id"))
       .union(indexLabels.select(col("group_id").as("doc_id"))).distinct()
     // Round 13 (VERDICT r12 #5): the contracted edge set is DELTA-sized
@@ -1397,7 +1401,7 @@ object Dedup {
     val contracted =
       if (edges.limit(DsuMaxEdges + 1).count() <= DsuMaxEdges)
         dsuLabels(nodes, edges)
-      else dupGroupLabels(nodes, edges, 50, None)
+      else dupGroupLabels(nodes, edges)
     val deltaOut = delta.select(col("doc_id")).join(contracted, "doc_id")
     val indexOut = indexLabels.select(col("doc_id"), col("group_id").as("g_old"))
       .join(contracted.select(col("doc_id").as("g_old"), col("group_id")), "g_old")
@@ -1671,45 +1675,30 @@ object Dedup {
     * needed = graph diameter, and near-dup components are dense
     * near-cliques (diameter ~2–3); `maxIters` is a safety rail that
     * throws rather than return a wrong (unconverged) labeling.
-    * `localCheckpoint` truncates the per-round lineage so the plan
-    * doesn't deepen linearly with rounds. At pathological diameters
+    * A snapshot per round truncates the lineage so the plan doesn't
+    * deepen linearly with rounds. At pathological diameters
     * the standard fix is alternating large-star/small-star rounds
     * (halves diameter per round); not needed for dedup graphs.
     *
-    * Fault tolerance: the default `localCheckpoint(true)` stores the
-    * per-round blocks on EXECUTORS with lineage truncated — fast, but
-    * on a real cluster one lost executor mid-iteration kills the job
-    * with no recompute path. Pass `checkpointDir = Some(dir)` (HDFS/
-    * object store on a cluster) to use reliable `checkpoint()` instead:
-    * each round persists to the store and survives any executor loss,
-    * at the price of a round-trip write per round. At 100 TB the
-    * reliable path is the right default — iterations are long enough
-    * that the probability of losing an executor mid-job is ~1. */
-  def dupGroups(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame =
-    dupGroupLabels(docs, pairs, maxIters, checkpointDir).orderBy(col("doc_id"))
+    * Snapshots ([[graft.Snapshots]]) are reliable when the
+    * SparkContext has a checkpoint dir (`spark.checkpoint.dir`). */
+  def dupGroups(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame =
+    dupGroupLabels(docs, pairs, maxIters).orderBy(col("doc_id"))
 
   /** dupGroups without the output-presentation sort (see
     * ngramJaccardPairs — same composition rationale). */
-  private[graft] def dupGroupLabels(docs: DataFrame, pairs: DataFrame, maxIters: Int,
-      checkpointDir: Option[String]): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def snap(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
-    // local-checkpoint mode only: the snapshot's persisted RDDs, freed
-    // once nothing reads them (as PageRank.ranksConvergedWithRounds
-    // does). Reliable checkpoint() writes to the checkpoint dir,
-    // nothing to unpersist.
-    def snapRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      if (checkpointDir.isDefined) Seq.empty
-      else df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-    // checkpoint the pair plan ONCE: the symmetric union would
+  private[graft] def dupGroupLabels(docs: DataFrame, pairs: DataFrame,
+      maxIters: Int = 50): DataFrame =
+    propagateLabels(docs, pairs, maxIters)._1
+
+  /** dupGroupLabels and the one snapshot it reads, for a caller that
+    * writes the labels and then frees the snapshot. */
+  private def propagateLabels(docs: DataFrame, pairs: DataFrame,
+      maxIters: Int = 50): (DataFrame, DataFrame) = {
+    // snapshot the pair plan ONCE: the symmetric union would
     // otherwise evaluate the (expensive) candidate-join plan twice,
     // and every round would re-plan its whole lineage
-    val p = snap(pairs.select(col("doc_a"), col("doc_b")))
+    val p = graft.Snapshots.take(pairs.select(col("doc_a"), col("doc_b")))
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .cache()
@@ -1718,9 +1707,9 @@ object Dedup {
     // shuffling their fixed labels through every round is pure waste.
     // The symmetric union covers both endpoints, so src alone spans
     // every non-singleton node; singletons re-attach after the loop.
-    var labels = snap(edges.select(col("src").as("doc_id")).distinct()
+    var snap = graft.Snapshots.take(edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("comp")))
-    var labelRdds = snapRdds(labels)
+    var labels = snap
     var changed = 1L
     var it = 0
     // Round structure note (round 12 — VERDICT r11 #3 tried and
@@ -1762,22 +1751,22 @@ object Dedup {
       val parentComp = relaxed.select(col("doc_id").as("p_id"), col("comp").as("p_comp"))
       // `old` rides along into the checkpoint so the convergence count
       // is a local scan of checkpointed rows, not another shuffle join
-      val next = snap(relaxed.withColumnRenamed("comp", "c1")
+      val next = graft.Snapshots.take(relaxed.withColumnRenamed("comp", "c1")
         .repartition(n, col("c1"))
         .join(parentComp, col("c1") === col("p_id"), "left")
         .select(col("doc_id"), col("old"),
           least(col("c1"), coalesce(col("p_comp"), col("c1"))).as("comp")))
       changed = next.filter(col("comp") =!= col("old")).count()
-      labelRdds.foreach(_.unpersist(false))
-      labelRdds = snapRdds(next)
+      graft.Snapshots.free(snap)
+      snap = next
       labels = next.select(col("doc_id"), col("comp"))
       it += 1
     }
-    snapRdds(p).foreach(_.unpersist(false))
+    graft.Snapshots.free(p)
     edges.unpersist()
-    docs.select(col("doc_id"))
+    (docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("group_id"))
+      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("group_id")), snap)
   }
 
   /** Materialized duplicate-group index: dupGroups' (doc_id, group_id)
@@ -1790,11 +1779,13 @@ object Dedup {
     * refresh, not per consumer; rows are written sorted by group_id so
     * per-group consumers get clustered reads. */
   def dupGroupsWriteIndex(docs: DataFrame, pairs: DataFrame, path: String,
-      maxIters: Int = 50, checkpointDir: Option[String] = None): Unit =
-    dupGroupLabels(docs, pairs, maxIters, checkpointDir)
-      .repartition(col("group_id"))
+      maxIters: Int = 50): Unit = {
+    val (labels, snap) = propagateLabels(docs, pairs, maxIters)
+    labels.repartition(col("group_id"))
       .sortWithinPartitions(col("group_id"))
       .write.mode("overwrite").parquet(path)
+    graft.Snapshots.free(snap)
+  }
 
   /** Probe side of the materialized group index. */
   def dupGroupsReadIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
@@ -2149,7 +2140,7 @@ object Dedup {
         length(col("text")).as("len"),
         (length(col("text")) / w).cast("int").as("bucket"),
         call_function("graft_charhist39", col("text")).as("hist"))
-      .localCheckpoint()
+      .snapshot()
       // scalar extraction AFTER the checkpoint: the stored array is
       // read once per column, the histogram itself never re-derives
       .select(Seq(col("doc_id"), col("text"), col("lang"), col("len"), col("bucket"))

@@ -89,10 +89,11 @@ object PageRank {
     * picorank space. Not SQL-oracle-able (round count is
     * data-dependent) — spec-gated instead: PageRankSpec pins loop ≡
     * unrolled `ranks` at the same round count, the fixed point, and
-    * per-round conservation. */
-  def ranksConverged(edges: DataFrame, tolE12: Long = 1000L, maxIters: Int = 60,
-      checkpointDir: Option[String] = None): DataFrame =
-    ranksConvergedWithRounds(edges, tolE12, maxIters, checkpointDir)._1
+    * per-round conservation. Snapshots ([[graft.Snapshots]]) are
+    * reliable when the SparkContext has a checkpoint dir
+    * (`spark.checkpoint.dir`). */
+  def ranksConverged(edges: DataFrame, tolE12: Long = 1000L, maxIters: Int = 60): DataFrame =
+    ranksConvergedWithRounds(edges, tolE12, maxIters)._1
 
   /** [[ranksConverged]] with the tolerance RELATIVE to the uniform
     * rank 1e12/N — the scale-free form: the same tolRel stops after
@@ -100,37 +101,23 @@ object PageRank {
     * threshold tightens as N grows, exactly matching how individual
     * ranks shrink). tolRel = 1e-3 means "converged when no node moves
     * by more than 0.1% of the uniform share per round". */
-  def ranksConvergedRel(edges: DataFrame, tolRel: Double = 1e-3, maxIters: Int = 60,
-      checkpointDir: Option[String] = None): DataFrame =
-    ranksConvergedWithRounds(edges, 1L, maxIters, checkpointDir, tolRel)._1
+  def ranksConvergedRel(edges: DataFrame, tolRel: Double = 1e-3, maxIters: Int = 60): DataFrame =
+    ranksConvergedWithRounds(edges, 1L, maxIters, tolRel)._1
 
   /** ranksConverged exposing the round count it took — the statistic
     * the x1→x30 scale curve reports (per-round cost should scale with
     * |E|; round COUNT should stay flat, fixed by damping and tol).
     * Effective tolerance = max(tolE12, tolRel·1e12/N). */
   def ranksConvergedWithRounds(edges: DataFrame, tolE12: Long = 1000L, maxIters: Int = 60,
-      checkpointDir: Option[String] = None, tolRel: Double = 0.0): (DataFrame, Int) = {
+      tolRel: Double = 0.0): (DataFrame, Int) = {
     require(tolE12 >= 1L, s"tolE12 must be ≥ 1 picorank, got $tolE12")
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def snap(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
     // snapshot edges once: every round re-reads them, and an upstream
     // candidate-generation plan must not re-execute per round
-    val e = snap(edges.select(col("src"), col("dst")))
+    val e = graft.Snapshots.take(edges.select(col("src"), col("dst")))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
     val n = deg.count()
     val tol = math.max(tolE12, (tolRel * (Unit_e12 / n)).toLong)
-    var r = snap(deg.select(col("node"), col("outdeg"), lit(Unit_e12 / n).as("r")))
-    // local-checkpoint mode only: free each superseded round once the
-    // next is materialized (ADVICE r15). Reliable checkpoint() writes
-    // to the checkpoint dir, nothing to unpersist.
-    def snapRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      if (checkpointDir.isDefined) Seq.empty
-      else df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-    var rRdds = snapRdds(r)
+    var r = graft.Snapshots.take(deg.select(col("node"), col("outdeg"), lit(Unit_e12 / n).as("r")))
     var delta = Long.MaxValue
     var it = 0
     while (delta > tol) {
@@ -138,13 +125,14 @@ object PageRank {
         throw new IllegalStateException(
           s"PageRank did not reach |Δr|∞ ≤ $tol in $maxIters rounds (last Δ=$delta)")
       val withOld = r.select(col("node"), col("outdeg"), col("r").as("old"))
-      val next = snap(round(withOld, r, e, lit(n)))
+      val next = graft.Snapshots.take(round(withOld, r, e, lit(n)))
       delta = next.agg(max(abs(col("r") - col("old")))).head().getLong(0)
-      rRdds.foreach(_.unpersist(false))
-      rRdds = snapRdds(next)
-      r = next.select(col("node"), col("outdeg"), col("r"))
+      // each superseded round is freed once the next is materialized
+      graft.Snapshots.free(r)
+      r = next
       it += 1
     }
+    graft.Snapshots.free(e)
     (r.select(col("node"), col("r").as("pr_e12"),
       (col("r").cast("double") / 1e12).as("pagerank")), it)
   }

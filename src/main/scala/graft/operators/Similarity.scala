@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Snapshots.SnapshotOps
+
 /** §2.C similarity search over an embeddings-shaped table
   * (vec_id: long, embedding: array<float>).
   *
@@ -267,12 +269,12 @@ object Similarity {
     *
     * Plan: the heavy part is candidate generation — ss1's broadcast-
     * query scan into per-query m-heaps, corpus never shuffled. The
-    * m×queries candidate table is localCheckpointed ONCE: the k
+    * m×queries candidate table is snapshotted ONCE: the k
     * unrolled greedy rounds reference `cand` and the growing
     * `selected` across their anti-join/sim-join/argmax lineage, and
     * without the barrier each reference would re-run the corpus scan
     * (mm6's recompute lesson at plan scale). `selected` is ALSO
-    * checkpointed per round (round 9 — VERDICT r8 #7): round r's
+    * snapshotted per round (round 9 — VERDICT r8 #7): round r's
     * lineage referenced every earlier round's twice (anti-join +
     * sim-join), so the un-checkpointed plan tree grew 2^k references
     * and x1 paid ~20 s of one-time analysis/codegen on a 2^5 tree;
@@ -293,7 +295,7 @@ object Similarity {
       .withColumnRenamed("cosine", "rel").drop("rank")
       .join(base, "vec_id")
       .select(col("query_id"), col("vec_id"), col("rel"), col("embedding").as("emb"))
-      .localCheckpoint()
+      .snapshot()
     def pick(sc: DataFrame, r: Int): DataFrame = sc
       .groupBy(col("query_id"))
       .agg(max_by(
@@ -306,7 +308,7 @@ object Similarity {
     var selected = pick(cand
       .withColumn("max_sim", lit(0.0))
       .withColumn("mmr_score", lit(relW) * col("rel") - lit(simW) * col("max_sim")), 1)
-      .localCheckpoint()
+      .snapshot()
     for (r <- 2 to k) {
       val rem = cand.join(selected.select(col("query_id"), col("vec_id")),
         Seq("query_id", "vec_id"), "left_anti")
@@ -316,9 +318,13 @@ object Similarity {
         .groupBy(col("query_id"), col("vec_id")).agg(max(col("sim")).as("max_sim"))
       val scoredR = rem.join(maxSim, Seq("query_id", "vec_id"))
         .withColumn("mmr_score", lit(relW) * col("rel") - lit(simW) * col("max_sim"))
-      // per-round barrier: linear plan growth (see scaladoc)
-      selected = selected.unionByName(pick(scoredR, r)).localCheckpoint()
+      // per-round barrier: linear plan growth (see scaladoc); the
+      // superseded round is freed once the next is materialized
+      val next = selected.unionByName(pick(scoredR, r)).snapshot()
+      graft.Snapshots.free(selected)
+      selected = next
     }
+    graft.Snapshots.free(cand)
     selected
       .select(col("query_id"), col("mmr_rank"), col("vec_id"),
         col("rel"), col("max_sim"), col("mmr_score"))
@@ -447,23 +453,10 @@ object Similarity {
     * index generation; within-batch duplicate vec_ids collapsed here
     * (per-vector, BEFORE banding — one surviving row feeds all
     * Tables band rows). */
-  def lshAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long = {
-    val spark = delta0.sparkSession
-    val delta = delta0.dropDuplicates("vec_id")
-    val rows = bandRows(delta, dim, "vec_id", "vec_id", Seq("embedding"))
-      .select(col("vec_id"), col("embedding"), bucketCol)
-    val targetBuckets = rows.select("bucket").distinct().collect().map(_.getInt(0))
-    if (targetBuckets.isEmpty) return 0L
-    val existing = graft.Tables.parquet(spark, s"$path/buckets")
-      .filter(col("bucket").isin(targetBuckets.toIndexedSeq: _*))
-      .select(col("vec_id")).distinct()
-    val fresh = rows.join(existing, Seq("vec_id"), "left_anti").localCheckpoint()
-    val n = fresh.select("vec_id").distinct().count()
-    if (n > 0)
-      fresh.write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
-    fresh.unpersist()
-    n
-  }
+  def lshAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long =
+    appendAbsent(bandRows(delta0.dropDuplicates("vec_id"), dim, "vec_id", "vec_id",
+        Seq("embedding")).select(col("vec_id"), col("embedding"), bucketCol),
+      "bucket", s"$path/buckets", _.select("vec_id").distinct().count())
 
   /** Probe a materialized LSH index: hash ONLY the query set, prune to
     * the probed bucket directories (planning-time partition pruning,
@@ -822,18 +815,26 @@ object Similarity {
     // ALL delta columns ride along, exactly as the plain append writes
     // them — dropping e.g. `label` here would silently thin the index
     // schema for downstream consumers like clusterStats
-    val assigned = withCid(delta, "embedding", centroids)
-    val targetCids = assigned.select("cid").distinct().collect().map(_.getInt(0))
-    if (targetCids.isEmpty) return 0L
-    val existing = graft.Tables.parquet(spark, s"$path/vectors")
-      .filter(col("cid").isin(targetCids.toIndexedSeq: _*))
+    appendAbsent(withCid(delta, "embedding", centroids), "cid", s"$path/vectors")
+  }
+
+  /** Appends to the vector table at `dir` the rows of `rows` whose
+    * vec_id it does not hold yet, the existence check pruned to the
+    * `part` partitions `rows` target; returns `vectors` of the rows
+    * appended (callers dedup vec_ids first, so by default one row is
+    * one vector). */
+  private def appendAbsent(rows: DataFrame, part: String, dir: String,
+      vectors: DataFrame => Long = _.count()): Long = {
+    val targets = rows.select(part).distinct().collect().map(_.getInt(0))
+    if (targets.isEmpty) return 0L
+    val existing = graft.Tables.parquet(rows.sparkSession, dir)
+      .filter(col(part).isin(targets.toIndexedSeq: _*))
       .select(col("vec_id"))
-    val fresh = assigned.join(existing, Seq("vec_id"), "left_anti")
-      .localCheckpoint() // one evaluation serves the count AND the write
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode("append").partitionBy("cid").parquet(s"$path/vectors")
-    fresh.unpersist()
+    val fresh = rows.join(existing, Seq("vec_id"), "left_anti")
+      .snapshot() // one evaluation serves the count AND the write
+    val n = vectors(fresh)
+    if (n > 0) fresh.write.mode("append").partitionBy(part).parquet(dir)
+    graft.Snapshots.free(fresh)
     n
   }
 
@@ -1040,7 +1041,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         expr("__cells[0].c").as("cid1"), expr("__cells[0].s").as("s1"),
         expr("__cells[1].c").as("cid2"))
-      .localCheckpoint() // three consumers below; the cell-scoring
+      .snapshot() // three consumers below; the cell-scoring
                          // pass must not re-evaluate per consumer
     // candidate pairs: node × members of its primary AND secondary cell
     val members = top2.select(col("cid1").as("cell"),
@@ -1081,6 +1082,7 @@ object Similarity {
       .select(col("cid1").as("cid"), col("h.vec_id").as("vec_id"),
         col("h.embedding").as("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/hubs")
+    graft.Snapshots.free(top2)
   }
 
   /** Append a delta batch to a materialized HNSW-lite index WITHOUT
@@ -1109,7 +1111,7 @@ object Similarity {
         "vec_id", "embedding", 2, cents, "__cells")
       .select(col("vec_id"), col("embedding"),
         expr("__cells[0].c").as("cid1"), expr("__cells[1].c").as("cid2"))
-      .localCheckpoint()
+      .snapshot()
     val standing = graft.Tables.parquet(spark, s"$path/emb")
       .select(col("cid1").as("cell"), col("vec_id").as("nbr_id"),
         col("embedding").as("nbr_emb"))
@@ -1127,7 +1129,7 @@ object Similarity {
         lit(HnswDegree)).as("tk"))
       .select(col("vec_id"),
         expr("array_distinct(transform(tk, x -> x.id))").as("neighbors"))
-      .localCheckpoint() // three writes below must not re-run the cell join
+      .snapshot() // three writes below must not re-run the cell join
     top2.select(col("vec_id"), col("embedding"), col("cid1"))
       .write.mode("append").parquet(s"$path/emb")
     top2.select(col("vec_id"), col("cid1"))
@@ -1147,6 +1149,8 @@ object Similarity {
       .agg(array_sort(collect_set(col("delta_id"))).as("neighbors"))
       .select(col("nbr").as("vec_id"), col("nbr_cid").as("cid1"), col("neighbors"))
       .write.mode("append").parquet(s"$path/graph")
+    graft.Snapshots.free(best)
+    graft.Snapshots.free(top2)
   }
 
   def hnswProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1171,7 +1175,7 @@ object Similarity {
     var visited = hubs.join(broadcast(q))
       .select(col("query_id"), col("vec_id"),
         call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-      .localCheckpoint()
+      .snapshot()
     for (_ <- 1 to rounds) {
       val frontier = topBeam(visited)
       val cands = frontier
@@ -1188,7 +1192,9 @@ object Similarity {
           call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
       // one barrier per round: the next frontier and the next round's
       // anti-join both read the accumulated set (dd6's lineage rule)
-      visited = visited.unionByName(scoredNew).localCheckpoint()
+      val next = visited.unionByName(scoredNew).snapshot()
+      graft.Snapshots.free(visited)
+      visited = next
     }
     topKPerQuery(visited.filter(col("vec_id") =!= col("query_id")), k)
   }
@@ -1476,19 +1482,8 @@ object Similarity {
     val spark = delta0.sparkSession
     val delta = delta0.dropDuplicates("vec_id")
     val books = readCodebook(spark, s"$path/codebook")
-    val coded = pqEncode(delta, dim, books.length, books).withColumn("vb", vbCol)
-    val targetVbs = coded.select("vb").distinct().collect().map(_.getInt(0))
-    if (targetVbs.isEmpty) return 0L
-    val existing = graft.Tables.parquet(spark, s"$path/codes")
-      .filter(col("vb").isin(targetVbs.toIndexedSeq: _*))
-      .select(col("vec_id"))
-    val fresh = coded.join(existing, Seq("vec_id"), "left_anti")
-      .localCheckpoint() // one evaluation serves the count AND the write
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode("append").partitionBy("vb").parquet(s"$path/codes")
-    fresh.unpersist()
-    n
+    appendAbsent(pqEncode(delta, dim, books.length, books).withColumn("vb", vbCol),
+      "vb", s"$path/codes")
   }
 
   /** Probe a materialized PQ index: reconstruct from the stored codes
@@ -1680,17 +1675,7 @@ object Similarity {
         .join(delta.select(col("vec_id"), col("embedding")), "vec_id"),
         "embedding", coarse)
       .select(col("vec_id"), col("codes"), col("cid"))
-    val targetCids = assigned.select("cid").distinct().collect().map(_.getInt(0))
-    if (targetCids.isEmpty) return 0L
-    val existing = graft.Tables.parquet(spark, s"$path/codes")
-      .filter(col("cid").isin(targetCids.toIndexedSeq: _*))
-      .select(col("vec_id"))
-    val fresh = assigned.join(existing, Seq("vec_id"), "left_anti").localCheckpoint()
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode("append").partitionBy("cid").parquet(s"$path/codes")
-    fresh.unpersist()
-    n
+    appendAbsent(assigned, "cid", s"$path/codes")
   }
 
   /** Probe a materialized IVF+PQ index: coarse-probe the cid partition
@@ -1915,7 +1900,7 @@ object Similarity {
   def semanticDedup(emb: DataFrame, k: Int, iters: Int, tau: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val asg = kmeansAssign(emb, k, iters).localCheckpoint(true)
+    val asg = kmeansAssign(emb, k, iters).snapshot()
     val withEmb = asg.select(col("vec_id"), col("cluster"))
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
     val x = withEmb.as("x"); val y = withEmb.as("y")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Snapshots.SnapshotOps
+
 /** Degree-oriented triangle enumeration over an undirected edge set.
   *
   * Input: distinct undirected edges as (u, v) with u < v (canonical id
@@ -46,7 +48,7 @@ object Triangles {
   /** Per-node triangle participation counts (nodes in ≥1 triangle),
     * as (node, n_triangles). */
   def perNodeCounts(edges: DataFrame): DataFrame =
-    perNodeCountsOriented(orient(edges).localCheckpoint())
+    perNodeCountsOriented(orient(edges).snapshot())
 
   /** Sorted out-neighbor adjacency of an oriented edge set: one row
     * (lo, nbrs: array<bigint> ASC) per node with out-edges. Corpus-

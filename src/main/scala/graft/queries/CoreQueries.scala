@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{LayoutStore, Tables}
+import graft.Snapshots.SnapshotOps
 
 /** §2.A relational / analytic core.
   *
@@ -1737,7 +1738,7 @@ object CoreQueries {
         expr("user_id % 65536").as("pos"))
       .groupBy(col("event_type"), col("day"), col("chunk"))
       .agg(expr("graft_bitmap(pos)").as("bm"))
-      .localCheckpoint()  // r11 barrier convention: freed with the RDD, not session-immortal
+      .snapshot()  // r11 barrier convention: freed with the RDD, not session-immortal
     val days = day.groupBy(col("event_type"), col("day"))
       .agg(sum(expr("graft_bitmap_card(bm)")).as("n_users"))
       .select(col("event_type"), col("day").cast("string").as("day"), col("n_users"))
@@ -1941,7 +1942,7 @@ object CoreQueries {
         col("user_id"))
       .groupBy(col("event_type"), col("day"))
       .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
-      .localCheckpoint()  // r11 barrier convention: freed with the RDD, not session-immortal
+      .snapshot()  // r11 barrier convention: freed with the RDD, not session-immortal
     val days = day.select(col("event_type"), col("day").cast("string").as("day"),
       expr("hll_sketch_estimate(sk)").as("n_users"))
     val totals = day.groupBy(col("event_type"))
@@ -1965,7 +1966,7 @@ object CoreQueries {
         col("o_totalprice"))
       .groupBy(col("o_orderpriority"), col("month"))
       .agg(expr("graft_kll(o_totalprice)").as("sk"))
-      .localCheckpoint()  // r11 barrier convention: freed with the RDD, not session-immortal
+      .snapshot()  // r11 barrier convention: freed with the RDD, not session-immortal
     def quantiles(skCol: String): Seq[Column] = Seq(
       expr(s"graft_kll_quantile($skCol, 0.5)").as("p50"),
       expr(s"graft_kll_quantile($skCol, 0.95)").as("p95"),
@@ -2025,7 +2026,7 @@ object CoreQueries {
         expr("user_id % 65536").as("pos"))
       .groupBy(col("day"), col("chunk"))
       .agg(expr("graft_bitmap(pos)").as("bm"))
-      .localCheckpoint()  // r11 barrier convention: freed with the RDD, not session-immortal
+      .snapshot()  // r11 barrier convention: freed with the RDD, not session-immortal
     val spine = day.select(col("day")).distinct()
     val contrib = day
       .select(col("day"), col("chunk"), col("bm"), explode(sequence(lit(0), lit(6))).as("off"))
@@ -2306,8 +2307,8 @@ object CoreQueries {
     LayoutStore.cached(s, "graft_copurchase", d, "lineitem",
         s"cap${MaxOrderItems}o4") { tmp =>
       val li = cappedDistinctItems(Tables.lineitem(s, d), MaxOrderItems)
-        .localCheckpoint() // edges + items + totals must not re-run the cap window
-      val e = copurchasePairsOf(li).localCheckpoint() // two writes below must not re-run the self-join
+        .snapshot() // edges + items + totals must not re-run the cap window
+      val e = copurchasePairsOf(li).snapshot() // two writes below must not re-run the self-join
       // Parallelism floor on the probe-heavy relations (round 15): the
       // wedge join is a broadcast join, so q74 runs at the ORIENTED
       // scan's split count — a size-coalesced single-file layout
@@ -2328,6 +2329,8 @@ object CoreQueries {
         .write.mode("overwrite").parquet(s"$tmp/items")
       li.agg(countDistinct(col("l_orderkey")).as("orders"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/totals")
+      graft.Snapshots.free(e)
+      graft.Snapshots.free(li)
     }
   }
 
@@ -3021,7 +3024,7 @@ object CoreQueries {
     // |metrics|×|domain buckets| rows, executor-trivial either way
     val cumB = bucketed.groupBy(col("metric"), col("bkt")).agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(wc))
-      .localCheckpoint()
+      .snapshot()
     val ks = cumB.groupBy(col("metric")).agg(max(col("cum")).as("n"))
       .crossJoin(s.range(1, buckets + 1).select(col("id").as("k")))
       .select(col("metric"), col("k"),
@@ -3479,7 +3482,7 @@ object CoreQueries {
       .withColumn("recency_days", datediff(col("mxd"), col("last_od")).cast("long"))
       .select(col("custkey"), col("recency_days"), col("frequency"),
         col("monetary_cents"))
-      .localCheckpoint()
+      .snapshot()
     // all three metrics' quintile cuts resolve in one multi-metric
     // pass pair over the unpivoted (metric, v) form — map-side
     // explode, never a join of three separate boundary plans

@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{LayoutStore, Sessions, Tables}
+import graft.{LayoutStore, Sessions, Snapshots, Tables}
+import graft.Snapshots.SnapshotOps
 
 /** §2.F registry rows: Structured Streaming pipelines executed END TO
   * END against the driver's events table — `readStream` file source →
@@ -985,7 +986,7 @@ object StreamQueries {
     * append its admits, so verdicts stay batch-split-invariant), then
     * foreachBatch probes each batch through Dedup.ingestBatchPairs —
     * the PPJoin prefix path, exact-complete, never all-pairs — and
-    * folds pairs to verdicts. The pre-round-9 localCheckpoint-standing
+    * folds pairs to verdicts. The pre-round-9 snapshot-standing
     * twin ([[st15CheckpointFrom]]) is kept for the spec that pins the
     * two standing representations verdict-identical. Verdicts
     * are per-doc facts depending only on (batch doc, standing corpus),
@@ -1020,9 +1021,9 @@ object StreamQueries {
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.operators.Dedup
     val baseSh = Dedup.shingled(
-      Tables.documents(s, d).filter(!PipelineQueries.isDeltaDoc), 1).localCheckpoint()
+      Tables.documents(s, d).filter(!PipelineQueries.isDeltaDoc), 1).snapshot()
     try st15Run(s, d, maxFilesPerTrigger, baseSh)
-    finally { baseSh.unpersist(); () }
+    finally Snapshots.free(baseSh)
   }
 
   private def st15Run(s: SparkSession, d: String,
@@ -1032,8 +1033,8 @@ object StreamQueries {
     runStream(s, documentsStreamFrom(s, d, maxFilesPerTrigger)
       .filter(PipelineQueries.isDeltaDoc))(_.foreachBatch {
         (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-          val b = batch.toDF().localCheckpoint()
-          // ingestBatchPairs localCheckpoints the PAIRS before the
+          val b = batch.toDF().snapshot()
+          // ingestBatchPairs snapshots the PAIRS before the
           // verdict fold reads them: max_by's value struct, its
           // ordering struct and the τ filter each reference the
           // jaccard column, and CollapseProject inlines the
@@ -1049,7 +1050,8 @@ object StreamQueries {
             PipelineQueries.JaccardThreshold)
           ingestVerdict(b, pairs)
             .write.mode("overwrite").parquet(s"$dir/batch_$id")
-          ()
+          Snapshots.free(pairs)
+          Snapshots.free(b)
       }.option("checkpointLocation", s"$dir/chk")
       .trigger(Trigger.AvailableNow()).start())
     val parts = LayoutStore.list(s, dir)
@@ -1068,7 +1070,7 @@ object StreamQueries {
     // then delete it — the scratch union of batch partitions must not
     // outlive the query (ADVICE r8: the dir was never cleaned up)
     val out = s.read.parquet(parts.toIndexedSeq: _*).orderBy(col("doc_id"))
-      .localCheckpoint()
+      .snapshot()
     LayoutStore.delete(s, dir)
     out
   }
@@ -1206,7 +1208,7 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow()).start())
       Similarity.ivfProbeIndex(s, s"$run/idx",
         Tables.embeddings(s, d).filter(col("vec_id") < PipelineQueries.NQueries),
-        PipelineQueries.TopK).localCheckpoint()
+        PipelineQueries.TopK).snapshot()
     } finally LayoutStore.delete(s, run)
   }
 

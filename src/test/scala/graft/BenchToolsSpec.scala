@@ -31,6 +31,11 @@ class BenchToolsSpec extends SparkTestBase {
 
   private val Timed = """\d+\.\d\d s \(cpu \d+\.\d\d s\)""".r
 
+  /** A JVM whose stdout charset is not UTF-8 prints every non-ASCII
+    * character as `?`, so tool output stays ASCII. */
+  private def assertAscii(lines: Seq[String]): Unit =
+    assert(lines.forall(_.forall(_ < 128)), lines.filterNot(_.forall(_ < 128)).mkString("\n"))
+
   private def assertTimed(c: String): Unit =
     assert(Timed.matches(c), s"'$c' is not a timed cell")
 
@@ -79,6 +84,7 @@ class BenchToolsSpec extends SparkTestBase {
   test("delta compaction: file counts fall, probes and the pass are timed cells") {
     val (ok, out) = run("delta", Sf0001, "compaction")
     assert(ok)
+    assertAscii(out)
     val Seq(t) = tables(out)
     assert(t.head === Seq("index", "files after 4 appends", "probe pre", "compact",
       "files post", "probe post"))
@@ -86,6 +92,19 @@ class BenchToolsSpec extends SparkTestBase {
     t.tail.foreach { case Seq(_, pre, probePre, compact, post, probePost) =>
       assert(post.toInt < pre.toInt)
       Seq(probePre, compact, probePost).foreach(assertTimed)
+    }
+  }
+
+  test("delta appends: one row per index family, the ratio printed in ASCII") {
+    val (ok, out) = run("delta", Sf0001, "appends")
+    assert(ok)
+    assertAscii(out)
+    val Seq(t) = tables(out)
+    assert(t.head === Seq("index", "full rebuild (union)", "append 1/8 delta", "ratio"))
+    assert(t.tail.map(_.head) === Seq("shingle", "contain", "ivf", "pq", "lsh", "ivfpq", "bucketed"))
+    t.tail.foreach { case Seq(_, full, append, ratio) =>
+      Seq(full, append).foreach(assertTimed)
+      assert("""\d+\.\dx""".r.matches(ratio), s"'$ratio' is not an ASCII ratio")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Checkpoints.withCheckpointDir
 
 import graft.operators.Dedup
 
@@ -846,7 +847,7 @@ class DedupSpec extends SparkTestBase {
   test("dupGroups reliable-checkpoint path produces the same labeling") {
     val pairs = Dedup.ngramJaccardPairs(chain, 1, 0.9)
     val ckpt = tempDir("graft-ckpt")
-    val reliable = Dedup.dupGroups(chain, pairs, 50, Some(ckpt)).collect()
+    val reliable = withCheckpointDir(ckpt)(Dedup.dupGroups(chain, pairs, 50).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reliable === chainGroups)
     // the reliable path actually wrote checkpoint data to the configured dir

@@ -64,7 +64,7 @@ class PageRankSpec extends SparkTestBase {
     val e0 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (4L, 5L), (5L, 6L))
       .toDF("src", "dst")
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val (df, rounds) = PageRank.ranksConvergedWithRounds(edges, 1L, 10, None, tolRel = 0.1)
+    val (df, rounds) = PageRank.ranksConvergedWithRounds(edges, 1L, 10, tolRel = 0.1)
     assert(rounds >= 2 && rounds <= 10) // non-trivial graph actually iterates
     val loop = df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     val unrolled = PageRank.ranks(edges, rounds).collect()
@@ -77,7 +77,7 @@ class PageRankSpec extends SparkTestBase {
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
     // uniform rank = 1e12/4 = 2.5e11; tolRel 0.1 → tol = 2.5e10
     val tol = 25000000000L
-    val (df, rounds) = PageRank.ranksConvergedWithRounds(edges, 1L, 10, None, tolRel = 0.1)
+    val (df, rounds) = PageRank.ranksConvergedWithRounds(edges, 1L, 10, tolRel = 0.1)
     // one more unrolled round moves nothing by more than tol — the
     // contraction guarantees later rounds move even less
     val a = df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
