@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.Releases
 
 /** Every eager lineage cut in graft. The policy is Spark's own
   * checkpoint dir (`spark.checkpoint.dir`): with one, a snapshot is a
@@ -19,10 +20,13 @@ object Snapshots {
   /** Releases a snapshot once nothing reads it: the blocks and the
     * checkpoint files of its own plan's RDD (`Dataset.unpersist()`
     * frees neither), never an RDD found by diffing the SparkContext's
-    * persistent-RDD registry, which a concurrent job may share. */
+    * persistent-RDD registry, which a concurrent job may share. The
+    * blocks go without `RDD.unpersist`'s per-call warning that a
+    * local checkpoint's lineage is truncated: a freed snapshot is
+    * never read again. */
   def free(snapshot: DataFrame): Unit = snapshot.queryExecution.analyzed match {
     case lr: LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
+      Releases.unpersistRDD(lr.rdd)
       lr.rdd.getCheckpointFile.map(new Path(_)).foreach(p =>
         p.getFileSystem(snapshot.sparkSession.sparkContext.hadoopConfiguration).delete(p, true))
     case other => throw new IllegalArgumentException(

@@ -16,6 +16,8 @@ import graft.Snapshots.SnapshotOps
   * filtering removes them from candidate generation by construction
   * (ubiquitous shingles have max document frequency, so they sort out
   * of every prefix); residual band-join skew is AQE skew-join's job.
+  * Every PPJoin path, inline or over an index, slices arrays sorted
+  * under one df order ([[dfOrdered]], [[prefixLen]]).
   */
 object Dedup {
 
@@ -108,7 +110,9 @@ object Dedup {
       .unionByName(withShingles(batch, 1).withColumn("is_delta", lit(true)))
       .cache()
     val pairs = incrementalAdaptive(union, threshold).snapshot()
-    union.unpersist()
+    // the mask path caches relations built over the union too
+    // (incrementalByMask's m/dm/im); they go with it
+    org.apache.spark.sql.graftbridge.Releases.uncacheCascading(union)
     pairs
   }
 
@@ -242,8 +246,8 @@ object Dedup {
     // instead of 1), leaving nBands = trueMaxHam — one band short of
     // the pigeonhole requirement, silently dropping boundary pairs
     // with |A Δ B| = trueMaxHam and J exactly = t. The +1e-9 nudge
-    // mirrors ngramJaccardPrefix's floor-vs-ceil guard: an extra band
-    // is only cost, never a miss.
+    // mirrors prefixLen's floor-vs-ceil guard: an extra band is only
+    // cost, never a miss.
     val maxHam = math.max(0, math.floor(pop * (1.0 - threshold) + 1e-9).toInt)
     val nBands = maxHam + 1
     val bounds = (0 to nBands).map(k => k * span / nBands)
@@ -307,43 +311,108 @@ object Dedup {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against the full
-    * shingle sets; output = (doc_a, doc_b, jaccard ≥ threshold). The
-    * division is set-size ints → one IEEE op → oracle-exact. Uses the
-    * bitmap fast path when the caller's vocabulary probe allowed it —
-    * the probe result is passed IN, never recomputed here, so the
-    * large-vocab path costs exactly one vocabulary question per
-    * operator invocation. */
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double,
-      masksOpt: Option[DataFrame]): DataFrame = {
-    val scored = masksOpt match {
-      case Some(masks) =>
-        val ma = masks.select(col("doc_id").as("doc_a"),
-          col("comp").as("comp_a"), col("mask").as("mask_a"))
-        val mb = masks.select(col("doc_id").as("doc_b"),
-          col("comp").as("comp_b"), col("mask").as("mask_b"))
-        cand.join(broadcast(ma), "doc_a").join(broadcast(mb), "doc_b")
-          .select(col("doc_a"), col("doc_b"),
-            // cross-component docs share no shingles: jaccard 0 by
-            // construction, and their bit patterns are incomparable
-            when(col("comp_a") === col("comp_b"),
-              maskJaccard(col("mask_a"), col("mask_b")))
-              .otherwise(lit(0.0)).as("jaccard"))
-      case None =>
-        val sa = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"))
-        val sb = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"))
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-          .select(col("doc_a"), col("doc_b"),
-            (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-    }
-    scored.filter(col("jaccard") >= threshold) // callers order the final output
+  /** Candidate pairs (columns `a`, `b`) scored on the full shingle
+    * sets of `sh` by `score(sh_a, sh_b)`, kept at ≥ `t`; output =
+    * (a, b, `name`). The division is set-size ints → one IEEE op →
+    * oracle-exact. Callers order the final output. */
+  private def verify(cand: DataFrame, sh: DataFrame, a: String, b: String,
+      name: String, t: Double)(score: (Column, Column) => Column): DataFrame = {
+    val sa = sh.select(col("doc_id").as(a), col("shingles").as("sh_a"))
+    val sb = sh.select(col("doc_id").as(b), col("shingles").as("sh_b"))
+    cand.join(sa, a).join(sb, b)
+      .select(col(a), col(b), score(col("sh_a"), col("sh_b")).as(name))
+      .filter(col(name) >= t)
   }
+
+  /** Exact-Jaccard verification: (a, b, jaccard ≥ threshold). */
+  private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double,
+      a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    verify(cand, sh, a, b, "jaccard", threshold)((x, y) =>
+      size(array_intersect(x, y)).cast("double") / size(array_union(x, y)))
+
+  /** Exact-containment verification of (doc_sub, doc_super, …)
+    * candidate rows: self pairs and repeats are dropped here, then
+    * (doc_sub, doc_super, containment = |A∩B| / |A| ≥ τ). */
+  private def verifyContainment(cand: DataFrame, sh: DataFrame, tau: Double): DataFrame =
+    verify(cand.filter(col("doc_sub") =!= col("doc_super"))
+        .select(col("doc_sub"), col("doc_super")).distinct(),
+      sh, "doc_sub", "doc_super", "containment", tau)((x, y) =>
+      size(array_intersect(x, y)).cast("double") / size(x))
+
+  /** PPJoin prefix length of an n-element set at threshold t:
+    * n − ⌊t·n⌋ + 1, for Jaccard and containment alike (a containment
+    * prefix must allow ⌊(1−τ)n⌋ misses, which this bounds too). Not
+    * n − ⌈t·n⌉ + 1, and never (1−t) in floating point: when t·n is an
+    * exact integer (the J = t boundary pairs) the IEEE product rounds
+    * a hair HIGH (0.9·20 → 18.000…04) and 1.0−0.9 a hair LOW, so either
+    * form loses the one slot the pigeonhole guarantee needs. floor
+    * costs at most one extra probe token; verification keeps output
+    * exact. */
+  private def prefixLen(n: Column, t: Double): Column = n - floor(n * lit(t)) + lit(1)
+
+  /** Global document frequency (sh, df) of the shingles of `sh`. */
+  private def docFreq(sh: DataFrame): DataFrame =
+    sh.select(explode(col("shingles")).as("sh")).groupBy("sh").agg(count(lit(1)).as("df"))
+
+  /** Each doc's shingles sorted by (df ASC, shingle ASC) under `dfreq`,
+    * shingles `dfreq` lacks at df 0; `keep` columns ride along. Under
+    * that one total order every PPJoin prefix is a slice
+    * ([[prefixOf]]); prefix filtering is exact under ANY fixed total
+    * order, so whose df it is (the corpus', the index side's, a stale
+    * persisted one) tunes candidate volume, never the answer. */
+  private def dfOrdered(sh: DataFrame, dfreq: DataFrame, keep: String*): DataFrame = {
+    val by = ("doc_id" +: keep).map(col)
+    sh.select(by :+ explode(col("shingles")).as("sh"): _*)
+      .join(dfreq, Seq("sh"), "left")
+      .na.fill(0L, Seq("df"))
+      .groupBy(by: _*)
+      .agg(expr("transform(array_sort(collect_list(struct(df, sh))), x -> x.sh)")
+        .as("shingles"))
+  }
+
+  /** (`id`, sh) for the [[prefixLen]] first shingles of each
+    * [[dfOrdered]] array. */
+  private def prefixOf(sorted: DataFrame, t: Double, id: String): DataFrame =
+    sorted.select(col("doc_id").as(id), explode(slice(col("shingles"), lit(1),
+      prefixLen(size(col("shingles")), t).cast("int"))).as("sh"))
+
+  /** (`id`, sh) for every shingle of each doc. */
+  private def tokensOf(sh: DataFrame, id: String): DataFrame =
+    sh.select(col("doc_id").as(id), explode(col("shingles")).as("sh"))
+
+  /** PPJoin Jaccard self-join over [[dfOrdered]] arrays: two sets with
+    * J ≥ t share a shingle in their prefixes, so candidates are the
+    * prefix equi-join, verified on the full sets. */
+  private def jaccardSelfPrefix(sorted: DataFrame, threshold: Double): DataFrame = {
+    val prefix = prefixOf(sorted, threshold, "doc_id")
+    val a = prefix.as("a"); val b = prefix.as("b")
+    val cand = a.join(b, col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    verifyJaccard(cand, sorted, threshold)
+  }
+
+  /** Cross-side PPJoin (see [[incrementalDedup]]): delta prefixes ×
+    * index prefixes of [[dfOrdered]] arrays carrying `is_delta`;
+    * output (doc_new, doc_old, jaccard). */
+  private def jaccardCrossPrefix(sorted: DataFrame, threshold: Double): DataFrame = {
+    val cand = prefixOf(sorted.filter(col("is_delta")), threshold, "doc_new")
+      .join(prefixOf(sorted.filter(!col("is_delta")), threshold, "doc_old"), "sh")
+      .select(col("doc_new"), col("doc_old")).distinct()
+    verifyJaccard(cand, sorted, threshold, "doc_new", "doc_old")
+  }
+
+  /** PPJoin containment self-join over [[dfOrdered]] arrays (dd11's
+    * asymmetric rule): the contained side's prefix against the
+    * container side's FULL token list. */
+  private def containSelfPrefix(sorted: DataFrame, tau: Double): DataFrame =
+    verifyContainment(prefixOf(sorted, tau, "doc_sub")
+      .join(tokensOf(sorted, "doc_super"), "sh"), sorted, tau)
 
   /** dd2: all-pairs n-gram Jaccard ≥ threshold, EXACT, via prefix
     * filtering (the PPJoin family): order every doc's shingles by
     * ascending global document frequency and keep only the first
-    * ⌊n·(1−t)⌋+1 — two sets with Jaccard ≥ t MUST share a shingle in
+    * n − ⌊t·n⌋ + 1 — two sets with Jaccard ≥ t MUST share a shingle in
     * those prefixes, so the candidate join runs on each doc's rarest
     * ~(1−t) fraction of shingles instead of the full inverted index
     * (where one ubiquitous token alone generates df² pairs — quadratic
@@ -362,7 +431,7 @@ object Dedup {
     val sh = withShingles(docs, n, tokensExpr).cache()
     smallVocabMasks(sh) match {
       case Some(masks) => jaccardByMask(masks, threshold)
-      case None        => ngramJaccardPrefix(sh, threshold)
+      case None        => jaccardSelfPrefix(dfOrdered(sh, docFreq(sh)), threshold)
     }
   }
 
@@ -527,29 +596,6 @@ object Dedup {
     }
   }
 
-  /** Large-vocab exact path: PPJoin-style prefix filtering. */
-  private def ngramJaccardPrefix(sh: DataFrame, threshold: Double): DataFrame = {
-    val inv = sh.select(col("doc_id"), size(col("shingles")).as("n_sh"),
-      explode(col("shingles")).as("sh"))
-    val dfreq = inv.groupBy("sh").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-    val prefix = inv.join(dfreq, "sh")
-      .withColumn("rn", row_number().over(w))
-      // n − ⌊t·n⌋ + 1, not n − ⌈t·n⌉ + 1: when t·n is an exact integer
-      // (the J = t boundary pairs) the IEEE product rounds a hair HIGH
-      // (0.9·20 → 18.000…04), ceil jumps a whole unit and the prefix
-      // loses the one slot the pigeonhole guarantee needs. floor costs
-      // at most one extra probe token; verification keeps output exact.
-      .filter(col("rn") <= col("n_sh") - floor(col("n_sh") * lit(threshold)) + lit(1))
-      .select(col("doc_id"), col("sh"))
-    val a = prefix.as("a"); val b = prefix.as("b")
-    val cand = a.join(b, col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    verifyJaccard(cand, sh, threshold, None)
-  }
-
   /** Materialized shingle index (round 7) — the corpus-static stage of
     * dd2/dd3, written once per corpus version and probed per run: the
     * last per-run recomputation in the dedup family now that groups/
@@ -580,18 +626,13 @@ object Dedup {
       dict.toDF("sh", "comp", "bit")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/dict")
     }
-    val inv = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val dfreq = inv.groupBy("sh").agg(count(lit(1)).as("df"))
+    val dfreq = docFreq(sh)
     // df stats are PERSISTED (round 8): the total order the arrays were
     // sorted under, so delta appends can sort their docs under the SAME
     // order (prefix filtering is correct under any fixed global order —
     // dd9's index-side-df argument)
     dfreq.write.mode("overwrite").parquet(s"$path/df")
-    inv.join(dfreq, "sh")
-      .groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(df, sh))), x -> x.sh)")
-        .as("shingles"))
-      .write.mode("overwrite").parquet(s"$path/sh")
+    dfOrdered(sh, dfreq).write.mode("overwrite").parquet(s"$path/sh")
     sh.unpersist(); ()
   }
 
@@ -622,36 +663,39 @@ object Dedup {
   def shingleAppendDelta(deltaDocs: DataFrame, n: Int, path: String): Unit = {
     val spark = deltaDocs.sparkSession
     val sh = withShingles(deltaDocs, n).cache()
-    val dfreq = graft.Tables.parquet(spark, s"$path/df")
-    sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .join(dfreq, Seq("sh"), "left")
-      .na.fill(0L, Seq("df"))
-      .groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(df, sh))), x -> x.sh)")
-        .as("shingles"))
+    dfOrdered(sh, graft.Tables.parquet(spark, s"$path/df"))
       .write.mode("append").parquet(s"$path/sh")
-    if (graft.LayoutStore.exists(spark, s"$path/masks")) {
-      val dict = graft.Tables.parquet(spark, s"$path/dict")
-      val enc = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
-        .join(broadcast(dict), Seq("sh"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_sh"), count(col("comp")).as("n_known"),
-          countDistinct(col("comp")).as("n_comps"),
-          min(col("comp")).as("comp"),
-          bit_or(expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("mask"))
-        .cache()
-      val demote = enc
-        .filter(col("n_known") < col("n_sh") || col("n_comps") > 1)
-        .limit(1).count() > 0
-      if (demote) {
-        graft.LayoutStore.delete(spark, s"$path/masks")
-        graft.LayoutStore.delete(spark, s"$path/dict")
-      } else
-        enc.select(col("doc_id"), col("comp"), col("mask"))
-          .write.mode("append").parquet(s"$path/masks")
-      enc.unpersist()
-    }
+    if (graft.LayoutStore.exists(spark, s"$path/masks"))
+      encodeDelta(sh, graft.Tables.parquet(spark, s"$path/dict")) match {
+        case None =>
+          graft.LayoutStore.delete(spark, s"$path/masks")
+          graft.LayoutStore.delete(spark, s"$path/dict")
+        case Some(enc) =>
+          enc.select(col("doc_id"), col("comp"), col("mask"))
+            .write.mode("append").parquet(s"$path/masks")
+          enc.unpersist()
+      }
     sh.unpersist(); ()
+  }
+
+  /** A delta's shingle sets encoded against a persisted component
+    * dictionary: Some(cached (doc_id, comp, mask, …) rows, which the
+    * caller unpersists), or None — demoted — when some delta doc has a
+    * shingle the dictionary lacks or spans two components
+    * ([[shingleAppendDelta]]'s soundness condition). */
+  private def encodeDelta(sh: DataFrame, dict: DataFrame): Option[DataFrame] = {
+    val enc = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
+      .join(broadcast(dict), Seq("sh"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_sh"), count(col("comp")).as("n_known"),
+        countDistinct(col("comp")).as("n_comps"),
+        min(col("comp")).as("comp"),
+        bit_or(expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("mask"))
+      .cache()
+    val demote = enc
+      .filter(col("n_known") < col("n_sh") || col("n_comps") > 1)
+      .limit(1).count() > 0
+    if (demote) { enc.unpersist(); None } else Some(enc)
   }
 
   /** dd2 probing a pre-built shingle index: candidates come straight
@@ -671,7 +715,7 @@ object Dedup {
       path: String, threshold: Double): DataFrame =
     if (graft.LayoutStore.exists(spark, s"$path/masks"))
       jaccardByMask(graft.Tables.parquet(spark, s"$path/masks"), threshold)
-    else ngramJaccardPrefixSorted(graft.Tables.parquet(spark, s"$path/sh"), threshold)
+    else jaccardSelfPrefix(graft.Tables.parquet(spark, s"$path/sh"), threshold)
 
   /** dd3 probing the same index — the mask path is shared with dd2
     * (tiny vocabularies make exact popcounts strictly dominate LSH,
@@ -689,9 +733,8 @@ object Dedup {
   /** dd11 probing the shingle index (round 7 — dd11 was the last
     * inline tokenizer among the top bench singles): mask
     * representation → the popcount containment machinery directly;
-    * array representation → prefix-by-slice of the ⌊(1−τ)n⌋+1 rarest
-    * tokens against the FULL inverted index of the container side
-    * (containmentPrefix's asymmetric rule on pre-sorted arrays). */
+    * array representation → [[containSelfPrefix]] on the stored
+    * df-ordered arrays. */
   def containmentProbe(spark: org.apache.spark.sql.SparkSession, path: String,
       tau: Double): DataFrame =
     sortedBy(containmentProbePairs(spark, path, tau),
@@ -704,7 +747,7 @@ object Dedup {
       path: String, tau: Double): DataFrame =
     if (graft.LayoutStore.exists(spark, s"$path/masks"))
       containmentByMask(graft.Tables.parquet(spark, s"$path/masks"), tau)
-    else containmentPrefixSorted(graft.Tables.parquet(spark, s"$path/sh"), tau)
+    else containSelfPrefix(graft.Tables.parquet(spark, s"$path/sh"), tau)
 
   /** Materialized containment index: the full containment-pair set
     * (probed off a shingle index) plus the CC labeling over the
@@ -774,38 +817,15 @@ object Dedup {
       .unionByName(intra.select(col("o_id").as("doc_sub"), col("d_id").as("doc_super")))
       .distinct()
       .withColumn("containment", lit(1.0))
-    val bits = groups.select(col("comp"), col("mask"), col("touched"),
-        explode(expr("filter(transform(sequence(0, 63), i -> " +
-          "CASE WHEN (mask >> i) & 1 = 1 THEN i ELSE -1 END), i -> i >= 0)")).as("bit"))
-      .cache()
-    val dfreq = bits.groupBy("comp", "bit").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("comp"), col("mask")).orderBy(col("df"), col("bit"))
-    val pfx = bits.join(dfreq, Seq("comp", "bit"))
-      .withColumn("rn", row_number().over(w))
-      // n − ⌊τn⌋ + 1: containmentByMask's boundary-exact form
-      .filter(col("rn") <=
-        bit_count(col("mask")) - floor(lit(tau) * bit_count(col("mask"))) + lit(1))
-      .select(col("comp"), col("mask").as("mask_sub"),
-        col("touched").as("sub_t"), col("bit"))
+    val (bits, pfx) = maskBitPrefix(groups, tau, "touched")
+    val sub = pfx.select(col("comp"), col("mask").as("mask_sub"),
+      col("touched").as("sub_t"), col("bit"))
     val full = bits.select(col("comp"), col("mask").as("mask_sup"),
       col("touched").as("sup_t"), col("bit"))
-    val cand = pfx.filter(col("sub_t")).join(full, Seq("comp", "bit"))
-      .unionByName(pfx.filter(!col("sub_t"))
+    val cand = sub.filter(col("sub_t")).join(full, Seq("comp", "bit"))
+      .unionByName(sub.filter(!col("sub_t"))
         .join(full.filter(col("sup_t")), Seq("comp", "bit")))
-      .filter(col("mask_sub") =!= col("mask_sup"))
-      .select(col("comp"), col("mask_sub"), col("mask_sup")).distinct()
-    val verified = cand
-      .withColumn("containment",
-        bit_count(col("mask_sub").bitwiseAND(col("mask_sup"))).cast("double") /
-          bit_count(col("mask_sub")).cast("double"))
-      .filter(col("containment") >= tau)
-    val ga = groups.select(col("comp"), col("mask").as("mask_sub"), col("ids").as("ids_a"))
-    val gb = groups.select(col("comp"), col("mask").as("mask_sup"), col("ids").as("ids_b"))
-    val cross = verified
-      .join(ga, Seq("comp", "mask_sub")).join(gb, Seq("comp", "mask_sup"))
-      .select(explode(col("ids_a")).as("doc_sub"), col("ids_b"), col("containment"))
-      .select(col("doc_sub"), explode(col("ids_b")).as("doc_super"), col("containment"))
+    val cross = maskContainPairs(cand, groups, tau)
       // delta-endpoint filter: the delta id set is batch-sized —
       // broadcast flags, never a shuffle of the expansion
       .join(broadcast(dIds.select(col("doc_id").as("doc_sub"),
@@ -818,7 +838,7 @@ object Dedup {
   }
 
   /** Containment pairs with at least one DELTA endpoint — the
-    * incremental sibling of [[containmentPrefixSorted]]. Three pair
+    * incremental sibling of [[containSelfPrefix]]. Three pair
     * classes, two candidate arms, both delta-bounded in OUTPUT:
     * delta-contained-in-anything (delta prefixes × the full inverted
     * index — O(|delta_pfx| · df) candidates, incrementalDedup's
@@ -832,24 +852,10 @@ object Dedup {
     * array order — order only tunes candidate volume. */
   private def containIngestPairs(standSh: DataFrame, deltaSh: DataFrame,
       tau: Double): DataFrame = {
-    val n = size(col("shingles"))
-    val pfxLen = (n - floor(lit(tau) * n) + lit(1)).cast("int")
-    def pfx(sh: DataFrame) = sh.select(col("doc_id").as("doc_sub"),
-      explode(slice(col("shingles"), lit(1), pfxLen)).as("sh"))
-    def full(sh: DataFrame) = sh.select(col("doc_id").as("doc_super"),
-      explode(col("shingles")).as("sh"))
     val all = standSh.unionByName(deltaSh)
-    val cand = pfx(deltaSh).join(full(all), "sh")
-      .unionByName(pfx(standSh).join(full(deltaSh), "sh"))
-      .filter(col("doc_sub") =!= col("doc_super"))
-      .select(col("doc_sub"), col("doc_super")).distinct()
-    val sa = all.select(col("doc_id").as("doc_sub"), col("shingles").as("sh_a"))
-    val sb = all.select(col("doc_id").as("doc_super"), col("shingles").as("sh_b"))
-    cand.join(sa, "doc_sub").join(sb, "doc_super")
-      .select(col("doc_sub"), col("doc_super"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(col("sh_a"))).as("containment"))
-      .filter(col("containment") >= tau)
+    val cand = prefixOf(deltaSh, tau, "doc_sub").join(tokensOf(all, "doc_super"), "sh")
+      .unionByName(prefixOf(standSh, tau, "doc_sub").join(tokensOf(deltaSh, "doc_super"), "sh"))
+    verifyContainment(cand, all, tau)
   }
 
   /** Append a delta batch to a materialized containment index WITHOUT
@@ -930,16 +936,9 @@ object Dedup {
   private def containStage(deltaDocs: DataFrame, n: Int, shinglePath: String,
       path: String, tau: Double, stage: String): Unit = {
     val spark = deltaDocs.sparkSession
-    // delta arrays under the index-side df order; unseen shingles df 0
-    val dfreq = graft.Tables.parquet(spark, s"$shinglePath/df")
-    val deltaSh = withShingles(deltaDocs, n)
-      .select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .join(dfreq, Seq("sh"), "left")
-      .na.fill(0L, Seq("df"))
-      .groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(df, sh))), x -> x.sh)")
-        .as("shingles"))
-      .cache()
+    // delta arrays under the index-side df order
+    val deltaSh = dfOrdered(withShingles(deltaDocs, n),
+      graft.Tables.parquet(spark, s"$shinglePath/df")).cache()
     // ALL delta ids, not just shingled ones: a token-less delta doc
     // contributes no pairs but must still get its singleton labels row
     // (the rebuild labels every document)
@@ -952,39 +951,22 @@ object Dedup {
     // so that batch falls back to the always-exact array path (the
     // shingle index's own append is what demotes masks/ — this append
     // does not mutate a layout it doesn't own)
-    var maskEnc: Option[DataFrame] = None // cached encoding, freed after the pairs write
-    val maskPairs =
+    val maskEnc =
       if (!graft.LayoutStore.exists(spark, s"$shinglePath/masks")) None
-      else {
-        val dict = graft.Tables.parquet(spark, s"$shinglePath/dict")
-        val enc = withShingles(deltaDocs, n)
-          .select(col("doc_id"), explode(col("shingles")).as("sh"))
-          .join(broadcast(dict), Seq("sh"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_sh"), count(col("comp")).as("n_known"),
-            countDistinct(col("comp")).as("n_comps"),
-            min(col("comp")).as("comp"),
-            bit_or(expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("mask"))
-          .cache()
-        val demote = enc
-          .filter(col("n_known") < col("n_sh") || col("n_comps") > 1)
-          .limit(1).count() > 0
-        if (demote) { enc.unpersist(); None }
-        else {
-          maskEnc = Some(enc)
-          val standMasks = graft.Tables.parquet(spark, s"$shinglePath/masks")
-            .join(deltaIds, Seq("doc_id"), "left_anti")
-            .withColumn("is_delta", lit(false))
-          val deltaMasks = enc.select(col("doc_id"), col("comp"), col("mask"))
-            .withColumn("is_delta", lit(true))
-          Some(containmentByMaskCross(
-            standMasks.unionByName(deltaMasks), tau))
-        }
-      }
-    val standSh = graft.Tables.parquet(spark, s"$shinglePath/sh")
-      .join(deltaIds, Seq("doc_id"), "left_anti")
-    maskPairs.getOrElse(containIngestPairs(standSh, deltaSh, tau))
-      .write.mode("overwrite").parquet(s"$stage/pairs")
+      else encodeDelta(deltaSh, graft.Tables.parquet(spark, s"$shinglePath/dict"))
+    val pairs = maskEnc match {
+      case Some(enc) =>
+        val standMasks = graft.Tables.parquet(spark, s"$shinglePath/masks")
+          .join(deltaIds, Seq("doc_id"), "left_anti")
+          .withColumn("is_delta", lit(false))
+        val deltaMasks = enc.select(col("doc_id"), col("comp"), col("mask"))
+          .withColumn("is_delta", lit(true))
+        containmentByMaskCross(standMasks.unionByName(deltaMasks), tau)
+      case None =>
+        containIngestPairs(graft.Tables.parquet(spark, s"$shinglePath/sh")
+          .join(deltaIds, Seq("doc_id"), "left_anti"), deltaSh, tau)
+    }
+    pairs.write.mode("overwrite").parquet(s"$stage/pairs")
     maskEnc.foreach(_.unpersist())
     // relabel via contraction: standing endpoints collapse to their
     // group labels, so the union-find graph is delta-sized
@@ -1019,42 +1001,6 @@ object Dedup {
     deltaSh.unpersist(); ()
   }
 
-  /** containmentPrefix over df-sorted index arrays: contained-side
-    * prefix = slice (same no-(1−τ) floor form), container side =
-    * full explode; verification divides by |A| only. */
-  private def containmentPrefixSorted(sh: DataFrame, tau: Double): DataFrame = {
-    val n = size(col("shingles"))
-    val pfxLen = (n - floor(lit(tau) * n) + lit(1)).cast("int")
-    val pfx = sh.select(col("doc_id").as("doc_sub"),
-      explode(slice(col("shingles"), lit(1), pfxLen)).as("sh"))
-    val full = sh.select(col("doc_id").as("doc_super"), explode(col("shingles")).as("sh"))
-    val cand = pfx.join(full, "sh")
-      .filter(col("doc_sub") =!= col("doc_super"))
-      .select(col("doc_sub"), col("doc_super")).distinct()
-    val sa = sh.select(col("doc_id").as("doc_sub"), col("shingles").as("sh_a"))
-    val sb = sh.select(col("doc_id").as("doc_super"), col("shingles").as("sh_b"))
-    cand.join(sa, "doc_sub").join(sb, "doc_super")
-      .select(col("doc_sub"), col("doc_super"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(col("sh_a"))).as("containment"))
-      .filter(col("containment") >= tau)
-  }
-
-  /** Prefix path over index arrays already in global-df order: the
-    * prefix is a SLICE, not a df-join + window. Same floor form as
-    * ngramJaccardPrefix (boundary-exact at J = t). */
-  private def ngramJaccardPrefixSorted(sh: DataFrame, threshold: Double): DataFrame = {
-    val n = size(col("shingles"))
-    val pfxLen = (n - floor(n * lit(threshold)) + lit(1)).cast("int")
-    val prefix = sh.select(col("doc_id"),
-      explode(slice(col("shingles"), lit(1), pfxLen)).as("sh"))
-    val a = prefix.as("a"); val b = prefix.as("b")
-    val cand = a.join(b, col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    verifyJaccard(cand, sh, threshold, None)
-  }
-
   /** dd11: containment (near-superset) pairs — the ASYMMETRIC dedup
     * relation Jaccard misses: C(A,B) = |A∩B| / |A| ≥ τ says A is
     * (nearly) embedded in B, even when B is far larger — quoted
@@ -1064,7 +1010,8 @@ object Dedup {
     *
     * Same adaptive two-path shape as dd2, with the prefix rule changed
     * for asymmetry: A may miss at most ⌊(1−τ)·|A|⌋ of its own tokens,
-    * so a prefix of A's ⌊(1−τ)|A|⌋+1 globally-rarest tokens must hit B
+    * so a prefix of A's |A| − ⌊τ·|A|⌋ + 1 ([[prefixLen]]) globally-
+    * rarest tokens must hit B
     * — but B can be missed NOWHERE, so the container side is indexed
     * on ALL its tokens, not a prefix. Candidate volume is therefore
     * Σ_token pfx(token)·df(token) — linear in the container index like
@@ -1078,7 +1025,7 @@ object Dedup {
     val sh = withShingles(docs, n).cache()
     val pairs = smallVocabMasks(sh) match {
       case Some(masks) => containmentByMask(masks, tau)
-      case None        => containmentPrefix(sh, tau)
+      case None        => containSelfPrefix(dfOrdered(sh, docFreq(sh)), tau)
     }
     sortedBy(pairs, col("doc_sub"), col("doc_super"))
   }
@@ -1152,7 +1099,7 @@ object Dedup {
   /** Small-vocab containment: collapse to distinct (comp, mask) —
     * identical sets are interchangeable, so ordered pairs inside one
     * mask group are containment exactly 1.0 — then probe each mask's
-    * ⌊(1−τ)·popcount⌋+1 rarest BITS against every mask's full bit
+    * [[prefixLen]] rarest BITS against every mask's full bit
     * list (comp-local equi-join on the bit), popcount-verify. Mask
     * collapse is the scale lever: candidate work is in distinct
     * signatures, never documents. */
@@ -1164,64 +1111,48 @@ object Dedup {
       .filter(col("da") =!= col("db"))
       .select(col("da").as("doc_sub"), col("db").as("doc_super"),
         lit(1.0).as("containment"))
-    val bits = groups.select(col("comp"), col("mask"),
+    val (bits, pfx) = maskBitPrefix(groups, tau)
+    val cand = pfx.select(col("comp"), col("mask").as("mask_sub"), col("bit"))
+      .join(bits.select(col("comp"), col("mask").as("mask_sup"), col("bit")),
+        Seq("comp", "bit"))
+    intra.union(maskContainPairs(cand, groups, tau))
+  }
+
+  /** The bit rows (comp, mask, `keep`…, bit) of distinct-mask `groups`,
+    * cached, and the subset that is each mask's PPJoin prefix
+    * ([[prefixLen]] of its popcount) under the per-component
+    * (df ASC, bit ASC) order: (bits, prefix). */
+  private def maskBitPrefix(groups: DataFrame, tau: Double,
+      keep: String*): (DataFrame, DataFrame) = {
+    val bits = groups.select((Seq("comp", "mask") ++ keep).map(col) :+
         explode(expr("filter(transform(sequence(0, 63), i -> " +
-          "CASE WHEN (mask >> i) & 1 = 1 THEN i ELSE -1 END), i -> i >= 0)")).as("bit"))
+          "CASE WHEN (mask >> i) & 1 = 1 THEN i ELSE -1 END), i -> i >= 0)")).as("bit"): _*)
       .cache()
     val dfreq = bits.groupBy("comp", "bit").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("comp"), col("mask")).orderBy(col("df"), col("bit"))
     val pfx = bits.join(dfreq, Seq("comp", "bit"))
       .withColumn("rn", row_number().over(w))
-      // prefix = n − ⌊τn⌋ + 1: never computes (1−τ) in floating point —
-      // 1.0−0.9 rounds DOWN, and exactly when τn is an integer (the
-      // boundary pairs, C = τ precisely) ⌊(1−τ)n⌋ undercounts the
-      // allowed misses by one and the prefix silently drops true pairs
-      .filter(col("rn") <=
-        bit_count(col("mask")) - floor(lit(tau) * bit_count(col("mask"))) + lit(1))
-      .select(col("comp"), col("mask").as("mask_sub"), col("bit"))
-    val full = bits.select(col("comp"), col("mask").as("mask_sup"), col("bit"))
-    val cand = pfx.join(full, Seq("comp", "bit"))
+      .filter(col("rn") <= prefixLen(bit_count(col("mask")), tau))
+    (bits, pfx)
+  }
+
+  /** Candidate (comp, mask_sub, mask_sup, …) rows popcount-verified
+    * (containment ≥ τ) and expanded to their groups' doc pairs:
+    * (doc_sub, doc_super, containment). */
+  private def maskContainPairs(cand: DataFrame, groups: DataFrame, tau: Double): DataFrame = {
+    val verified = cand
       .filter(col("mask_sub") =!= col("mask_sup"))
       .select(col("comp"), col("mask_sub"), col("mask_sup")).distinct()
-    val verified = cand
       .withColumn("containment",
         bit_count(col("mask_sub").bitwiseAND(col("mask_sup"))).cast("double") /
           bit_count(col("mask_sub")).cast("double"))
       .filter(col("containment") >= tau)
     val ga = groups.select(col("comp"), col("mask").as("mask_sub"), col("ids").as("ids_a"))
     val gb = groups.select(col("comp"), col("mask").as("mask_sup"), col("ids").as("ids_b"))
-    val cross = verified.join(ga, Seq("comp", "mask_sub")).join(gb, Seq("comp", "mask_sup"))
+    verified.join(ga, Seq("comp", "mask_sub")).join(gb, Seq("comp", "mask_sup"))
       .select(explode(col("ids_a")).as("doc_sub"), col("ids_b"), col("containment"))
       .select(col("doc_sub"), explode(col("ids_b")).as("doc_super"), col("containment"))
-    intra.union(cross)
-  }
-
-  /** Large-vocab containment: string-shingle twin of the mask path —
-    * df-ascending prefix of the contained side against the FULL
-    * inverted index of the container side. */
-  private def containmentPrefix(sh: DataFrame, tau: Double): DataFrame = {
-    val inv = sh.select(col("doc_id"), size(col("shingles")).as("n_sh"),
-      explode(col("shingles")).as("sh"))
-    val dfreq = inv.groupBy("sh").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-    val pfx = inv.join(dfreq, "sh")
-      .withColumn("rn", row_number().over(w))
-      // same no-(1−τ) form as the mask path (see comment there)
-      .filter(col("rn") <= col("n_sh") - floor(lit(tau) * col("n_sh")) + lit(1))
-      .select(col("doc_id").as("doc_sub"), col("sh"))
-    val full = inv.select(col("doc_id").as("doc_super"), col("sh"))
-    val cand = pfx.join(full, "sh")
-      .filter(col("doc_sub") =!= col("doc_super"))
-      .select(col("doc_sub"), col("doc_super")).distinct()
-    val sa = sh.select(col("doc_id").as("doc_sub"), col("shingles").as("sh_a"))
-    val sb = sh.select(col("doc_id").as("doc_super"), col("shingles").as("sh_b"))
-    cand.join(sa, "doc_sub").join(sb, "doc_super")
-      .select(col("doc_sub"), col("doc_super"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(col("sh_a"))).as("containment"))
-      .filter(col("containment") >= tau)
   }
 
   /** dd9: incremental dedup — near-dup pairs between a new DELTA batch
@@ -1276,7 +1207,8 @@ object Dedup {
       case Some(masks) =>
         incrementalByMask(masks.join(
           sh.select(col("doc_id"), col("is_delta")), "doc_id"), threshold)
-      case None => incrementalPrefix(sh, threshold)
+      case None => jaccardCrossPrefix(
+        dfOrdered(sh, docFreq(sh.filter(!col("is_delta"))), "is_delta"), threshold)
     }
 
   /** dd10: incremental duplicate-GROUP maintenance — fold a delta
@@ -1417,8 +1349,9 @@ object Dedup {
   private def incrementalByMask(masksIn: DataFrame, threshold: Double): DataFrame = {
     // m/dm/im stay cached for the LIFE of the returned (lazy) query —
     // the result plan references them, so they cannot be unpersisted
-    // here. The intended release point is the `Sessions.clearCaches`
-    // every bench rep / Verify entry performs
+    // here. They go with a cascading uncache of the input once the
+    // caller has snapshotted the pairs (ingestBatchPairs), else at the
+    // `Sessions.clearCaches` every bench rep / Verify entry performs
     // (the same convention as jaccardByMask's masks/groups and the
     // cached index relations; ADVICE r15 low).
     val m = masksIn.cache()
@@ -1493,35 +1426,6 @@ object Dedup {
       .select(col("doc_new"), explode(col("ids_old")).as("doc_old"), col("jaccard"))
   }
 
-  /** Cross-side PPJoin prefix filtering (see [[incrementalDedup]]). */
-  private def incrementalPrefix(sh: DataFrame, threshold: Double): DataFrame = {
-    val inv = sh.select(col("doc_id"), col("is_delta"),
-      size(col("shingles")).as("n_sh"), explode(col("shingles")).as("sh"))
-    val dfreq = inv.filter(!col("is_delta")).groupBy("sh").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-    val prefix = inv.join(dfreq, Seq("sh"), "left")
-      .na.fill(0L, Seq("df"))
-      .withColumn("rn", row_number().over(w))
-      // n − ⌊t·n⌋ + 1, not n − ⌈t·n⌉ + 1: when t·n is an exact integer
-      // (the J = t boundary pairs) the IEEE product rounds a hair HIGH
-      // (0.9·20 → 18.000…04), ceil jumps a whole unit and the prefix
-      // loses the one slot the pigeonhole guarantee needs. floor costs
-      // at most one extra probe token; verification keeps output exact.
-      .filter(col("rn") <= col("n_sh") - floor(col("n_sh") * lit(threshold)) + lit(1))
-      .select(col("doc_id"), col("is_delta"), col("sh"))
-    val a = prefix.filter(col("is_delta")).select(col("doc_id").as("doc_new"), col("sh"))
-    val b = prefix.filter(!col("is_delta")).select(col("doc_id").as("doc_old"), col("sh"))
-    val cand = a.join(b, "sh").select(col("doc_new"), col("doc_old")).distinct()
-    val sa = sh.select(col("doc_id").as("doc_new"), col("shingles").as("sh_a"))
-    val sb = sh.select(col("doc_id").as("doc_old"), col("shingles").as("sh_b"))
-    cand.join(sa, "doc_new").join(sb, "doc_old")
-      .select(col("doc_new"), col("doc_old"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   private val MinhashK = 64
   private val Bands = 16 // x 4 rows: P(candidate | s=0.9) ≈ 1 - 3.6e-8
 
@@ -1591,10 +1495,7 @@ object Dedup {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    // masks = None without re-probing: this path only runs after the
-    // caller's probe said large-vocab, and collapsing identical shingle
-    // sets leaves the vocabulary (the union of the sets) unchanged.
-    expandGroups(verifyJaccard(cand, sh, threshold, None), groups)
+    expandGroups(verifyJaccard(cand, sh, threshold), groups)
   }
 
   /** dd4: 64-bit SimHash over token counts; near-dup pairs = Hamming
@@ -2061,12 +1962,10 @@ object Dedup {
       .distinct()
     val ea = emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val eb = emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    cand.join(ea, "vec_a").join(eb, "vec_b")
+    sortedBy(cand.join(ea, "vec_a").join(eb, "vec_b")
       .select(col("vec_a"), col("vec_b"),
         call_function("graft_cosine", col("emb_a"), col("emb_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .localCheckpoint(false) // one cosine-verify pass, not two (sortedBy's rationale)
-      .orderBy(col("vec_a"), col("vec_b"))
+      .filter(col("cosine") >= threshold), col("vec_a"), col("vec_b"))
   }
 
   /** dd12: EXACT edit-distance (Levenshtein) near-dup pairs — the
@@ -2153,7 +2052,7 @@ object Dedup {
     val build = base.select(Seq(col("doc_id").as("doc_b"), col("text").as("text_b"),
         col("lang"), col("len").as("len_b"), col("bucket"))
       ++ fq.map(i => col(s"fq$i").as(s"fqb$i")): _*)
-    probe.join(build, Seq("lang", "bucket"))
+    sortedBy(probe.join(build, Seq("lang", "bucket"))
       .filter(col("doc_a") < col("doc_b") &&
         abs(col("len_a") - col("len_b")) <= maxDist &&
         fq.map(i => abs(col(s"fqa$i") - col(s"fqb$i")))
@@ -2165,8 +2064,6 @@ object Dedup {
         // BENCH_NOTES). Equal to the plain distance whenever ≤ k, so
         // the oracle's full levenshtein stays the same.
         levenshtein(col("text_a"), col("text_b"), maxDist).cast("long").as("dist"))
-      .filter(col("dist") >= 0 && col("dist") <= maxDist)
-      .localCheckpoint(false) // one DP pass, not two (sortedBy's rationale)
-      .orderBy(col("doc_a"), col("doc_b"))
+      .filter(col("dist") >= 0 && col("dist") <= maxDist), col("doc_a"), col("doc_b"))
   }
 }

@@ -997,6 +997,16 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.ngramJaccard(docs, 1, 0.9).collect()
     assert(got.length === 1, got.mkString(","))
     assert((got(0).getLong(0), got(0).getLong(1), got(0).getDouble(2)) === ((1L, 2L, 0.9)))
+    // the same pair through the cross-side path (doc 1 the delta, so
+    // its private tokens sort first at index-side df 0) and through the
+    // index probe's slice of the stored df-ordered arrays
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(rowsOf(Dedup.incrementalDedup(docs, 1, 0.9,
+      org.apache.spark.sql.functions.col("doc_id") === 1L)) === Seq((1L, 2L, 0.9)))
+    val idx = tempDir("graft-boundary-shidx")
+    Dedup.shingleWriteIndex(docs, 1, idx)
+    assert(rowsOf(Dedup.ngramJaccardProbe(spark, idx, 0.9)) === Seq((1L, 2L, 0.9)))
   }
 
   test("dd11 containment: asymmetric embeds found, boundary pair kept") {
