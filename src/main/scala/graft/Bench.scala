@@ -462,11 +462,11 @@ object Bench {
           ("ivf", Similarity.ivfWriteIndex(embBase, _), Similarity.ivfWriteIndex(emb, _),
             Similarity.ivfAppendDelta(embDelta, _)),
           ("pq", Similarity.pqWriteIndex(embBase, _, dim), Similarity.pqWriteIndex(emb, _, dim),
-            Similarity.pqAppendDelta(embDelta, _, dim)),
+            Similarity.pqAppendDelta(embDelta, _)),
           ("lsh", Similarity.lshWriteIndex(embBase, _, dim), Similarity.lshWriteIndex(emb, _, dim),
             Similarity.lshAppendDelta(embDelta, _, dim)),
           ("ivfpq", Similarity.ivfPqWriteIndex(embBase, _, dim),
-            Similarity.ivfPqWriteIndex(emb, _, dim), Similarity.ivfPqAppendDelta(embDelta, _, dim)),
+            Similarity.ivfPqWriteIndex(emb, _, dim), Similarity.ivfPqAppendDelta(embDelta, _)),
           // full = re-shuffle + rewrite the whole fact table; append =
           // hash-route the delta into new bucket-named files, plus the
           // metadata-only re-register a fresh session pays over a copy
@@ -491,13 +491,13 @@ object Bench {
         val idems = Seq[(String, String => Unit, String => Unit, String => Long)](
           ("ivf", Similarity.ivfWriteIndex(embBase, _), Similarity.ivfAppendDelta(embDelta, _),
             Similarity.ivfAppendDeltaIdempotent(embDelta, _)),
-          ("pq", Similarity.pqWriteIndex(embBase, _, dim), Similarity.pqAppendDelta(embDelta, _, dim),
-            Similarity.pqAppendDeltaIdempotent(embDelta, _, dim)),
+          ("pq", Similarity.pqWriteIndex(embBase, _, dim), Similarity.pqAppendDelta(embDelta, _),
+            Similarity.pqAppendDeltaIdempotent(embDelta, _)),
           ("lsh", Similarity.lshWriteIndex(embBase, _, dim), Similarity.lshAppendDelta(embDelta, _, dim),
             Similarity.lshAppendDeltaIdempotent(embDelta, _, dim)),
           ("ivfpq", Similarity.ivfPqWriteIndex(embBase, _, dim),
-            Similarity.ivfPqAppendDelta(embDelta, _, dim),
-            Similarity.ivfPqAppendDeltaIdempotent(embDelta, _, dim)))
+            Similarity.ivfPqAppendDelta(embDelta, _),
+            Similarity.ivfPqAppendDeltaIdempotent(embDelta, _)))
         table(Seq("index", "plain append", "idempotent 1st delivery", "full replay (0 rows)"),
           idems.map { case (name, base, plain, idem) =>
             val proto = built(base)
@@ -551,7 +551,7 @@ object Bench {
         def ivfAt(d: DataFrame) =
           built { p => Similarity.ivfWriteIndex(embBase, p); Similarity.ivfAppendDelta(d, p) }
         def pqAt(d: DataFrame) =
-          built { p => Similarity.pqWriteIndex(embBase, p, dim); Similarity.pqAppendDelta(d, p, dim) }
+          built { p => Similarity.pqWriteIndex(embBase, p, dim); Similarity.pqAppendDelta(d, p) }
         val sh = built { p =>
           Dedup.shingleWriteIndex(docsBase, 1, p); Dedup.shingleAppendDelta(docsDelta, 1, p)
         }

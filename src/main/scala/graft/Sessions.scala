@@ -121,6 +121,7 @@ object Sessions {
     * repeated runs under memory pressure. */
   def clearCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.sparkContext.getPersistentRDDs.values.foreach(
+      org.apache.spark.sql.graftbridge.Releases.unpersistRDD(_, blocking = true))
   }
 }

@@ -26,7 +26,7 @@ object Snapshots {
     * never read again. */
   def free(snapshot: DataFrame): Unit = snapshot.queryExecution.analyzed match {
     case lr: LogicalRDD =>
-      Releases.unpersistRDD(lr.rdd)
+      Releases.unpersistRDD(lr.rdd, blocking = false)
       lr.rdd.getCheckpointFile.map(new Path(_)).foreach(p =>
         p.getFileSystem(snapshot.sparkSession.sparkContext.hadoopConfiguration).delete(p, true))
     case other => throw new IllegalArgumentException(

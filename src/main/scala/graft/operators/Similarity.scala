@@ -13,8 +13,8 @@ import graft.Snapshots.SnapshotOps
   * Scale design: the query side is always broadcast (queries ≪ data);
   * the corpus side streams through one whole-stage-codegen scan with
   * the native cosine expression (graft.functions.CosineFloat) — no
-  * shuffle of vectors at all for brute force; top-k per query is a
-  * partial `Window`+filter whose state is k rows per query per
+  * shuffle of vectors at all for brute force; top-k per query is the
+  * graft_topk partial aggregate, whose state is k rows per query per
   * partition. The LSH variant prunes the corpus scan to matching
   * buckets: the corpus is bucketed once (a cheap narrow projection),
   * then only bucket-equal rows are scored — at 100 TB this is the
@@ -29,14 +29,16 @@ object Similarity {
     * the aggregate keeps a k-heap per query per map task, so only
     * partitions×q×k rows ever shuffle — the corpus itself is scanned
     * once, never moved. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-    topKPerQuery(scored, k)
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    scanTopK(corpus, queries, k)
+
+  /** Top-k by the cosine of every query against the `emb` column of
+    * every row of `rows` but its own: queries broadcast, rows scanned
+    * once. */
+  private def scanTopK(rows: DataFrame, queries: DataFrame, k: Int,
+      emb: String = "embedding"): DataFrame =
+    topKPerQuery(cosines(
+      rows.join(broadcast(queryEmb(queries)), col("vec_id") =!= col("query_id")), emb), k)
 
   /** ss18 (round 15): FILTERED vector search — exact top-k among
     * corpus vectors passing a per-query predicate, here SAME LABEL:
@@ -56,12 +58,8 @@ object Similarity {
   def filteredTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), col("label").as("q_label"))
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("query_id") &&
-        col("label") === col("q_label"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-    topKPerQuery(scored, k)
+    topKPerQuery(cosines(corpus.join(broadcast(q), col("vec_id") =!= col("query_id") &&
+      col("label") === col("q_label"))), k)
   }
 
   /** [[filteredTopK]] served off the materialized IVF index: the
@@ -97,14 +95,10 @@ object Similarity {
     * filter — the corpus is never shuffled and nothing is buffered.
     * Output size is data-dependent (that's the semantics); the
     * presentation sort is the only exchange. */
-  def rangeSearch(corpus: DataFrame, queries: DataFrame, minCosine: Double): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
+  def rangeSearch(corpus: DataFrame, queries: DataFrame, minCosine: Double): DataFrame =
+    cosines(corpus.join(broadcast(queryEmb(queries)), col("vec_id") =!= col("query_id")))
       .filter(col("cosine") >= minCosine)
       .orderBy(col("query_id"), col("vec_id"))
-  }
 
   /** ss11: HYBRID retrieval — lexical token overlap FUSED with
     * embedding cosine, the retrieval pattern serving RAG/curation
@@ -219,14 +213,9 @@ object Similarity {
       c: DataFrame, q: DataFrame, corpus: DataFrame, ivfPath: String,
       nQueries: Int, nprobe: Int, dfCap: Int): DataFrame = {
     // dense probe: all vectors in each query's nprobe nearest cells
-    val centroids = graft.Tables.parquet(spark, s"$ivfPath/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1).map(_._2)
-    val probed = probeLists(corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")), centroids, nprobe)
-    val probedCids = probed.select("cid").distinct().collect().map(_.getInt(0))
-    val dense = graft.Tables.parquet(spark, s"$ivfPath/vectors")
-      .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
+    val (probed, cells) = probeCells(spark, ivfPath, "vectors",
+      corpus.filter(col("vec_id") < nQueries).select(col("vec_id"), col("embedding")), nprobe)
+    val dense = cells
       .join(broadcast(probed.select(col("cid"), col("query_id"))), Seq("cid"))
       .select(col("query_id"), col("vec_id"))
     // lexical probe: share a token whose document frequency ≤ dfCap
@@ -287,9 +276,8 @@ object Similarity {
   def mmrDiversify(corpus: DataFrame, nQueries: Int, m: Int, k: Int,
       relW: Double = 0.7, simW: Double = 0.3): DataFrame = {
     val base = corpus.select(col("vec_id"), col("embedding"))
-    val q = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = base.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val scored = base.join(broadcast(queryEmb(base.filter(col("vec_id") < nQueries))),
+        col("vec_id") =!= col("query_id"))
       .withColumn("cosine", call_function("graft_cosine", col("q_emb"), col("embedding")))
     val cand = topKPerQuery(scored.select(col("query_id"), col("vec_id"), col("cosine")), m)
       .withColumnRenamed("cosine", "rel").drop("rank")
@@ -331,6 +319,16 @@ object Similarity {
       .orderBy(col("query_id"), col("mmr_rank"))
   }
 
+  /** (query_id, q_emb): the query side every scan, probe and inline
+    * top-k broadcasts. */
+  private def queryEmb(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+
+  /** (query_id, vec_id, cosine) of each row's `q_emb` against `emb`. */
+  private def cosines(pairs: DataFrame, emb: String = "embedding"): DataFrame =
+    pairs.select(col("query_id"), col("vec_id"),
+      call_function("graft_cosine", col("q_emb"), col(emb)).as("cosine"))
+
   /** (query_id, vec_id, cosine) → best-k rows per query with ranks. */
   private[graft] def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy(col("query_id"))
@@ -371,7 +369,7 @@ object Similarity {
     }.reduce(_ + _)
 
   /** ss2: ANN top-k via random-hyperplane LSH: `Tables` independent
-    * 8-bit signatures; candidates = corpus rows sharing any bucket with
+    * `Bits`-bit signatures; candidates = corpus rows sharing any bucket with
     * the query; exact cosine re-rank inside candidates. Approximate —
     * recall depends on Tables×Bits (spec plants exact duplicates which
     * always collide). */
@@ -395,13 +393,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = cand
-      .join(corpus, "vec_id")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-    topKPerQuery(scored, k)
+    topKPerQuery(cosines(cand.join(corpus, "vec_id").join(broadcast(queryEmb(queries)),
+      "query_id")), k)
   }
 
   /** bucket = table·2^Bits + signature — ONE integer partition column,
@@ -409,6 +402,12 @@ object Similarity {
     * directories (the ivfProbeIndex pattern; two partition columns
     * would need OR-of-conjunction pruning). */
   private def bucketCol: Column = (col("t") * (1 << Bits) + col("sig")).as("bucket")
+
+  /** (vec_id, embedding, bucket): the LSH index rows of `df`, one per
+    * hash table. */
+  private def lshRows(df: DataFrame, dim: Int): DataFrame =
+    bandRows(df, dim, "vec_id", "vec_id", Seq("embedding"))
+      .select(col("vec_id"), col("embedding"), bucketCol)
 
   /** Materialized LSH index: the corpus replicated once per hash table
     * (×Tables rows — the standard LSH space/recall trade) and written
@@ -418,11 +417,8 @@ object Similarity {
     * buckets per query instead of re-hashing the corpus per run.
     * Embeddings ride along in the bucket rows so the exact re-rank
     * needs no join back to the source table. */
-  def lshWriteIndex(corpus: DataFrame, path: String, dim: Int): Unit = {
-    bandRows(corpus, dim, "vec_id", "vec_id", Seq("embedding"))
-      .select(col("vec_id"), col("embedding"), bucketCol)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/buckets")
-  }
+  def lshWriteIndex(corpus: DataFrame, path: String, dim: Int): Unit =
+    lshRows(corpus, dim).write.mode("overwrite").partitionBy("bucket").parquet(s"$path/buckets")
 
   /** Append a delta batch to a materialized LSH index WITHOUT touching
     * the base files (round 8 — VERDICT r7 #1: every index was a
@@ -435,11 +431,8 @@ object Similarity {
     * bucket directories (dynamic-partition append). Cost is O(|delta|)
     * × Tables; probe(base ⊕ delta) is BIT-IDENTICAL to a one-shot
     * build over the union (IvfIndexSpec pins it). */
-  def lshAppendDelta(delta: DataFrame, path: String, dim: Int): Unit = {
-    bandRows(delta, dim, "vec_id", "vec_id", Seq("embedding"))
-      .select(col("vec_id"), col("embedding"), bucketCol)
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
-  }
+  def lshAppendDelta(delta: DataFrame, path: String, dim: Int): Unit =
+    lshRows(delta, dim).write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
 
   /** EXACTLY-ONCE [[lshAppendDelta]] — [[ivfAppendDeltaIdempotent]]'s
     * argument on the bucket-partitioned layout: signatures are pure
@@ -454,9 +447,8 @@ object Similarity {
     * (per-vector, BEFORE banding — one surviving row feeds all
     * Tables band rows). */
   def lshAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long =
-    appendAbsent(bandRows(delta0.dropDuplicates("vec_id"), dim, "vec_id", "vec_id",
-        Seq("embedding")).select(col("vec_id"), col("embedding"), bucketCol),
-      "bucket", s"$path/buckets", _.select("vec_id").distinct().count())
+    appendAbsent(lshRows(delta0.dropDuplicates("vec_id"), dim), "bucket", s"$path/buckets",
+      _.select("vec_id").distinct().count())
 
   /** Probe a materialized LSH index: hash ONLY the query set, prune to
     * the probed bucket directories (planning-time partition pruning,
@@ -470,15 +462,9 @@ object Similarity {
     val qb = bandRows(queries, dim, "vec_id", "query_id", Seq("embedding"))
       .select(col("query_id"), col("embedding").as("q_emb"), bucketCol)
     // bounded driver state: ≤ Tables·2^Bits distinct bucket ids
-    val probedBuckets = qb.select("bucket").distinct().collect().map(_.getInt(0))
-    val idx = graft.Tables.parquet(spark, s"$path/buckets")
-      .filter(col("bucket").isin(probedBuckets.toIndexedSeq: _*))
-    val scored = idx.join(broadcast(qb), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-      .distinct()
-    topKPerQuery(scored, k)
+    val idx = pruned(spark, s"$path/buckets", "bucket", partsOf(qb, "bucket"))
+    topKPerQuery(cosines(idx.join(broadcast(qb), Seq("bucket"))
+      .filter(col("vec_id") =!= col("query_id"))).distinct(), k)
   }
 
   /** ss3: IVF (inverted-file) ANN. Train: `nlist` centroids — seeded
@@ -489,10 +475,10 @@ object Similarity {
     * the `nprobe` nearest lists and exact-re-rank inside them.
     *
     * Scale: centroids are the ONLY driver-side state (nlist×dim
-    * floats); the index pass is embarrassingly parallel; at rest the
-    * corpus would be written partitioned by `cid`, so a probe reads
-    * nprobe/nlist of the data — that partition pruning is the whole
-    * point of IVF at 100 TB. */
+    * floats); the index pass is embarrassingly parallel; at rest
+    * [[ivfWriteIndex]] partitions the corpus by `cid`, so a probe
+    * reads nprobe/nlist of the data — that partition pruning is the
+    * whole point of IVF at 100 TB. */
   private def centroidCosines(embCol: Column, cents: Array[Array[Float]]): Seq[Column] =
     cents.toIndexedSeq.map(c => call_function("graft_cosine", embCol, typedlit(c)))
   private def assignExpr(embCol: Column, cents: Array[Array[Float]]): Column =
@@ -690,44 +676,65 @@ object Similarity {
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray)
     for (_ <- 0 until iters) {
-      val assigned = withCid(corpus.select(col("vec_id"), col("embedding")),
-          "embedding", centroids)
-        .select(col("cid"), posexplode(col("embedding")))
-      val means = assigned.groupBy(col("cid"), col("pos"))
-        .agg((sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
-          count(lit(1))).as("v"))
-        .groupBy(col("cid"))
-        .agg(collect_list(struct(col("pos"), col("v"))).as("pv"))
-        .select(col("cid"),
-          expr("transform(array_sort(pv, (a, b) -> a.pos - b.pos), x -> cast(x.v as float))").as("cent"))
+      val means = meanVectors(withCid(corpus.select(col("vec_id"), col("embedding")),
+          "embedding", centroids).select(col("cid"), posexplode(col("embedding"))), "cid")
         .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
       centroids = Array.tabulate(centroids.length)(i => means.getOrElse(i, centroids(i)))
     }
     centroids
   }
 
+  /** DECIMAL(18,6) sum / exact count of `c`: an addition-order-
+    * independent mean, so a result is a pure function of the row SET,
+    * whatever partitioning delivered it. */
+  private def decimalMean(c: Column): Column =
+    sum(c.cast("double").cast(DecimalType(18, 6))).cast("double") / count(lit(1))
+
+  /** (keys…, cent: array<float>): the per-position [[decimalMean]] of
+    * `exploded`'s (keys…, pos, col) rows — one Lloyd update. */
+  private def meanVectors(exploded: DataFrame, keys: String*): DataFrame =
+    exploded.groupBy(keys.map(col) :+ col("pos"): _*)
+      .agg(decimalMean(col("col")).as("v"))
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("pos"), col("v"))).as("pv"))
+      .select(keys.map(col) :+ expr(
+        "transform(array_sort(pv, (a, b) -> a.pos - b.pos), x -> cast(x.v as float))")
+        .as("cent"): _*)
+
   /** Per-query probe list: the `nprobe` best centroids by cosine
     * (exact below [[ExprCellMax]], coarse-beam two-level above — the
     * probe-list selection cost must not grow linearly with nlist any
     * more than the build's assignment may). */
   private def probeLists(queries: DataFrame, cents: Array[Array[Float]], nprobe: Int): DataFrame =
-    withTopCells(
-        queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        "query_id", "q_emb", nprobe, cents, "__cells")
+    withTopCells(queryEmb(queries), "query_id", "q_emb", nprobe, cents, "__cells")
       .select(col("query_id"), col("q_emb"),
         explode(expr("transform(__cells, x -> x.c)")).as("cid"))
+
+  /** A stored IVF-family index probed for `queries`: (probe lists under
+    * its centroids, the `dir` rows of the cells they name).
+    * `nprobe = 0` derives max(4, nlist/4) from the stored geometry. */
+  private def probeCells(spark: org.apache.spark.sql.SparkSession, path: String,
+      dir: String, queries: DataFrame, nprobe: Int): (DataFrame, DataFrame) = {
+    val cents = readCentroids(spark, s"$path/centroids")
+    val probed = probeLists(queries, cents,
+      if (nprobe > 0) nprobe else math.max(4, cents.length / 4))
+    (probed, pruned(spark, s"$path/$dir", "cid", partsOf(probed, "cid")))
+  }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
     val centroids = trainCentroids(corpus, nlist, iters)
     val indexed = withCid(corpus, "embedding", centroids)
     val probed = probeLists(queries, centroids, nprobe)
-    val scored = indexed.join(broadcast(probed), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-    topKPerQuery(scored, k)
+    cellTopK(indexed, probed, k)
   }
+
+  /** Top-k by the cosine of each query against the `emb` column of the
+    * `rows` in its `probed` cells. */
+  private def cellTopK(rows: DataFrame, probed: DataFrame, k: Int,
+      emb: String = "embedding"): DataFrame =
+    topKPerQuery(cosines(rows.join(broadcast(probed), Seq("cid"))
+      .filter(col("vec_id") =!= col("query_id")), emb), k)
 
   /** Materialized IVF index: the corpus written to `path` PARTITIONED
     * BY its centroid assignment, centroids alongside as a tiny parquet.
@@ -737,23 +744,44 @@ object Similarity {
   def ivfWriteIndex(corpus: DataFrame, path: String,
       nlist: Int = 16, iters: Int = 2,
       centroidsOpt: Option[Array[Array[Float]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val centroids = centroidsOpt.getOrElse(trainCentroids(corpus, nlist, iters))
     withCid(corpus, "embedding", centroids)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/vectors")
-    centroids.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    writeCentroids(corpus.sparkSession, centroids, path)
   }
+
+  /** (cid, centroid): the IVF family's trained state as a table. */
+  private def centroidTable(spark: org.apache.spark.sql.SparkSession,
+      cents: Array[Array[Float]]): DataFrame = {
+    import spark.implicits._
+    cents.zipWithIndex.toIndexedSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cid", "centroid")
+  }
+
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+      cents: Array[Array[Float]], path: String): Unit =
+    centroidTable(spark, cents).coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
 
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Float]] =
     graft.Tables.parquet(spark, path)
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
+
+  /** `delta` as it is, except that a row whose embedding is not
+    * `width` floats wide fails the job that reads it, naming both
+    * widths. graft_cosine and graft_dot return null on a length
+    * mismatch, so such a row would otherwise be appended under a
+    * meaningless cell or code. */
+  private def ofWidth(delta: DataFrame, width: Int): DataFrame =
+    delta.filter(when(array_size(col("embedding")) =!= width, raise_error(concat(
+      lit("append: embedding width "), array_size(col("embedding")).cast("string"),
+      lit(s" differs from the index's width $width")))).otherwise(lit(true)))
+
+  /** The IVF index rows of `delta` under the index's stored centroids. */
+  private def ivfDeltaRows(delta: DataFrame, path: String): DataFrame = {
+    val centroids = readCentroids(delta.sparkSession, s"$path/centroids")
+    withCid(ofWidth(delta, centroids(0).length), "embedding", centroids)
+  }
 
   /** Append a delta batch to a materialized IVF index: delta vectors
     * are assigned to the EXISTING centroids (the index's trained state,
@@ -769,11 +797,8 @@ object Similarity {
     * distribution, degrading recall at fixed nprobe, never correctness
     * of what's probed — ss8's `ivf_delta` recall row is the gauge that
     * says when to re-cluster (re-run the full build). */
-  def ivfAppendDelta(delta: DataFrame, path: String): Unit = {
-    val centroids = readCentroids(delta.sparkSession, s"$path/centroids")
-    withCid(delta, "embedding", centroids)
-      .write.mode("append").partitionBy("cid").parquet(s"$path/vectors")
-  }
+  def ivfAppendDelta(delta: DataFrame, path: String): Unit =
+    ivfDeltaRows(delta, path).write.mode("append").partitionBy("cid").parquet(s"$path/vectors")
 
   /** EXACTLY-ONCE [[ivfAppendDelta]] for AT-LEAST-ONCE callers
     * (round 11 — st17's streaming ingest; equally the crashed-and-
@@ -808,15 +833,11 @@ object Similarity {
     * physical duplicate survives is unobservable; re-ingesting a
     * CHANGED payload under an existing vec_id remains upsert
     * territory, i.e. the rebuild/recluster path's job. */
-  def ivfAppendDeltaIdempotent(delta0: DataFrame, path: String): Long = {
-    val spark = delta0.sparkSession
-    val delta = delta0.dropDuplicates("vec_id")
-    val centroids = readCentroids(spark, s"$path/centroids")
+  def ivfAppendDeltaIdempotent(delta0: DataFrame, path: String): Long =
     // ALL delta columns ride along, exactly as the plain append writes
     // them — dropping e.g. `label` here would silently thin the index
     // schema for downstream consumers like clusterStats
-    appendAbsent(withCid(delta, "embedding", centroids), "cid", s"$path/vectors")
-  }
+    appendAbsent(ivfDeltaRows(delta0.dropDuplicates("vec_id"), path), "cid", s"$path/vectors")
 
   /** Appends to the vector table at `dir` the rows of `rows` whose
     * vec_id it does not hold yet, the existence check pruned to the
@@ -825,11 +846,9 @@ object Similarity {
     * one vector). */
   private def appendAbsent(rows: DataFrame, part: String, dir: String,
       vectors: DataFrame => Long = _.count()): Long = {
-    val targets = rows.select(part).distinct().collect().map(_.getInt(0))
+    val targets = partsOf(rows, part)
     if (targets.isEmpty) return 0L
-    val existing = graft.Tables.parquet(rows.sparkSession, dir)
-      .filter(col(part).isin(targets.toIndexedSeq: _*))
-      .select(col("vec_id"))
+    val existing = pruned(rows.sparkSession, dir, part, targets).select(col("vec_id"))
     val fresh = rows.join(existing, Seq("vec_id"), "left_anti")
       .snapshot() // one evaluation serves the count AND the write
     val n = vectors(fresh)
@@ -837,6 +856,18 @@ object Similarity {
     graft.Snapshots.free(fresh)
     n
   }
+
+  /** The distinct int `part` values of `keys`: bounded driver state,
+    * at most one per partition of the index read. */
+  private def partsOf(keys: DataFrame, part: String): Seq[Int] =
+    keys.select(part).distinct().collect().map(_.getInt(0)).toIndexedSeq
+
+  /** `dir` read with its `part` partitions pruned to `values` at
+    * planning time: one `In` partition filter, so the scan never opens
+    * another directory. */
+  private def pruned(spark: org.apache.spark.sql.SparkSession, dir: String, part: String,
+      values: Seq[Int]): DataFrame =
+    graft.Tables.parquet(spark, dir).filter(col(part).isin(values: _*))
 
   /** RE-CLUSTER a delta-appended IVF index (round 9 — VERDICT r8 #2:
     * ss8's `ivf_delta` recall row, ss13's imbalance factor and ss14's
@@ -897,10 +928,7 @@ object Similarity {
     * nlist×dim rows; the fold and join ride the tiny aggregate with
     * the centroid table broadcast — O(index) scan, O(nlist) output. */
   def centroidDrift(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val cents = readCentroids(spark, s"$path/centroids")
-    val cdf = cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toSeq.toDF("cid", "centroid")
+    val cdf = centroidTable(spark, readCentroids(spark, s"$path/centroids"))
     graft.Tables.parquet(spark, s"$path/vectors")
       .select(col("cid"), posexplode(col("embedding")))
       .groupBy(col("cid"), col("pos"))
@@ -935,19 +963,8 @@ object Similarity {
     * probe a constant ~nprobe×512 vectors at any corpus size). */
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
-    val centroids = graft.Tables.parquet(spark, s"$path/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1).map(_._2)
-    val np = if (nprobe > 0) nprobe else math.max(4, centroids.length / 4)
-    val probed = probeLists(queries, centroids, np)
-    val probedCids = probed.select("cid").distinct().collect().map(_.getInt(0))
-    val indexed = graft.Tables.parquet(spark, s"$path/vectors")
-      .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
-    val scored = indexed.join(broadcast(probed), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-    topKPerQuery(scored, k)
+    val (probed, indexed) = probeCells(spark, path, "vectors", queries, nprobe)
+    cellTopK(indexed, probed, k)
   }
 
   /** ss8: recall@k of every ANN variant against ss1's exact answer —
@@ -1035,45 +1052,13 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = trainCentroids(corpus, nlist, iters)
-    // (vec_id, embedding, cid1, s1, cid2): primary + secondary cell
-    val top2 = withTopCells(corpus.select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", 2, cents, "__cells")
-      .select(col("vec_id"), col("embedding"),
-        expr("__cells[0].c").as("cid1"), expr("__cells[0].s").as("s1"),
-        expr("__cells[1].c").as("cid2"))
+    val top2 = topTwoCells(corpus, cents)
       .snapshot() // three consumers below; the cell-scoring
                          // pass must not re-evaluate per consumer
-    // candidate pairs: node × members of its primary AND secondary cell
-    val members = top2.select(col("cid1").as("cell"),
-      col("vec_id").as("nbr_id"), col("embedding").as("nbr_emb"))
-    val probes = top2.select(col("vec_id"), col("embedding"), explode(
-      array(col("cid1"), col("cid2"))).as("cell"))
-    val neighbors = probes.join(members, "cell")
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .select(col("vec_id"),
-        call_function("graft_cosine", col("embedding"), col("nbr_emb")).as("cosine"),
-        col("nbr_id"))
-      .groupBy(col("vec_id"))
-      .agg(call_function("graft_topk", col("cosine"), col("nbr_id"),
-        lit(HnswDegree)).as("tk"))
-      .select(col("vec_id"),
-        expr("array_distinct(transform(tk, x -> x.id))").as("neighbors"))
-    // emb/: the one-row-per-node embedding store (cid1 rides along:
-    // hnswAppendDelta prunes its standing-member scan to the delta's
-    // cells through it)
-    top2.select(col("vec_id"), col("embedding"), col("cid1"))
-      .write.mode("overwrite").parquet(s"$path/emb")
-    top2.select(col("vec_id"), col("cid1"))
-      .join(neighbors, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid1"),
-        coalesce(col("neighbors"), expr("CAST(array() AS array<bigint>)")).as("neighbors"))
-      .write.mode("overwrite").parquet(s"$path/graph")
+    writeNodes(top2, hnswNeighbors(top2, cellMembers(top2)), path, "overwrite")
     Seq(Tuple1(top2.count())).toDF("base_n")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    cents.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    writeCentroids(spark, cents, path)
     // entry points: per cell the member closest to its centroid
     // (ties → lowest vec_id)
     top2.groupBy(col("cid1"))
@@ -1083,6 +1068,52 @@ object Similarity {
         col("h.embedding").as("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/hubs")
     graft.Snapshots.free(top2)
+  }
+
+  /** (vec_id, embedding, cid1, s1, cid2): each node's primary cell, its
+    * cosine to that centroid, and its secondary cell. */
+  private def topTwoCells(df: DataFrame, cents: Array[Array[Float]]): DataFrame =
+    withTopCells(df.select(col("vec_id"), col("embedding")),
+        "vec_id", "embedding", 2, cents, "__cells")
+      .select(col("vec_id"), col("embedding"),
+        expr("__cells[0].c").as("cid1"), expr("__cells[0].s").as("s1"),
+        expr("__cells[1].c").as("cid2"))
+
+  /** (cell, nbr_id, nbr_emb): the nodes of `top2` as members of their
+    * primary cell. */
+  private def cellMembers(top2: DataFrame): DataFrame =
+    top2.select(col("cid1").as("cell"), col("vec_id").as("nbr_id"),
+      col("embedding").as("nbr_emb"))
+
+  /** (vec_id, neighbors): each node of `top2` with its [[HnswDegree]]
+    * exact nearest `members` of its primary AND secondary cell. */
+  private def hnswNeighbors(top2: DataFrame, members: DataFrame): DataFrame =
+    top2.select(col("vec_id"), col("embedding"),
+        explode(array(col("cid1"), col("cid2"))).as("cell"))
+      .join(members, "cell")
+      .filter(col("vec_id") =!= col("nbr_id"))
+      .select(col("vec_id"),
+        call_function("graft_cosine", col("embedding"), col("nbr_emb")).as("cosine"),
+        col("nbr_id"))
+      .groupBy(col("vec_id"))
+      .agg(call_function("graft_topk", col("cosine"), col("nbr_id"),
+        lit(HnswDegree)).as("tk"))
+      .select(col("vec_id"),
+        expr("array_distinct(transform(tk, x -> x.id))").as("neighbors"))
+
+  /** Writes the nodes of `top2` with their `neighbors`: emb/, the
+    * one-row-per-node embedding store (cid1 rides along: hnswAppendDelta
+    * prunes its standing-member scan to the delta's cells through it),
+    * and graph/'s edge rows. */
+  private def writeNodes(top2: DataFrame, neighbors: DataFrame, path: String,
+      mode: String): Unit = {
+    top2.select(col("vec_id"), col("embedding"), col("cid1"))
+      .write.mode(mode).parquet(s"$path/emb")
+    top2.select(col("vec_id"), col("cid1"))
+      .join(neighbors, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cid1"),
+        coalesce(col("neighbors"), expr("CAST(array() AS array<bigint>)")).as("neighbors"))
+      .write.mode(mode).parquet(s"$path/graph")
   }
 
   /** Append a delta batch to a materialized HNSW-lite index WITHOUT
@@ -1107,36 +1138,11 @@ object Similarity {
   def hnswAppendDelta(delta: DataFrame, path: String): Unit = {
     val spark = delta.sparkSession
     val cents = readCentroids(spark, s"$path/centroids")
-    val top2 = withTopCells(delta.select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", 2, cents, "__cells")
-      .select(col("vec_id"), col("embedding"),
-        expr("__cells[0].c").as("cid1"), expr("__cells[1].c").as("cid2"))
-      .snapshot()
-    val standing = graft.Tables.parquet(spark, s"$path/emb")
-      .select(col("cid1").as("cell"), col("vec_id").as("nbr_id"),
-        col("embedding").as("nbr_emb"))
-    val deltaMembers = top2.select(col("cid1").as("cell"),
-      col("vec_id").as("nbr_id"), col("embedding").as("nbr_emb"))
-    val probes = top2.select(col("vec_id"), col("embedding"),
-      explode(array(col("cid1"), col("cid2"))).as("cell"))
-    val best = probes.join(standing.unionByName(deltaMembers), "cell")
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .select(col("vec_id"),
-        call_function("graft_cosine", col("embedding"), col("nbr_emb")).as("cosine"),
-        col("nbr_id"))
-      .groupBy(col("vec_id"))
-      .agg(call_function("graft_topk", col("cosine"), col("nbr_id"),
-        lit(HnswDegree)).as("tk"))
-      .select(col("vec_id"),
-        expr("array_distinct(transform(tk, x -> x.id))").as("neighbors"))
+    val top2 = topTwoCells(ofWidth(delta, cents(0).length), cents).snapshot()
+    val standing = cellMembers(graft.Tables.parquet(spark, s"$path/emb"))
+    val best = hnswNeighbors(top2, standing.unionByName(cellMembers(top2)))
       .snapshot() // three writes below must not re-run the cell join
-    top2.select(col("vec_id"), col("embedding"), col("cid1"))
-      .write.mode("append").parquet(s"$path/emb")
-    top2.select(col("vec_id"), col("cid1"))
-      .join(best, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid1"),
-        coalesce(col("neighbors"), expr("CAST(array() AS array<bigint>)")).as("neighbors"))
-      .write.mode("append").parquet(s"$path/graph")
+    writeNodes(top2, best, path, "append")
     // reverse-edge patches: every chosen neighbor learns the delta id —
     // edge rows only (8 B/id, no embedding bytes); emb/ (delta rows
     // just appended, so delta→delta edges resolve too) supplies each
@@ -1294,15 +1300,8 @@ object Similarity {
     val ksubEff = cents(0).length
     val subs = subVectorRows(corpus, dim, m)
     for (_ <- 0 until iters) {
-      val means = assignSubs(subs, codebookDF(corpus, cents))
-        .select(col("s"), col("c"), posexplode(col("sub")))
-        .groupBy(col("s"), col("c"), col("pos"))
-        .agg((sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
-          count(lit(1))).as("v"))
-        .groupBy(col("s"), col("c"))
-        .agg(collect_list(struct(col("pos"), col("v"))).as("pv"))
-        .select(col("s"), col("c"),
-          expr("transform(array_sort(pv, (a, b) -> a.pos - b.pos), x -> cast(x.v as float))").as("cent"))
+      val means = meanVectors(assignSubs(subs, codebookDF(corpus, cents))
+          .select(col("s"), col("c"), posexplode(col("sub"))), "s", "c")
         .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
       cents = Array.tabulate(m)(s =>
         Array.tabulate(ksubEff)(c => means.getOrElse((s, c), cents(s)(c))))
@@ -1317,14 +1316,18 @@ object Similarity {
       .groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(s, c))), x -> x.c)").as("codes"))
 
-  /** In-flight reconstruction: concat of each subspace's centroid,
-    * looked up by code from the literal codebook (constant-size plan —
+  /** The embedding width a codebook was trained for: m·subDim. */
+  private def pqWidth(books: Array[Array[Array[Float]]]): Int =
+    books.length * books(0)(0).length
+
+  /** `codes` plus `recon`, the in-flight reconstruction: concat of each
+    * subspace's centroid, looked up by code from the literal codebook (constant-size plan —
     * m element_at calls, codebook rides in the plan like planeLit). */
-  private def reconCol(cents: Array[Array[Array[Float]]], m: Int): Column =
-    concat((0 until m).map { s =>
+  private def withRecon(codes: DataFrame, cents: Array[Array[Array[Float]]]): DataFrame =
+    codes.withColumn("recon", concat(cents.indices.map { s =>
       val book = typedlit(cents(s).map(_.toIndexedSeq).toIndexedSeq)
       element_at(book, col("codes").getItem(s) + lit(1))
-    }: _*)
+    }: _*))
 
   /** Per-subspace mean SQUARED quantization residual of `rows` under a
     * frozen codebook — the scalar that says how well the books still
@@ -1377,10 +1380,9 @@ object Similarity {
   def pqResidualDrift(spark: org.apache.spark.sql.SparkSession, path: String,
       rows: DataFrame): DataFrame = {
     val books = readCodebook(spark, s"$path/codebook")
-    val dim = books.length * books(0)(0).length
     val base = graft.Tables.parquet(spark, s"$path/residuals")
       .select(col("s"), col("mean_r2").as("base_r2"))
-    pqSubResiduals(rows, dim, books)
+    pqSubResiduals(rows, pqWidth(books), books)
       .join(broadcast(base), "s")
       .select(col("s"), col("n").as("n_rows"),
         sqrt(col("base_r2")).as("base_rmse"), sqrt(col("mean_r2")).as("rmse"),
@@ -1392,14 +1394,7 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
       m: Int = 8, ksub: Int = 16, iters: Int = 2): DataFrame = {
     val cents = trainPq(corpus, dim, m, ksub, iters)
-    val codes = pqEncode(corpus, dim, m, cents)
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = codes
-      .withColumn("recon", reconCol(cents, m))
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("recon")).as("cosine"))
-    topKPerQuery(scored, k)
+    scanTopK(withRecon(pqEncode(corpus, dim, m, cents), cents), queries, k, "recon")
   }
 
   /** vec_id-range width of the PQ code table's partition key: codes
@@ -1415,6 +1410,26 @@ object Similarity {
   private[graft] val PqVbRange: Long = 1L << 16
   private def vbCol: Column = expr(s"cast(vec_id div $PqVbRange as int)")
 
+  /** (vec_id, codes, vb): the PQ index rows of `df` under `books`. */
+  private def pqRows(df: DataFrame, books: Array[Array[Array[Float]]]): DataFrame =
+    pqEncode(df, pqWidth(books), books.length, books).withColumn("vb", vbCol)
+
+  /** Writes the PQ family's trained state: codebook/ (s, c, cent) and
+    * residuals/, the base corpus's per-subspace mean squared residual
+    * under the final books — the floor [[pqResidualDrift]] compares
+    * appended batches to. */
+  private def writePqState(corpus: DataFrame, books: Array[Array[Array[Float]]],
+      path: String): Unit = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (cs, s) =>
+      cs.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
+    }.toIndexedSeq.toDF("s", "c", "cent")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+    pqSubResiduals(corpus, pqWidth(books), books)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/residuals")
+  }
+
   /** Materialized PQ index: the corpus stored as (vec_id, codes) —
     * m small ints per vector, ~8 bytes against 256 for the raw
     * 64-float embedding — plus the codebook as a tiny parquet. At
@@ -1427,20 +1442,9 @@ object Similarity {
   def pqWriteIndex(corpus: DataFrame, path: String, dim: Int,
       m: Int = 8, ksub: Int = 16, iters: Int = 2,
       booksOpt: Option[Array[Array[Array[Float]]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = booksOpt.getOrElse(trainPq(corpus, dim, m, ksub, iters))
-    pqEncode(corpus, dim, m, cents).withColumn("vb", vbCol)
-      .write.mode("overwrite").partitionBy("vb").parquet(s"$path/codes")
-    cents.zipWithIndex.flatMap { case (cs, s) =>
-      cs.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
-    }.toIndexedSeq.toDF("s", "c", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    // trained state for the codebook drift gauge (round 11): the base
-    // corpus's per-subspace mean squared residual under the final
-    // books — the floor pqResidualDrift compares appended batches to
-    pqSubResiduals(corpus, dim, cents)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/residuals")
+    val books = booksOpt.getOrElse(trainPq(corpus, dim, m, ksub, iters))
+    pqRows(corpus, books).write.mode("overwrite").partitionBy("vb").parquet(s"$path/codes")
+    writePqState(corpus, books, path)
   }
 
   private[graft] def readCodebook(spark: org.apache.spark.sql.SparkSession,
@@ -1452,6 +1456,13 @@ object Similarity {
     Array.tabulate(m, ksub)((s, c) => rows((s, c)))
   }
 
+  /** The PQ index rows of `delta` under the index's stored codebook,
+    * whose width the delta must have. */
+  private def pqDeltaRows(delta: DataFrame, path: String): DataFrame = {
+    val books = readCodebook(delta.sparkSession, s"$path/codebook")
+    pqRows(ofWidth(delta, pqWidth(books)), books)
+  }
+
   /** Append a delta batch to a materialized PQ index: delta vectors
     * are encoded against the EXISTING codebook and the 8-byte code
     * rows appended to the code table — base files untouched, cost
@@ -1461,11 +1472,8 @@ object Similarity {
     * drift (codebook trained before the delta's distribution arrived)
     * shows up as reconstruction error in ss8's recall, not as
     * incorrect probing. */
-  def pqAppendDelta(delta: DataFrame, path: String, dim: Int): Unit = {
-    val books = readCodebook(delta.sparkSession, s"$path/codebook")
-    pqEncode(delta, dim, books.length, books).withColumn("vb", vbCol)
-      .write.mode("append").partitionBy("vb").parquet(s"$path/codes")
-  }
+  def pqAppendDelta(delta: DataFrame, path: String): Unit =
+    pqDeltaRows(delta, path).write.mode("append").partitionBy("vb").parquet(s"$path/codes")
 
   /** EXACTLY-ONCE [[pqAppendDelta]] — closes the index family's last
     * at-least-once hole (round 12 — VERDICT r11 #2). The cid-pruned
@@ -1478,29 +1486,16 @@ object Similarity {
     * never the corpus. Same contract as [[ivfAppendDeltaIdempotent]]:
     * single writer per index generation; within-batch duplicate
     * vec_ids collapsed at entry; returns rows actually appended. */
-  def pqAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long = {
-    val spark = delta0.sparkSession
-    val delta = delta0.dropDuplicates("vec_id")
-    val books = readCodebook(spark, s"$path/codebook")
-    appendAbsent(pqEncode(delta, dim, books.length, books).withColumn("vb", vbCol),
-      "vb", s"$path/codes")
-  }
+  def pqAppendDeltaIdempotent(delta0: DataFrame, path: String): Long =
+    appendAbsent(pqDeltaRows(delta0.dropDuplicates("vec_id"), path), "vb", s"$path/codes")
 
   /** Probe a materialized PQ index: reconstruct from the stored codes
     * and the (re-loaded, driver-resident) codebook, score with the
     * exact query vector. The scan reads ONLY the code table. */
   def pqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int): DataFrame = {
-    val cents = readCodebook(spark, s"$path/codebook")
-    val m = cents.length
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = graft.Tables.parquet(spark, s"$path/codes")
-      .withColumn("recon", reconCol(cents, m))
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("recon")).as("cosine"))
-    topKPerQuery(scored, k)
-  }
+      queries: DataFrame, k: Int): DataFrame =
+    scanTopK(withRecon(graft.Tables.parquet(spark, s"$path/codes"),
+      readCodebook(spark, s"$path/codebook")), queries, k, "recon")
 
   /** EXACT-RERANK of an ANN candidate pool (round 15 — the perturbed
     * recall curve's finding: at x30p the exact top-10 is ~30 jittered
@@ -1526,14 +1521,10 @@ object Similarity {
     * is deterministic. */
   def rerankExact(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val pool = cands.select(col("query_id"), col("vec_id"))
-    val scored = corpus.select(col("vec_id"), col("embedding"))
+    topKPerQuery(cosines(corpus.select(col("vec_id"), col("embedding"))
       .join(broadcast(pool), Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("embedding")).as("cosine"))
-    topKPerQuery(scored, k)
+      .join(broadcast(queryEmb(queries)), Seq("query_id"))), k)
   }
 
   /** [[pqProbeIndex]] + [[rerankExact]]: ADC candidate generation off
@@ -1594,19 +1585,19 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     val coarse = trainCentroids(corpus, nlist, iters)
     val books = trainPq(corpus, dim, m, ksub, iters)
-    val indexed = withCid(pqEncode(corpus, dim, m, books)
-        .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"),
-        "embedding", coarse)
-      .select(col("vec_id"), col("cid"), col("codes"))
-    val probed = probeLists(queries, coarse, nprobe)
-    val scored = indexed
-      .withColumn("recon", reconCol(books, m))
-      .join(broadcast(probed), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("recon")).as("cosine"))
-    topKPerQuery(scored, k)
+    cellTopK(withRecon(ivfPqRows(corpus, coarse, books), books),
+      probeLists(queries, coarse, nprobe), k, "recon")
   }
+
+  /** (vec_id, codes, cid): the IVF-PQ index rows of `df`, PQ-coded
+    * under `books` and assigned to a `coarse` cell. */
+  private def ivfPqRows(df: DataFrame, coarse: Array[Array[Float]],
+      books: Array[Array[Array[Float]]]): DataFrame =
+    withCid(pqEncode(df, pqWidth(books), books.length, books)
+        .join(df.select(col("vec_id"), col("embedding")), "vec_id"),
+        "embedding", coarse)
+      .select(col("vec_id"), col("codes"), col("cid"))
+
 
   /** Materialized IVF+PQ index — ss7's layered layout at rest: index
     * rows are (vec_id, codes) PARTITIONED BY the coarse cid (directory
@@ -1619,26 +1610,22 @@ object Similarity {
       nlist: Int = 16, m: Int = 8, ksub: Int = 16, iters: Int = 2,
       coarseOpt: Option[Array[Array[Float]]] = None,
       booksOpt: Option[Array[Array[Array[Float]]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val coarse = coarseOpt.getOrElse(trainCentroids(corpus, nlist, iters))
     val books = booksOpt.getOrElse(trainPq(corpus, dim, m, ksub, iters))
-    withCid(pqEncode(corpus, dim, m, books)
-        .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"),
-        "embedding", coarse)
-      .select(col("vec_id"), col("codes"), col("cid"))
+    ivfPqRows(corpus, coarse, books)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/codes")
-    coarse.zipWithIndex.toIndexedSeq.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    books.zipWithIndex.flatMap { case (cs, s) =>
-      cs.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
-    }.toIndexedSeq.toDF("s", "c", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+    writeCentroids(corpus.sparkSession, coarse, path)
     // same codebook-drift trained state as pqWriteIndex — the gauge
     // reads only codebook/ + residuals/, so it serves both layouts
-    pqSubResiduals(corpus, dim, books)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/residuals")
+    writePqState(corpus, books, path)
+  }
+
+  /** The IVF-PQ index rows of `delta` under the index's stored
+    * centroids and codebook, whose width the delta must have. */
+  private def ivfPqDeltaRows(delta: DataFrame, path: String): DataFrame = {
+    val spark = delta.sparkSession
+    val coarse = readCentroids(spark, s"$path/centroids")
+    ivfPqRows(ofWidth(delta, coarse(0).length), coarse, readCodebook(spark, s"$path/codebook"))
   }
 
   /** Append a delta batch to a materialized IVF+PQ index: delta rows
@@ -1648,16 +1635,8 @@ object Similarity {
     * O(|delta|). Composes [[ivfAppendDelta]]'s and [[pqAppendDelta]]'s
     * equivalence arguments: probe(base ⊕ delta) ≡ probe of a one-shot
     * union index under the same coarse/books (IvfIndexSpec). */
-  def ivfPqAppendDelta(delta: DataFrame, path: String, dim: Int): Unit = {
-    val spark = delta.sparkSession
-    val coarse = readCentroids(spark, s"$path/centroids")
-    val books = readCodebook(spark, s"$path/codebook")
-    withCid(pqEncode(delta, dim, books.length, books)
-        .join(delta.select(col("vec_id"), col("embedding")), "vec_id"),
-        "embedding", coarse)
-      .select(col("vec_id"), col("codes"), col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(s"$path/codes")
-  }
+  def ivfPqAppendDelta(delta: DataFrame, path: String): Unit =
+    ivfPqDeltaRows(delta, path).write.mode("append").partitionBy("cid").parquet(s"$path/codes")
 
   /** EXACTLY-ONCE [[ivfPqAppendDelta]] — the cid-partitioned code
     * table takes [[ivfAppendDeltaIdempotent]]'s pruned existence check
@@ -1666,17 +1645,8 @@ object Similarity {
     * cid partition proves the prior delivery committed. Same contract
     * as [[ivfAppendDeltaIdempotent]]: single writer per index
     * generation; within-batch duplicate vec_ids collapsed at entry. */
-  def ivfPqAppendDeltaIdempotent(delta0: DataFrame, path: String, dim: Int): Long = {
-    val spark = delta0.sparkSession
-    val delta = delta0.dropDuplicates("vec_id")
-    val coarse = readCentroids(spark, s"$path/centroids")
-    val books = readCodebook(spark, s"$path/codebook")
-    val assigned = withCid(pqEncode(delta, dim, books.length, books)
-        .join(delta.select(col("vec_id"), col("embedding")), "vec_id"),
-        "embedding", coarse)
-      .select(col("vec_id"), col("codes"), col("cid"))
-    appendAbsent(assigned, "cid", s"$path/codes")
-  }
+  def ivfPqAppendDeltaIdempotent(delta0: DataFrame, path: String): Long =
+    appendAbsent(ivfPqDeltaRows(delta0.dropDuplicates("vec_id"), path), "cid", s"$path/codes")
 
   /** Probe a materialized IVF+PQ index: coarse-probe the cid partition
     * directories (planning-time pruning), reconstruct probed rows from
@@ -1685,40 +1655,10 @@ object Similarity {
     * flat scan. */
   def ivfPqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
-    val coarse = graft.Tables.parquet(spark, s"$path/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1).map(_._2)
-    val np = if (nprobe > 0) nprobe else math.max(4, coarse.length / 4)
-    val rows = graft.Tables.parquet(spark, s"$path/codebook")
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
-    val m = rows.keys.map(_._1).max + 1
-    val ksub = rows.keys.map(_._2).max + 1
-    val books = Array.tabulate(m, ksub)((s, c) => rows((s, c)))
-    val probed = probeLists(queries, coarse, np)
-    val probedCids = probed.select("cid").distinct().collect().map(_.getInt(0))
-    val scored = graft.Tables.parquet(spark, s"$path/codes")
-      .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
-      .withColumn("recon", reconCol(books, m))
-      .join(broadcast(probed), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        call_function("graft_cosine", col("q_emb"), col("recon")).as("cosine"))
-    topKPerQuery(scored, k)
+    val (probed, rows) = probeCells(spark, path, "codes", queries, nprobe)
+    cellTopK(withRecon(rows, readCodebook(spark, s"$path/codebook")), probed, k, "recon")
   }
 
-  /** Per-label mean embedding (class centroids), emitted in long form
-    * (label, pos, n_vecs, centroid) so the result is flat scalar
-    * columns — driver-hashable and directly joinable back onto vector
-    * rows for e.g. distance-to-centroid outlier scoring.
-    *
-    * Scale: posexplode multiplies rows ×dim, but the groupBy's partial
-    * (map-side) aggregation collapses each input partition to at most
-    * |labels|×dim rows BEFORE the exchange, so shuffle volume is
-    * partitions×labels×dim — independent of corpus size. Sums
-    * accumulate in DECIMAL(18,6), which is exact and
-    * addition-order-independent, so the result is bit-deterministic
-    * under Spark's nondeterministic partition merge order (the same
-    * trick every dsum oracle query uses). */
   /** ss10: distributed Lloyd k-means over the whole corpus, with
     * ORACLE-GATED BIT-EXACT assignments — rare for clustering, and
     * the point: every arithmetic step is either exact DECIMAL (order-
@@ -1841,12 +1781,23 @@ object Similarity {
     ratios.orderBy(col("cluster"))
   }
 
+  /** Per-label mean embedding (class centroids), emitted in long form
+    * (label, pos, n_vecs, centroid) so the result is flat scalar
+    * columns — driver-hashable and directly joinable back onto vector
+    * rows for e.g. distance-to-centroid outlier scoring.
+    *
+    * Scale: posexplode multiplies rows ×dim, but the groupBy's partial
+    * (map-side) aggregation collapses each input partition to at most
+    * |labels|×dim rows BEFORE the exchange, so shuffle volume is
+    * partitions×labels×dim — independent of corpus size. Sums
+    * accumulate in DECIMAL(18,6), which is exact and
+    * addition-order-independent, so the result is bit-deterministic
+    * under Spark's nondeterministic partition merge order (the same
+    * trick every dsum oracle query uses). */
   def labelCentroids(emb: DataFrame): DataFrame =
     emb.select(col("label"), posexplode(col("embedding")))
       .groupBy(col("label"), col("pos"))
-      .agg(count(lit(1)).as("n_vecs"),
-        (sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
-          count(lit(1))).as("centroid"))
+      .agg(count(lit(1)).as("n_vecs"), decimalMean(col("col")).as("centroid"))
       .select(col("label"), col("pos").cast("long").as("pos"),
         col("n_vecs"), col("centroid"))
       .orderBy(col("label"), col("pos"))

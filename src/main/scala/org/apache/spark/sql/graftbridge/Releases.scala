@@ -14,6 +14,8 @@ object Releases {
       .uncacheQuery(df.asInstanceOf[classic.Dataset[_]], cascade = true)
 
   /** Frees `rdd`'s blocks, as `RDD.unpersist` does, without its
-    * warning that a locally checkpointed RDD cannot be recomputed. */
-  def unpersistRDD(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    * warning that a locally checkpointed RDD cannot be recomputed.
+    * `blocking` waits until every block is removed. */
+  def unpersistRDD(rdd: RDD[_], blocking: Boolean): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking)
 }

@@ -108,6 +108,20 @@ class BenchToolsSpec extends SparkTestBase {
     }
   }
 
+  test("delta idempotent: one row per index family, every append a timed cell") {
+    // each full replay requires 0 rows appended, so `ok` covers it
+    val (ok, out) = run("delta", Sf0001, "idempotent")
+    assert(ok)
+    assertAscii(out)
+    val Seq(t) = tables(out)
+    assert(t.head === Seq("index", "plain append", "idempotent 1st delivery",
+      "full replay (0 rows)"))
+    assert(t.tail.map(_.head) === Seq("ivf", "pq", "lsh", "ivfpq"))
+    t.tail.foreach { case Seq(_, plain, idem, replay) =>
+      Seq(plain, idem, replay).foreach(assertTimed)
+    }
+  }
+
   test("recall: one row per ss8 variant, mean (min) per point") {
     val (ok, out) = run("recall", s"x1=$Sf0001")
     assert(ok)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, expr, lit}
 
 import graft.operators.Similarity
 
@@ -122,7 +122,7 @@ class IvfIndexSpec extends SparkTestBase {
     val dirA = tempDir("graft-pq-delta")
     Similarity.pqWriteIndex(base, dirA, dim = 64)
     val before = dataFiles(s"$dirA/codes")
-    Similarity.pqAppendDelta(delta, dirA, dim = 64)
+    Similarity.pqAppendDelta(delta, dirA)
     assertBaseUntouched(before, dataFiles(s"$dirA/codes"))
 
     val books = Similarity.readCodebook(spark, s"$dirA/codebook")
@@ -157,7 +157,7 @@ class IvfIndexSpec extends SparkTestBase {
     val dirA = tempDir("graft-ivfpq-delta")
     Similarity.ivfPqWriteIndex(base, dirA, dim = 64, nlist = 16)
     val before = dataFiles(s"$dirA/codes")
-    Similarity.ivfPqAppendDelta(delta, dirA, dim = 64)
+    Similarity.ivfPqAppendDelta(delta, dirA)
     assertBaseUntouched(before, dataFiles(s"$dirA/codes"))
 
     val coarse = Similarity.readCentroids(spark, s"$dirA/centroids")
@@ -224,15 +224,49 @@ class IvfIndexSpec extends SparkTestBase {
     val books = Similarity.readCodebook(spark, s"$pqI/codebook")
     Similarity.ivfPqWriteIndex(base, pqP, dim = 64, nlist = 16,
       coarseOpt = Some(coarse), booksOpt = Some(books))
-    assert(Similarity.ivfPqAppendDeltaIdempotent(delta, pqI, dim = 64) === nDelta)
-    Similarity.ivfPqAppendDelta(delta, pqP, dim = 64)
+    assert(Similarity.ivfPqAppendDeltaIdempotent(delta, pqI) === nDelta)
+    Similarity.ivfPqAppendDelta(delta, pqP)
     val pqProbe = Similarity.ivfPqProbeIndex(spark, pqI, q, k = 10).collect().toSeq
     assert(pqProbe === Similarity.ivfPqProbeIndex(spark, pqP, q, k = 10)
       .collect().toSeq)
-    assert(Similarity.ivfPqAppendDeltaIdempotent(delta, pqI, dim = 64) === 0L)
+    assert(Similarity.ivfPqAppendDeltaIdempotent(delta, pqI) === 0L)
     assert(Similarity.ivfPqAppendDeltaIdempotent(
-      delta.filter(col("vec_id") % 16 === 0), pqI, dim = 64) === 0L)
+      delta.filter(col("vec_id") % 16 === 0), pqI) === 0L)
     assert(Similarity.ivfPqProbeIndex(spark, pqI, q, k = 10).collect().toSeq === pqProbe)
+  }
+
+  test("an append whose embedding width differs from the index fails, naming both widths") {
+    // graft_cosine/graft_dot return null on a length mismatch, so an
+    // unchecked narrow delta landed silently: IVF/HNSW rows in the
+    // all-null-tie cell, PQ rows with code 0 in every subspace
+    val (_, base, delta) = splitEmb()
+    val narrow = delta.select(col("vec_id"), expr("slice(embedding, 1, 32)").as("embedding"))
+    val ivf = tempDir("graft-width-ivf")
+    val pq = tempDir("graft-width-pq")
+    val ivfpq = tempDir("graft-width-ivfpq")
+    val hnsw = tempDir("graft-width-hnsw")
+    Similarity.ivfWriteIndex(base, ivf)
+    Similarity.pqWriteIndex(base, pq, dim = 64)
+    Similarity.ivfPqWriteIndex(base, ivfpq, dim = 64)
+    Similarity.hnswWriteIndex(base, hnsw)
+    Seq[(String, () => Any)](
+      "ivf plain" -> (() => Similarity.ivfAppendDelta(narrow, ivf)),
+      "ivf idempotent" -> (() => Similarity.ivfAppendDeltaIdempotent(narrow, ivf)),
+      "pq plain" -> (() => Similarity.pqAppendDelta(narrow, pq)),
+      "pq idempotent" -> (() => Similarity.pqAppendDeltaIdempotent(narrow, pq)),
+      "ivfpq plain" -> (() => Similarity.ivfPqAppendDelta(narrow, ivfpq)),
+      "ivfpq idempotent" -> (() => Similarity.ivfPqAppendDeltaIdempotent(narrow, ivfpq)),
+      "hnsw plain" -> (() => Similarity.hnswAppendDelta(narrow, hnsw))
+    ).foreach { case (name, append) =>
+      val e = intercept[Exception](append())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("width 32") && m.contains("width 64")),
+        s"$name: no message names both widths: ${msgs.mkString(" | ")}")
+    }
+    val nBase = base.count()
+    Seq(s"$ivf/vectors", s"$pq/codes", s"$ivfpq/codes", s"$hnsw/emb", s"$hnsw/graph")
+      .foreach(d => assert(spark.read.parquet(d).count() === nBase, s"$d grew"))
   }
 
   test("flat-PQ idempotent append: vec_id-range partitions close the family's last at-least-once hole") {
@@ -252,15 +286,15 @@ class IvfIndexSpec extends SparkTestBase {
     Similarity.pqWriteIndex(emb, union, dim = 64, booksOpt = Some(books))
 
     val before = dataFiles(s"$idem/codes")
-    assert(Similarity.pqAppendDeltaIdempotent(delta, idem, dim = 64) === nDelta)
+    assert(Similarity.pqAppendDeltaIdempotent(delta, idem) === nDelta)
     assertBaseUntouched(before, dataFiles(s"$idem/codes"))
     val probe = Similarity.pqProbeIndex(spark, idem, q, k = 10).collect().toSeq
     assert(probe === Similarity.pqProbeIndex(spark, union, q, k = 10).collect().toSeq)
     assert(probe.nonEmpty)
     // full replay, subset replay (crash-rerun shapes): append zero
-    assert(Similarity.pqAppendDeltaIdempotent(delta, idem, dim = 64) === 0L)
+    assert(Similarity.pqAppendDeltaIdempotent(delta, idem) === 0L)
     assert(Similarity.pqAppendDeltaIdempotent(
-      delta.filter(col("vec_id") % 16 === 0), idem, dim = 64) === 0L)
+      delta.filter(col("vec_id") % 16 === 0), idem) === 0L)
     assert(Similarity.pqProbeIndex(spark, idem, q, k = 10).collect().toSeq === probe)
   }
 
@@ -287,9 +321,9 @@ class IvfIndexSpec extends SparkTestBase {
       java.nio.file.Paths.get(s"$dir/codes/vb=0/part-corrupt.parquet"),
       "not a parquet file".getBytes("UTF-8"))
     // pruned to vb=3: succeeds despite the landmine in vb=0
-    val n = graft.operators.Similarity.pqAppendDeltaIdempotent(delta, dir, dim = 64)
+    val n = graft.operators.Similarity.pqAppendDeltaIdempotent(delta, dir)
     assert(n === 40L)
-    assert(graft.operators.Similarity.pqAppendDeltaIdempotent(delta, dir, dim = 64) === 0L)
+    assert(graft.operators.Similarity.pqAppendDeltaIdempotent(delta, dir) === 0L)
     // control: an UNPRUNED read of the code table does hit the landmine
     intercept[Throwable] {
       spark.read.parquet(s"$dir/codes").select("vec_id").collect()
@@ -324,7 +358,7 @@ class IvfIndexSpec extends SparkTestBase {
     // flat-PQ twin takes the same within-batch collapse
     val pqDir = tempDir("graft-pqflat-dupbatch")
     Similarity.pqWriteIndex(base, pqDir, dim = 64)
-    assert(Similarity.pqAppendDeltaIdempotent(b1.union(b1), pqDir, dim = 64) === b1.count())
+    assert(Similarity.pqAppendDeltaIdempotent(b1.union(b1), pqDir) === b1.count())
     val pqIds = spark.read.parquet(s"$pqDir/codes").select("vec_id")
       .collect().map(_.getLong(0)).toSeq
     assert(pqIds.distinct.size === pqIds.size, "duplicate vec_ids in the code table")

@@ -95,7 +95,7 @@ class MaintenanceSpec extends SparkTestBase {
     // the 16 seeds ARE the 16 distinct directions, so the trained
     // books code the base corpus losslessly — residual floor exactly 0
     Similarity.pqWriteIndex(fixedPointCorpus, s"$dir/idx", dim = 16)
-    Similarity.pqAppendDelta(sameDistDelta, s"$dir/idx", 16)
+    Similarity.pqAppendDelta(sameDistDelta, s"$dir/idx")
     val q = fixedPointCorpus.filter(col("vec_id") < 3)
     val before = Similarity.pqProbeIndex(spark, s"$dir/idx", q, k = 5)
       .collect().toSeq
@@ -106,7 +106,7 @@ class MaintenanceSpec extends SparkTestBase {
     assert(Similarity.pqProbeIndex(spark, s"$dir/idx", q, k = 5)
       .collect().toSeq === before)
     // drifted: the gauge localizes the shift to subspace 0 exactly
-    Similarity.pqAppendDelta(pqShiftedDelta, s"$dir/idx", 16)
+    Similarity.pqAppendDelta(pqShiftedDelta, s"$dir/idx")
     val drift = Similarity.pqResidualDrift(spark, s"$dir/idx", pqShiftedDelta)
       .collect()
     assert(drift.length === 8)

@@ -78,9 +78,9 @@ class SnapshotsSpec extends SparkTestBase {
       appendCase("ivf", Similarity.ivfWriteIndex(base, _),
         Similarity.ivfAppendDeltaIdempotent(delta, _)),
       appendCase("pq", Similarity.pqWriteIndex(base, _, dim = 64),
-        Similarity.pqAppendDeltaIdempotent(delta, _, dim = 64)),
+        Similarity.pqAppendDeltaIdempotent(delta, _)),
       appendCase("ivfpq", Similarity.ivfPqWriteIndex(base, _, dim = 64, nlist = 16),
-        Similarity.ivfPqAppendDeltaIdempotent(delta, _, dim = 64)),
+        Similarity.ivfPqAppendDeltaIdempotent(delta, _)),
       {
         def train() = TextFunctions.weakClassifierTrain(
           docs.filter(!PipelineQueries.isDeltaDoc), PipelineQueries.DsirTargetSources).toSeq
